@@ -69,11 +69,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
+from ..sqltext import ident, project_to, string_literal
+
+
+def bucket_sql(conv_col: str, n_buckets: int) -> str:
+    """The table's partition transform, bucket(n, conv_id) Iceberg-style, as
+    SQL text."""
+    return f"CAST(pmod(xxhash64({ident(conv_col)}), {int(n_buckets)}) AS INT)"
 
 
 def bucket_expr(conv_col: str, n_buckets: int):
-    """The table's partition transform: bucket(n, conv_id), Iceberg-style."""
-    return F.pmod(F.xxhash64(F.col(conv_col)), F.lit(n_buckets)).cast("int")
+    """``bucket_sql`` as a Column."""
+    return F.expr(bucket_sql(conv_col, n_buckets))
 
 
 # --- balanced write partitioning -------------------------------------------
@@ -118,26 +125,28 @@ def _mmh3_hash_int(x: int, seed: int = _MMH3_SEED) -> int:
 
 def _balanced_pkeys(n_parts: int) -> list[int]:
     """First int j per residue p with hash(j) ≡ p (mod n_parts); memoized.
-    Coupon-collector search, ~n·ln n probes (≈1.5k for 256 parts, once)."""
+    Coupon-collector search, ~n·ln n probes (≈1.5k for 256 parts, once),
+    capped at 64·n probes: a residue still without a preimage then maps to
+    itself, so placement stays a pure function of __bucket and only the
+    balance of that residue is lost."""
     got = _PKEY_CACHE.get(n_parts)
     if got is None:
         found: dict[int, int] = {}
-        j = 0
-        while len(found) < n_parts:
-            p = _mmh3_hash_int(j) % n_parts
-            if p not in found:
-                found[p] = j
-            j += 1
-        got = [found[p] for p in range(n_parts)]
+        for j in range(64 * n_parts):
+            found.setdefault(_mmh3_hash_int(j) % n_parts, j)
+            if len(found) == n_parts:
+                break
+        got = [found.get(p, p) for p in range(n_parts)]
         _PKEY_CACHE[n_parts] = got
     return got
 
 
-def balanced_write_pkey(bucket_col, n_parts: int):
-    """Column j(__bucket) whose shuffle hash places bucket b in partition
-    b % n_parts — exact round-robin over the write tasks."""
-    arr = F.array(*[F.lit(j) for j in _balanced_pkeys(n_parts)])
-    return F.element_at(arr, F.pmod(bucket_col, F.lit(n_parts)).cast("int") + 1)
+def balanced_write_pkey(bucket_col: str, n_parts: int) -> str:
+    """SQL text of j(bucket_col), whose shuffle hash places bucket b in
+    partition b % n_parts — exact round-robin over the write tasks."""
+    arr = ", ".join(str(j) for j in _balanced_pkeys(n_parts))
+    return (f"element_at(array({arr}), "
+            f"CAST(pmod({ident(bucket_col)}, {int(n_parts)}) AS INT) + 1)")
 
 
 def _footer_stats(path: str, order_col: str, del_col: str | None = None):
@@ -653,8 +662,8 @@ class TranscriptTable:
 
         Merge-on-read: base file groups and delta file groups are unioned and
         folded with one last-wins reduce on (order_col, commit_seq) — a
-        map-side-partial hash aggregate, skew-robust like the write-side
-        dedup.  The fold covers ONLY buckets that hold delta files; buckets
+        map-side-partial hash aggregate, so hot keys are reduced before the
+        shuffle.  The fold covers ONLY buckets that hold delta files; buckets
         that are fully compacted bypass it as a plain pruned-and-cast scan
         on a Union branch (shuffle is O(dirty buckets), not O(table)), and
         when NO selected bucket holds deltas the plan is a plain scan with
@@ -672,7 +681,7 @@ class TranscriptTable:
         target = T.StructType.fromJson(
             json.loads(m["schemas"][str(m["current_schema_id"])])
         )
-        out_cols = [f.name for f in target.fields]
+        out_cols = [ident(f.name) for f in target.fields]
         files = m["files"]
         if buckets is not None:
             bset = set(buckets)
@@ -704,21 +713,13 @@ class TranscriptTable:
             parts = []
             for _sid, paths in groups.items():
                 df = self.spark.read.parquet(*paths)
-                cols = [F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in target.fields if f.name in df.columns]
-                cols += [F.lit(None).cast(f.dataType).alias(f.name)
-                         for f in target.fields if f.name not in df.columns]
-                cols.append(
-                    (F.col("op") if "op" in df.columns else F.lit("U")).alias("op")
-                )
+                have = df.columns
+                cols = project_to(target, have)
+                cols.append("`op`" if "op" in have else "'U' AS `op`")
                 if with_seq:
-                    cols.append(
-                        (F.col("__seq") if "__seq" in df.columns
-                         else F.lit(0).cast("long")).alias("__seq")
-                    )
-                parts.append(df.select(*cols).select(
-                    out_cols + ["op"] + (["__seq"] if with_seq else [])
-                ))
+                    cols.append("`__seq`" if "__seq" in have
+                                else "CAST(0 AS BIGINT) AS `__seq`")
+                parts.append(df.selectExpr(*cols))
             grouped = parts[0]
             for p in parts[1:]:
                 grouped = grouped.unionByName(p)
@@ -740,8 +741,8 @@ class TranscriptTable:
         # table still beats late, lower-order changes); the reader filters
         # them here, at the very end of the fold
         if keep_tombstones:
-            return out.select(*out_cols, "op")
-        return out.where(F.col("op") != "D").select(*out_cols)
+            return out.selectExpr(*out_cols, "`op`")
+        return out.where("`op` != 'D'").selectExpr(*out_cols)
 
     _BUCKET_MEMO_MAX = 4096
 
@@ -765,7 +766,7 @@ class TranscriptTable:
             return cached
         row = self.spark.createDataFrame(
             [(key_value,)], T.StructType([self.schema[self.key[0]]])
-        ).select(bucket_expr(self.key[0], self.n_buckets).alias("b")).first()
+        ).selectExpr(f"{bucket_sql(self.key[0], self.n_buckets)} AS b").first()
         b = int(row["b"])
         if len(memo) >= self._BUCKET_MEMO_MAX:
             memo.clear()
@@ -860,13 +861,21 @@ class TranscriptTable:
         later commit win — so re-applying any previously-applied batch, even
         under a fresh epoch id, is a no-op in effect.
 
-        Two Spark jobs: the delta write (one shuffle: the bucket
-        repartition), then a tiny 3-column scan of the just-written delta
-        for per-bucket lineage counters (touched buckets, upsert/delete
-        counts, order-col bounds — ≤ n_buckets rows to the driver).
+        One Spark job: the delta write.  Per-bucket lineage counters
+        (touched buckets, upsert/delete counts, order-col bounds) come from
+        the written files' parquet footers, read driver-side.
 
-        ``deduped=True`` skips the in-batch last-wins pass (the caller —
-        ChangeApplier — already reduced the batch to one winner per key).
+        This method owns the dedup shape.  ``deduped=False`` (the default)
+        folds the in-batch last-wins into the bucket exchange: one shuffle
+        per microbatch.  Only an overlap-guarded table dedups first (the
+        guard needs the winners before the write).  ``deduped=True`` skips
+        the dedup (the caller — the salted or routed ChangeApplier — already
+        reduced the batch to one winner per key).
+
+        Every step of the plan is SQL text (see ``sqltext``): building it
+        costs the driver about a hundred py4j round trips, not one per
+        Column node, and Catalyst sees the same expressions.
+
         ``batch_max_lsn`` overrides the cursor advance; by default the cursor
         advances to the batch's max order value.
         ``write_parallelism`` caps the delta write's concurrent tasks (still
@@ -885,34 +894,24 @@ class TranscriptTable:
                 f"{self.order_col!r} (set order_col at table construction)"
             )
         target_schema = self.schema
-        cols = [f.name for f in target_schema.fields]
 
         # Defensive cast to the target schema BEFORE bucketing: xxhash64 of an
         # int differs from xxhash64 of a long, so bucketing pre-cast rows
         # would scatter them into buckets the manifest doesn't associate with
         # the key (silent loss for numeric-keyed tables).
-        proj = [
-            (F.col(f.name).cast(f.dataType) if f.name in changes.columns
-             else F.lit(None).cast(f.dataType)).alias(f.name)
-            for f in target_schema.fields
-        ]
-        changes = changes.select(*proj, "op")
+        changes = changes.selectExpr(
+            *project_to(target_schema, changes.columns), "`op`")
         # r7: when this merge owns the dedup, FUSE the in-batch last-wins
         # into the (balanced) bucket shuffle — one exchange per microbatch
-        # instead of two.  A first fusion attempt lost the chunk-replay A/B
-        # 2-3× to bucket-hash collision skew and was reverted; with the
-        # balanced pkey placement (one bucket per task, see
-        # balanced_write_pkey) the same fusion wins every interleaved rep of
-        # the headline 4×1M replay by 15-25% (plans/r07/fused_ab_run{1,2}
-        # .json; full-row snapshot equality verified in-session both times).
-        # The overlap guard needs the winners BEFORE the write job, so it
-        # keeps the standalone dedup.  SPARK_GRAFT_MERGE_FUSED=0 restores
-        # the two-phase shape for diagnosis/A-B.
-        fuse_dedup = (
-            (not deduped)
-            and self.overlap_guard is None
-            and os.environ.get("SPARK_GRAFT_MERGE_FUSED", "1") != "0"
-        )
+        # instead of two.  A first fusion attempt over the raw bucket hash
+        # lost the chunk-replay A/B 2-3× to bucket-hash collision skew (~1/e
+        # of the tasks empty, others holding 2-3 buckets); with the balanced
+        # pkey placement (one bucket per task, see balanced_write_pkey) the
+        # same fusion wins every interleaved rep of the headline 4×1M replay
+        # by 15-25% (plans/r07/fused_ab_run{1,2}.json; full-row snapshot
+        # equality verified on both runs).  The overlap guard needs
+        # the winners BEFORE the write job, so it keeps the standalone dedup.
+        fuse_dedup = not deduped and self.overlap_guard is None
         if not deduped and not fuse_dedup:
             from ..operators.dedup import last_wins
 
@@ -925,12 +924,12 @@ class TranscriptTable:
         # fail fast on null merge keys, inside the write job (zero extra
         # jobs): a null key would land in a __HIVE_DEFAULT_PARTITION__ dir
         # the manifest can't bucket, after the write already ran
-        null_guard = F.when(
-            F.col(self.key[0]).isNull(),
-            F.raise_error(F.lit(f"merge: null {self.key[0]} key — route or "
-                                "quarantine invalid rows before merging")),
-        ).otherwise(bucket_expr(self.key[0], self.n_buckets))
-        changes = changes.withColumn("__bucket", null_guard.cast("int"))
+        k0 = self.key[0]
+        msg = string_literal(f"merge: null {k0} key — route or quarantine "
+                             "invalid rows before merging")
+        changes = changes.selectExpr(
+            "*", f"CAST(CASE WHEN {ident(k0)} IS NULL THEN raise_error({msg}) "
+                 f"ELSE {bucket_sql(k0, self.n_buckets)} END AS INT) AS __bucket")
 
         # Delta write: one output dir per commit, partitioned by bucket, one
         # writer task per bucket → ONE file per touched bucket per commit
@@ -946,10 +945,10 @@ class TranscriptTable:
         # (measured 12s → 4s per write stage at 32 threads).  Deltas are
         # batch-sized and folded/compacted away, so scan-side row-group size
         # doesn't matter; compact() writes base files with the default.
-        # Task count: hash-repartitioning ON __bucket keeps every bucket's
-        # rows inside ONE task regardless of task count, so the one-file-
-        # per-(bucket,del) layout is invariant — capping tasks at ~2× the
-        # cluster's parallelism only removes task-wave overhead when
+        # Task count: repartitioning on a pure function of __bucket keeps
+        # every bucket's rows inside ONE task regardless of task count, so
+        # the one-file-per-bucket layout is invariant — capping tasks at ~2×
+        # the cluster's parallelism only removes task-wave overhead when
         # n_buckets ≫ cores (measured 2.9s → 1.2s for a 20k-event commit
         # into 256 buckets on local[8]).  On a cluster with ≥ n_buckets
         # cores the cap is inactive.
@@ -958,29 +957,14 @@ class TranscriptTable:
         else:
             par = self.spark.sparkContext.defaultParallelism
             n_write_tasks = min(self.n_buckets, max(1, par) * 2)
-        # NOTE (r7 history): a first fusion attempt over the RAW bucket hash
-        # regressed 1M-row chunks 1.6-3× — hashing n_buckets coarse ids into
-        # ~n_buckets partitions leaves ~1/e of tasks empty and hands others
-        # 2-3 buckets (guide §2.5, too-few-distinct-values skew), so the
-        # fused plan concentrated the whole shuffle-read + aggregate +
-        # parquet write on a skewed exchange, and the round briefly kept the
-        # two-phase shape.  The balanced pkey placement below removed that
-        # skew (exactly one bucket per write task), after which the SAME
-        # fusion won every interleaved chunk-replay rep by 15-25% — so
-        # fused-over-balanced is now the default (fuse_dedup above).
         # Balanced placement (r7): repartition on the hash-preimage key, not
-        # __bucket itself — see balanced_write_pkey.  Env-disableable for
-        # A/B (SPARK_GRAFT_BALANCED_WRITE=0 restores the raw bucket hash).
-        balanced = os.environ.get("SPARK_GRAFT_BALANCED_WRITE", "1") != "0"
-        if balanced:
-            changes = (
-                changes
-                .withColumn("__pkey",
-                            balanced_write_pkey(F.col("__bucket"), n_write_tasks))
-                .repartition(n_write_tasks, "__pkey")
-            )
-        else:
-            changes = changes.repartition(n_write_tasks, "__bucket")
+        # __bucket itself — see balanced_write_pkey.
+        changes = (
+            changes
+            .selectExpr("*", f"{balanced_write_pkey('__bucket', n_write_tasks)} "
+                             "AS __pkey")
+            .repartition(n_write_tasks, "__pkey")
+        )
         if fuse_dedup:
             # FUSED in-batch last-wins (guide §2.4): placement is a pure
             # function of key[0], so the write repartition already clusters
@@ -990,33 +974,26 @@ class TranscriptTable:
             # and plan NO second exchange.  Winners are identical to
             # last_wins: max_by over the same (order_col, op-rank) within
             # the same key groups.
-            from ..operators.dedup import op_rank
+            from ..operators.dedup import winner_sql
 
-            payload = F.struct(*[F.col(c) for c in changes.columns
-                                 if c != "__pkey"])
-            order_key = F.struct(F.col(self.order_col),
-                                 op_rank().alias("__op_rank"))
-            group_cols = (["__pkey"] if balanced else []) + \
-                ["__bucket", *self.key]
+            payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
             changes = (
-                changes.groupBy(*group_cols)
-                .agg(F.max_by(payload, order_key).alias("__win"))
+                changes.groupBy("__pkey", "__bucket", *self.key)
+                .agg(F.expr(winner_sql(payload, (self.order_col,))))
                 .select("__win.*")
             )
-        elif balanced:
+        else:
             changes = changes.drop("__pkey")
-        changes = (
-            # delete marker as a NULLABLE data column (1 for tombstones, NULL
-            # otherwise): the parquet footer's per-column null counts then
-            # yield the exact upsert/delete split with zero extra reads, so
-            # the commit writes ONE file per touched bucket instead of the
-            # round-4 partitionBy-(bucket, is-delete) pair (which doubled the
-            # per-commit file count and the footer-read fan-out — the 3.81×
-            # 16→256-bucket commit growth in BENCH_r04)
-            changes
-            .withColumn("__del", F.when(F.col("op") == "D", F.lit(1)).cast("int"))
-            .withColumn("__seq", F.lit(seq).cast("long"))
-        )
+        # delete marker as a NULLABLE data column (1 for tombstones, NULL
+        # otherwise): the parquet footer's per-column null counts then
+        # yield the exact upsert/delete split with zero extra reads, so
+        # the commit writes ONE file per touched bucket instead of the
+        # round-4 partitionBy-(bucket, is-delete) pair (which doubled the
+        # per-commit file count and the footer-read fan-out — the 3.81×
+        # 16→256-bucket commit growth in BENCH_r04)
+        changes = changes.selectExpr(
+            "*", "CAST(CASE WHEN `op` = 'D' THEN 1 END AS INT) AS __del",
+            f"CAST({int(seq)} AS BIGINT) AS __seq")
         (changes.write.mode("overwrite").option("parquet.block.size", 16 << 20)
                 .partitionBy("__bucket").parquet(out_dir))
 
@@ -1258,22 +1235,19 @@ class TranscriptTable:
         winners = self.snapshot(buckets=sorted(target_buckets), keep_tombstones=True)
         if drop_tombstones_below is not None:
             winners = winners.where(
-                (F.col("op") != "D")
-                | (F.col(self.order_col) >= int(drop_tombstones_below))
-            )
-        df = (
-            winners
-            .withColumn("__bucket", bucket_expr(self.key[0], self.n_buckets))
+                f"(`op` != 'D') OR ({ident(self.order_col)} >= "
+                f"{int(drop_tombstones_below)})")
+        df = winners.selectExpr(
+            "*", f"{bucket_sql(self.key[0], self.n_buckets)} AS __bucket",
             # base rows carry (op, __seq) as data columns too, so all live
             # files share one read schema per schema id (see snapshot())
-            .withColumn("__seq", F.lit(seq).cast("long"))
-        )
+            f"CAST({int(seq)} AS BIGINT) AS __seq")
         commit_id = uuid.uuid4().hex[:12]
         out_dir = f"{self.root}/data/commit={commit_id}"
         # Same balanced placement as merge(): one bucket per writer task
         # instead of the collision-skewed raw bucket hash.
-        df = (df.withColumn("__pkey",
-                            balanced_write_pkey(F.col("__bucket"), self.n_buckets))
+        df = (df.selectExpr("*", f"{balanced_write_pkey('__bucket', self.n_buckets)} "
+                                 "AS __pkey")
                 .repartition(self.n_buckets, "__pkey").drop("__pkey"))
         df.write.mode("overwrite").partitionBy("__bucket").parquet(out_dir)
         sid = int(m["current_schema_id"])
@@ -1381,16 +1355,10 @@ class TranscriptTable:
         for f in in_window:
             groups.setdefault(int(f["schema_id"]), []).append(f["path"])
         parts = []
-        for sid, paths in groups.items():
+        for paths in groups.values():
             df = self.spark.read.parquet(*paths)
-            cols = [
-                (F.col(f.name).cast(f.dataType) if f.name in df.columns
-                 else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in target.fields
-            ]
-            cols.append(F.col("op"))
-            cols.append(F.col("__seq").alias("commit_version"))
-            parts.append(df.select(*cols))
+            parts.append(df.selectExpr(*project_to(target, df.columns), "`op`",
+                                       "`__seq` AS commit_version"))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -13,11 +13,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import ident
+
+
+# Deterministic winner under equal LSN: deletes beat updates beat inserts
+# (re-applying a replayed batch must be a no-op, so ties cannot depend on
+# arrival order).
+OP_RANK_SQL = "CASE WHEN `op` = 'D' THEN 3 WHEN `op` = 'U' THEN 2 ELSE 1 END"
+
+
 def op_rank():
-    """Deterministic winner under equal LSN: deletes beat updates beat inserts
-    (re-applying a replayed batch must be a no-op, so ties cannot depend on
-    arrival order)."""
-    return F.when(F.col("op") == "D", 3).when(F.col("op") == "U", 2).otherwise(1)
+    """The op-rank tie-breaker as a Column (see ``OP_RANK_SQL``)."""
+    return F.expr(OP_RANK_SQL)
+
+
+def winner_sql(columns, order) -> str:
+    """``max_by(struct(columns), struct(order, op-rank)) AS __win`` — the
+    last-wins winner of a key group as one aggregate expression; expand it
+    with ``select("__win.*")``."""
+    payload = ", ".join(ident(c) for c in columns)
+    order_key = ", ".join([*(ident(c) for c in order),
+                           f"{OP_RANK_SQL} AS __op_rank"])
+    return f"max_by(struct({payload}), struct({order_key})) AS __win"
 
 
 def last_wins(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> DataFrame:
@@ -30,15 +47,18 @@ def last_wins(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> Dat
     no single reducer ever sees a hot conversation's full event list.
     (Contrast with a row_number() window, which shuffles every duplicate to
     one partition — see `last_wins_window` below, kept for comparison.)
+
+    The merge's default path does NOT run this two-phase shape: with no
+    pre-deduped input, ``TranscriptTable.merge`` fuses the same max_by into
+    its bucket exchange (one exchange, aggregate after it).  This function
+    runs for the salted and routed applier paths, the overlap-guarded merge
+    and the snapshot fold.
     """
-    payload = F.struct(*[c for c in df.columns])
-    order_key = F.struct(*[F.col(c) for c in order], op_rank().alias("__op_rank"))
-    won = (
+    return (
         df.groupBy(*key)
-        .agg(F.max_by(payload, order_key).alias("__win"))
+        .agg(F.expr(winner_sql(df.columns, order)))
         .select("__win.*")
     )
-    return won
 
 
 def last_wins_salted(
@@ -52,8 +72,7 @@ def last_wins_salted(
     to `last_wins`; use when the partial-agg path is defeated (e.g. payloads
     too wide for map-side hash aggregation to hold).
     """
-    payload = F.struct(*[c for c in df.columns])
-    order_key = F.struct(*[F.col(c) for c in order], op_rank().alias("__op_rank"))
+    columns = df.columns
     # Salt mixes the SOURCE PARTITION ID with the order columns (r7, from the
     # r6 advisor): exact at-least-once redeliveries share their order values,
     # so an order-only hash sent every duplicate of a hot row to ONE reducer —
@@ -63,23 +82,16 @@ def last_wins_salted(
     # map task keeps its partition id — unlike rand(), SPARK-38388), so the
     # repartition stays retry-consistent.  The final winner is independent of
     # salt assignment (phase 2 re-reduces), so results are unchanged.
-    salted = df.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.spark_partition_id(),
-                          *[F.col(c) for c in order]), F.lit(n_salts)))
+    salt_keys = ", ".join(["spark_partition_id()", *(ident(c) for c in order)])
+    salted = df.selectExpr(
+        "*", f"pmod(xxhash64({salt_keys}), {int(n_salts)}) AS __salt")
     partial = (
-        salted.repartition(*[F.col(c) for c in key], F.col("__salt"))
+        salted.repartition(*key, "__salt")
         .groupBy(*key, "__salt")
-        .agg(F.max_by(payload, order_key).alias("__win"))
+        .agg(F.expr(winner_sql(columns, order)))
         .select(*key, "__win")
     )
-    final = (
-        partial.select("__win.*")
-        .groupBy(*key)
-        .agg(F.max_by(F.struct(*df.columns), F.struct(*[F.col(c) for c in order], op_rank().alias("__op_rank"))).alias("__win"))
-        .select("__win.*")
-    )
-    return final
+    return last_wins(partial.select("__win.*"), key=key, order=order)
 
 
 def last_wins_window(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> DataFrame:

@@ -9,19 +9,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import ident, string_literal
+
 VALID_OPS = ("I", "U", "D")
 
 
-def validity_predicate(key_cols=("conv_id", "turn_idx"), op_col: str = "op") -> Column:
-    """F4: a row is valid iff all key fields present and op recognized.
+def validity_sql(key_cols=("conv_id", "turn_idx"), op_col: str = "op") -> str:
+    """F4: a row is valid iff all key fields present and op recognized
+    (SQL text, for ``where``/``F.expr``).
 
     Reference: consumers fail batches with missing key fields
     (tick-data-consumer/consume/tick_processor.go:80-82).
     """
-    p = F.col(op_col).isin(*VALID_OPS)
-    for c in key_cols:
-        p = p & F.col(c).isNotNull()
-    return p
+    ops = ", ".join(string_literal(o) for o in VALID_OPS)
+    return " AND ".join([f"{ident(op_col)} IN ({ops})",
+                         *[f"{ident(c)} IS NOT NULL" for c in key_cols]])
 
 
 def split_valid(df: DataFrame, key_cols=("conv_id", "turn_idx"), op_col="op"):
@@ -32,8 +34,8 @@ def split_valid(df: DataFrame, key_cols=("conv_id", "turn_idx"), op_col="op"):
     (status-service/sync/tick_processor.go:238-249) — recording counts in the
     lineage manifest.
     """
-    p = validity_predicate(key_cols, op_col)
-    return df.where(p), df.where(~p | p.isNull())
+    p = validity_sql(key_cols, op_col)
+    return df.where(p), df.where(f"(NOT ({p})) OR (({p}) IS NULL)")
 
 
 def drop_empty(df: DataFrame, epoch_col="epoch", tick_col="lsn") -> DataFrame:

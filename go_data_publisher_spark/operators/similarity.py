@@ -66,14 +66,17 @@ def brute_force_topk(df: DataFrame, query: Sequence[float], k: int = 10,
 
 
 def make_cosine_topk_pandas(query: Sequence[float]):
-    """numpy/BLAS variant: matrix-vector product per Arrow batch."""
+    """numpy variant: row-wise dot products per Arrow batch.  Scored row by
+    row, not with the BLAS ``m @ qv``, whose blocking depends on the batch
+    size: there two identical vectors in batches of different sizes scored
+    an ulp apart, so the id tie-break of the top-k never fired."""
     qv = np.asarray(query, dtype=np.float64)
     qn = np.linalg.norm(qv)
 
     @pandas_udf("double")
     def cos(v: pd.Series) -> pd.Series:
         m = np.vstack(v.to_numpy())
-        sims = (m @ qv) / (np.linalg.norm(m, axis=1) * qn)
+        sims = (m * qv).sum(axis=1) / (np.linalg.norm(m, axis=1) * qn)
         return pd.Series(sims)
 
     return cos

@@ -10,14 +10,18 @@ re-expression of the reference consumer loop
 Stages (all declarative):
  1. validity guard  → quarantine invalid rows or abort the batch (F4/V4)
  2. schema-evolution diff → widen target before apply (archiverv1/v2 analogue)
- 3. last-wins dedup per (conv_id, turn_idx) by (lsn, op-rank)  (D4)
+ 3. last-wins dedup per (conv_id, turn_idx) by (lsn, op-rank)  (D4),
+    fused into the merge's bucket exchange unless salted or routed
  4. merge-on-read delta commit into the bucketed lake table    (D1/D5)
  5. lineage manifest row per touched partition + batch metrics (A5/S8)
 
-Per microbatch this runs exactly two Spark jobs: the delta write (scan →
-dedup shuffle → bucket repartition → parquet) and a tiny 3-column lineage
-aggregate over the just-written delta.  Batch-level stats (invalid count,
-lsn bounds) ride the write job as an Observation — zero extra scans.
+Per microbatch this runs one Spark job on the default path: the delta write
+(scan → one bucket exchange that also carries the last-wins dedup →
+parquet), plus a quarantine append when the batch holds invalid rows.
+Lineage counters come from the written files' parquet footers, and the
+invalid-row count rides the write job as an Observation — zero extra scans.
+The plan itself is described in SQL text (see ``sqltext``), so building it
+costs the driver about a hundred py4j round trips, not one per Column node.
 
 Exactly-once: the table's manifest commit records epoch_id; a replayed batch
 (same epoch_id) is a no-op.  Transient sink failures are retried with
@@ -29,18 +33,19 @@ leaves only orphan files that vacuum() collects — never a double commit.
 
 from __future__ import annotations
 
-import os
 import random
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import schemas
 from ..lake.table import TranscriptTable
 from ..operators.dedup import last_wins, last_wins_salted
-from ..operators.routing import split_valid, validity_predicate
+from ..operators.routing import split_valid, validity_sql
+from ..sqltext import project_to
 
 
 class MismatchError(RuntimeError):
@@ -235,7 +240,8 @@ class ChangeApplier:
         # columns
         key = tuple(self.table.key)
         order = (self.table.order_col,)
-        vp = validity_predicate(key_cols=key)
+        invalid = f"NOT coalesce({validity_sql(key_cols=key)}, false)"
+        n_invalid = f"sum(CASE WHEN {invalid} THEN 1 ELSE 0 END) AS nq"
         # Unique observation name per invocation: a previously-registered
         # observation with the same name (e.g. an aborted strict-mode attempt
         # of the same epoch) would otherwise receive this run's metrics and
@@ -243,16 +249,13 @@ class ChangeApplier:
         import uuid
 
         obs = Observation(f"cdc_batch_{epoch_id}_{uuid.uuid4().hex[:8]}")
-        observed = batch.observe(
-            obs,
-            F.sum(F.when(~F.coalesce(vp, F.lit(False)), 1).otherwise(0)).alias("nq"),
-        )
+        observed = batch.observe(obs, F.expr(n_invalid))
         valid, quarantined = split_valid(observed, key_cols=key)
 
         if self.on_invalid == "error":
             # strict mode pays one extra (pushdown-pruned) job to abort
             # BEFORE anything is applied
-            bad = batch.where(~F.coalesce(vp, F.lit(False))).limit(1).count()
+            bad = batch.where(invalid).limit(1).count()
             if bad:
                 raise MismatchError(
                     f"batch {epoch_id} contains invalid rows and on_invalid='error'"
@@ -261,59 +264,43 @@ class ChangeApplier:
         # schema evolution BEFORE apply: v2 events may add columns/widen.
         # BOTH targets evolve — the ephemeral table would otherwise silently
         # drop new columns (merge projects onto its own target schema)
-        batch_schema = valid.drop("op", "schema_version").schema
+        batch_schema = T.StructType([f for f in batch.schema.fields
+                                     if f.name not in ("op", "schema_version")])
         # retry-wrapped like every other manifest commit: an evolution commit
         # losing a race to a concurrent writer (out-of-band compaction, a
         # second writer-id pipeline) is retriable, not fatal
         self.retry.run(lambda: self.table.evolve_schema(batch_schema))
         if self.ephemeral_table is not None:
             self.retry.run(lambda: self.ephemeral_table.evolve_schema(batch_schema))
-        target_schema = self.table.schema
 
-        # Fused-dedup default (r7): hand merge() the raw valid rows and let
-        # it fold the in-batch last-wins into the balanced bucket shuffle —
-        # one exchange per microbatch instead of two (table.py:merge,
-        # fuse_dedup; A/B evidence in plans/r07/fused_ab_run{1,2}.json).
-        # The salted path keeps its explicit two-phase spread, and the
-        # routing path needs the winners materialized before the split.
-        fuse = os.environ.get("SPARK_GRAFT_MERGE_FUSED", "1") != "0"
+        # merge() owns the dedup shape and the cast to the target schema: the
+        # default path hands it the raw valid rows and it fuses the in-batch
+        # last-wins into its bucket exchange.  The salted path keeps its
+        # explicit two-phase spread, and the routing path needs the winners
+        # (cast to the target schema the route predicate is written against)
+        # materialized before the split.
         if self.salted:
-            dedup, pre_deduped = last_wins_salted(
-                valid, key=key, order=order, n_salts=self.n_salts), True
-        elif self.route_sql is not None or not fuse:
-            dedup, pre_deduped = last_wins(valid, key=key, order=order), True
-        else:
-            dedup, pre_deduped = valid, False
-
-        # project winners into target schema + op (lsn records the applied
-        # version; columns missing from an old-schema batch become null)
-        cols = []
-        for f in target_schema.fields:
-            if f.name in dedup.columns:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        changes = dedup.select(*cols, "op")
-
-        if self.route_sql is not None:
+            stats = self._merge_sink(
+                self.table, last_wins_salted(valid, key=key, order=order,
+                                             n_salts=self.n_salts), epoch_id)
+        elif self.route_sql is not None:
             # F3 dual-target routing: split winners by predicate; each
             # target computes its own touched buckets + cursor.  The winners
             # are materialized ONCE so both targets' merges (and any retry)
             # reuse them — without the persist, each merge would re-run the
             # source scan and the dedup shuffle.
-            changes = changes.persist()
+            dedup = last_wins(valid, key=key, order=order)
+            changes = dedup.selectExpr(
+                *project_to(self.table.schema, dedup.columns), "`op`").persist()
             try:
-                eph = changes.where(F.expr(self.route_sql))
-                perm = changes.where(
-                    ~F.coalesce(F.expr(self.route_sql), F.lit(False))
-                )
+                eph = changes.where(self.route_sql)
+                perm = changes.where(f"NOT coalesce(({self.route_sql}), false)")
                 self._merge_sink(self.ephemeral_table, eph, epoch_id)
                 stats = self._merge_sink(self.table, perm, epoch_id)
             finally:
                 changes.unpersist()
         else:
-            stats = self._merge_sink(self.table, changes, epoch_id,
-                                     deduped=pre_deduped)
+            stats = self._merge_sink(self.table, valid, epoch_id, deduped=False)
         per_bucket = stats.pop("per_bucket", [])
 
         try:
@@ -321,14 +308,12 @@ class ChangeApplier:
         except Exception:
             # degenerate (e.g. empty) batch: the observed metrics row may
             # be unavailable — fall back to a direct aggregate
-            stats_row = batch.agg(
-                F.sum(F.when(~F.coalesce(vp, F.lit(False)), 1).otherwise(0)).alias("nq"),
-            ).first()
+            stats_row = batch.agg(F.expr(n_invalid)).first()
         n_quarantined = int(stats_row["nq"] or 0)
         if self.quarantine_dir:
             if n_quarantined:
                 self.retry.run(
-                    lambda: quarantined.withColumn("__epoch_id", F.lit(int(epoch_id)))
+                    lambda: quarantined.selectExpr("*", f"{int(epoch_id)} AS __epoch_id")
                     .write.mode("append").parquet(self.quarantine_dir)
                 )
             self._mark_quarantined(epoch_id)
@@ -404,12 +389,12 @@ class ChangeApplier:
 
         if not self.quarantine_dir or os.path.exists(self._quarantine_marker(epoch_id)):
             return {}
-        vp = validity_predicate(key_cols=tuple(self.table.key))
-        bad = batch.where(~F.coalesce(vp, F.lit(False)))
+        bad = batch.where(
+            f"NOT coalesce({validity_sql(key_cols=tuple(self.table.key))}, false)")
         n = bad.count()
         if n:
             self.retry.run(
-                lambda: bad.withColumn("__epoch_id", F.lit(int(epoch_id)))
+                lambda: bad.selectExpr("*", f"{int(epoch_id)} AS __epoch_id")
                 .write.mode("append").parquet(self.quarantine_dir)
             )
         self._mark_quarantined(epoch_id)

@@ -35,7 +35,10 @@ import json
 import os
 from contextlib import contextmanager
 
+from pyspark.sql.types import StructType
+
 from ..ioutil import atomic_write_json, locked
+from ..sqltext import cast_to, ident, type_sql
 
 
 class ChangefeedRetentionError(RuntimeError):
@@ -224,7 +227,9 @@ class ChangefeedTailer(_CursorDrainBase):
         # source's CURRENT schema, so widen/extend the target first or
         # merge() would silently project the new columns away (same order
         # as ChangeApplier.apply_batch)
-        self.target.evolve_schema(events.drop("op").schema)
+        self.target.evolve_schema(StructType(
+            [f for f in feed.schema.fields
+             if f.name not in ("op", "commit_version")]))
         epoch = int(cur["next_epoch"])
         stats = self.target.merge(
             events, epoch_id=epoch, writer_id=self.writer_id,
@@ -294,8 +299,6 @@ class ChangefeedTailer(_CursorDrainBase):
             )
 
     def _reseed_attempt(self) -> dict | None:
-        from pyspark.sql import functions as F
-
         from ..lake.table import RetentionLostError
 
         cur = self._load()
@@ -344,7 +347,7 @@ class ChangefeedTailer(_CursorDrainBase):
         key = list(self.target.key)
         order_col = self.target.order_col
         cursor_lsn = int(m.get("cursor_lsn", -1))
-        ups = snap.withColumn("op", F.lit("I"))
+        ups = snap.selectExpr("*", "'I' AS `op`")
         gone = (self.target.snapshot()
                 .join(snap.select(*key), on=key, how="left_anti"))
         if cursor_lsn < 0 and gone.limit(1).count() > 0:
@@ -366,17 +369,11 @@ class ChangefeedTailer(_CursorDrainBase):
                 "source was intentionally re-created, rebuild the target "
                 "fresh instead of reseeding over it"
             )
-        cols = []
-        for f in ups.schema.fields:
-            if f.name == "op":
-                cols.append(F.lit("D").alias("op"))
-            elif f.name == order_col:
-                cols.append(F.lit(cursor_lsn).cast(f.dataType).alias(f.name))
-            elif f.name in gone.columns:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        dels = gone.select(*cols)
+        have = set(gone.columns)
+        cols = [f"CAST({cursor_lsn} AS {type_sql(f.dataType)}) AS {ident(f.name)}"
+                if f.name == order_col else cast_to(f, f.name in have)
+                for f in snap.schema.fields]
+        dels = gone.selectExpr(*cols, "'D' AS `op`")
 
         stats = self.target.merge(ups.unionByName(dels), epoch_id=epoch,
                                   writer_id=self.writer_id)

@@ -48,7 +48,7 @@ def test_one_bucket_per_partition_live(spark):
     df = (
         spark.range(10_000)
         .select(F.pmod(F.col("id"), F.lit(n)).cast("int").alias("__bucket"))
-        .withColumn("__pkey", balanced_write_pkey(F.col("__bucket"), n))
+        .withColumn("__pkey", F.expr(balanced_write_pkey("__bucket", n)))
         .repartition(n, "__pkey")
         .select("__bucket", F.spark_partition_id().alias("pid"))
     )
@@ -65,21 +65,42 @@ def test_one_bucket_per_partition_live(spark):
     assert len(pids) == n, "two buckets collided onto one write task"
 
 
-def test_fused_equals_two_phase(spark, tmpdir_path, monkeypatch):
-    """The fused single-exchange merge (default) and the two-phase shape
-    (SPARK_GRAFT_MERGE_FUSED=0) commit byte-identical final states — winners
-    are the same max_by over (order, op-rank) within the same key groups."""
-    from go_data_publisher_spark.streaming.apply import ChangeApplier
+def test_balanced_pkeys_search_is_capped(monkeypatch):
+    """A hash that never reaches some residues ends the preimage search
+    after 64·n probes; those residues map to themselves, so placement stays
+    a pure function of __bucket (only balance is lost)."""
+    import go_data_publisher_spark.lake.table as table_mod
+
+    probes = []
+
+    def stub_hash(j, seed=42):
+        probes.append(j)
+        return 2 * j  # even residues only
+
+    monkeypatch.setattr(table_mod, "_mmh3_hash_int", stub_hash)
+    monkeypatch.setattr(table_mod, "_PKEY_CACHE", {})
+    got = table_mod._balanced_pkeys(8)
+    assert len(probes) == 64 * 8
+    assert got == [0, 1, 1, 3, 2, 5, 3, 7]
+
+
+def test_fused_equals_two_phase(spark, tmpdir_path):
+    """The fused single-exchange merge (the default for a raw batch) and the
+    two-phase shape (last_wins, then merge(deduped=True)) commit identical
+    final states — winners are the same max_by over (order, op-rank)
+    within the same key groups."""
+    from go_data_publisher_spark.operators.dedup import last_wins
+    from go_data_publisher_spark.operators.routing import split_valid
     from go_data_publisher_spark.sources.changelog import generate_changelog
+    from go_data_publisher_spark.streaming.apply import ChangeApplier
 
     log = generate_changelog(spark, 20_000, n_convs=120, seed=7)
-    snaps = {}
-    for flag in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_MERGE_FUSED", flag)
-        tbl = TranscriptTable(spark, f"{tmpdir_path}/t{flag}", n_buckets=8)
-        ChangeApplier(tbl).apply_batch(log, epoch_id=0)
-        snaps[flag] = tbl.snapshot()
-    a, b = snaps["0"], snaps["1"]
+    valid, _ = split_valid(log)
+    fused = TranscriptTable(spark, f"{tmpdir_path}/fused", n_buckets=8)
+    ChangeApplier(fused).apply_batch(log, epoch_id=0)
+    two = TranscriptTable(spark, f"{tmpdir_path}/two", n_buckets=8)
+    two.merge(last_wins(valid), epoch_id=0, deduped=True)
+    a, b = two.snapshot(), fused.snapshot()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.count() == b.count() > 0
 

@@ -81,6 +81,34 @@ def test_brute_force_topk_exact_and_pandas_agree(spark, vectors):
         assert abs(x["cosine"] - y["cosine"]) < 1e-6
 
 
+@pytest.mark.parametrize("n_parts", [2, 8, 16])
+def test_pandas_topk_ties_exact_duplicates_across_partitions(spark, n_parts):
+    """Exact duplicate vectors score identically whatever Arrow batch (here:
+    partition) they land in, so the top-k tie-break orders them by id."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+
+    def unit():
+        v = rng.standard_normal(16)
+        return [float(x) for x in v / np.linalg.norm(v)]
+
+    rows = [(i, unit()) for i in range(120)]
+    dup = unit()
+    dup_ids = [3, 17, 29, 44, 58, 71, 96, 113]
+    for i in dup_ids:
+        rows[i] = (i, dup)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>") \
+        .repartition(n_parts, "vec_id")
+    # the query is one of the stored (float32) vectors, as in a self-search
+    q = df.where(f"vec_id = {dup_ids[0]}").first()["embedding"]
+    got = S.brute_force_topk_pandas(df, q, k=len(dup_ids)).collect()
+    assert [r["vec_id"] for r in got] == dup_ids
+    assert len({r["cosine"] for r in got}) == 1
+    sql = S.brute_force_topk(df, q, k=len(dup_ids)).collect()
+    assert [r["vec_id"] for r in sql] == dup_ids
+
+
 def test_ann_topk_finds_near_neighbors(spark, vectors):
     q = vectors.where("vec_id = 0").first()["embedding"]
     got = S.ann_topk_lsh(vectors, q, k=3, n_planes=6, multiprobe_hamming=1).collect()
