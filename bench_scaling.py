@@ -662,14 +662,9 @@ pair-free in `tests/test_plan_shapes.py`.
 
 ## Table backend
 
-SURVEY.md §7: "Iceberg if the jar can be fetched, else mini-lake."  The
-Iceberg backend (`lake/iceberg.py`: hadoop-catalog warehouse, bucket
-partitioning, merge-on-read MERGE INTO, same contract surface) is
-implemented and its contract tests run whenever
-`iceberg_artifact_available()` — this sandbox has no network route to any
-Maven resolver and no ivy cache, so the run below used the **mini-lake**
-backend (whose manifest log now mirrors Iceberg's O(batch) commit-metadata
-shape; see `tests/test_iceberg_backend.py` for the shared contract).
+The **mini-lake** (`lake/table.py`) is the only table backend; every run
+above used it.  Its manifest log mirrors Iceberg's O(batch) commit-metadata
+shape; `tests/test_table_contract.py` pins its eight-point table contract.
 """
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:
         f.write(md)

@@ -1,8 +1,8 @@
 """Manifest-committed, hash-bucketed, merge-on-read lake table — the MERGE target.
 
-This is the Iceberg-fallback backend from SURVEY.md §7 (no Iceberg runtime jar
-ships in this environment).  It reproduces the properties the engine needs
-from a lake table, with the same commit discipline the reference gets from
+This is the engine's only table backend (the mini-lake of SURVEY.md §7).
+It reproduces the properties the engine needs from a lake table, with the
+same commit discipline the reference gets from
 "ES bulk index with deterministic doc IDs, then commit Kafka offsets"
 (transactions-consumer/consume/transaction_consumer.go:134-150):
 
@@ -53,8 +53,8 @@ data movement is executor-side.  The driver only lists/renames manifest
 JSON — the same metadata-plane work an Iceberg catalog commit does.
 Commit mutual exclusion uses ``flock`` and therefore assumes the table root
 is on a LOCAL POSIX filesystem (see `_write_manifest`); pointing multiple
-hosts at a network mount needs an external lock service or the Iceberg
-catalog backend.
+hosts at a network mount needs an external lock service, which this
+package does not ship.
 """
 
 from __future__ import annotations
@@ -234,9 +234,7 @@ def fold_epoch_state(hwm: int, recent: set, epoch_id: int,
                      writer_id: str = "default") -> tuple[int, set]:
     """Fold a newly-committed epoch into a writer's bounded (hwm, recent)
     replay-guard state: collapse the contiguous prefix into the high
-    watermark and enforce the permanent-gap bound.  ONE implementation
-    shared by the mini-lake commit and the Iceberg property update, so the
-    two backends cannot diverge."""
+    watermark and enforce the permanent-gap bound."""
     hwm = int(hwm)
     recent = set(recent) | {int(epoch_id)}
     while hwm + 1 in recent:
@@ -567,9 +565,8 @@ class TranscriptTable:
         filesystem.  On NFS/FUSE mounts it may silently be advisory-per-host
         or a no-op, reverting concurrent cross-host commits to
         last-write-wins.  Single-host (many processes) use is safe anywhere
-        flock works; multi-host deployments need a shared lock service or
-        the Iceberg catalog backend (`lake.iceberg`), whose catalog provides
-        the atomic compare-and-swap instead."""
+        flock works; multi-host deployments need a shared lock service,
+        which this package does not ship."""
         from ..ioutil import atomic_write_json, atomic_write_text, locked
 
         with locked(f"{self.root}/_manifests/COMMIT_LOCK"):
@@ -1116,7 +1113,7 @@ class TranscriptTable:
         cursor = max(int(m["cursor_lsn"]), int(batch_max_lsn)) if batch_max_lsn is not None \
             else int(m["cursor_lsn"])
         # bounded epoch state: fold the new epoch into the writer's
-        # hwm + recent set (shared helper — same guard as the Iceberg backend)
+        # hwm + recent set
         hwm0, recent0 = self._writer_state(m, writer_id)
         hwm, recent = fold_epoch_state(hwm0, recent0, epoch_id, writer_id)
         now = time.time()

@@ -1,4 +1,4 @@
-"""Aggregation operators — SURVEY.md §2.5 (A1-A5).
+"""Aggregation operators — SURVEY.md §2.5 (A1-A4).
 
 All are hash aggregates with map-side partial aggregation (skew-tolerant by
 construction); `latest_per_group` deliberately uses max_by rather than a
@@ -33,15 +33,3 @@ def batch_max_lsn(df: DataFrame, lsn_col: str = "lsn"):
     """A4: max-lsn gauge over a batch (scalar)."""
     row = df.agg(F.max(lsn_col).alias("mx"), F.min(lsn_col).alias("mn")).first()
     return row["mn"], row["mx"]
-
-
-def observe_batch_stats(df: DataFrame, name: str = "batch_stats") -> DataFrame:
-    """A5: zero-cost counters piggybacked on the batch pass (`observe`),
-    the reference's prometheus bulk-indexer stats
-    (transactions-consumer/extern/elastic_client.go:64-79)."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-        F.min("lsn").alias("lsn_min"),
-        F.max("lsn").alias("lsn_max"),
-    )

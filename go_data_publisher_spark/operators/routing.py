@@ -1,4 +1,4 @@
-"""Filters / routing / validity guards — SURVEY.md §2.2 (F1-F8).
+"""Filters / routing / validity guards — SURVEY.md §2.2 (F1-F4).
 
 All of these are plain Catalyst expressions, so predicate pushdown, column
 pruning and whole-stage codegen apply for free.
@@ -65,13 +65,3 @@ def route_ephemeral(df: DataFrame, pred: Column, route_col: str = "sink") -> Dat
     targets — no double scan.
     """
     return df.withColumn(route_col, F.when(pred, F.lit("ephemeral")).otherwise(F.lit("permanent")))
-
-
-def scope_to_epoch(df: DataFrame, epoch_col: str, current_epoch: int) -> DataFrame:
-    """F5: keep only the current epoch's rows (removePreviousEpochs)."""
-    return df.where(F.col(epoch_col) == current_epoch)
-
-
-def closed_epochs_only(df: DataFrame, epoch_col: str, latest_epoch: int) -> DataFrame:
-    """F6: publish only finalized groups (epoch < latest)."""
-    return df.where(F.col(epoch_col) < latest_epoch)

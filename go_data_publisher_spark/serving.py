@@ -112,12 +112,8 @@ def build_report(spark, tbl, lineage_dir: str | None = None,
     # key/order contract, not hardcoded names.
     from .ioutil import has_parquet_data
 
-    # Iceberg-backed tables have no filesystem root: without an explicit
-    # quarantine_dir the skipped-keys section is simply omitted, it must not
-    # AttributeError the whole report
-    qdir = quarantine_dir or (
-        f"{tbl.root}/_quarantine" if getattr(tbl, "root", None) else None)
-    if qdir and os.path.isdir(qdir):
+    qdir = quarantine_dir or f"{tbl.root}/_quarantine"
+    if os.path.isdir(qdir):
         key = list(tbl.key)
         order = tbl.order_col
         if has_parquet_data(qdir):

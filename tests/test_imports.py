@@ -1,0 +1,118 @@
+"""Every package-internal import resolves, without starting Spark.
+
+Each `.py` under `go_data_publisher_spark/` is parsed with `ast`, and every
+`import` / `from ... import` that names the package (absolute) or is
+relative is resolved against the source tree — function-local imports
+included, which importing the modules would never execute.  A target must be
+an existing module; a name imported *from* a module must be a submodule or
+be bound at that module's top level.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = "go_data_publisher_spark"
+ROOT = Path(__file__).resolve().parent.parent
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _module_name(path: Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _module_file(name: str) -> Path | None:
+    base = ROOT.joinpath(*name.split("."))
+    for cand in (base.with_suffix(".py"), base / "__init__.py"):
+        if cand.is_file():
+            return cand
+    return None
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names bound at module level, looking through if/try/with/for blocks
+    but not into function or class bodies."""
+    names: set[str] = set()
+    todo = list(ast.parse(path.read_text()).body)
+    while todo:
+        s = todo.pop()
+        if isinstance(s, _SCOPES):
+            names.add(s.name)
+            continue
+        if isinstance(s, (ast.Import, ast.ImportFrom)):
+            names.update(a.asname or a.name.split(".")[0] for a in s.names)
+        for t in getattr(s, "targets", []) + [getattr(s, "target", None)]:
+            if t is not None:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        for field in ("body", "orelse", "finalbody"):
+            todo.extend(getattr(s, field, []))
+        for h in getattr(s, "handlers", []):
+            todo.extend(h.body)
+    return names
+
+
+def _unresolved(source: str, module: str, is_package: bool = False) -> list[str]:
+    """Package-internal imports in ``source`` (the text of ``module``) whose
+    target module or imported name does not exist."""
+    package = module if is_package else module.rpartition(".")[0]
+    problems = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.Import):
+            targets = [(a.name, []) for a in node.names
+                       if a.name == PKG or a.name.startswith(PKG + ".")]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = package.split(".")
+                base = parts[: len(parts) - node.level + 1]
+                target = ".".join(base + ([node.module] if node.module else []))
+            elif node.module == PKG or (node.module or "").startswith(PKG + "."):
+                target = node.module
+            else:
+                continue
+            targets = [(target, [a.name for a in node.names])]
+        else:
+            continue
+        for target, names in targets:
+            target_file = _module_file(target)
+            if target_file is None:
+                problems.append(f"line {node.lineno}: no module {target}")
+                continue
+            for name in names:
+                if (name != "*" and not _module_file(f"{target}.{name}")
+                        and name not in _top_level_names(target_file)):
+                    problems.append(f"line {node.lineno}: {target} has no {name}")
+    return problems
+
+
+def test_package_internal_imports_resolve():
+    files = sorted((ROOT / PKG).rglob("*.py"))
+    assert len(files) > 20
+    problems = [
+        f"{path.relative_to(ROOT)} {p}"
+        for path in files
+        for p in _unresolved(path.read_text(), _module_name(path),
+                             path.name == "__init__.py")
+    ]
+    assert not problems, "\n".join(problems)
+
+
+def test_resolver_flags_function_local_imports():
+    src = (
+        "from .table import TranscriptTable\n"
+        "def f():\n"
+        "    from .table import fold_epoch_state\n"
+        "    from .table import no_such_name\n"
+        "    from .gone import Thing\n"
+        "    from ..operators import routing, no_such_module\n"
+        "    import go_data_publisher_spark.lake.missing\n"
+    )
+    assert _unresolved(src, f"{PKG}.lake.probe") == [
+        "line 4: go_data_publisher_spark.lake.table has no no_such_name",
+        "line 5: no module go_data_publisher_spark.lake.gone",
+        "line 6: go_data_publisher_spark.operators has no no_such_module",
+        "line 7: no module go_data_publisher_spark.lake.missing",
+    ]

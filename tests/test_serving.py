@@ -320,30 +320,6 @@ def test_metrics_lineage_ttl_builds_once_per_window(spark, small_table):
         srv.shutdown()
 
 
-def test_report_skips_quarantine_section_without_fs_root(spark, small_table):
-    """ADVICE r4: tables without a filesystem .root (Iceberg backend) must
-    not AttributeError the report — the skipped-keys section is omitted."""
-    tbl, _ = small_table
-
-    class NoRootTable:
-        # quacks like the Iceberg-backed table: no .root attribute
-        key = tbl.key
-        order_col = tbl.order_col
-
-        def manifest(self):
-            return tbl.manifest()
-
-        def snapshot(self, **kw):
-            return tbl.snapshot(**kw)
-
-        def history(self):
-            return tbl.history()
-
-    report = build_report(spark, NoRootTable())
-    assert report["rows"] == 12
-    assert "rows_skipped_total" not in report
-
-
 def test_fully_quarantined_batch_reaches_metrics(spark, small_table):
     """A batch whose EVERY row fails validity touches no bucket, so it used
     to write an empty lineage epoch file and its quarantine count silently
