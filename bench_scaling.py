@@ -664,7 +664,7 @@ pair-free in `tests/test_plan_shapes.py`.
 
 The **mini-lake** (`lake/table.py`) is the only table backend; every run
 above used it.  Its manifest log mirrors Iceberg's O(batch) commit-metadata
-shape; `tests/test_table_contract.py` pins its eight-point table contract.
+shape; `tests/test_iceberg_backend.py` pins its eight-point table contract.
 """
     with open(os.path.join(REPO, "BENCH.md"), "w") as f:
         f.write(md)

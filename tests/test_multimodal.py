@@ -1,9 +1,10 @@
-"""Multimodal: real netpbm/WAV codecs (roundtrip-pinned), mapInPandas
-plumbing, stub fallback for formats whose libs the container lacks."""
+"""Netpbm codec: roundtrip-pinned encode/decode and the truncated-header
+error path."""
 
 import numpy as np
+import pytest
 
-from go_data_publisher_spark.functions import multimodal as M
+from go_data_publisher_spark.functions import netpbm as M
 
 
 def test_pgm_roundtrip():
@@ -21,770 +22,7 @@ def test_ppm_luma():
     assert luma[0, 0] == 60 and luma[1, 1] == 0
 
 
-def test_wav_roundtrip_and_rms():
-    sr = 8000
-    t = np.arange(4000, dtype=np.float32) / sr
-    pcm = 0.5 * np.sin(2 * np.pi * 100 * t)
-    got, got_sr = M.decode_wav(M.encode_wav(pcm, sr))
-    assert got_sr == sr and len(got) == len(pcm)
-    assert np.abs(got - pcm).max() < 1e-3  # 16-bit quantization bound
-    rms = float(np.sqrt((got**2).mean()))
-    assert abs(rms - 0.5 / np.sqrt(2)) < 1e-3
-
-
-def test_image_features_use_real_decode(spark):
-    media = M.make_media_fixture(spark, n=12)
-    feats = {r.media_id: r for r in M.extract_image_features(
-        media.where("mime = 'image/x-portable-graymap'")).collect()}
-    # recompute one image independently from the fixture rule (seed=3 default)
-    mid = next(iter(feats))
-    w, h = 16 + (mid * 7) % 48, 16 + (mid * 13) % 48
-    px = np.random.default_rng([3, mid]).integers(0, 256, size=(h, w), dtype=np.uint8)
-    r = feats[mid]
-    assert (r.width, r.height) == (w, h)
-    assert abs(r.mean_luma - float(px.mean())) < 1e-9
-
-
-def test_audio_features_use_real_decode(spark):
-    media = M.make_media_fixture(spark, n=12)
-    feats = M.extract_audio_features(media.where("kind = 'audio'")).collect()
-    assert feats
-    for r in feats:
-        assert r.sample_rate == 8000
-        assert abs(r.duration_s - r.n_samples / 8000) < 1e-9
-        # 0.5-amplitude sine → rms ≈ 0.3536 (partial last period wiggles it)
-        assert 0.30 < r.rms < 0.40
-
-
-def test_image_features(spark):
-    media = M.make_media_fixture(spark, n=32)
-    feats = M.extract_image_features(media.where("kind = 'image'"))
-    rows = feats.collect()
-    assert len(rows) == media.where("kind = 'image'").count()
-    for r in rows:
-        assert 16 <= r["width"] < 64 and 16 <= r["height"] < 64
-        assert len(r["feature"]) == 8
-        assert abs(sum(r["feature"]) - 1.0) < 1e-3  # normalized histogram
-
-
-def test_image_features_deterministic(spark):
-    media = M.make_media_fixture(spark, n=16)
-    a = sorted(M.extract_image_features(media).collect())
-    b = sorted(M.extract_image_features(media.repartition(7)).collect())
-    assert a == b
-
-
-def test_audio_features(spark):
-    media = M.make_media_fixture(spark, n=32)
-    feats = M.extract_audio_features(media.where("kind = 'audio'")).collect()
-    assert feats and all(r["rms"] > 0 and r["duration_s"] > 0 for r in feats)
-
-
-def test_video_frame_sampling(spark):
-    media = M.make_media_fixture(spark, n=32)
-    frames = M.sample_video_frames(media, every_n=10)
-    got = frames.groupBy("media_id").count().collect()
-    assert got and all(r["count"] >= 1 for r in got)
-
-
 def test_truncated_netpbm_raises_not_hangs():
-    import pytest
     for bad in (b"P5\n10 10\n255", b"P5\n10", b"P6\n#comment", b"P5\n"):
         with pytest.raises(ValueError):
             M.decode_netpbm(bad)
-
-
-def test_riff_non_wav_rows_are_skipped(spark):
-    """An AVI/WebP/corrupt-RIFF payload raises wave.Error/EOFError, not
-    ValueError — the extractor must skip the row, not kill the job."""
-    rows = [(1, b"RIFF\x00\x00\x00\x00AVI LIST"), (2, b"RIFF"),
-            (3, M.encode_wav(np.zeros(100, dtype=np.float32) + 0.1, 8000))]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = M.extract_audio_features(df).collect()
-    assert [r.media_id for r in got] == [3]
-
-
-def test_fixture_seed_decorrelates(spark):
-    a = {r.media_id: bytes(r.payload)
-         for r in M.make_media_fixture(spark, n=9, seed=1).collect()}
-    b = {r.media_id: bytes(r.payload)
-         for r in M.make_media_fixture(spark, n=9, seed=2).collect()}
-    assert all(a[k] != b[k] for k in a)
-
-
-def test_bmp_roundtrip_and_variants():
-    """Real BMP codec: encode→decode is identity on dimensions and luma for
-    padded and unpadded widths; top-down rasters and unsupported variants
-    handled."""
-    import numpy as np
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import decode_bmp, encode_bmp
-
-    for w, h in ((16, 8), (17, 5), (3, 3)):  # 17*3=51 → 1-byte row padding
-        rng = np.random.default_rng([w, h])
-        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        gw, gh, luma = decode_bmp(encode_bmp(px))
-        assert (gw, gh) == (w, h)
-        assert np.array_equal(luma, px.mean(axis=2).astype(np.uint8))
-
-    # top-down raster (negative height) decodes to the same image
-    import struct
-    px = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    buf = bytearray(encode_bmp(px))
-    struct.pack_into("<i", buf, 22, -4)                 # height := -4
-    body = bytes(buf[54:])
-    stride = len(body) // 4
-    flipped = b"".join(body[i * stride:(i + 1) * stride] for i in range(3, -1, -1))
-    gw, gh, luma = decode_bmp(bytes(buf[:54]) + flipped)
-    assert (gw, gh) == (4, 4)
-    assert np.array_equal(luma, px.mean(axis=2).astype(np.uint8))
-
-    with pytest.raises(ValueError, match="not a BMP"):
-        decode_bmp(b"XX" + b"\0" * 60)
-    with pytest.raises(ValueError, match="truncated"):
-        decode_bmp(encode_bmp(px)[:-8])
-    comp = bytearray(encode_bmp(px))
-    struct.pack_into("<I", comp, 30, 1)                 # BI_RLE8 compression
-    with pytest.raises(ValueError, match="unsupported BMP variant"):
-        decode_bmp(bytes(comp))
-
-
-def test_bmp_flows_through_image_features(spark):
-    """The fixture rotates all four real raster codecs; the mapInPandas
-    feature extractor must decode every one (mime tells which rows)."""
-    from go_data_publisher_spark.functions.multimodal import (
-        extract_image_features,
-        make_media_fixture,
-    )
-
-    media = make_media_fixture(spark, n=36)
-    imgs = media.where("kind = 'image'")
-    mimes = {r["mime"] for r in imgs.select("mime").distinct().collect()}
-    assert mimes == {"image/x-portable-graymap", "image/bmp", "image/png",
-                     "image/jpeg"}
-    feats = extract_image_features(imgs)
-    # every image row decodes (no skips), real dimensions carried through
-    assert feats.count() == imgs.count()
-    assert feats.where("width >= 16 AND height >= 16 AND mean_luma > 0").count() \
-        == feats.count()
-
-
-def test_bmp_malformed_headers_hit_skip_path():
-    """Corrupt offset / non-positive dimensions must raise (decode-skip),
-    never decode header bytes as plausible raster features."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import decode_bmp, encode_bmp
-
-    px = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    good = encode_bmp(px)
-
-    bad_offset = bytearray(good)
-    struct.pack_into("<I", bad_offset, 10, 0)  # offset below the headers
-    with pytest.raises(ValueError, match="pixel-data offset"):
-        decode_bmp(bytes(bad_offset))
-
-    past_end = bytearray(good)
-    struct.pack_into("<I", past_end, 10, len(good) + 100)
-    with pytest.raises(ValueError, match="pixel-data offset"):
-        decode_bmp(bytes(past_end))
-
-    neg_w = bytearray(good)
-    struct.pack_into("<i", neg_w, 18, -4)
-    with pytest.raises(ValueError, match="dimensions"):
-        decode_bmp(bytes(neg_w))
-
-    zero_h = bytearray(good)
-    struct.pack_into("<i", zero_h, 22, 0)
-    with pytest.raises(ValueError, match="dimensions"):
-        decode_bmp(bytes(zero_h))
-
-
-def test_png_roundtrip_all_color_types_and_filters():
-    """Every (color type × forward filter) pair reconstructs pixel-exact
-    luma — pins the None/Sub/Up vector paths and the Average/Paeth
-    sequential paths of the unfilter kernel."""
-    from go_data_publisher_spark.functions.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(11)
-    for ch in (1, 2, 3, 4):  # gray, gray+alpha, RGB, RGBA
-        shape = (13, 17) if ch == 1 else (13, 17, ch)
-        px = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        if ch == 1:
-            want = px
-        elif ch == 2:
-            want = px[..., 0]
-        else:
-            want = px[..., :3].mean(axis=2).astype(np.uint8)
-        for ft in range(5):
-            w, h, luma = decode_png(encode_png(px, filter_type=ft))
-            assert (w, h) == (17, 13)
-            assert np.array_equal(luma, want), (ch, ft)
-
-
-def test_png_palette_decode():
-    """Color type 3: indices resolve through PLTE to RGB luma."""
-    import struct
-    import zlib
-
-    from go_data_publisher_spark.functions.multimodal import (
-        _PNG_SIG,
-        _png_chunk,
-        decode_png,
-    )
-
-    # 2x2 image over a 3-entry palette
-    palette = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255]], dtype=np.uint8)
-    idx = np.array([[0, 1], [2, 0]], dtype=np.uint8)
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    raster = b"".join(b"\x00" + idx[y].tobytes() for y in range(2))
-    payload = (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-               + _png_chunk(b"PLTE", palette.tobytes())
-               + _png_chunk(b"IDAT", zlib.compress(raster))
-               + _png_chunk(b"IEND", b""))
-    w, h, luma = decode_png(payload)
-    assert (w, h) == (2, 2)
-    want = palette[idx].mean(axis=2).astype(np.uint8)
-    assert np.array_equal(luma, want)
-
-    # out-of-range palette index → skip path, not a numpy IndexError
-    import pytest
-
-    bad = (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-           + _png_chunk(b"PLTE", palette.tobytes())
-           + _png_chunk(b"IDAT", zlib.compress(b"\x00\x00\x09\x00\x02\x00"))
-           + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="palette index"):
-        decode_png(bad)
-
-
-def test_png_malformed_payloads_hit_skip_path():
-    """CRC corruption, truncation, unsupported variants and bad IDAT all
-    raise ValueError (decode-skip), never crash or emit garbage features."""
-    import struct
-    import zlib
-
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        _PNG_SIG,
-        _png_chunk,
-        decode_png,
-        encode_png,
-    )
-
-    px = np.arange(25, dtype=np.uint8).reshape(5, 5)
-    good = encode_png(px)
-
-    bad_crc = bytearray(good)
-    bad_crc[20] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_png(bytes(bad_crc))
-
-    with pytest.raises(ValueError, match="truncated"):
-        decode_png(good[:30])
-
-    # 16-bit depth is declared unsupported
-    ihdr16 = struct.pack(">IIBBBBB", 5, 5, 16, 0, 0, 0, 0)
-    deep = (_PNG_SIG + _png_chunk(b"IHDR", ihdr16)
-            + _png_chunk(b"IDAT", zlib.compress(b"\x00" * (5 * 11)))
-            + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="unsupported PNG variant"):
-        decode_png(deep)
-
-    # corrupt deflate stream inside a CRC-valid IDAT chunk
-    ihdr = struct.pack(">IIBBBBB", 5, 5, 8, 0, 0, 0, 0)
-    junk = (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", b"\xde\xad\xbe\xef")
-            + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="IDAT"):
-        decode_png(junk)
-
-    # invalid per-scanline filter type byte
-    raster = b"\x07" + bytes(5)  # filter 7 does not exist
-    badft = (_PNG_SIG + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 5, 1, 8, 0, 0, 0, 0))
-             + _png_chunk(b"IDAT", zlib.compress(raster))
-             + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="filter type"):
-        decode_png(badft)
-
-
-def test_png_flows_through_image_features(spark):
-    """PNG fixture rows decode through the mapInPandas extractor with real
-    dimensions and luma recomputable from the fixture rule."""
-    from go_data_publisher_spark.functions.multimodal import (
-        extract_image_features,
-        make_media_fixture,
-    )
-
-    media = make_media_fixture(spark, n=36)
-    pngs = media.where("mime = 'image/png'")
-    n_png = pngs.count()
-    assert n_png > 0
-    feats = {r.media_id: r for r in extract_image_features(pngs).collect()}
-    assert len(feats) == n_png  # no skips
-    for mid, r in feats.items():
-        w, h = 16 + (mid * 7) % 48, 16 + (mid * 13) % 48
-        px = np.random.default_rng([3, mid]).integers(
-            0, 256, size=(h, w, 3), dtype=np.uint8)
-        want = float(px.mean(axis=2).astype(np.uint8).mean())
-        assert (r.width, r.height) == (w, h)
-        assert abs(r.mean_luma - want) < 1e-9
-
-
-def test_png_short_ihdr_is_valueerror_not_struct_error():
-    """A CRC-valid IHDR with the wrong body length must raise ValueError
-    (decode-skip), not struct.error (which would escape _DECODE_ERRORS and
-    kill the mapInPandas job)."""
-    import struct
-    import zlib
-
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        _PNG_SIG,
-        _png_chunk,
-        decode_png,
-    )
-
-    short_ihdr = struct.pack(">IIBBBB", 5, 5, 8, 0, 0, 0)  # 12 bytes, not 13
-    bad = (_PNG_SIG + _png_chunk(b"IHDR", short_ihdr)
-           + _png_chunk(b"IDAT", zlib.compress(b"\x00" * 30))
-           + _png_chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="IHDR length"):
-        decode_png(bad)
-
-
-def test_jpeg_roundtrip_gray_color_and_restarts():
-    """Baseline JPEG decode pinned against analytically-known rasters:
-    flat 8×8 blocks are DC-only (closed form, exact at quant=1), smooth
-    gradients and random rasters roundtrip within ±1 at quant=1, the
-    color path reconstructs the BT.601 Y plane, restart intervals reset
-    DC predictors correctly."""
-    from go_data_publisher_spark.functions.multimodal import (
-        decode_jpeg,
-        encode_jpeg_baseline,
-    )
-
-    rng = np.random.default_rng(7)
-    # flat gray: DC-only blocks, exact reconstruction
-    for v in (0, 17, 128, 255):
-        w, h, out = decode_jpeg(
-            encode_jpeg_baseline(np.full((8, 8), v, dtype=np.uint8), quant=1))
-        assert (w, h) == (8, 8)
-        assert np.abs(out.astype(int) - v).max() <= 1
-    # gradient, non-multiple-of-8 dims (edge padding + crop path)
-    px = (np.add.outer(np.arange(21) * 3, np.arange(13) * 5) % 256) \
-        .astype(np.uint8)
-    w, h, out = decode_jpeg(encode_jpeg_baseline(px, quant=1))
-    assert (w, h) == (13, 21)
-    assert np.abs(out.astype(int) - px.astype(int)).max() <= 1
-    # random raster with DRI/RSTn restart markers
-    px = rng.integers(0, 256, size=(40, 56), dtype=np.uint8)
-    w, h, out = decode_jpeg(
-        encode_jpeg_baseline(px, quant=1, restart_interval=3))
-    assert np.abs(out.astype(int) - px.astype(int)).max() <= 1
-    # color 4:2:0: decoded luma is the BT.601 Y plane, not a channel mix
-    px = rng.integers(0, 256, size=(33, 50, 3), dtype=np.uint8)
-    w, h, out = decode_jpeg(encode_jpeg_baseline(px, quant=1))
-    assert (w, h) == (50, 33)
-    yref = 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
-    assert np.abs(out.astype(float) - yref).max() <= 2.0
-    # realistic (lossy) quant table still lands near the source
-    qt = np.clip(np.add.outer(np.arange(8), np.arange(8)) * 4 + 16,
-                 1, 255).reshape(64)
-    px = (np.add.outer(np.arange(64), np.arange(64)) % 256).astype(np.uint8)
-    w, h, out = decode_jpeg(encode_jpeg_baseline(px, quant=qt))
-    assert np.abs(out.astype(float) - px.astype(float)).mean() < 8.0
-
-
-def test_jpeg_all_subsampling_modes_decode():
-    """4:4:4, 4:2:2, 4:4:0 and 4:2:0 scans all decode; the luma plane is
-    sampling-invariant at quant=1 (chroma layout must not disturb Y)."""
-    from go_data_publisher_spark.functions.multimodal import (
-        decode_jpeg,
-        encode_jpeg_baseline,
-    )
-
-    px = np.random.default_rng(11).integers(
-        0, 256, size=(19, 26, 3), dtype=np.uint8)
-    yref = 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
-    for samp in [(1, 1), (2, 1), (1, 2), (2, 2)]:
-        w, h, out = decode_jpeg(
-            encode_jpeg_baseline(px, quant=1, luma_sampling=samp))
-        assert (w, h) == (26, 19), samp
-        assert np.abs(out.astype(float) - yref).max() <= 2.0, samp
-
-
-def test_jpeg_malformed_payloads_hit_skip_path():
-    """Every malformed-JPEG shape must raise ValueError (the decode-skip
-    contract), never struct.error/IndexError that would kill the job."""
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        decode_jpeg,
-        encode_jpeg_baseline,
-    )
-
-    px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    good = bytearray(encode_jpeg_baseline(px, quant=1))
-
-    with pytest.raises(ValueError, match="not a JPEG"):
-        decode_jpeg(b"BM123456")
-    # progressive mode marker (SOF2)
-    prog = bytes(good).replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError, match="unsupported JPEG mode"):
-        decode_jpeg(prog)
-    # truncated mid-scan
-    with pytest.raises(ValueError):
-        decode_jpeg(bytes(good[:len(good) // 2]))
-    # SOS before any SOF
-    sof_at = bytes(good).find(b"\xff\xc0")
-    sos_at = bytes(good).find(b"\xff\xda")
-    headless = bytes(good[:sof_at]) + bytes(good[sos_at:])
-    with pytest.raises(ValueError, match="SOS before SOF"):
-        decode_jpeg(headless)
-    # 12-bit precision frame
-    deep = bytearray(good)
-    deep[sof_at + 4] = 12
-    with pytest.raises(ValueError, match="precision"):
-        decode_jpeg(bytes(deep))
-
-
-def test_jpeg_flows_through_image_features(spark):
-    """JPEG fixture rows decode through the mapInPandas extractor with
-    real dimensions, and luma stays within the quant=1 envelope of the
-    fixture rule's BT.601 Y plane (JPEG is lossy — exact equality is the
-    wrong pin; a tight mean bound is the honest one)."""
-    media = M.make_media_fixture(spark, n=48)
-    jpgs = media.where("mime = 'image/jpeg'")
-    n_jpg = jpgs.count()
-    assert n_jpg > 0
-    feats = {r.media_id: r for r in M.extract_image_features(jpgs).collect()}
-    assert len(feats) == n_jpg  # no skips
-    for mid, r in feats.items():
-        w, h = 16 + (mid * 7) % 48, 16 + (mid * 13) % 48
-        px = np.random.default_rng([3, mid]).integers(
-            0, 256, size=(h, w, 3), dtype=np.uint8)
-        yref = 0.299 * px[..., 0] + 0.587 * px[..., 1] + 0.114 * px[..., 2]
-        assert (r.width, r.height) == (w, h)
-        assert abs(r.mean_luma - yref.mean()) < 1.0
-
-
-def test_avi_mjpeg_roundtrip_and_malformed():
-    """RIFF/AVI MJPEG container codec: dims + frame count survive the
-    roundtrip, per-frame luma within the quant=1 JPEG envelope, malformed
-    containers raise ValueError (decode-skip), never struct errors."""
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        decode_avi_mjpeg,
-        encode_avi_mjpeg,
-    )
-
-    rng = np.random.default_rng(5)
-    frames = [
-        np.clip(rng.integers(0, 200, (20, 28)).astype(np.int32) + 8 * i,
-                0, 255).astype(np.uint8)
-        for i in range(5)
-    ]
-    w, h, got = decode_avi_mjpeg(encode_avi_mjpeg(frames, fps=5))
-    assert (w, h) == (28, 20) and len(got) == 5
-    for g, f in zip(got, frames):
-        assert np.abs(g.astype(int) - f.astype(int)).max() <= 1
-
-    with pytest.raises(ValueError, match="not an AVI"):
-        decode_avi_mjpeg(b"RIFF\x00\x00\x00\x00WAVE")
-    with pytest.raises(ValueError):
-        decode_avi_mjpeg(encode_avi_mjpeg(frames)[:40])  # truncated movi
-    with pytest.raises(ValueError, match="dimensions vary"):
-        decode_avi_mjpeg(encode_avi_mjpeg([frames[0], frames[1][:16, :16]]))
-
-
-def test_video_frames_real_decode_and_skip(spark):
-    """extract_video_frames decodes the fixture's MJPEG AVI rows (frame
-    count and dims recomputable from the fixture rule), samples every_n,
-    and silently skips the opaque video rows — per-row skip, not job
-    death."""
-    media = M.make_media_fixture(spark, n=24)
-    vids = media.where("kind = 'video'")
-    avi_ids = {r.media_id for r in
-               vids.where("mime = 'video/x-msvideo'").collect()}
-    opaque_ids = {r.media_id for r in
-                  vids.where("mime = 'application/octet-stream'").collect()}
-    assert avi_ids and opaque_ids
-
-    got = M.extract_video_frames(vids, every_n=2).collect()
-    by_mid = {}
-    for r in got:
-        by_mid.setdefault(r.media_id, []).append(r)
-    assert set(by_mid) == avi_ids  # every AVI decoded, every opaque skipped
-    for mid, rows in by_mid.items():
-        n_frames = 3 + mid % 4
-        w, h = 16 + (mid * 5) % 24, 16 + (mid * 11) % 24
-        assert all((r.width, r.height, r.n_frames) == (w, h, n_frames)
-                   for r in rows)
-        assert sorted(r.frame_idx for r in rows) == \
-            list(range(0, n_frames, 2))
-        # luma rises ~8 per frame index (the fixture's gradient rule)
-        rows = sorted(rows, key=lambda r: r.frame_idx)
-        for a, b in zip(rows, rows[1:]):
-            assert b.mean_luma > a.mean_luma
-
-
-def test_video_frames_validate_unsampled_frames(spark):
-    """The sampled-frames-only decode must keep decode_avi_mjpeg's per-row
-    contract: dims varying mid-stream or an undecodable chunk at an
-    UNSAMPLED index skip the whole row (header-only _jpeg_dims probe on
-    every frame) — no partial media with inconsistent dims leaks out.
-    every_n=0 must raise loudly at build time, not be swallowed by the
-    per-row skip path."""
-    import struct
-
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        _avi_stream_blobs,
-        _jpeg_dims,
-        decode_jpeg,
-        encode_avi_mjpeg,
-        encode_jpeg_baseline,
-    )
-
-    def mk_avi(chunks):
-        body = b""
-        for cc, data in chunks:
-            body += cc + struct.pack("<I", len(data)) + data
-            if len(data) & 1:
-                body += b"\x00"
-        return b"RIFF" + struct.pack("<I", len(body) + 4) + b"AVI " + body
-
-    big = np.full((16, 16), 100, dtype=np.uint8)
-    small = np.full((8, 8), 100, dtype=np.uint8)
-    j_big = encode_jpeg_baseline(big, quant=1)
-    j_small = encode_jpeg_baseline(small, quant=1)
-
-    # the header probe agrees with the full decoder on dims
-    w, h, _ = decode_jpeg(j_big)
-    assert _jpeg_dims(j_big) == (w, h) == (16, 16)
-
-    good = encode_avi_mjpeg([big, big, big])
-    assert len(_avi_stream_blobs(good)) == 3
-    # dims change at index 1, which every_n=2 never samples
-    dims_vary = mk_avi([(b"00dc", j_big), (b"00dc", j_small), (b"00dc", j_big)])
-    # raw-DIB '00db' chunk (not a JPEG) at the unsampled index 1
-    raw_dib = mk_avi([(b"00dc", j_big), (b"00db", b"\x00" * 64), (b"00dc", j_big)])
-
-    df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(dims_vary)), (3, bytearray(raw_dib))],
-        "media_id long, payload binary",
-    )
-    got = M.extract_video_frames(df, every_n=2).collect()
-    assert {r.media_id for r in got} == {1}, \
-        "rows with invalid unsampled frames must be skipped whole"
-    assert sorted(r.frame_idx for r in got) == [0, 2]
-
-    with pytest.raises(ValueError, match="every_n"):
-        M.extract_video_frames(df, every_n=0)
-
-
-def test_flac_roundtrip_all_fixture_subframes():
-    """FLAC is lossless: decode(encode(pcm)) must equal the 16-bit
-    quantized samples EXACTLY for verbatim, fixed-order-2 rice, and
-    constant subframes; CRC tampering and truncation raise ValueError."""
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import (
-        decode_flac,
-        encode_flac,
-    )
-
-    sr = 8000
-    t = np.arange(3000, dtype=np.float32) / sr
-    pcm = 0.5 * np.sin(2 * np.pi * 100 * t)
-    ints = np.round(np.clip(pcm, -1, 1) * 32767.0)
-    for sf in ("verbatim", "fixed"):
-        got, got_sr = decode_flac(encode_flac(pcm, sr, subframe=sf))
-        assert got_sr == sr and len(got) == len(pcm)
-        assert np.abs(got * 32768.0 - ints).max() == 0.0, sf
-    flat = np.full(2500, 0.25, dtype=np.float32)
-    got, _ = decode_flac(encode_flac(flat, sr))
-    assert np.abs(got - np.round(0.25 * 32767) / 32768).max() == 0.0
-
-    good = bytearray(encode_flac(pcm, sr))
-    with pytest.raises(ValueError, match="not a FLAC"):
-        decode_flac(b"RIFF1234")
-    with pytest.raises(ValueError):
-        decode_flac(bytes(good[:50]))
-    tampered = bytearray(good)
-    tampered[-10] ^= 0x40
-    with pytest.raises(ValueError, match="CRC"):
-        decode_flac(bytes(tampered))
-
-
-def _flac_stream(frames_bits, sr=8000, channels=1, bps=16, total=0):
-    """Hand-assemble a FLAC stream from raw frame payload builders — lets
-    tests exercise decoder paths the fixture encoder never emits (LPC,
-    stereo decorrelation)."""
-    from go_data_publisher_spark.functions.multimodal import (
-        _flac_crc8,
-        _flac_crc16,
-        _FlacBitWriter,
-    )
-
-    w = _FlacBitWriter()
-    w.u(1, 1); w.u(0, 7); w.u(34, 24)
-    w.u(1024, 16); w.u(1024, 16); w.u(0, 24); w.u(0, 24)
-    w.u(sr, 20); w.u(channels - 1, 3); w.u(bps - 1, 5); w.u(total, 36)
-    w.u(0, 128)
-    out = b"fLaC" + bytes(w.out)
-    for fi, (ch_code, bs, body_fn) in enumerate(frames_bits):
-        fw = _FlacBitWriter()
-        fw.u(0x3FFE, 14); fw.u(0, 1); fw.u(0, 1)
-        fw.u(7, 4)           # explicit 16-bit block size
-        fw.u(0, 4)           # rate from STREAMINFO
-        fw.u(ch_code, 4)
-        fw.u(4, 3)           # 16 bps
-        fw.u(0, 1)
-        fw.u(fi, 8)          # frame number (single UTF-8 byte)
-        fw.u(bs - 1, 16)
-        fw.u(_flac_crc8(bytes(fw.out)), 8)
-        body_fn(fw)
-        fw.align()
-        fw.u(_flac_crc16(bytes(fw.out)), 16)
-        out += bytes(fw.out)
-    return out
-
-
-def test_flac_lpc_subframe_decodes():
-    """LPC subframe: the test computes the forward prediction residual
-    itself (coefs [3, -2], shift 1), writes a raw LPC subframe, and the
-    decoder must invert it back to the exact source samples."""
-    from go_data_publisher_spark.functions.multimodal import decode_flac
-
-    rng = np.random.default_rng(3)
-    s = rng.integers(-2000, 2000, size=64).astype(np.int64)
-    order, coefs, shift, prec = 2, [3, -2], 1, 5
-
-    res = [int(s[i]) - ((coefs[0] * int(s[i - 1]) + coefs[1] * int(s[i - 2])) >> shift)
-           for i in range(order, len(s))]
-
-    def body(fw):
-        fw.u(0, 1)
-        fw.u(32 + order - 1, 6)      # LPC, order 2
-        fw.u(0, 1)                   # no wasted bits
-        fw.s(int(s[0]), 16)
-        fw.s(int(s[1]), 16)
-        fw.u(prec - 1, 4)
-        fw.s(shift, 5)
-        for c in coefs:
-            fw.s(c, prec)
-        fw.u(0, 2)                   # 4-bit rice
-        fw.u(0, 4)                   # partition order 0
-        fw.u(15, 4)                  # escape → raw bits
-        fw.u(14, 5)                  # 14-bit raw residuals
-        for r in res:
-            fw.s(r, 14)
-
-    payload = _flac_stream([(0, len(s), body)], total=len(s))
-    got, sr = decode_flac(payload)
-    assert sr == 8000
-    assert np.array_equal(np.round(got * 32768.0).astype(np.int64), s)
-
-
-def test_flac_stereo_decorrelation_modes():
-    """left/side, right/side and mid/side stereo must all reconstruct the
-    same L/R pair (decoded mono = channel mean of the known samples)."""
-    from go_data_publisher_spark.functions.multimodal import decode_flac
-
-    rng = np.random.default_rng(9)
-    left = rng.integers(-3000, 3000, size=32).astype(np.int64)
-    right = rng.integers(-3000, 3000, size=32).astype(np.int64)
-    want = (left + right) / 2.0 / 32768.0
-
-    def verbatim(vals, bits):
-        def body_part(fw):
-            fw.u(0, 1); fw.u(1, 6); fw.u(0, 1)
-            for v in vals:
-                fw.s(int(v), bits)
-        return body_part
-
-    side = left - right
-    mid = (left + right) >> 1
-    cases = {
-        8: [(left, 16), (side, 17)],          # left/side
-        9: [(side, 17), (right, 16)],         # right/side
-        10: [(mid, 16), (side, 17)],          # mid/side
-    }
-    for ch_code, subs in cases.items():
-        def body(fw, subs=subs):
-            for vals, bits in subs:
-                verbatim(vals, bits)(fw)
-        payload = _flac_stream([(ch_code, 32, body)], channels=2, total=32)
-        got, _ = decode_flac(payload)
-        assert np.abs(got - want).max() < 1e-9, ch_code
-
-
-def test_flac_flows_through_audio_features(spark):
-    """The fixture's FLAC rows decode through the mapInPandas extractor
-    with the same sine statistics as the WAV rows."""
-    media = M.make_media_fixture(spark, n=24)
-    flacs = media.where("mime = 'audio/flac'")
-    n_flac = flacs.count()
-    assert n_flac > 0
-    feats = M.extract_audio_features(flacs).collect()
-    assert len(feats) == n_flac
-    for r in feats:
-        assert r.sample_rate == 8000
-        assert 0.30 < r.rms < 0.40
-
-
-def test_flac_predictor_overflow_is_valueerror():
-    """A crafted LPC frame whose predictor blows past int64 must raise
-    ValueError (decode-skip), not OverflowError (which would escape
-    _DECODE_ERRORS and kill the mapInPandas job)."""
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import decode_flac
-
-    bs = 64
-
-    def body(fw):
-        fw.u(0, 1)
-        fw.u(32 + 0, 6)          # LPC order 1
-        fw.u(0, 1)
-        fw.s(20000, 16)          # warmup
-        fw.u(14, 4)              # precision 15
-        fw.s(0, 5)               # shift 0
-        fw.s(16000, 15)          # coef 16000 → geometric blowup
-        fw.u(0, 2)
-        fw.u(0, 4)
-        fw.u(15, 4)              # escape → raw residuals
-        fw.u(1, 5)               # 1-bit residuals
-        for _ in range(bs - 1):
-            fw.s(0, 1)
-
-    payload = _flac_stream([(0, bs, body)], total=bs)
-    with pytest.raises(ValueError, match="predictor overflow"):
-        decode_flac(payload)
-
-
-def test_avi_nested_lists_are_valueerror_not_recursion():
-    """Thousands of nested LIST chunks must raise ValueError (decode-skip),
-    not RecursionError."""
-    import struct
-
-    import pytest
-
-    from go_data_publisher_spark.functions.multimodal import decode_avi_mjpeg
-
-    inner = b""
-    for _ in range(5000):
-        inner = b"LIST" + struct.pack("<I", len(inner) + 4) + b"xxxx" + inner
-    payload = b"RIFF" + struct.pack("<I", len(inner) + 4) + b"AVI " + inner
-    with pytest.raises(ValueError, match="LIST chunks|no video"):
-        decode_avi_mjpeg(payload)
