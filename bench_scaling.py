@@ -567,7 +567,7 @@ live-file list under the commit lock on every merge.
 sub-second at 256 buckets; the residual full-
 commit growth is the write job producing ~16× more output files, which a
 multi-executor cluster parallelizes (and which the write-task cap bounds at
-~2× cluster parallelism locally).
+one task per core locally, so each write stage is one task wave).
 
 ## Read path vs delta depth (auto-compaction evidence)
 

@@ -823,6 +823,53 @@ class TranscriptTable:
     def cursor_lsn(self) -> int:
         return int(self._raw_current()["cursor_lsn"])
 
+    # ---------------- bucketed writes (merge and compact) ----------------
+
+    def write_tasks(self) -> int:
+        """Writer tasks per table write: one per core, at most one per
+        bucket, so each write stage finishes in ONE task wave.
+
+        Repartitioning on a pure function of __bucket keeps every bucket's
+        rows inside one task whatever the task count, so the layout (one
+        file per touched bucket) does not depend on it; tasks beyond the
+        cores only add waves.  At 16 buckets on local[4] the earlier
+        2 × cores (8 tasks, 2 waves) spent 323–415 ms of wall and ~40 ms of
+        executor deserialize per task in each write stage; one wave of 4
+        cut the traced replay's tasks per commit from 9.43 to 5.43.  On a
+        cluster with ≥ n_buckets cores the cap is n_buckets."""
+        par = self.spark.sparkContext.defaultParallelism
+        return min(self.n_buckets, max(1, par))
+
+    def _write_buckets(self, df: DataFrame, n_tasks: int, shape=None,
+                       **options) -> list[tuple[str, int]]:
+        """Write ``df`` (which carries ``__bucket``) into a fresh commit dir
+        partitioned by bucket, in ``n_tasks`` writer tasks; returns the
+        ``(path, bucket)`` of every file written, sorted.
+
+        Balanced placement (r7): the write repartitions on the hash-preimage
+        key ``__pkey``, not __bucket itself (see balanced_write_pkey), so
+        bucket b lands in task b % n_tasks and each task writes one file per
+        bucket it holds — ONE file per touched bucket (empty tasks write
+        nothing).  ``shape`` maps the placed frame, still carrying
+        ``__pkey``, to the frame written; by default ``__pkey`` is dropped.
+        ``options`` go to the parquet writer."""
+        out_dir = f"{self.root}/data/commit={uuid.uuid4().hex[:12]}"
+        placed = (df.selectExpr("*", f"{balanced_write_pkey('__bucket', n_tasks)} "
+                                     "AS __pkey")
+                    .repartition(n_tasks, "__pkey"))
+        out = shape(placed) if shape else placed.drop("__pkey")
+        (out.write.mode("overwrite").options(**options)
+            .partitionBy("__bucket").parquet(out_dir))
+        entries = []
+        for bdir in sorted(os.listdir(out_dir)):
+            if not bdir.startswith("__bucket="):
+                continue
+            b = int(bdir.split("=")[1])
+            for name in sorted(os.listdir(f"{out_dir}/{bdir}")):
+                if name.endswith(".parquet"):
+                    entries.append((f"{out_dir}/{bdir}/{name}", b))
+        return entries
+
     # ---------------- MERGE (merge-on-read delta commit) ----------------
 
     def merge(
@@ -875,11 +922,12 @@ class TranscriptTable:
 
         ``batch_max_lsn`` overrides the cursor advance; by default the cursor
         advances to the batch's max order value.
-        ``write_parallelism`` caps the delta write's concurrent tasks (still
-        one output file pair per bucket via partitionBy) — the applier's
-        degrade-on-persistent-failure ladder lowers it toward serial when
-        full-width writes keep failing (the reference's adaptive worker
-        fallback, status-service/sync/tick_processor.go:163).
+        ``write_parallelism`` overrides the delta write's task count
+        (default ``write_tasks()``; still one file per bucket via
+        partitionBy) — the applier's degrade-on-persistent-failure ladder
+        lowers it toward serial when full-width writes keep failing (the
+        reference's adaptive worker fallback,
+        status-service/sync/tick_processor.go:163).
         """
         m = self.manifest()
         hwm0, recent0 = self._writer_state(m, writer_id)
@@ -928,87 +976,59 @@ class TranscriptTable:
             "*", f"CAST(CASE WHEN {ident(k0)} IS NULL THEN raise_error({msg}) "
                  f"ELSE {bucket_sql(k0, self.n_buckets)} END AS INT) AS __bucket")
 
-        # Delta write: one output dir per commit, partitioned by bucket, one
-        # writer task per bucket → ONE file per touched bucket per commit
-        # (empty tasks write nothing).  ``op``/``__del`` stay data columns —
-        # snapshot() reads files by path and never sees the partition dirs.
-        # This is the ONLY Spark job of the merge: per-bucket lineage
-        # counters come from the parquet footers below.
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = f"{self.root}/data/commit={commit_id}"
-        # Delta files get a small row-group target (vs the 128 MB default):
-        # each writer task buffers a full row group per open file on-heap, so
-        # at high task concurrency the default measures GC, not the engine
-        # (measured 12s → 4s per write stage at 32 threads).  Deltas are
-        # batch-sized and folded/compacted away, so scan-side row-group size
-        # doesn't matter; compact() writes base files with the default.
-        # Task count: repartitioning on a pure function of __bucket keeps
-        # every bucket's rows inside ONE task regardless of task count, so
-        # the one-file-per-bucket layout is invariant — capping tasks at ~2×
-        # the cluster's parallelism only removes task-wave overhead when
-        # n_buckets ≫ cores (measured 2.9s → 1.2s for a 20k-event commit
-        # into 256 buckets on local[8]).  On a cluster with ≥ n_buckets
-        # cores the cap is inactive.
-        if write_parallelism:
-            n_write_tasks = min(self.n_buckets, write_parallelism)
-        else:
-            par = self.spark.sparkContext.defaultParallelism
-            n_write_tasks = min(self.n_buckets, max(1, par) * 2)
-        # Balanced placement (r7): repartition on the hash-preimage key, not
-        # __bucket itself — see balanced_write_pkey.
-        changes = (
-            changes
-            .selectExpr("*", f"{balanced_write_pkey('__bucket', n_write_tasks)} "
-                             "AS __pkey")
-            .repartition(n_write_tasks, "__pkey")
-        )
-        if fuse_dedup:
-            # FUSED in-batch last-wins (guide §2.4): placement is a pure
-            # function of key[0], so the write repartition already clusters
-            # every key group into one task; grouping by the partition key
-            # itself (plus __bucket — functionally dependent, a no-op for
-            # the groups) lets Catalyst prove the distribution is satisfied
-            # and plan NO second exchange.  Winners are identical to
-            # last_wins: max_by over the same (order_col, op-rank) within
-            # the same key groups.
-            from ..operators.dedup import winner_sql
+        n_write_tasks = (min(self.n_buckets, write_parallelism)
+                         if write_parallelism else self.write_tasks())
 
-            payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
-            changes = (
-                changes.groupBy("__pkey", "__bucket", *self.key)
-                .agg(F.expr(winner_sql(payload, (self.order_col,))))
-                .select("__win.*")
-            )
-        else:
-            changes = changes.drop("__pkey")
-        # delete marker as a NULLABLE data column (1 for tombstones, NULL
-        # otherwise): the parquet footer's per-column null counts then
-        # yield the exact upsert/delete split with zero extra reads, so
-        # the commit writes ONE file per touched bucket instead of the
-        # round-4 partitionBy-(bucket, is-delete) pair (which doubled the
-        # per-commit file count and the footer-read fan-out — the 3.81×
-        # 16→256-bucket commit growth in BENCH_r04)
-        changes = changes.selectExpr(
-            "*", "CAST(CASE WHEN `op` = 'D' THEN 1 END AS INT) AS __del",
-            f"CAST({int(seq)} AS BIGINT) AS __seq")
-        (changes.write.mode("overwrite").option("parquet.block.size", 16 << 20)
-                .partitionBy("__bucket").parquet(out_dir))
+        def shape(placed: DataFrame) -> DataFrame:
+            if fuse_dedup:
+                # FUSED in-batch last-wins (guide §2.4): placement is a pure
+                # function of key[0], so the write repartition already
+                # clusters every key group into one task; grouping by the
+                # partition key itself (plus __bucket — functionally
+                # dependent, a no-op for the groups) lets Catalyst prove the
+                # distribution is satisfied and plan NO second exchange.
+                # Winners are identical to last_wins: max_by over the same
+                # (order_col, op-rank) within the same key groups.
+                from ..operators.dedup import winner_sql
 
-        # Enumerate written files and derive lineage counters from parquet
-        # footer metadata (row counts, order-col min/max statistics, and the
-        # delete split from __del null counts): driver-side metadata reads of
-        # ≤ n_buckets small footers — the same stats-from-manifest trick
-        # Iceberg uses, replacing a whole post-write aggregation job per
-        # commit.
+                payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
+                out = (
+                    placed.groupBy("__pkey", "__bucket", *self.key)
+                    .agg(F.expr(winner_sql(payload, (self.order_col,))))
+                    .select("__win.*")
+                )
+            else:
+                out = placed.drop("__pkey")
+            # delete marker as a NULLABLE data column (1 for tombstones, NULL
+            # otherwise): the parquet footer's per-column null counts then
+            # yield the exact upsert/delete split with zero extra reads, so
+            # the commit writes ONE file per touched bucket instead of the
+            # round-4 partitionBy-(bucket, is-delete) pair (which doubled the
+            # per-commit file count and the footer-read fan-out — the 3.81×
+            # 16→256-bucket commit growth in BENCH_r04)
+            return out.selectExpr(
+                "*", "CAST(CASE WHEN `op` = 'D' THEN 1 END AS INT) AS __del",
+                f"CAST({int(seq)} AS BIGINT) AS __seq")
+
+        # The delta write is the ONLY Spark job of the merge: per-bucket
+        # lineage counters come from the parquet footers below.  ``op`` and
+        # ``__del`` stay data columns — snapshot() reads files by path and
+        # never sees the partition dirs.  Delta files get a small row-group
+        # target (vs the 128 MB default): each writer task buffers a full
+        # row group per open file on-heap, so at high task concurrency the
+        # default measures GC, not the engine (measured 12s → 4s per write
+        # stage at 32 threads).  Deltas are batch-sized and folded/compacted
+        # away, so scan-side row-group size doesn't matter; compact() writes
+        # base files with the default.
+        entries = self._write_buckets(changes, n_write_tasks, shape,
+                                      **{"parquet.block.size": 16 << 20})
+
+        # Derive lineage counters from parquet footer metadata (row counts,
+        # order-col min/max statistics, and the delete split from __del null
+        # counts): driver-side metadata reads of ≤ n_buckets small footers —
+        # the same stats-from-manifest trick Iceberg uses, replacing a whole
+        # post-write aggregation job per commit.
         sid = int(m["current_schema_id"])
-        entries: list[tuple[str, int]] = []
-        for bdir in sorted(os.listdir(out_dir)):
-            if not bdir.startswith("__bucket="):
-                continue
-            b = int(bdir.split("=")[1])
-            for name in sorted(os.listdir(f"{out_dir}/{bdir}")):
-                if name.endswith(".parquet"):
-                    entries.append((f"{out_dir}/{bdir}/{name}", b))
         new_files = [{"path": path, "bucket": b,
                       "schema_id": sid, "kind": "delta", "seq": seq}
                      for path, b in entries]
@@ -1239,14 +1259,7 @@ class TranscriptTable:
             # base rows carry (op, __seq) as data columns too, so all live
             # files share one read schema per schema id (see snapshot())
             f"CAST({int(seq)} AS BIGINT) AS __seq")
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = f"{self.root}/data/commit={commit_id}"
-        # Same balanced placement as merge(): one bucket per writer task
-        # instead of the collision-skewed raw bucket hash.
-        df = (df.selectExpr("*", f"{balanced_write_pkey('__bucket', self.n_buckets)} "
-                                 "AS __pkey")
-                .repartition(self.n_buckets, "__pkey").drop("__pkey"))
-        df.write.mode("overwrite").partitionBy("__bucket").parquet(out_dir)
+        entries = self._write_buckets(df, self.write_tasks())
         sid = int(m["current_schema_id"])
         # per-bucket fold high watermark: the newest change version this base
         # absorbs — changes() uses it to raise ONLY when a requested window
@@ -1259,16 +1272,9 @@ class TranscriptTable:
                     folded_hwm[f["bucket"]],
                     int(f.get("folded_hwm", f.get("seq", 0))),
                 )
-        new_files = []
-        for entry in sorted(os.listdir(out_dir)):
-            if not entry.startswith("__bucket="):
-                continue
-            b = int(entry.split("=")[1])
-            for name in sorted(os.listdir(f"{out_dir}/{entry}")):
-                if name.endswith(".parquet"):
-                    new_files.append({"path": f"{out_dir}/{entry}/{name}", "bucket": b,
-                                      "schema_id": sid, "kind": "base", "seq": seq,
-                                      "folded_hwm": folded_hwm.get(b, 0)})
+        new_files = [{"path": path, "bucket": b, "schema_id": sid, "kind": "base",
+                      "seq": seq, "folded_hwm": folded_hwm.get(b, 0)}
+                     for path, b in entries]
         folded_paths = [f["path"] for f in m["files"] if f["bucket"] in target_buckets]
         # manifest delta is O(work done): the files this compaction folded
         # away plus the base files it wrote — never the untouched buckets

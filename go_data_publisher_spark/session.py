@@ -61,6 +61,17 @@ def get_spark(
         # instead of a driver-side rename storm at job commit — the many
         # small per-microbatch writes are commit-latency-bound otherwise.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # Streaming offsets/commits/sources logs through the FileSystem API:
+        # the default FileContext manager checks both ends of every log
+        # rename with getFileLinkStatus, which without libhadoop runs
+        # `readlink` as a child process (104 per 4-batch replay, all on the
+        # stream thread).  On a local filesystem both managers check that
+        # the destination is absent and then rename, so the logs'
+        # no-overwrite guard is the same; the table commit already requires
+        # a local POSIX root (its flock lock).
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     # Shuffle scratch space: the sandbox's single virtio disk collapses under
     # 32 concurrent shuffle writers (measured: 3s → 38s stalls); RAM-backed

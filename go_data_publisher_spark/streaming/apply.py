@@ -353,9 +353,8 @@ class ChangeApplier:
             if not self.retry.is_retriable(exc):
                 raise
             last = exc
-            # getattr: every supported backend stores n_buckets, but a
-            # minimal table contract without it degrades straight to serial
-            width = max(1, getattr(tbl, "n_buckets", 1) // 2)
+            # first rung: half the width of the write that just failed
+            width = max(1, tbl.write_tasks() // 2)
             while True:
                 try:
                     out = attempt(width)

@@ -119,7 +119,6 @@ def test_fused_write_plan_single_exchange(spark, tmpdir_path, monkeypatch):
         captured.append(self._df)
         return real_parquet(self, path, **kw)
 
-    monkeypatch.setenv("SPARK_GRAFT_MERGE_FUSED", "1")
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", spy)
     tbl = TranscriptTable(spark, tmpdir_path, n_buckets=8)
     log = generate_changelog(spark, 5_000, n_convs=60, seed=3) \
@@ -154,3 +153,52 @@ def test_merge_layout_one_file_per_bucket(spark, tmpdir_path):
         per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
     assert per_bucket, "no files committed"
     assert all(c == 1 for c in per_bucket.values()), per_bucket
+
+
+def test_merge_and_compact_layout_several_buckets_per_task(
+        spark, tmpdir_path, monkeypatch):
+    """With more buckets than cores each writer task holds several buckets
+    (32 buckets over local[8]: 8 tasks, 4 buckets each): the write still
+    runs one task per core, and both the merge and the compaction still
+    write exactly one file per bucket."""
+    import re
+
+    import pyspark.sql.readwriter as rw
+
+    captured = []
+    real_parquet = rw.DataFrameWriter.parquet
+
+    def spy(self, path, **kw):
+        captured.append(self._df)
+        return real_parquet(self, path, **kw)
+
+    def write_partitioning(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        return re.findall(r"hashpartitioning\((\w+)#\d+, (\d+)\)", plan)
+
+    monkeypatch.setattr(rw.DataFrameWriter, "parquet", spy)
+    tbl = TranscriptTable(spark, tmpdir_path, n_buckets=32)
+    assert tbl.write_tasks() == 8
+    events = spark.createDataFrame(
+        [(f"c{i}", i % 3, i, "I", f"t{i}") for i in range(400)],
+        "conv_id string, turn_idx int, lsn long, op string, text string",
+    )
+    out = tbl.merge(events, epoch_id=0)
+    assert write_partitioning(captured[-1]) == [("__pkey", "8")]
+
+    files = tbl.manifest()["files"]
+    per_bucket = {}
+    for f in files:
+        per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+    assert sorted(per_bucket) == out["touched_buckets"]
+    assert len(per_bucket) > 8, "too few buckets touched to share tasks"
+    assert all(c == 1 for c in per_bucket.values()), per_bucket
+
+    before_rows = sorted(tbl.snapshot().collect())
+    tbl.compact()
+    assert write_partitioning(captured[-1]) == [("__pkey", "8")]
+    files = tbl.manifest()["files"]
+    assert {f["kind"] for f in files} == {"base"}
+    assert sorted(f["bucket"] for f in files) == sorted(per_bucket)
+    assert sorted(tbl.snapshot().collect()) == before_rows

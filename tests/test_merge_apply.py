@@ -321,6 +321,34 @@ def test_degrade_to_serial_on_persistent_failure(spark, tmpdir_path):
                               SCHEMA9), epoch_id=0)["status"] == "skipped_replay"
 
 
+def test_degrade_ladder_starts_below_the_failed_width(spark, tmpdir_path):
+    """The ladder's first rung is half the width of the write that failed
+    (``write_tasks()``, one task per core), not half the bucket count —
+    with 32 buckets under local[8] that is 4, never the 16 or 8 that are
+    at least as wide as the failed write."""
+    from go_data_publisher_spark.streaming.apply import RetryPolicy
+
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=32)
+    real_merge = tbl.merge
+    widths = []
+
+    def pressured_merge(*a, **kw):
+        widths.append(kw.get("write_parallelism"))
+        if kw.get("write_parallelism") is None or kw["write_parallelism"] > 4:
+            raise OSError("simulated resource-pressure failure above 4 tasks")
+        return real_merge(*a, **kw)
+
+    tbl.merge = pressured_merge
+    app = ChangeApplier(tbl, retry=RetryPolicy(max_attempts=2, base_delay=0.01))
+    stats = app.apply_batch(
+        spark.createDataFrame([(1, "I", "c1", 0, "user", "hi", None, None, 1)],
+                              SCHEMA9), epoch_id=0)
+    assert tbl.write_tasks() == 8
+    assert widths == [None, None, 4]
+    assert stats["degraded_write_parallelism"] == 4
+    assert tbl.snapshot().count() == 1
+
+
 def test_degrade_ladder_stays_terminal_on_semantic_failure(spark, tmpdir_path):
     """A non-retriable failure mid-ladder surfaces immediately — degradation
     must not turn a schema conflict into 5 slower schema conflicts."""

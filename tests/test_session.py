@@ -1,0 +1,31 @@
+"""Session configuration that the engine's guarantees rest on."""
+
+import pytest
+from py4j.protocol import Py4JJavaError
+
+
+def test_checkpoint_log_never_overwrites(spark, tmpdir_path):
+    """The streaming offset/commit logs rely on an atomic create that
+    refuses to replace an existing batch file.  The session's checkpoint
+    file manager (FileSystem-based, chosen to avoid readlink shell-outs)
+    must keep that guard: closing a no-overwrite atomic create onto an
+    existing path raises and leaves that file as it was."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    path = jvm.org.apache.hadoop.fs.Path
+    mgr = (jvm.org.apache.spark.sql.execution.streaming.checkpointing
+           .CheckpointFileManager.create(path(tmpdir_path), conf))
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    existing = f"{tmpdir_path}/0"
+    with open(existing, "w") as f:
+        f.write("v1")
+    out = mgr.createAtomic(path(existing), False)
+    out.write(bytearray(b"v2"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    already_exists = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert already_exists.isInstance(err.value.java_exception)
+    with open(existing) as f:
+        assert f.read() == "v1"
