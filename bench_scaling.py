@@ -461,9 +461,10 @@ Reading the measurements honestly:
   max_by plan degrades to sort-based aggregation and the window's straggler
   shape returns.  A measured rejection, not a default.
 
-This is why the engine's hot path uses max_by (with `salted=True` on the
-applier as the wide-payload escape hatch), and the window form is kept as
-a test oracle only (`operators/dedup.py`)."""
+This is why the engine's hot path uses max_by, fused into the merge's
+bucket exchange; the salted form runs only as the `cdc_final_state_salted`
+query and in this measurement, and the window form is kept as a test oracle
+only (`operators/dedup.py`)."""
     else:
         skew_md = "_skew mode not yet measured this round_"
 

@@ -876,8 +876,6 @@ class TranscriptTable:
         self,
         changes: DataFrame,
         epoch_id: int,
-        batch_max_lsn: int | None = None,
-        order_col: str | None = None,
         deduped: bool = False,
         writer_id: str = "default",
         write_parallelism: int | None = None,
@@ -913,15 +911,14 @@ class TranscriptTable:
         folds the in-batch last-wins into the bucket exchange: one shuffle
         per microbatch.  Only an overlap-guarded table dedups first (the
         guard needs the winners before the write).  ``deduped=True`` skips
-        the dedup (the caller — the salted or routed ChangeApplier — already
-        reduced the batch to one winner per key).
+        the dedup (the caller — the routed ChangeApplier — already reduced
+        the batch to one winner per key).
 
         Every step of the plan is SQL text (see ``sqltext``): building it
         costs the driver about a hundred py4j round trips, not one per
         Column node, and Catalyst sees the same expressions.
 
-        ``batch_max_lsn`` overrides the cursor advance; by default the cursor
-        advances to the batch's max order value.
+        The cursor advances to the batch's max order value.
         ``write_parallelism`` overrides the delta write's task count
         (default ``write_tasks()``; still one file per bucket via
         partitionBy) — the applier's degrade-on-persistent-failure ladder
@@ -933,11 +930,6 @@ class TranscriptTable:
         hwm0, recent0 = self._writer_state(m, writer_id)
         if int(epoch_id) <= hwm0 or int(epoch_id) in recent0:
             return {"status": "skipped_replay", "epoch_id": epoch_id}
-        if order_col is not None and order_col != self.order_col:
-            raise ValueError(
-                f"merge order_col {order_col!r} != table order_col "
-                f"{self.order_col!r} (set order_col at table construction)"
-            )
         target_schema = self.schema
 
         # Defensive cast to the target schema BEFORE bucketing: xxhash64 of an
@@ -1069,9 +1061,8 @@ class TranscriptTable:
                 st["lsn_to"] = omax if st["lsn_to"] is None else max(st["lsn_to"], omax)
         per_bucket = [per_bucket_map[b] for b in sorted(per_bucket_map)]
         touched = sorted(per_bucket_map)
-        if batch_max_lsn is None and per_bucket:
-            tos = [r["lsn_to"] for r in per_bucket if r["lsn_to"] is not None]
-            batch_max_lsn = max(tos) if tos else None
+        tos = [r["lsn_to"] for r in per_bucket if r["lsn_to"] is not None]
+        batch_max_lsn = max(tos) if tos else None
 
         self._commit(m, writer_id=writer_id, files_added=new_files,
                      epoch_id=epoch_id, batch_max_lsn=batch_max_lsn)
@@ -1280,50 +1271,14 @@ class TranscriptTable:
         # away plus the base files it wrote — never the untouched buckets
         self._publish(m, files_added=new_files, files_removed=folded_paths)
 
-    def has_changes(self, from_version: int, to_version: int | None = None) -> bool:
-        """Manifest-only emptiness probe for a change window — True iff
-        ``changes(from_version, to_version)`` would return any rows.  Costs
-        one manifest fold and ZERO Spark jobs, so a polling consumer (the
-        CDC-out tailer) can detect metadata-only windows (vacuum, no-op
-        commits) without scanning anything.
-
-        Runs the SAME retention check as changes(): a window whose deltas
-        were folded away by compaction raises RetentionLostError here too —
-        returning False for it would let a poller silently skip lost
-        changes."""
-        m = self.manifest(to_version)
-        to_v = int(m["version"])
-        if from_version > to_v:
-            # same guard as changes(): a cursor ahead of the source is a
-            # misconfiguration to surface, not an idle feed to hide
-            raise ValueError(f"from_version {from_version} > to_version {to_v}")
-        in_window = [f for f in m["files"]
-                     if from_version < int(f.get("seq", 0)) <= to_v]
-        lost = [f for f in in_window
-                if f.get("kind", "base") != "delta"
-                and int(f.get("folded_hwm", int(f.get("seq", 1)) - 1)) > from_version]
-        if lost:
-            raise RetentionLostError(
-                f"change window ({from_version}, {to_v}] lost versions up to "
-                f"{lost[0].get('folded_hwm')} to compaction (base seq "
-                f"{lost[0]['seq']}); changes are retained only until compaction"
-            )
-        return any(f.get("kind", "base") == "delta" for f in in_window)
-
-    def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
-        """Incremental read / change data feed: the raw change rows (upserts
-        AND delete tombstones, with ``op`` and the committing version) of
-        every commit in ``(from_version, to_version]`` — the lake-side
-        changefeed a downstream CDC consumer tails instead of re-reading
-        snapshots.  Zero-cost to serve: merge-on-read already persists each
-        commit as delta files keyed by ``seq``, so this is a pruned scan of
-        exactly the window's files — no diffing of snapshots.
-
-        Retention bound (Iceberg/Delta CDF semantics): compaction folds
-        deltas into base files, so a window that reaches behind the newest
-        compaction of a touched bucket is gone — that raises ValueError
-        rather than silently under-reporting changes.
-        """
+    def _change_window(self, from_version: int,
+                       to_version: int | None) -> tuple[dict, list[dict]]:
+        """The manifest at ``to_version`` and the delta files committed in
+        ``(from_version, to_version]``, behind the two checks that
+        has_changes() and changes() share.  A cursor ahead of the source is
+        a misconfiguration to surface (ValueError), not an idle feed to
+        hide; a window whose deltas compaction folded away raises
+        RetentionLostError."""
         m = self.manifest(to_version)
         to_v = int(m["version"])
         if from_version > to_v:
@@ -1343,7 +1298,36 @@ class TranscriptTable:
                 f"{lost[0].get('folded_hwm')} to compaction (base seq "
                 f"{lost[0]['seq']}); changes are retained only until compaction"
             )
-        in_window = [f for f in in_window if f.get("kind", "base") == "delta"]
+        return m, [f for f in in_window if f.get("kind", "base") == "delta"]
+
+    def has_changes(self, from_version: int, to_version: int | None = None) -> bool:
+        """Manifest-only emptiness probe for a change window — True iff
+        ``changes(from_version, to_version)`` would return any rows.  Costs
+        one manifest fold and ZERO Spark jobs, so a polling consumer (the
+        CDC-out tailer) can detect metadata-only windows (vacuum, no-op
+        commits) without scanning anything.
+
+        Runs the SAME retention check as changes(): a window whose deltas
+        were folded away by compaction raises RetentionLostError here too —
+        returning False for it would let a poller silently skip lost
+        changes."""
+        return bool(self._change_window(from_version, to_version)[1])
+
+    def changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
+        """Incremental read / change data feed: the raw change rows (upserts
+        AND delete tombstones, with ``op`` and the committing version) of
+        every commit in ``(from_version, to_version]`` — the lake-side
+        changefeed a downstream CDC consumer tails instead of re-reading
+        snapshots.  Zero-cost to serve: merge-on-read already persists each
+        commit as delta files keyed by ``seq``, so this is a pruned scan of
+        exactly the window's files — no diffing of snapshots.
+
+        Retention bound (Iceberg/Delta CDF semantics): compaction folds
+        deltas into base files, so a window that reaches behind the newest
+        compaction of a touched bucket is gone — that raises ValueError
+        rather than silently under-reporting changes.
+        """
+        m, in_window = self._change_window(from_version, to_version)
         target = T.StructType.fromJson(
             json.loads(m["schemas"][str(m["current_schema_id"])])
         )

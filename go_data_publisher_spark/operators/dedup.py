@@ -51,8 +51,8 @@ def last_wins(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> Dat
     The merge's default path does NOT run this two-phase shape: with no
     pre-deduped input, ``TranscriptTable.merge`` fuses the same max_by into
     its bucket exchange (one exchange, aggregate after it).  This function
-    runs for the salted and routed applier paths, the overlap-guarded merge
-    and the snapshot fold.
+    runs for the routed applier path, the overlap-guarded merge and the
+    snapshot fold.
     """
     return (
         df.groupBy(*key)

@@ -11,8 +11,9 @@ consume without spark-submit access.
 Two cost tiers, deliberately separate:
 
 - ``/status`` is the manifest fast path — version, cursor, epoch state,
-  live-file count — served from one O(1) raw-manifest read, NO Spark job.
-  Safe to poll at health-check frequency.
+  live-file count — served from manifest reads only, NO Spark job; its cost
+  is linear in the live-file count.  Safe to poll at health-check
+  frequency.
 - ``/report`` runs the full progress document (snapshot row count, interval
   union, gap scan, lineage totals) — a handful of Spark jobs; poll it like
   a dashboard, not like a liveness probe.
@@ -136,12 +137,13 @@ def build_metrics_text(tbl, namespace: str = "gdps",
     (status-service/metrics/metrics.go:23-100: processed tick/epoch, source
     tick/epoch, error gauges, one flat namespace prefix).
 
-    The manifest gauges come from the same O(1) raw-manifest read as
-    ``/status`` — safe at scrape frequency, NO Spark job.  ``lineage_totals``
-    (rows upserted/deleted/quarantined, epochs) is optional and supplied by
-    the caller from its TTL cache, because computing it runs Spark jobs;
-    when absent those series are simply not exported, which Prometheus
-    treats as a disappearing series, not an error."""
+    The manifest gauges come from the same manifest reads as ``/status``
+    (no Spark job, linear in live files) — safe at scrape frequency.
+    ``lineage_totals`` (rows upserted/deleted/quarantined, epochs) is
+    optional and supplied by the caller from its TTL cache, because
+    computing it runs Spark jobs; when absent those series are simply not
+    exported, which Prometheus treats as a disappearing series, not an
+    error."""
     m = tbl.manifest()
     gauges: list[tuple[str, str, float | int | None]] = [
         ("cursor_lsn",
@@ -365,10 +367,11 @@ class ReportServer:
         }
 
     def _metrics_text(self) -> str:
-        """/metrics body: manifest gauges are recomputed every scrape (O(1)
-        read, no Spark); the lineage totals ride the shared TTL cache — a
-        scrape never waits on a /report build, only (worst case) on one
-        in-flight lineage aggregation."""
+        """/metrics body: manifest gauges are recomputed every scrape
+        (manifest reads only, no Spark job, linear in live files); the
+        lineage totals ride the shared TTL cache — a scrape never waits on
+        a /report build, only (worst case) on one in-flight lineage
+        aggregation."""
         totals = self._lineage_totals()
         gauges = None
         if totals is not None:

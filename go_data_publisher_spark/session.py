@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 # Shuffle-partition default: at 100 TB this would be several thousand; AQE
 # coalesces small post-shuffle partitions either way, so we set a ceiling that
 # matches the testing hardware and let AQE shrink.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -41,7 +41,7 @@ def get_spark(
         n_threads = os.cpu_count() if str(cores) == "*" else int(cores)
     except ValueError:
         n_threads = os.cpu_count()
-    default_mem = f"{max(16, int(n_threads * 1.5))}g"
+    driver_mem = f"{max(16, int(n_threads * 1.5))}g"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -52,7 +52,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", default_mem))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # CDC batches are small relative to the target table: give the
         # planner room to broadcast the batch side of the merge join.

@@ -11,7 +11,7 @@ Stages (all declarative):
  1. validity guard  → quarantine invalid rows or abort the batch (F4/V4)
  2. schema-evolution diff → widen target before apply (archiverv1/v2 analogue)
  3. last-wins dedup per (conv_id, turn_idx) by (lsn, op-rank)  (D4),
-    fused into the merge's bucket exchange unless salted or routed
+    fused into the merge's bucket exchange unless routed
  4. merge-on-read delta commit into the bucketed lake table    (D1/D5)
  5. lineage manifest row per touched partition + batch metrics (A5/S8)
 
@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 
 from .. import schemas
 from ..lake.table import TranscriptTable
-from ..operators.dedup import last_wins, last_wins_salted
+from ..operators.dedup import last_wins
 from ..operators.routing import split_valid, validity_sql
 from ..sqltext import project_to
 
@@ -162,8 +162,6 @@ class ChangeApplier:
         table: TranscriptTable,
         quarantine_dir: str | None = None,
         lineage_dir: str | None = None,
-        salted: bool = False,
-        n_salts: int = 8,
         route_sql: str | None = None,
         ephemeral_table: TranscriptTable | None = None,
         on_invalid: str = "quarantine",
@@ -202,8 +200,6 @@ class ChangeApplier:
         self.table = table
         self.quarantine_dir = quarantine_dir
         self.lineage_dir = lineage_dir
-        self.salted = salted
-        self.n_salts = n_salts
         self.route_sql = route_sql
         self.ephemeral_table = ephemeral_table
         if on_invalid not in ("quarantine", "error"):
@@ -275,15 +271,10 @@ class ChangeApplier:
 
         # merge() owns the dedup shape and the cast to the target schema: the
         # default path hands it the raw valid rows and it fuses the in-batch
-        # last-wins into its bucket exchange.  The salted path keeps its
-        # explicit two-phase spread, and the routing path needs the winners
-        # (cast to the target schema the route predicate is written against)
-        # materialized before the split.
-        if self.salted:
-            stats = self._merge_sink(
-                self.table, last_wins_salted(valid, key=key, order=order,
-                                             n_salts=self.n_salts), epoch_id)
-        elif self.route_sql is not None:
+        # last-wins into its bucket exchange.  The routing path needs the
+        # winners (cast to the target schema the route predicate is written
+        # against) materialized before the split.
+        if self.route_sql is not None:
             # F3 dual-target routing: split winners by predicate; each
             # target computes its own touched buckets + cursor.  The winners
             # are materialized ONCE so both targets' merges (and any retry)

@@ -174,7 +174,7 @@ def run_stream_from(
     # order column comes from the applier's table (not a hardcoded 'lsn') so
     # sources whose order column has another name still pass analysis; a
     # source that doesn't carry it at all gets row counts only.
-    order_col = getattr(applier.table, "order_col", "lsn")
+    order_col = applier.table.order_col
     obs_aggs = [F.count(F.lit(1)).alias("rows")]
     if order_col in source.columns:
         obs_aggs += [F.min(order_col).alias("lsn_min"),

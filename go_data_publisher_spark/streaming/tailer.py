@@ -214,14 +214,11 @@ class ChangefeedTailer(_CursorDrainBase):
         # polling hot path); both retention shapes — compaction folded
         # the window's deltas, or vacuum expired the recorded pending
         # manifest during an outage — surface typed from the table
-        probe = getattr(self.source, "has_changes", None)
-        if probe is not None and not probe(from_v, to_v):
+        if not self.source.has_changes(from_v, to_v):
             # metadata-only window (vacuum, no-op commits): advance the
             # cursor without consuming an epoch — re-checking is idempotent
             return {"status": "empty_window"}
         feed = self.source.changes(from_v, to_v)
-        if probe is None and feed.limit(1).count() == 0:
-            return {"status": "empty_window"}
         events = feed.drop("commit_version")
         # source schema evolution flows through: the feed rows carry the
         # source's CURRENT schema, so widen/extend the target first or
@@ -316,7 +313,7 @@ class ChangefeedTailer(_CursorDrainBase):
             ver, epoch = int(pend["to_version"]), int(pend["epoch"])
         else:
             ver = int(self.source.manifest()["version"])
-            epoch = self._next_uncommitted_epoch(cur)
+            epoch = self._next_uncommitted_epoch()
             cur["pending_reseed"] = {"to_version": ver, "epoch": epoch}
             cur["next_epoch"] = max(int(cur["next_epoch"]), epoch + 1)
             self._store(cur)
@@ -382,7 +379,7 @@ class ChangefeedTailer(_CursorDrainBase):
                      "pending": None})
         return {**stats, "reseeded_to_version": ver}
 
-    def _next_uncommitted_epoch(self, cur: dict) -> int:
+    def _next_uncommitted_epoch(self) -> int:
         """The epoch id a FRESH reseed may merge under.  The cursor's
         next_epoch is not trustworthy here: a tick that crashed between its
         merge commit and its cursor store leaves next_epoch pointing at an
@@ -393,16 +390,10 @@ class ChangefeedTailer(_CursorDrainBase):
         the guard's high watermark, which also REUSES the hole left by a
         reseed abandoned to a vacuumed pin (an unfilled hole would pin the
         hwm forever and grow the recent set with every later commit)."""
-        state_fn = getattr(self.target, "epoch_state", None)
-        if state_fn is not None:
-            st = state_fn(self.writer_id)
-            e = int(st["epoch_hwm"]) + 1
-            recent = set(st["epochs_recent"])
-            while e in recent:
-                e += 1
-            return e
-        e = int(cur["next_epoch"])
-        while self.target.is_epoch_committed(e, self.writer_id):
+        st = self.target.epoch_state(self.writer_id)
+        e = int(st["epoch_hwm"]) + 1
+        recent = set(st["epochs_recent"])
+        while e in recent:
             e += 1
         return e
 
@@ -489,12 +480,9 @@ class WirePublisher(_CursorDrainBase):
             # source vacuumed the pinned window's manifest during the outage
             # (the records are already safely published).
             return {"status": "already_published", "path": path}
-        probe = getattr(self.source, "has_changes", None)
-        if probe is not None and not probe(from_v, to_v):
+        if not self.source.has_changes(from_v, to_v):
             return {"status": "empty_window"}
         feed = self.source.changes(from_v, to_v)
-        if probe is None and feed.limit(1).count() == 0:
-            return {"status": "empty_window"}
         # commit_version is feed bookkeeping, not envelope payload
         events = feed.drop("commit_version")
         tmp = f"{self.out_dir}/.tmp-{name}"

@@ -14,7 +14,6 @@ Commands:
             CDC-out: apply a table's change feed to a second table
   maintain  --table DIR [--compact-threshold N] [--vacuum-keep K]
             compaction + snapshot expiry (out-of-band maintenance)
-  bench     (see bench.py / bench_scaling.py)
 
 On a cluster, swap `get_spark` for the session spark-submit provides
 (SparkSession.builder.getOrCreate() picks up --master/--conf).

@@ -6,6 +6,10 @@ relative is resolved against the source tree — function-local imports
 included, which importing the modules would never execute.  A target must be
 an existing module; a name imported *from* a module must be a submodule or
 be bound at that module's top level.
+
+The same resolver walks the imports of the entry points (the query contract,
+the CLI, the bench scripts and the benchmark harness): every package module
+must be reached from one of them.
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ from pathlib import Path
 PKG = "go_data_publisher_spark"
 ROOT = Path(__file__).resolve().parent.parent
 _SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+ENTRY_POINTS = ("__spark_entry__.py", "run_pipeline.py", "bench.py",
+                "bench_extra.py", "bench_scaling.py", "perfbench/*.py")
 
 
 def _module_name(path: Path) -> str:
@@ -55,15 +61,16 @@ def _top_level_names(path: Path) -> set[str]:
     return names
 
 
-def _unresolved(source: str, module: str, is_package: bool = False) -> list[str]:
-    """Package-internal imports in ``source`` (the text of ``module``) whose
-    target module or imported name does not exist."""
+def _imports(source: str, module: str, is_package: bool = False):
+    """(line, target module, names imported from it) for every import in
+    ``source`` (the text of ``module``) that names the package or is
+    relative."""
     package = module if is_package else module.rpartition(".")[0]
-    problems = []
     for node in ast.walk(ast.parse(source)):
         if isinstance(node, ast.Import):
-            targets = [(a.name, []) for a in node.names
-                       if a.name == PKG or a.name.startswith(PKG + ".")]
+            for a in node.names:
+                if a.name == PKG or a.name.startswith(PKG + "."):
+                    yield node.lineno, a.name, []
         elif isinstance(node, ast.ImportFrom):
             if node.level:
                 parts = package.split(".")
@@ -73,19 +80,45 @@ def _unresolved(source: str, module: str, is_package: bool = False) -> list[str]
                 target = node.module
             else:
                 continue
-            targets = [(target, [a.name for a in node.names])]
-        else:
+            yield node.lineno, target, [a.name for a in node.names]
+
+
+def _unresolved(source: str, module: str, is_package: bool = False) -> list[str]:
+    """Package-internal imports in ``source`` (the text of ``module``) whose
+    target module or imported name does not exist."""
+    problems = []
+    for lineno, target, names in _imports(source, module, is_package):
+        target_file = _module_file(target)
+        if target_file is None:
+            problems.append(f"line {lineno}: no module {target}")
             continue
-        for target, names in targets:
-            target_file = _module_file(target)
-            if target_file is None:
-                problems.append(f"line {node.lineno}: no module {target}")
-                continue
-            for name in names:
-                if (name != "*" and not _module_file(f"{target}.{name}")
-                        and name not in _top_level_names(target_file)):
-                    problems.append(f"line {node.lineno}: {target} has no {name}")
+        for name in names:
+            if (name != "*" and not _module_file(f"{target}.{name}")
+                    and name not in _top_level_names(target_file)):
+                problems.append(f"line {lineno}: {target} has no {name}")
     return problems
+
+
+def _reached_files() -> set[Path]:
+    """Files imported, transitively, from ``ENTRY_POINTS``, function-local
+    imports included."""
+    todo = [p for pattern in ENTRY_POINTS for p in sorted(ROOT.glob(pattern))]
+    seen: set[Path] = set()
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        for _, target, names in _imports(path.read_text(), _module_name(path),
+                                         path.name == "__init__.py"):
+            if target != PKG and not target.startswith(PKG + "."):
+                continue
+            for mod in (target, *(f"{target}.{n}" for n in names)):
+                # importing a module runs every enclosing package's __init__
+                parts = mod.split(".")
+                todo.extend(f for i in range(1, len(parts) + 1)
+                            if (f := _module_file(".".join(parts[:i]))))
+    return seen
 
 
 def test_package_internal_imports_resolve():
@@ -98,6 +131,14 @@ def test_package_internal_imports_resolve():
                              path.name == "__init__.py")
     ]
     assert not problems, "\n".join(problems)
+
+
+def test_every_module_is_reached_from_an_entry_point():
+    reached = _reached_files()
+    unreached = [str(path.relative_to(ROOT))
+                 for path in sorted((ROOT / PKG).rglob("*.py"))
+                 if path.name != "__init__.py" and path not in reached]
+    assert not unreached, "imported by no entry point:\n" + "\n".join(unreached)
 
 
 def test_resolver_flags_function_local_imports():

@@ -30,17 +30,17 @@ def test_widen_or_ignore_upsert(spark, tmpdir_path):
     )
     # initial intervals
     tbl.merge(_mk(spark, [(1, 0, 100, "I"), (2, 0, 50, "I")]),
-              epoch_id=0, order_col="to_lsn")
+              epoch_id=0)
     # widen epoch 1 (to 100→120: applied), shrink epoch 2 (to 50→30: ignored)
     tbl.merge(_mk(spark, [(1, 0, 120, "U"), (2, 0, 30, "U")]),
-              epoch_id=1, order_col="to_lsn")
+              epoch_id=1)
     got = {(r["epoch"], r["from_lsn"]): r["to_lsn"] for r in tbl.snapshot().collect()}
     assert got == {("1", 0): 120, ("2", 0): 50}
 
     # in-batch last-wins on max `to` (the reference's temporaryIntervals map):
     # both versions arrive in one batch — only the widest survives
     tbl.merge(_mk(spark, [(3, 10, 40, "I"), (3, 10, 90, "U")]),
-              epoch_id=2, order_col="to_lsn")
+              epoch_id=2)
     got = {(r["epoch"], r["from_lsn"]): r["to_lsn"] for r in tbl.snapshot().collect()}
     assert got[("3", 10)] == 90
 

@@ -13,14 +13,13 @@ from go_data_publisher_spark.streaming.apply import ChangeApplier, replay_batch_
 from conftest import pandas_final_state
 
 
-def _replay(spark, tmpdir_path, n=4000, n_chunks=4, salted=False, n_buckets=8):
+def _replay(spark, tmpdir_path, n=4000, n_chunks=4, n_buckets=8):
     log = generate_changelog(spark, n, n_convs=80, seed=23).persist()
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=n_buckets)
     app = ChangeApplier(
         tbl,
         quarantine_dir=f"{tmpdir_path}/quarantine",
         lineage_dir=f"{tmpdir_path}/lineage",
-        salted=salted,
     )
     lo, hi = log.agg(F.min("lsn"), F.max("lsn")).first()
     span = (hi - lo) // n_chunks + 1
@@ -50,11 +49,6 @@ def _assert_final_state_equals_oracle(log, tbl):
 def test_full_replay_equals_oracle(spark, tmpdir_path):
     log, tbl, app, bounds, stats = _replay(spark, tmpdir_path)
     assert all(s["status"] == "committed" for s in stats)
-    _assert_final_state_equals_oracle(log, tbl)
-
-
-def test_full_replay_equals_oracle_salted(spark, tmpdir_path):
-    log, tbl, app, bounds, stats = _replay(spark, tmpdir_path, salted=True)
     _assert_final_state_equals_oracle(log, tbl)
 
 
