@@ -285,9 +285,8 @@ SQL_RANGE_JOIN = """
 def q_range_join_chunked(spark, sf_dir):
     """Q3 at web scale: the same range-containment aggregate as
     `range_join`, planned as a chunked shuffled equi-join instead of a
-    broadcast (operators/sequencing.py:range_count_chunked; the join-shaped
-    general operator remains range_join_chunked) — the shape that survives
-    an intervals side too large to broadcast.
+    broadcast (operators/sequencing.py:range_count_chunked) — the shape
+    that survives an intervals side too large to broadcast.
 
     Cost note (measured by the sf1 gate, r6): this benchmark's per-user
     intervals span ~97% of the log, so the matching-pair count is ~events
@@ -1203,8 +1202,7 @@ def q_emb_ann_lsh(spark, sf_dir):
     DuckDB md5_number_lower), masked to the low 32 bits so Spark's signed
     long and DuckDB's UBIGINT agree before the mod.  The xxhash64 family
     stays the hot-path default (native JVM hash, no per-dim md5) and keeps
-    its three-path-parity pytest pin
-    (test_ann_three_path_parity_and_bucketed_fast_path)."""
+    its pytest pin (test_ann_topk_finds_near_neighbors)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir)
     top = S.ann_topk_lsh(emb, q, k=10, n_planes=6, multiprobe_hamming=1,

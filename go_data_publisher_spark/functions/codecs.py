@@ -1,9 +1,7 @@
-"""Envelope codecs: JSON wire format and base64/hex transcoding.
+"""Envelope codecs: the JSON wire format and its little-endian uint32 key.
 
-Reference analogues: Kafka JSON marshal/unmarshal (S5/S6,
-transactions-producer/external/kafka/client.go:28-65) and the hex→base64
-field transcode during archive scans (F8,
-transactions-producer/external/archiver/client.go:56-85).  All built-ins.
+Reference analogue: Kafka JSON marshal/unmarshal (S5/S6,
+transactions-producer/external/kafka/client.go:28-65).  All built-ins.
 """
 
 from __future__ import annotations
@@ -65,11 +63,3 @@ def to_wire_kafka(df: DataFrame, key_num_col: str) -> DataFrame:
         F.to_json(F.struct(*df.columns)).alias("value"),
     )
 
-
-def hex_to_base64(col: Column) -> Column:
-    """F8: hex string → bytes → base64 string (vectorized built-ins)."""
-    return F.base64(F.unhex(col))
-
-
-def base64_to_hex(col: Column) -> Column:
-    return F.lower(F.hex(F.unbase64(col)))

@@ -7,7 +7,7 @@ per-row Python) throughout").  Nothing here iterates rows in Python.
 
 Column-expression variants are preferred in hot paths; the pandas-UDF
 variants exist where the logic doesn't decompose into built-ins (language ID
-scoring across many languages at once, rolling-hash fingerprints).
+scoring across many languages at once, the SimHash per-bit vote).
 """
 
 from __future__ import annotations
@@ -22,15 +22,6 @@ from pyspark.sql.functions import pandas_udf
 # Catalyst-expression transforms (zero Python)
 # ---------------------------------------------------------------------------
 
-# BPE-ish token boundary: runs of word chars, or single non-space symbols.
-_TOKEN_RE = r"\w+|[^\w\s]"
-
-
-def token_count(text: Column) -> Column:
-    """Approximate token count: word-ish pieces + standalone punctuation."""
-    return F.size(F.regexp_extract_all(text, F.lit(_TOKEN_RE), 0))
-
-
 def whitespace_token_count(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
 
@@ -40,36 +31,17 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def _quality_terms(text: Column) -> dict[str, Column]:
-    """The one definition of the quality feature expressions — shared by
-    `quality_features` and `quality_score` so the scored features can never
-    drift from the reported ones."""
+def quality_score(text: Column) -> Column:
+    """Composite [0,1] quality heuristic: document length, average token
+    length and punctuation ratio, each scored against a plausible range."""
     n_chars = F.length(text)
     n_tokens = whitespace_token_count(text)
     n_punct = F.size(F.regexp_extract_all(text, F.lit(r"[^\w\s]"), 0))
-    n_stop = F.size(
-        F.regexp_extract_all(F.lower(text), F.lit(r"\b(the|a|and|of|to|in|is|it|that|for)\b"), 0)
-    )
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "avg_token_len": n_chars / F.greatest(n_tokens, F.lit(1)),
-        "punct_ratio": n_punct / F.greatest(n_chars, F.lit(1)),
-        "stopword_ratio": n_stop / F.greatest(n_tokens, F.lit(1)),
-    }
-
-
-def quality_features(text: Column) -> list[Column]:
-    """Length / punctuation / stopword-ratio features (quality scoring)."""
-    return [v.alias(k) for k, v in _quality_terms(text).items()]
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic from the features above."""
-    t = _quality_terms(text)
-    length_ok = F.when((t["n_chars"] >= 20) & (t["n_chars"] <= 20000), 1.0).otherwise(0.3)
-    shape_ok = F.when((t["avg_token_len"] >= 3) & (t["avg_token_len"] <= 12), 1.0).otherwise(0.5)
-    punct_ok = F.when(t["punct_ratio"] <= 0.2, 1.0).otherwise(0.4)
+    avg_token_len = n_chars / F.greatest(n_tokens, F.lit(1))
+    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
+    length_ok = F.when((n_chars >= 20) & (n_chars <= 20000), 1.0).otherwise(0.3)
+    shape_ok = F.when((avg_token_len >= 3) & (avg_token_len <= 12), 1.0).otherwise(0.5)
+    punct_ok = F.when(punct_ratio <= 0.2, 1.0).otherwise(0.4)
     return ((length_ok + shape_ok + punct_ok) / 3.0).alias("quality")
 
 
@@ -121,42 +93,6 @@ def _lang_id_impl(text: pd.Series) -> pd.Series:
     # CJK detection: any codepoint in the unified-ideograph block
     has_cjk = text.fillna("").str.contains(r"[一-鿿]", regex=True)
     return best.mask(has_cjk, "zh")
-
-
-@functools.lru_cache(maxsize=None)
-def _fingerprint64_udf():
-    @pandas_udf("long")
-    def _fp(text: pd.Series) -> pd.Series:
-        return _fingerprint64_impl(text)
-
-    return _fp
-
-
-def fingerprint64(text: Column) -> Column:
-    """Deterministic 64-bit document fingerprint via a vectorized polynomial
-    rolling hash over the normalized codepoints (Arrow-batched pandas UDF)."""
-    return _fingerprint64_udf()(text)
-
-
-def _fingerprint64_impl(text: pd.Series) -> pd.Series:
-    normalized = text.fillna("").str.lower().str.replace(r"\s+", " ", regex=True).str.strip()
-    if len(normalized) == 0:
-        return pd.Series([], dtype="int64")
-    # Vectorize across the batch: fixed-width codepoint matrix (prefix cap
-    # 256 chars — fingerprints are prefix-robust), then a polynomial rolling
-    # hash looping over *positions*, numpy-parallel across rows.
-    prefix = normalized.str.slice(0, 256).str.pad(256, side="right", fillchar="\x00")
-    blob = prefix.str.cat().encode("utf-32-le")
-    codes = np.frombuffer(blob, dtype=np.uint32).reshape(len(prefix), 256).astype(np.uint64)
-    out = np.zeros(len(prefix), dtype=np.uint64)
-    base = np.uint64(1099511628211)
-    for i in range(codes.shape[1]):
-        col = codes[:, i]
-        active = col != 0
-        if not active.any():
-            break
-        out[active] = out[active] * base + col[active]
-    return pd.Series(out.astype(np.int64))
 
 
 def _md5lo64_from_hex(hx: Column) -> Column:

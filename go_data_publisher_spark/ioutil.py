@@ -1,8 +1,8 @@
 """Shared metadata-plane IO primitives: atomic publish + commit lock.
 
 One implementation for the write-fsync-rename idiom and the flock critical
-section, used by the lake manifest log and the external watermark store —
-a durability fix (e.g. directory fsync policy) lands in exactly one place.
+section, used by the lake manifest log and the tailer's cursor file — a
+durability fix (e.g. directory fsync policy) lands in exactly one place.
 """
 
 from __future__ import annotations

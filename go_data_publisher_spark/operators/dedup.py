@@ -104,30 +104,6 @@ def last_wins_window(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",))
     return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
-def content_hash_changed(batch: DataFrame, target: DataFrame, key, hash_cols) -> DataFrame:
-    """D2: publish only rows whose content checksum differs from the target's.
-
-    Reference: K12 checksum of (epoch, identities, signature), publish iff
-    changed (computors-publisher/sync/processor.go:120-177).  Spark shape:
-    checksum column + left-anti join on (key, checksum).
-    """
-    def with_sum(df):
-        # concat_ws silently SKIPS nulls, so (x, NULL) and (NULL, x) would
-        # collide and a real content change would be classified "unchanged".
-        # Encode each column null-distinguishably: NULL -> "\x00", value ->
-        # "\x01" + value (the prefix keeps a literal "\x00" value distinct).
-        encoded = [
-            F.when(F.col(c).isNull(), F.lit("\x00"))
-            .otherwise(F.concat(F.lit("\x01"), F.col(c).cast("string")))
-            for c in hash_cols
-        ]
-        return df.withColumn("__checksum", F.sha2(F.concat_ws("\x1f", *encoded), 256))
-
-    b, t = with_sum(batch), with_sum(target.select(*key, *hash_cols))
-    return b.join(t.select(*key, "__checksum"), on=[*key, "__checksum"], how="left_anti") \
-            .drop("__checksum")
-
-
 def drop_already_present(batch: DataFrame, target: DataFrame, on) -> DataFrame:
     """D3: read-before-write dedup — drop batch rows already in the target.
 

@@ -1,75 +1,15 @@
-"""Skew-aware joins (SURVEY.md §2.7 — the reference has no general join
-operator; these are the join primitives our engine adds, with the
-north_rule's explicit salted repartition for hot-conversation skew).
+"""Join operators (SURVEY.md §2.7 — the reference has no general join
+operator; this is the one our engine adds): the as-of (temporal) join.
 
-AQE's skew-join handles most cases automatically (enabled in session.py);
-`salted_join` is the explicit form for when the skew is known a priori
-(e.g. joining the change stream to a per-conversation dimension where 1% of
-conv_ids carry 50% of rows) or when AQE is unavailable (streaming
-microbatches disable AQE re-planning in some Spark versions).
+Key skew in ordinary equi-joins is left to AQE's skew-join (enabled in
+session.py); the hot-conversation skew of the CDC dedup itself is handled
+by the two-phase salted reduction `dedup.last_wins_salted`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-    discriminator: str | None = None,
-) -> DataFrame:
-    """Equi-join a skewed big side to a small side without a hot reducer.
-
-    The big side gets a pseudo-random salt in [0, n_salts); the small side is
-    replicated n_salts times (explode over the salt range).  The join key
-    becomes (on, salt), so a hot key's rows spread over ``n_salts`` reducers
-    instead of one.  Result is row-identical to ``big.join(small, on, how)``
-    for inner/left joins.
-
-    Shuffle math: big side shuffles once (same as unsalted); small side
-    shuffles n_salts× its (small) size — the classic trade.
-
-    LIMITATION of the default content-hash salt: rows with identical content
-    all hash to ONE salt, so a skew caused by exact-duplicate rows is not
-    spread.  When the big side has (or may have) duplicate rows, pass a
-    ``discriminator`` column that varies across those duplicates — a STORED
-    stable column only (an offset, an lsn, a source-assigned row id), never
-    one computed at runtime like ``monotonically_increasing_id()``, whose
-    values change when map tasks are recomputed and would reintroduce the
-    exact zero-or-twice corruption the deterministic salt prevents.  It is
-    mixed into the salt hash, restoring the spread while keeping the salt
-    deterministic under task retry.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left (small side must be replicable)")
-    # any uniform salt assignment is valid (the join result is independent of
-    # which salt a row gets), but it must be DETERMINISTIC under recomputation:
-    # a stage retry that re-runs map tasks must assign the same salt to the
-    # same row, or reducers consuming mixed old/new map output see rows zero
-    # or two times.  Hash the full row content — NOT F.rand(), whose
-    # per-partition stream changes when map output is recomputed.
-    salt_cols = [F.col(discriminator)] if discriminator is not None \
-        else [F.col(c) for c in big.columns]
-    salted_big = big.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*salt_cols), F.lit(n_salts)).cast("int"),
-    )
-    replicated_small = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = salted_big.join(replicated_small, on=[on, "__salt"], how=how)
-    return out.drop("__salt")
-
-
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on, how: str = "left") -> DataFrame:
-    """Standard small-dimension join: force broadcast so the fact side never
-    shuffles (the merge's survivor path uses the same shape)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def asof_join(

@@ -1,4 +1,5 @@
-"""Filters / routing / validity guards — SURVEY.md §2.2 (F1-F4).
+"""Filters / routing / validity guards — SURVEY.md §2.2 (F2-F4; the F1
+empty-row filter is a plain ``where`` inlined in its query).
 
 All of these are plain Catalyst expressions, so predicate pushdown, column
 pruning and whole-stage codegen apply for free.
@@ -36,13 +37,6 @@ def split_valid(df: DataFrame, key_cols=("conv_id", "turn_idx"), op_col="op"):
     """
     p = validity_sql(key_cols, op_col)
     return df.where(p), df.where(f"(NOT ({p})) OR (({p}) IS NULL)")
-
-
-def drop_empty(df: DataFrame, epoch_col="epoch", tick_col="lsn") -> DataFrame:
-    """F1: drop empty/sentinel rows before publish (epoch 0/65535, tick 0)."""
-    return df.where(
-        ~F.col(epoch_col).isin(0, 65535) & (F.col(tick_col) != 0)
-    )
 
 
 def patch_corrupt_range(df: DataFrame, epoch_col="epoch", lsn_col="lsn",

@@ -41,8 +41,3 @@ def scd2_history(
             F.col("__valid_to").alias("valid_to"),
         )
     )
-
-
-def scd2_current(history: DataFrame) -> DataFrame:
-    """The open (current) versions of an scd2_history frame."""
-    return history.where(F.col("valid_to").isNull())

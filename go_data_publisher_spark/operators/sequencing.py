@@ -32,68 +32,6 @@ def unprocessed_suffix(df: DataFrame, epoch_col: str, cursor_epoch: int) -> Data
     return df.where(F.col(epoch_col) > cursor_epoch)
 
 
-def epoch_for_lsn(events: DataFrame, intervals: DataFrame, lsn_col="lsn",
-                  lo_col="from_lsn", hi_col="to_lsn") -> DataFrame:
-    """Q3: range-containment lookup of each event's epoch.
-
-    The intervals dimension is tiny (one row per epoch) → broadcast, so the
-    range join is a broadcast-nested-loop that never shuffles the event side.
-    """
-    return events.join(
-        F.broadcast(intervals),
-        (events[lsn_col] >= intervals[lo_col]) & (events[lsn_col] <= intervals[hi_col]),
-        "left",
-    )
-
-
-def range_join_chunked(events: DataFrame, intervals: DataFrame, lsn_col="lsn",
-                       lo_col="from_lsn", hi_col="to_lsn", chunk: int = 1 << 16,
-                       how: str = "inner") -> DataFrame:
-    """Q3 at web scale: range-containment join WITHOUT broadcasting.
-
-    `epoch_for_lsn` broadcasts the interval side — right for the reference's
-    one-row-per-epoch dimension, wrong once intervals grow with key
-    cardinality (per-user/per-conversation ranges): a broadcast nested-loop
-    over a large build side is O(events × intervals) per task and the
-    broadcast itself stops fitting.  Here both sides map into coarse chunks
-    of the sequence space — an interval [lo, hi] explodes to the
-    ``span/chunk + 1`` chunk ids it overlaps, an event maps to exactly one —
-    and the join becomes a plain shuffled equi-join on chunk id plus the
-    exact containment filter.  Partition-parallel, no broadcast, no nested
-    loop; per-interval fan-out is bounded by ``span/chunk + 1``, so pick
-    ``chunk`` near the typical interval span.
-
-    ``how``: "inner" or "left".  Left semantics survive the chunk mapping
-    because only the *interval* side is exploded — an event carries a single
-    chunk id, so an event matching no interval yields exactly one
-    null-extended row.
-
-    Reference parity: same containment semantics as epoch_for_lsn
-    (status-service epoch lookup); the chunking is the standard
-    bin/overlap-range-join decomposition Spark lacks natively.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
-
-    def _chunk_of(col):
-        return F.floor(col / F.lit(int(chunk))).cast("long")
-
-    iv = (
-        intervals.where(F.col(lo_col) <= F.col(hi_col))
-        .withColumn(
-            "__i_chunk",
-            F.explode(F.sequence(_chunk_of(F.col(lo_col)), _chunk_of(F.col(hi_col)))),
-        )
-    )
-    ev = events.withColumn("__e_chunk", _chunk_of(F.col(lsn_col)))
-    cond = (
-        (ev["__e_chunk"] == iv["__i_chunk"])
-        & (ev[lsn_col] >= iv[lo_col])
-        & (ev[lsn_col] <= iv[hi_col])
-    )
-    return ev.join(iv, cond, how).drop("__e_chunk", "__i_chunk")
-
-
 def interval_contain_count_sorted(events: DataFrame, intervals: DataFrame,
                                   lsn_col: str = "lsn",
                                   lo_col: str = "from_lsn",
@@ -101,11 +39,11 @@ def interval_contain_count_sorted(events: DataFrame, intervals: DataFrame,
     """Q3's per-event containment COUNT for the BROADCAST regime — sorted
     boundary arrays + vectorized binary search, zero pair enumeration.
 
-    `epoch_for_lsn` broadcasts the interval side and nested-loops every
-    (event, interval) pair — O(events × intervals) comparisons even when the
-    caller only wants the count (bench r6: ~145M pair evaluations at sf0.1).
-    The count needs none of those pairs: with interval lower bounds and
-    upper bounds each in a sorted array,
+    A broadcast range join (events BETWEEN a broadcast interval side) is a
+    nested loop over every (event, interval) pair — O(events × intervals)
+    comparisons even when the caller only wants the count (bench r6: ~145M
+    pair evaluations at sf0.1).  The count needs none of those pairs: with
+    interval lower bounds and upper bounds each in a sorted array,
 
         n_containing(e) = #{lo <= e} − #{hi < e}
 
@@ -171,18 +109,20 @@ def interval_contain_count_sorted(events: DataFrame, intervals: DataFrame,
 def range_count_chunked(events: DataFrame, intervals: DataFrame,
                         lsn_col: str = "lsn", lo_col: str = "from_lsn",
                         hi_col: str = "to_lsn", chunk: int = 1 << 16) -> DataFrame:
-    """Q3's per-event containment COUNT as a chunked shuffled equi-join —
-    `range_join_chunked`'s plan family (no broadcast, no driver residency)
-    with the O(pairs) term removed for the count aggregate.
+    """Q3's per-event containment COUNT as a chunked shuffled equi-join (no
+    broadcast, no driver residency) with the O(pairs) term removed for the
+    count aggregate.
 
-    `range_join_chunked` + groupBy enumerates every matching pair, which on
-    dense-overlap data (intervals spanning most of the log) approaches
-    events × intervals no matter how the join is planned — the superlinear
-    sf1 finding of r6.  For the COUNT, pairs with intervals that FULLY cover
-    an event's chunk are redundant: every event in chunk c is contained, so
-    one count per (chunk, full-cover) suffices.  Decomposition:
+    A range join planned as an equi-join on chunk id (each interval exploded
+    to the chunks it overlaps, then the exact containment filter) + groupBy
+    enumerates every matching pair, which on dense-overlap data (intervals
+    spanning most of the log) approaches events × intervals no matter how
+    the join is planned — the superlinear sf1 finding of r6.  For the COUNT,
+    pairs with intervals that FULLY cover an event's chunk are redundant:
+    every event in chunk c is contained, so one count per (chunk,
+    full-cover) suffices.  Decomposition:
 
-      1. explode intervals to overlapped chunk ids (as range_join_chunked);
+      1. explode intervals to overlapped chunk ids;
       2. intervals fully covering a chunk (lo <= c·chunk and
          hi >= (c+1)·chunk − 1) reduce to one ``n_full`` count per chunk —
          O(intervals · span/chunk) rows, no event involvement;
@@ -200,8 +140,8 @@ def range_count_chunked(events: DataFrame, intervals: DataFrame,
     if chunk & (chunk - 1) == 0:
         # power-of-two chunk: arithmetic right shift is an EXACT 64-bit
         # floor division — the double-precision floor(col/chunk) mis-chunks
-        # positions above 2^53, and unlike the join-shaped operator (whose
-        # exact BETWEEN filter merely drops a mis-chunked pair) the
+        # positions above 2^53, and unlike a pair-enumerating chunked join
+        # (whose exact BETWEEN filter merely drops a mis-chunked pair) the
         # full-cover counts here have no per-event re-check, so a
         # mis-chunked event would OVERCOUNT (r7 review finding)
         shift = chunk.bit_length() - 1
@@ -209,8 +149,8 @@ def range_count_chunked(events: DataFrame, intervals: DataFrame,
         def _chunk_of(col):
             return F.shiftright(col.cast("long"), shift).cast("long")
     else:
-        # non-power-of-two chunks share range_join_chunked's double-floor
-        # domain: exact for |position| < 2^53 (every reference LSN space)
+        # non-power-of-two chunks use the double-precision floor: exact for
+        # |position| < 2^53 (every reference LSN space)
         def _chunk_of(col):
             return F.floor(col / F.lit(chunk)).cast("long")
 
@@ -265,14 +205,14 @@ def interval_stab_count(events: DataFrame, intervals: DataFrame,
     """Q3 for the dense-overlap regime: per-event COUNT of containing
     intervals WITHOUT enumerating (event, interval) pairs.
 
-    Any pair-enumerating range join — the broadcast nested loop
-    (`epoch_for_lsn`) or the chunked equi-join (`range_join_chunked`) —
-    costs O(matching pairs).  When intervals are long relative to the
-    sequence space (every interval overlaps most events, e.g. per-user
-    lifetime ranges), pairs approach events × intervals and the join is
-    quadratic NO MATTER how it is planned; bench.py's sf1 gate measured
-    exactly that (r6).  For count-style aggregates the pairs are never
-    needed: sweep the boundary step function instead.
+    Any pair-enumerating range join — a broadcast nested loop or an
+    equi-join on chunk id — costs O(matching pairs).  When intervals are
+    long relative to the sequence space (every interval overlaps most
+    events, e.g. per-user lifetime ranges), pairs approach events ×
+    intervals and the join is quadratic NO MATTER how it is planned;
+    bench.py's sf1 gate measured exactly that (r6).  For count-style
+    aggregates the pairs are never needed: sweep the boundary step function
+    instead.
 
     Shape — one range shuffle over events + 2·intervals rows, O(n_parts)
     serial stitch, zero pair enumeration:

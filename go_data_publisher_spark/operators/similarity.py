@@ -3,15 +3,13 @@
 - brute-force cosine top-k: the exact baseline — one scan, JVM-side
   F.aggregate/zip_with arithmetic, TakeOrderedAndProject for the top-k.
 - LSH-bucketed ANN: random-hyperplane buckets; probe only the query's bucket
-  (and optionally neighboring buckets) — the scale path where a full scan of
-  10^10 vectors is off the table.
-- IVF-style variant: partition by a coarse quantizer (bucket of the
-  dominant hyperplanes) and store bucket as a partition column so Spark
-  prunes data files at scan time.
+  (and optionally neighboring buckets), then rank the candidates exactly.
+- banded RHP codes: ``n_bands`` independent LSH codes per vector from one
+  Arrow-batched numpy matmul, the candidate generator of the embedding
+  near-dup join.
 
-All arithmetic stays in Catalyst expressions (whole-stage codegen); a
-numpy-vectorized pandas-UDF path is provided for wide batches where Arrow
-transfer + BLAS beats per-element codegen.
+The cosine and bucket arithmetic stays in Catalyst expressions (whole-stage
+codegen); only the banded codes run as a pandas UDF.
 """
 
 from __future__ import annotations
@@ -65,35 +63,8 @@ def brute_force_topk(df: DataFrame, query: Sequence[float], k: int = 10,
     )
 
 
-def make_cosine_topk_pandas(query: Sequence[float]):
-    """numpy variant: row-wise dot products per Arrow batch.  Scored row by
-    row, not with the BLAS ``m @ qv``, whose blocking depends on the batch
-    size: there two identical vectors in batches of different sizes scored
-    an ulp apart, so the id tie-break of the top-k never fired."""
-    qv = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(qv)
-
-    @pandas_udf("double")
-    def cos(v: pd.Series) -> pd.Series:
-        m = np.vstack(v.to_numpy())
-        sims = (m * qv).sum(axis=1) / (np.linalg.norm(m, axis=1) * qn)
-        return pd.Series(sims)
-
-    return cos
-
-
-def brute_force_topk_pandas(df: DataFrame, query, k=10, id_col="vec_id",
-                            vec_col="embedding") -> DataFrame:
-    cos = make_cosine_topk_pandas(query)
-    return (
-        df.select(F.col(id_col), cos(F.col(vec_col)).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 # ---------------------------------------------------------------------------
-# LSH / IVF
+# LSH
 # ---------------------------------------------------------------------------
 
 # plane-derivation hash families.  xxhash64 is the hot-path default (one
@@ -222,10 +193,10 @@ def _query_bucket(spark, query: Sequence[float], n_planes: int, seed: int,
 
 
 def _probe_buckets(qb: int, n_planes: int, multiprobe_hamming: int) -> list[int]:
-    """Multiprobe expansion shared by the LSH and IVF paths: the query bucket
-    plus every bucket within ``multiprobe_hamming`` bit-flips.  Raises on
-    radii this helper doesn't expand — silently degrading recall between two
-    'equivalent' index paths is worse than an error."""
+    """Multiprobe expansion: the query bucket plus every bucket within
+    ``multiprobe_hamming`` bit-flips.  Raises on radii this helper doesn't
+    expand — silently probing fewer buckets than asked would degrade recall
+    without an error."""
     if not 0 <= multiprobe_hamming <= 2:
         raise ValueError("multiprobe_hamming must be 0, 1, or 2")
     probes = [qb]
@@ -240,75 +211,22 @@ def _probe_buckets(qb: int, n_planes: int, multiprobe_hamming: int) -> list[int]
     return probes
 
 
-def bucketize(df: DataFrame, n_planes: int = 8, seed: int = 7,
-              vec_col: str = "embedding", bucket_col: str = "bucket",
-              hash_family: str = "xxhash64") -> DataFrame:
-    """Precompute the RHP bucket column once.  Persist/cache the result (or
-    write it with `write_ivf_index` for file-level pruning) and pass
-    ``bucket_col`` to `ann_topk_lsh` so repeated queries pay a column filter,
-    not a full re-hash of every corpus vector."""
-    return df.withColumn(
-        bucket_col, rhp_bucket(F.col(vec_col), n_planes, seed, hash_family))
-
-
 def ann_topk_lsh(df: DataFrame, query: Sequence[float], k: int = 10, n_planes: int = 8,
                  seed: int = 7, id_col: str = "vec_id", vec_col: str = "embedding",
-                 multiprobe_hamming: int = 1, bucket_col: str | None = None,
+                 multiprobe_hamming: int = 1,
                  hash_family: str = "xxhash64") -> DataFrame:
     """ANN top-k via RHP-LSH bucket probing.
 
-    Index-free ONE-SHOT form (``bucket_col=None``): recomputes every corpus
-    vector's bucket in the scan — a full pass over the corpus, amortized
-    over nothing.  Right for a single ad-hoc query; wrong for a query
-    workload.  For repeated queries either:
-
-    - pass a frame prepared by `bucketize` (+ ``bucket_col``): the probe is
-      a filter on the stored column — no re-hash, and a cached/persisted
-      frame serves every subsequent query, or
-    - use `write_ivf_index` + `ann_topk_ivf`: same buckets as a partition
-      column, so the probe prunes data FILES at scan time — the layout that
-      still works when the corpus doesn't fit in cache (10^10 vectors).
-
-    All three paths share the same plane derivation and probe expansion, so
-    they return identical results for identical parameters.
+    Index-free and one-shot: the scan computes every corpus vector's bucket
+    (``n_planes`` dot products per vector), keeps the vectors whose bucket
+    is among the query's probes (see `_probe_buckets`), and ranks those
+    exactly with `brute_force_topk`.  Every query pays a full pass over the
+    corpus; nothing is stored between queries.
     """
     spark = df.sparkSession
     qb = _query_bucket(spark, query, n_planes, seed, hash_family)
     probes = _probe_buckets(qb, n_planes, multiprobe_hamming)
-    if bucket_col is not None:
-        if bucket_col not in df.columns:
-            raise ValueError(
-                f"bucket_col {bucket_col!r} not in frame — prepare it with "
-                f"bucketize(df, n_planes={n_planes}, seed={seed})"
-            )
-        cand = df.where(F.col(bucket_col).isin(probes))
-    else:
-        cand = df.withColumn(
-            "__bucket", rhp_bucket(F.col(vec_col), n_planes, seed, hash_family)
-        ).where(F.col("__bucket").isin(probes))
+    cand = df.withColumn(
+        "__bucket", rhp_bucket(F.col(vec_col), n_planes, seed, hash_family)
+    ).where(F.col("__bucket").isin(probes))
     return brute_force_topk(cand, query, k=k, id_col=id_col, vec_col=vec_col)
-
-
-def write_ivf_index(df: DataFrame, path: str, n_planes: int = 8, seed: int = 7,
-                    vec_col: str = "embedding",
-                    hash_family: str = "xxhash64") -> None:
-    """Materialize the corpus partitioned by LSH bucket — the IVF layout.
-    Queries against this layout get partition pruning: only probed buckets'
-    files are read."""
-    (
-        df.withColumn("bucket", rhp_bucket(F.col(vec_col), n_planes, seed, hash_family))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
-def ann_topk_ivf(spark, index_path: str, query: Sequence[float], k: int = 10,
-                 n_planes: int = 8, seed: int = 7, id_col: str = "vec_id",
-                 vec_col: str = "embedding", multiprobe_hamming: int = 1,
-                 hash_family: str = "xxhash64") -> DataFrame:
-    qb = _query_bucket(spark, query, n_planes, seed, hash_family)
-    probes = _probe_buckets(qb, n_planes, multiprobe_hamming)
-    df = spark.read.parquet(index_path).where(F.col("bucket").isin(probes))
-    return brute_force_topk(df, query, k=k, id_col=id_col, vec_col=vec_col)

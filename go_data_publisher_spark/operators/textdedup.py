@@ -44,14 +44,6 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-def drop_exact_duplicates(df: DataFrame, id_col="doc_id", text_col="text") -> DataFrame:
-    """Keep the min-id representative of each content group."""
-    canon = exact_duplicates(df, id_col, text_col).select(
-        F.col("canonical_id").alias(id_col)
-    )
-    return df.join(canon, on=id_col, how="left_semi")
-
-
 # ---------------------------------------------------------------------------
 # shingles / jaccard
 # ---------------------------------------------------------------------------
@@ -69,41 +61,6 @@ def _shingles(text_col: str, k: int = 3):
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)))
-    )
-
-
-def ngram_jaccard_pairs(df: DataFrame, id_col="doc_id", text_col="text",
-                        k: int = 3, threshold: float = 0.7) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs that share at
-    least one shingle.  Inverted-index join: explode shingles, self-join on
-    shingle, count shared, then |A∪B| = |A|+|B|-shared.
-
-    Scale note: candidate generation by shared-shingle is quadratic in the
-    per-shingle posting list; for web scale use `minhash_lsh_pairs` (bands
-    bound the join fan-out) — this operator is the *verify* stage.
-    """
-    sh = df.select(
-        F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh")
-    ).withColumn("n_sh", F.size("sh"))
-    exploded = sh.select("id", "n_sh", F.explode("sh").alias("shingle"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return (
-        shared.withColumn(
-            "jaccard",
-            F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -334,7 +291,7 @@ def simhash_near_duplicates(df: DataFrame, id_col="doc_id", text_col="text",
 
 
 # ---------------------------------------------------------------------------
-# clusters + survivor selection (pairs → components → keep one per cluster)
+# near-dup clusters (pairs → connected components)
 # ---------------------------------------------------------------------------
 
 def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None,
@@ -403,20 +360,6 @@ def dedup_clusters(pairs: DataFrame, nodes: DataFrame | None = None,
         if n_changed == 0:
             break
     return labels.select("id", F.col("comp").alias("cluster_id"))
-
-
-def near_dup_survivors(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                       id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
-    """Keep one representative (min id) per near-dup cluster; docs in no
-    pair survive as singletons.  Input pairs come from any of the pair
-    generators above."""
-    clusters = dedup_clusters(
-        pairs, nodes=df.select(F.col(id_col).alias("id")), id_a=id_a, id_b=id_b
-    )
-    reps = clusters.where(F.col("id") == F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(reps, on=id_col, how="left_semi")
 
 
 # ---------------------------------------------------------------------------

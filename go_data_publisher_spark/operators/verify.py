@@ -1,5 +1,6 @@
-"""Verification operators — SURVEY.md §2.6 (V1-V5): the status-service
-analogue that re-reads both sides and asserts the replicated state equal.
+"""Verification operators — SURVEY.md §2.6 (V1-V3; the V5 per-key count
+comparison is a groupBy inlined in its query): the status-service analogue
+that re-reads both sides and asserts the replicated state equal.
 """
 
 from __future__ import annotations
@@ -58,18 +59,3 @@ def assert_equal_state(a: DataFrame, b: DataFrame, key, compare_cols) -> dict:
     if diff_keys or diff_rows:
         raise AssertionError(f"state mismatch: {stats}")
     return stats
-
-
-def count_equality(a: DataFrame, b: DataFrame, key_cols, count_col="n_rows") -> DataFrame:
-    """V5: per-key count equality between two sides (redis-watermark vs ES
-    count check, status-service/sync/log_processor.go:59-99)."""
-    ca = a.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(f"{count_col}_left"))
-    cb = b.groupBy(*key_cols).agg(F.count(F.lit(1)).alias(f"{count_col}_right"))
-    return (
-        ca.join(cb, on=list(key_cols), how="full_outer")
-        .where(
-            ~F.coalesce(F.col(f"{count_col}_left"), F.lit(0)).eqNullSafe(
-                F.coalesce(F.col(f"{count_col}_right"), F.lit(0))
-            )
-        )
-    )

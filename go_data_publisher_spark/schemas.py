@@ -73,8 +73,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("committed_at", T.TimestampType(), False),
     ]
 )
-
-
-def ddl(schema: T.StructType) -> str:
-    """Schema as a DDL string (stable, used in manifests)."""
-    return schema.simpleString()

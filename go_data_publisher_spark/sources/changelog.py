@@ -139,12 +139,6 @@ def generate_changelog(
     return events.unionAll(dups).select([f.name for f in CHANGE_EVENT_SCHEMA.fields])
 
 
-def generate_changelog_v1(spark: SparkSession, n_events: int, **kw) -> DataFrame:
-    """Schema-v1 slice (no `tool` column) — input to the schema-evolution stage."""
-    df = generate_changelog(spark, n_events, schema_v2_from=1.1, **kw)
-    return df.drop("tool")
-
-
 def write_changelog_stream_dir(
     df: DataFrame, path: str, n_chunks: int = 10, order_col: str = "lsn"
 ) -> list[tuple[int, int]]:

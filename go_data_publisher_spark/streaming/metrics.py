@@ -13,7 +13,6 @@ import json
 import os
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -65,7 +64,3 @@ class MicrobatchMetricsListener(StreamingQueryListener):
         with self._lock:
             with open(self.out_path, "a") as f:
                 f.write(json.dumps(row, default=str) + "\n")
-
-
-def read_metrics(spark: SparkSession, out_path: str) -> DataFrame:
-    return spark.read.json(out_path)

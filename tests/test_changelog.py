@@ -3,7 +3,7 @@ engine must survive (FIXTURES.md §2)."""
 
 from pyspark.sql import functions as F
 
-from go_data_publisher_spark.sources.changelog import generate_changelog, generate_changelog_v1
+from go_data_publisher_spark.sources.changelog import generate_changelog
 
 N = 4000
 
@@ -74,8 +74,3 @@ def test_schema_versions(spark):
     assert (
         v1.agg(F.max("lsn")).first()[0] < v2.agg(F.min("lsn")).first()[0]
     )
-
-
-def test_v1_generator_lacks_tool(spark):
-    df = generate_changelog_v1(spark, 500, seed=5)
-    assert "tool" not in df.columns

@@ -3,7 +3,6 @@
 import pandas as pd
 
 from go_data_publisher_spark.operators.dedup import (
-    content_hash_changed,
     drop_already_present,
     last_wins,
     last_wins_salted,
@@ -51,31 +50,8 @@ def test_last_wins_is_idempotent(spark):
     assert _winners_pdf(once).equals(_winners_pdf(twice))
 
 
-def test_content_hash_changed(spark):
-    batch = spark.createDataFrame(
-        [(1, "a", "x"), (2, "b", "y"), (3, "c", "z")], "k int, v string, w string"
-    )
-    target = spark.createDataFrame(
-        [(1, "a", "x"), (2, "OLD", "y")], "k int, v string, w string"
-    )
-    out = content_hash_changed(batch, target, key=["k"], hash_cols=["v", "w"])
-    assert sorted(r["k"] for r in out.collect()) == [2, 3]  # 1 unchanged → dropped
-
-
 def test_drop_already_present(spark):
     batch = spark.createDataFrame([(1, "a"), (2, "b")], "k int, sig string")
     target = spark.createDataFrame([(1, "a")], "k int, sig string")
     out = drop_already_present(batch, target, on=["k", "sig"])
     assert [r["k"] for r in out.collect()] == [2]
-
-
-def test_content_hash_null_positions_distinct(spark):
-    # concat_ws skips nulls, so (NULL,'x') and ('x',NULL) used to collide and
-    # a real content change was classified "unchanged" and dropped
-    batch = spark.createDataFrame([(1, None, "x")], "k int, v string, w string")
-    target = spark.createDataFrame([(1, "x", None)], "k int, v string, w string")
-    out = content_hash_changed(batch, target, key=["k"], hash_cols=["v", "w"])
-    assert out.count() == 1
-    # and nulls still match themselves (idempotent re-delivery stays a no-op)
-    same = content_hash_changed(batch, batch, key=["k"], hash_cols=["v", "w"])
-    assert same.count() == 0

@@ -1,4 +1,4 @@
-"""Connected-components clustering + survivor selection over near-dup pairs.
+"""Connected-components clustering over near-dup pairs.
 
 Oracle: pure-python union-find over the same edge list.
 """
@@ -7,10 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from go_data_publisher_spark.operators.textdedup import (
-    dedup_clusters,
-    near_dup_survivors,
-)
+from go_data_publisher_spark.operators.textdedup import dedup_clusters
 
 
 def _union_find(n_nodes, edges):
@@ -56,17 +53,3 @@ def test_clusters_long_chain_converges(spark):
     got = dedup_clusters(pairs, max_iters=12).collect()
     assert {r.cluster_id for r in got} == {0}
     assert len(got) == n
-
-
-def test_survivors_keep_min_per_cluster(spark):
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(8)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 3), (3, 5), (2, 6)], "id_a long, id_b long"
-    )
-    kept = sorted(
-        r.doc_id for r in near_dup_survivors(docs, pairs, id_col="doc_id").collect()
-    )
-    # clusters: {1,3,5}→keep 1, {2,6}→keep 2; singletons 0,4,7 survive
-    assert kept == [0, 1, 2, 4, 7]

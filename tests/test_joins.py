@@ -1,38 +1,6 @@
-"""Skew-aware joins: salted join equals plain join; hot key spreads."""
+"""Join operators: the as-of join and the interval stab count."""
 
 from pyspark.sql import functions as F
-
-from go_data_publisher_spark.operators.joins import broadcast_dim_join, salted_join
-from go_data_publisher_spark.sources.changelog import generate_changelog
-
-
-def test_salted_join_equals_plain_join(spark):
-    log = generate_changelog(spark, 3000, n_convs=40, seed=53).where("conv_id is not null")
-    dim = (
-        log.select("conv_id").distinct()
-        .withColumn("conv_meta", F.concat(F.lit("meta-"), F.col("conv_id")))
-    )
-    plain = log.join(dim, "conv_id").groupBy("conv_id").count()
-    salted = salted_join(log, dim, "conv_id", n_salts=4).groupBy("conv_id").count()
-    a = {(r["conv_id"], r["count"]) for r in plain.collect()}
-    b = {(r["conv_id"], r["count"]) for r in salted.collect()}
-    assert a == b
-
-    # left join with unmatched keys
-    dim_partial = dim.where("conv_id like '%1'")
-    pl = log.join(dim_partial, "conv_id", "left").count()
-    sl = salted_join(log, dim_partial, "conv_id", n_salts=4, how="left").count()
-    assert pl == sl == log.count()
-
-
-def test_broadcast_dim_join_plan(spark):
-    log = generate_changelog(spark, 500, seed=57).where("conv_id is not null")
-    # NOTE: a payload-less dim gets the whole join ELIMINATED by Catalyst
-    # (left join on a distinct key adding no columns) — dim must carry data
-    dim = log.select("conv_id").distinct().withColumn("meta", F.lit("m"))
-    out = broadcast_dim_join(log, dim, "conv_id")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
 
 
 def test_asof_join_matches_naive(spark):
@@ -101,34 +69,6 @@ def test_asof_join_ignores_null_ts_dim_rows(spark):
     )
     got = asof_join(facts, dim, "k", "ts", ["attr"]).collect()
     assert len(got) == 1 and got[0].attr is None
-
-
-def test_salted_join_discriminator_spreads_duplicate_rows(spark):
-    """ADVICE r2: content-hash salting lands exact-duplicate rows on one
-    salt; a discriminator column restores the spread deterministically."""
-    from go_data_publisher_spark.operators.joins import salted_join
-    from pyspark.sql import functions as F
-
-    # 1000 EXACT duplicates of one hot row, plus a unique discriminator
-    big = (spark.range(1000)
-           .select(F.lit("hot").alias("k"), F.lit("same").alias("payload"),
-                   F.col("id").alias("row_id")))
-    small = spark.createDataFrame([("hot", 1)], "k string, dim int")
-
-    content_salts = big.withColumn(
-        "__salt", F.pmod(F.xxhash64("k", "payload"), F.lit(8)).cast("int")
-    ).select("__salt").distinct().count()
-    assert content_salts == 1  # the documented limitation, demonstrated
-
-    out = salted_join(big, small, on="k", n_salts=8, discriminator="row_id")
-    assert out.count() == 1000
-    disc_salts = big.withColumn(
-        "__salt", F.pmod(F.xxhash64("row_id"), F.lit(8)).cast("int")
-    ).select("__salt").distinct().count()
-    assert disc_salts == 8  # duplicates now spread over every salt
-    # determinism: same discriminator -> same salt on recomputation
-    a = salted_join(big, small, on="k", n_salts=8, discriminator="row_id")
-    assert a.count() == 1000
 
 
 def test_interval_stab_count_matches_bruteforce(spark):

@@ -27,7 +27,5 @@ def test_stream_emits_metrics(spark, tmpdir_path):
     # observed per-batch counters present
     assert any(r.get("observed", {}).get("cdc_batch") for r in progress)
     # metrics are themselves queryable as a table
-    from go_data_publisher_spark.streaming.metrics import read_metrics
-
-    mdf = read_metrics(spark, metrics)
+    mdf = spark.read.json(metrics)
     assert mdf.where("event = 'progress'").count() == len(progress)

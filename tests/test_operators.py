@@ -56,15 +56,6 @@ def test_verify_monotonic(spark):
     assert Q.verify_monotonic(dup, "pos").first()["n_violations"] == 1
 
 
-def test_epoch_for_lsn(spark, seqdf):
-    intervals = Q.group_intervals(seqdf, ["epoch"], "lsn").select(
-        F.col("epoch").alias("iv_epoch"), "from_lsn", "to_lsn"
-    )
-    events = spark.createDataFrame([(11,), (23,), (99,)], "lsn long")
-    got = {r["lsn"]: r["iv_epoch"] for r in Q.epoch_for_lsn(events, intervals).collect()}
-    assert got == {11: 1, 23: 2, 99: None}
-
-
 def test_split_valid(spark):
     df = spark.createDataFrame(
         [("I", "c", 1), ("U", None, 2), ("X", "c", 3), ("D", "c", None)],
@@ -75,11 +66,6 @@ def test_split_valid(spark):
 
 
 def test_drop_empty_and_patch(spark):
-    df = spark.createDataFrame(
-        [(0, 5), (65535, 6), (3, 0), (3, 7)], "epoch int, lsn long"
-    )
-    assert [r["lsn"] for r in R.drop_empty(df).collect()] == [7]
-
     pat = spark.createDataFrame(
         [(65535, 22180000, "x"), (65535, 1, "y"), (3, 22180000, "z")],
         "epoch int, lsn long, payload string",
@@ -103,11 +89,8 @@ def test_latest_per_group_and_counts(spark):
     )
     got = {r["epoch"]: r["sig"] for r in A.latest_per_group(df, ["epoch"], "lsn").collect()}
     assert got == {1: "b", 2: "c"}
-    got = {r["epoch"]: r["n_rows"] for r in A.count_per_key(df, ["epoch"]).collect()}
-    assert got == {1: 2, 2: 1}
     got = {r["epoch"]: r["last_lsn"] for r in A.last_per_epoch(df, "epoch", "lsn").collect()}
     assert got == {1: 20, 2: 5}
-    assert A.batch_max_lsn(df) == (5, 20)
 
 
 def test_set_difference_and_mismatch(spark):
@@ -124,10 +107,3 @@ def test_set_difference_and_mismatch(spark):
     with pytest.raises(AssertionError):
         V.assert_equal_state(x, y, ["k"], ["txt", "n"])
     V.assert_equal_state(x, x, ["k"], ["txt", "n"])
-
-
-def test_count_equality(spark):
-    a = spark.createDataFrame([(1,), (1,), (2,)], "k int")
-    b = spark.createDataFrame([(1,), (2,)], "k int")
-    bad = V.count_equality(a, b, ["k"]).collect()
-    assert len(bad) == 1 and bad[0]["k"] == 1

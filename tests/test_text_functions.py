@@ -3,12 +3,7 @@
 from pyspark.sql import functions as F
 
 from go_data_publisher_spark.functions import text as TX
-from go_data_publisher_spark.functions.codecs import (
-    base64_to_hex,
-    from_wire,
-    hex_to_base64,
-    to_wire,
-)
+from go_data_publisher_spark.functions.codecs import from_wire, to_wire
 from go_data_publisher_spark.sources.changelog import generate_changelog
 
 
@@ -27,13 +22,10 @@ def _docs(spark):
 
 def test_token_counts(spark):
     df = _docs(spark).select(
-        "doc_id",
-        TX.token_count(F.col("text")).alias("bpe"),
-        TX.whitespace_token_count(F.col("text")).alias("ws"),
-    )
-    got = {r["doc_id"]: (r["bpe"], r["ws"]) for r in df.collect()}
-    assert got[0][0] > got[0][1]  # punctuation counted separately
-    assert got[6] == (1, 1)
+        "doc_id", TX.whitespace_token_count(F.col("text")).alias("ws"))
+    got = {r["doc_id"]: r["ws"] for r in df.collect()}
+    assert got[0] == 13  # punctuation stays attached to its word
+    assert got[6] == 1
 
 
 def test_normalize(spark):
@@ -42,11 +34,9 @@ def test_normalize(spark):
 
 
 def test_quality(spark):
-    df = _docs(spark).select("doc_id", TX.quality_score(F.col("text")).alias("q"),
-                             *TX.quality_features(F.col("text")))
-    got = {r["doc_id"]: r.asDict() for r in df.collect()}
-    assert got[0]["q"] > got[5]["q"]  # real sentence beats empty
-    assert got[0]["stopword_ratio"] > 0
+    df = _docs(spark).select("doc_id", TX.quality_score(F.col("text")).alias("q"))
+    got = {r["doc_id"]: r["q"] for r in df.collect()}
+    assert got[0] > got[5]  # real sentence beats empty
 
 
 def test_lang_id(spark):
@@ -55,17 +45,6 @@ def test_lang_id(spark):
     assert got[0] == "en" and got[1] == "de" and got[2] == "fr" and got[3] == "es"
     assert got[4] == "zh"
     assert got[5] == "und"
-
-
-def test_fingerprint_deterministic_and_normalizing(spark):
-    df = spark.createDataFrame(
-        [(0, "Hello   World"), (1, "hello world"), (2, "different")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r["fp"] for r in
-           df.select("doc_id", TX.fingerprint64(F.col("text")).alias("fp")).collect()}
-    assert got[0] == got[1]  # normalization folds case/whitespace
-    assert got[0] != got[2]
 
 
 def test_simhash_similar_texts_close(spark):
@@ -85,12 +64,6 @@ def test_wire_roundtrip(spark):
     a = sorted(log.collect(), key=lambda r: (r["lsn"], str(r["conv_id"]), r["op"]))
     b = sorted(back.collect(), key=lambda r: (r["lsn"], str(r["conv_id"]), r["op"]))
     assert a == b
-
-
-def test_hex_base64_transcode(spark):
-    df = spark.createDataFrame([("deadbeef",)], "h string")
-    out = df.select(base64_to_hex(hex_to_base64(F.col("h"))).alias("round"))
-    assert out.first()["round"] == "deadbeef"
 
 
 def test_le_uint32_key_golden_bytes(spark):

@@ -26,17 +26,6 @@ def test_exact_duplicates(spark, corpus):
     groups = D.exact_duplicates(corpus).collect()
     sizes = sorted(g["n_docs"] for g in groups)
     assert sizes == [1, 1, 1, 3]
-    kept = D.drop_exact_duplicates(corpus)
-    assert kept.count() == 4
-    assert {r["doc_id"] for r in kept.collect()} == {0, 3, 4, 5}
-
-
-def test_ngram_jaccard(spark, corpus):
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in D.ngram_jaccard_pairs(corpus, threshold=0.5).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
-    assert (0, 3) in pairs and 0.5 <= pairs[(0, 3)] < 1.0
-    assert (0, 4) not in pairs
 
 
 def test_minhash_lsh(spark, corpus):
@@ -71,20 +60,16 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>").persist()
 
 
-def test_brute_force_topk_exact_and_pandas_agree(spark, vectors):
+def test_brute_force_topk_exact(spark, vectors):
     q = vectors.where("vec_id = 0").first()["embedding"]
     a = S.brute_force_topk(vectors, q, k=3).collect()
-    b = S.brute_force_topk_pandas(vectors, q, k=3).collect()
-    assert [r["vec_id"] for r in a] == [r["vec_id"] for r in b]
     assert {r["vec_id"] for r in a} == {0, 101, 100}
-    for x, y in zip(a, b):
-        assert abs(x["cosine"] - y["cosine"]) < 1e-6
 
 
 @pytest.mark.parametrize("n_parts", [2, 8, 16])
-def test_pandas_topk_ties_exact_duplicates_across_partitions(spark, n_parts):
-    """Exact duplicate vectors score identically whatever Arrow batch (here:
-    partition) they land in, so the top-k tie-break orders them by id."""
+def test_topk_ties_exact_duplicates_across_partitions(spark, n_parts):
+    """Exact duplicate vectors score identically whatever partition they land
+    in, so the top-k tie-break orders them by id."""
     import numpy as np
 
     rng = np.random.default_rng(11)
@@ -102,30 +87,21 @@ def test_pandas_topk_ties_exact_duplicates_across_partitions(spark, n_parts):
         .repartition(n_parts, "vec_id")
     # the query is one of the stored (float32) vectors, as in a self-search
     q = df.where(f"vec_id = {dup_ids[0]}").first()["embedding"]
-    got = S.brute_force_topk_pandas(df, q, k=len(dup_ids)).collect()
+    got = S.brute_force_topk(df, q, k=len(dup_ids)).collect()
     assert [r["vec_id"] for r in got] == dup_ids
     assert len({r["cosine"] for r in got}) == 1
-    sql = S.brute_force_topk(df, q, k=len(dup_ids)).collect()
-    assert [r["vec_id"] for r in sql] == dup_ids
 
 
 def test_ann_topk_finds_near_neighbors(spark, vectors):
     q = vectors.where("vec_id = 0").first()["embedding"]
-    got = S.ann_topk_lsh(vectors, q, k=3, n_planes=6, multiprobe_hamming=1).collect()
-    ids = {r["vec_id"] for r in got}
+    top = S.ann_topk_lsh(vectors, q, k=3, n_planes=6, multiprobe_hamming=1)
+    ids = {r["vec_id"] for r in top.collect()}
     # identical + near-identical vectors hash to the query's bucket
     assert {0, 101}.issubset(ids)
-
-
-def test_ivf_index_prunes_partitions(spark, vectors, tmpdir_path):
-    S.write_ivf_index(vectors, f"{tmpdir_path}/ivf", n_planes=4)
-    q = vectors.where("vec_id = 0").first()["embedding"]
-    got = S.ann_topk_ivf(spark, f"{tmpdir_path}/ivf", q, k=3, n_planes=4).collect()
-    assert {0, 101}.issubset({r["vec_id"] for r in got})
-    # partition pruning: the probed-bucket filter appears as a partition filter
-    df = spark.read.parquet(f"{tmpdir_path}/ivf").where(F.col("bucket") == 3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+    # the default plane family derives the planes with the native xxhash64
+    assert "xxhash64" in top._jdf.queryExecution().executedPlan().toString()
+    with pytest.raises(ValueError):
+        S.ann_topk_lsh(vectors, q, k=5, n_planes=4, multiprobe_hamming=3)
 
 
 def test_embedding_near_duplicates(spark, vectors):
@@ -252,63 +228,12 @@ def test_minhash_band_config_validated(spark, corpus):
         D.minhash_lsh_pairs(corpus, n_hashes=16, n_bands=5)
 
 
-def test_ivf_multiprobe_parity_with_lsh(spark, vectors, tmpdir_path):
-    # the IVF path used to silently ignore multiprobe_hamming >= 2
-    S.write_ivf_index(vectors, f"{tmpdir_path}/ivf2", n_planes=4)
-    q = vectors.where("vec_id = 0").first()["embedding"]
-    ivf = S.ann_topk_ivf(
-        spark, f"{tmpdir_path}/ivf2", q, k=5, n_planes=4, multiprobe_hamming=2
-    ).collect()
-    lsh = S.ann_topk_lsh(vectors, q, k=5, n_planes=4, multiprobe_hamming=2).collect()
-    assert [r.vec_id for r in ivf] == [r.vec_id for r in lsh]
-    with pytest.raises(ValueError):
-        S.ann_topk_lsh(vectors, q, k=5, n_planes=4, multiprobe_hamming=3)
-
-
-def test_ann_three_path_parity_and_bucketed_fast_path(spark, vectors, tmpdir_path):
-    """VERDICT r2 #6: one-shot LSH, precomputed-bucket frame, and IVF layout
-    must return identical results for the same parameters — and the bucketed
-    frame path must not re-hash the corpus (no plane derivation in its plan)."""
-    q = vectors.where("vec_id = 0").first()["embedding"]
-    one_shot = S.ann_topk_lsh(vectors, q, k=5, n_planes=4, multiprobe_hamming=1).collect()
-
-    # materialize the prepared frame (the point of the fast path: hash once,
-    # serve many queries) — an unmaterialized bucketize would just inline
-    S.bucketize(vectors, n_planes=4).write.mode("overwrite") \
-        .parquet(f"{tmpdir_path}/prepared")
-    prepared = spark.read.parquet(f"{tmpdir_path}/prepared")
-    bucketed = S.ann_topk_lsh(prepared, q, k=5, n_planes=4,
-                              multiprobe_hamming=1, bucket_col="bucket")
-    S.write_ivf_index(vectors, f"{tmpdir_path}/ivf3", n_planes=4)
-    ivf = S.ann_topk_ivf(spark, f"{tmpdir_path}/ivf3", q, k=5, n_planes=4,
-                         multiprobe_hamming=1).collect()
-
-    assert [r.vec_id for r in one_shot] == [r.vec_id for r in bucketed.collect()] \
-        == [r.vec_id for r in ivf]
-
-    # fast path: the candidate filter uses the stored column — the plan has
-    # no xxhash64 plane derivation (the one-shot plan does)
-    bucketed_plan = bucketed._jdf.queryExecution().executedPlan().toString()
-    one_shot_plan = S.ann_topk_lsh(
-        vectors, q, k=5, n_planes=4, multiprobe_hamming=1
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "xxhash64" not in bucketed_plan
-    assert "xxhash64" in one_shot_plan
-
-    import pytest
-    with pytest.raises(ValueError, match="bucketize"):
-        S.ann_topk_lsh(vectors, q, k=5, n_planes=4, bucket_col="missing")
-
-
-def test_ann_md5lo_plane_family(spark, vectors, tmpdir_path):
+def test_ann_md5lo_plane_family(spark, vectors):
     """The md5lo plane family (the SQL-oracle-able one): components must
-    equal a from-scratch Python md5 reference, the three serving paths must
-    agree under it, and an unknown family must raise (a typo silently
-    falling back to xxhash64 would desync the entry from its DuckDB twin)."""
+    equal a from-scratch Python md5 reference, and an unknown family must
+    raise (a typo silently falling back to xxhash64 would desync the entry
+    from its DuckDB twin)."""
     import hashlib
-
-    import pytest
-    from pyspark.sql import functions as F
 
     # brute-force reference for the plane component, built from the md5 spec
     # (last 8 digest bytes little-endian == DuckDB md5_number_lower)
@@ -330,21 +255,6 @@ def test_ann_md5lo_plane_family(spark, vectors, tmpdir_path):
             assert got[f"c_{p}_{d}"] == pytest.approx(ref_component(7, p, d), abs=0), \
                 f"plane component ({p},{d}) diverges from the md5 spec"
 
-    # three-path parity holds under the md5lo family too
     q = vectors.where("vec_id = 0").first()["embedding"]
-    one_shot = S.ann_topk_lsh(vectors, q, k=5, n_planes=4,
-                              multiprobe_hamming=1, hash_family="md5lo").collect()
-    S.bucketize(vectors, n_planes=4, hash_family="md5lo") \
-        .write.mode("overwrite").parquet(f"{tmpdir_path}/prepared_md5")
-    prepared = spark.read.parquet(f"{tmpdir_path}/prepared_md5")
-    bucketed = S.ann_topk_lsh(prepared, q, k=5, n_planes=4, multiprobe_hamming=1,
-                              bucket_col="bucket", hash_family="md5lo").collect()
-    S.write_ivf_index(vectors, f"{tmpdir_path}/ivf_md5", n_planes=4,
-                      hash_family="md5lo")
-    ivf = S.ann_topk_ivf(spark, f"{tmpdir_path}/ivf_md5", q, k=5, n_planes=4,
-                         multiprobe_hamming=1, hash_family="md5lo").collect()
-    assert [r.vec_id for r in one_shot] == [r.vec_id for r in bucketed] \
-        == [r.vec_id for r in ivf]
-
     with pytest.raises(ValueError, match="plane hash family"):
         S.ann_topk_lsh(vectors, q, k=5, n_planes=4, hash_family="sha1")

@@ -1,8 +1,7 @@
-"""Chunked (non-broadcast) range join + event-time windowed aggregation.
+"""Count-shaped range joins + event-time windowed aggregation.
 
-- range_join_chunked must agree row-for-row with the broadcast epoch_for_lsn
-  on the same input, honour left semantics for unmatched events, and plan as
-  a shuffled equi-join (no BroadcastNestedLoopJoin).
+- range_count_chunked and interval_contain_count_sorted must agree with a
+  pair-enumerating broadcast join on every edge regime.
 - windowed_event_counts (batch form) must agree with a hand aggregation;
   the streaming form (watermark drops late data across a checkpoint restart)
   is covered in test_windowed_stream.py.
@@ -14,60 +13,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from go_data_publisher_spark.operators.sequencing import (
-    epoch_for_lsn,
-    range_join_chunked,
-)
 from go_data_publisher_spark.streaming.windows import windowed_event_counts
-
-
-def _fixture(spark):
-    events = spark.createDataFrame(
-        [(i, f"e{i}") for i in range(0, 5000, 7)], "lsn long, payload string"
-    )
-    intervals = spark.createDataFrame(
-        [(e, e * 500, e * 500 + 499) for e in range(9)],
-        "epoch long, from_lsn long, to_lsn long",
-    )
-    return events, intervals
-
-
-def test_chunked_matches_broadcast(spark):
-    events, intervals = _fixture(spark)
-    bcast = epoch_for_lsn(events, intervals).where(F.col("epoch").isNotNull())
-    chunked = range_join_chunked(events, intervals, chunk=256, how="inner")
-    cols = ["lsn", "payload", "epoch", "from_lsn", "to_lsn"]
-    a = sorted(map(tuple, bcast.select(*cols).collect()))
-    b = sorted(map(tuple, chunked.select(*cols).collect()))
-    assert a == b
-    assert len(a) > 0
-
-
-def test_chunked_left_unmatched(spark):
-    events, intervals = _fixture(spark)
-    # lsn >= 4500 falls outside every interval (max to_lsn = 4499)
-    left = range_join_chunked(events, intervals, chunk=256, how="left")
-    unmatched = left.where(F.col("epoch").isNull()).select("lsn").collect()
-    expected = [r.lsn for r in events.where(F.col("lsn") > 4499).collect()]
-    assert sorted(r.lsn for r in unmatched) == sorted(expected)
-    # every event appears exactly once when intervals are disjoint
-    assert left.count() == events.count()
-
-
-def test_chunked_overlapping_intervals_duplicate(spark):
-    events = spark.createDataFrame([(10,), (99999,)], "lsn long")
-    intervals = spark.createDataFrame(
-        [(1, 0, 20), (2, 5, 15)], "epoch long, from_lsn long, to_lsn long"
-    )
-    out = range_join_chunked(events, intervals, chunk=8, how="inner")
-    assert sorted((r.lsn, r.epoch) for r in out.collect()) == [(10, 1), (10, 2)]
-
-
-def test_chunked_plan_has_no_bnlj(spark):
-    events, intervals = _fixture(spark)
-    plan = range_join_chunked(events, intervals, chunk=256)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_windowed_counts_batch(spark):
