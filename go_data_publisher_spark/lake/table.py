@@ -123,6 +123,60 @@ def _mmh3_hash_int(x: int, seed: int = _MMH3_SEED) -> int:
     return h - (1 << 32) if h >= (1 << 31) else h
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
+                           0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
+                           0x27D4EB2F165667C5)
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _u64(data: bytes, i: int) -> int:
+    return int.from_bytes(data[i:i + 8], "little")
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int: the hash Spark's
+    ``xxhash64`` computes (seed 42) over a string's UTF-8 bytes, an int's 4
+    little-endian bytes and a long's 8.  Pinned against F.xxhash64 in
+    tests/test_bucket_hash.py."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_xxh64_round(acc, _u64(data, i + 8 * j)) for j, acc in enumerate(v)]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _xxh64_round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, _u64(data, i))
+        h = (_rotl64(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl64(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= data[i] * _P5 & _M64
+        h = _rotl64(h, 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
 def _balanced_pkeys(n_parts: int) -> list[int]:
     """First int j per residue p with hash(j) ≡ p (mod n_parts); memoized.
     Coupon-collector search, ~n·ln n probes (≈1.5k for 256 parts, once),
@@ -584,10 +638,16 @@ class TranscriptTable:
 
     # ---------------- schema ----------------
 
+    @staticmethod
+    def _declared_schema(m: dict, schema_id=None) -> T.StructType:
+        """The schema manifest ``m`` declares for ``schema_id`` (default: its
+        current schema)."""
+        sid = m["current_schema_id"] if schema_id is None else schema_id
+        return T.StructType.fromJson(json.loads(m["schemas"][str(sid)]))
+
     @property
     def schema(self) -> T.StructType:
-        m = self.manifest()
-        return T.StructType.fromJson(json.loads(m["schemas"][str(m["current_schema_id"])]))
+        return self._declared_schema(self.manifest())
 
     def evolve_schema(self, batch_schema: T.StructType) -> bool:
         """Diff batch schema vs table schema; add columns / widen types.
@@ -632,6 +692,16 @@ class TranscriptTable:
 
     # ---------------- reads ----------------
 
+    def _read_files(self, m: dict, schema_id: int, paths: list[str]) -> DataFrame:
+        """Files of one schema id, read with its declared schema plus the
+        (op, __seq) every writer adds: no inference job, and with
+        ``get_spark``'s listing threshold no listing job either."""
+        read_schema = T.StructType(
+            self._declared_schema(m, schema_id).fields
+            + [T.StructField("op", T.StringType()),
+               T.StructField("__seq", T.LongType())])
+        return self.spark.read.schema(read_schema).parquet(*paths)
+
     def version_as_of(self, ts: float) -> int:
         """Timestamp time travel: the newest committed version whose commit
         time is <= ``ts`` (unix seconds) — Iceberg's snapshot-as-of-time
@@ -666,18 +736,19 @@ class TranscriptTable:
         when NO selected bucket holds deltas the plan is a plain scan with
         no aggregate at all.
 
-        File groups are read per (schema_id, seq) and cast up to the
-        version's current schema — the scan-time cast Iceberg does for old
-        data files.
+        Files are read per schema_id, each group with the schema the
+        manifest declares for that schema_id, and cast up to the version's
+        current schema — the scan-time cast Iceberg does for old data files.
+        The manifest names the files and their schema, so building the
+        DataFrame runs no listing or schema-inference job (see
+        ``_read_files``).
         """
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass version or as_of, not both")
             version = self.version_as_of(as_of)
         m = self.manifest(version)
-        target = T.StructType.fromJson(
-            json.loads(m["schemas"][str(m["current_schema_id"])])
-        )
+        target = self._declared_schema(m)
         out_cols = [ident(f.name) for f in target.fields]
         files = m["files"]
         if buckets is not None:
@@ -707,16 +778,11 @@ class TranscriptTable:
             groups: dict[int, list[str]] = {}
             for f in subset:
                 groups.setdefault(int(f["schema_id"]), []).append(f["path"])
+            extra = ["`op`", "`__seq`"] if with_seq else ["`op`"]
             parts = []
-            for _sid, paths in groups.items():
-                df = self.spark.read.parquet(*paths)
-                have = df.columns
-                cols = project_to(target, have)
-                cols.append("`op`" if "op" in have else "'U' AS `op`")
-                if with_seq:
-                    cols.append("`__seq`" if "__seq" in have
-                                else "CAST(0 AS BIGINT) AS `__seq`")
-                parts.append(df.selectExpr(*cols))
+            for sid, paths in groups.items():
+                df = self._read_files(m, sid, paths)
+                parts.append(df.selectExpr(*project_to(target, df.columns), *extra))
             grouped = parts[0]
             for p in parts[1:]:
                 grouped = grouped.unionByName(p)
@@ -741,34 +807,25 @@ class TranscriptTable:
             return out.selectExpr(*out_cols, "`op`")
         return out.where("`op` != 'D'").selectExpr(*out_cols)
 
-    _BUCKET_MEMO_MAX = 4096
-
     def bucket_of(self, key_value) -> int:
-        """The bucket the partition transform assigns ``key_value`` — the
-        SAME expression the writer buckets with (``bucket_expr``), evaluated
-        on a 1-row frame so a Python re-implementation of xxhash64 can never
-        drift from the JVM's.  The mapping is pure and ``n_buckets`` is
-        fixed at construction, so results are memoized (bounded) — under
-        point-lookup traffic the probe job runs once per DISTINCT key, not
-        per request."""
-        # thread-safety (the /row route serves from a ThreadingHTTPServer):
-        # single GIL-atomic dict reads/writes only, and the return value is
-        # a LOCAL — never re-read after a point where another thread's
-        # capacity clear() could have emptied the dict
-        memo = getattr(self, "_bucket_memo", None)
-        if memo is None:
-            memo = self._bucket_memo = {}
-        cached = memo.get(key_value)
-        if cached is not None:
-            return cached
-        row = self.spark.createDataFrame(
-            [(key_value,)], T.StructType([self.schema[self.key[0]]])
-        ).selectExpr(f"{bucket_sql(self.key[0], self.n_buckets)} AS b").first()
-        b = int(row["b"])
-        if len(memo) >= self._BUCKET_MEMO_MAX:
-            memo.clear()
-        memo[key_value] = b
-        return b
+        """The bucket the partition transform (``bucket_sql``) assigns
+        ``key_value``, computed on the driver with ``_xxh64``, the Python
+        mirror of Spark's ``xxhash64`` (pinned against it in
+        tests/test_bucket_hash.py).  The key column's declared type picks
+        the bytes hashed, as in Spark: a string hashes its UTF-8 bytes, a
+        byte, short or int its 4-byte value, a long its 8-byte value.  Any
+        other key type raises TypeError."""
+        dt = self.schema[self.key[0]].dataType
+        if isinstance(dt, T.StringType):
+            data = str.encode(key_value, "utf-8")  # TypeError unless a str
+        elif isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType)):
+            data = int(key_value).to_bytes(4, "little", signed=True)
+        elif isinstance(dt, T.LongType):
+            data = int(key_value).to_bytes(8, "little", signed=True)
+        else:
+            raise TypeError(f"bucket_of: no driver-side hash for key type {dt}")
+        h = _xxh64(data)
+        return (h - (1 << 64) if h >> 63 else h) % self.n_buckets
 
     def lookup(self, key_value, second=None, version: int | None = None) -> DataFrame:
         """S2/S3 point lookup served from the table: all committed rows for
@@ -1326,11 +1383,13 @@ class TranscriptTable:
         deltas into base files, so a window that reaches behind the newest
         compaction of a touched bucket is gone — that raises ValueError
         rather than silently under-reporting changes.
+
+        As in ``snapshot()``, each schema_id's files are read with the
+        manifest's schema for it and cast up to the current schema; building
+        the DataFrame runs no listing or schema-inference job.
         """
         m, in_window = self._change_window(from_version, to_version)
-        target = T.StructType.fromJson(
-            json.loads(m["schemas"][str(m["current_schema_id"])])
-        )
+        target = self._declared_schema(m)
         out_schema = T.StructType(
             target.fields
             + [T.StructField("op", T.StringType(), True),
@@ -1342,8 +1401,8 @@ class TranscriptTable:
         for f in in_window:
             groups.setdefault(int(f["schema_id"]), []).append(f["path"])
         parts = []
-        for paths in groups.values():
-            df = self.spark.read.parquet(*paths)
+        for sid, paths in groups.items():
+            df = self._read_files(m, sid, paths)
             parts.append(df.selectExpr(*project_to(target, df.columns), "`op`",
                                        "`__seq` AS commit_version"))
         out = parts[0]

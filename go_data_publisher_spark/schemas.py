@@ -13,20 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# --- change event (v2 = current; v1 lacks the `tool` column) -----------------
-
-CHANGE_EVENT_SCHEMA_V1 = T.StructType(
-    [
-        T.StructField("lsn", T.LongType(), False),
-        T.StructField("op", T.StringType(), False),  # I / U / D
-        T.StructField("conv_id", T.StringType(), True),  # nullable: invalid rows quarantined
-        T.StructField("turn_idx", T.IntegerType(), True),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("schema_version", T.IntegerType(), False),
-    ]
-)
+# --- change event -------------------------------------------------------------
 
 CHANGE_EVENT_SCHEMA = T.StructType(
     [

@@ -72,6 +72,16 @@ def get_spark(
         .config("spark.sql.streaming.checkpointFileManagerClass",
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
+        # List table files on the driver: above this many paths a read lists
+        # them with a Spark job, one task per path (default 32).  Table
+        # reads name their files from the manifest, under a local POSIX root
+        # (the flock commit lock needs one), where the driver lists faster
+        # than a job starts.  Building snapshot() (4 cores, with the
+        # manifest's schema, so no inference job either): 16 files
+        # 0.27 s -> 0.12-0.16 s, 112 files 1.1-2.0 s -> 0.20 s, 1,792 files
+        # (256 buckets x 7 deltas) 8.2-10.9 s -> 0.62-0.85 s.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1000000")
     )
     # Shuffle scratch space: the sandbox's single virtio disk collapses under
     # 32 concurrent shuffle writers (measured: 3s → 38s stalls); RAM-backed

@@ -29,3 +29,11 @@ def test_checkpoint_log_never_overwrites(spark, tmpdir_path):
     assert already_exists.isInstance(err.value.java_exception)
     with open(existing) as f:
         assert f.read() == "v1"
+
+
+def test_file_listing_stays_on_the_driver(spark):
+    """Table reads name up to thousands of files; above this many paths
+    Spark would list them with a Spark job, one task per path
+    (tests/test_read_jobs.py checks that reads launch none)."""
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(conf) == "1000000"
