@@ -18,10 +18,12 @@ there are no rows-only entries).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_data_publisher_spark.operators import aggregates as A
 from go_data_publisher_spark.operators import dedup as D
@@ -33,24 +35,59 @@ from go_data_publisher_spark.operators import verify as V
 from go_data_publisher_spark.functions import text as TX
 
 
+# path -> (file stamps, the schema Spark inferred from those files).  The
+# queries run on several threads at once; no lock is needed, because a race
+# at worst infers a schema twice, and an entry's stamps are always taken
+# before its schema was inferred, so a file rewritten in between leaves
+# stamps that no later read matches.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_stamps(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under ``path``, or None
+    when ``path`` is not on the local filesystem."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    stamps = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            stamps.append((os.path.relpath(os.path.join(d, f), path),
+                           st.st_size, st.st_mtime_ns))
+    return tuple(sorted(stamps))
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """A fixture table.  Spark infers a parquet schema with a one-task job
+    per read; the schema it inferred is kept per path and reused while no
+    file under the path changes size or mtime, so later reads start no
+    job."""
+    path = f"{sf_dir}/{name}.parquet"
+    stamps = _file_stamps(path)
+    known = _SCHEMAS.get(path)
+    if stamps is not None and known is not None and known[0] == stamps:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamps is not None:
+        _SCHEMAS[path] = (stamps, df.schema)
+    return df
 
 
 def _as_changelog(events: DataFrame) -> DataFrame:
     """Map the driver's events table onto the CDC envelope (FIXTURES.md §4):
     lsn=event_id, conv key=user_id, turn_idx=event_id%16,
     op: signup→I, error→D, else U; text=props."""
-    return events.select(
-        F.col("event_id").alias("lsn"),
-        F.when(F.col("event_type") == "signup", "I")
-        .when(F.col("event_type") == "error", "D")
-        .otherwise("U")
-        .alias("op"),
-        F.col("user_id").alias("conv_id"),
-        F.pmod(F.col("event_id"), F.lit(16)).cast("long").alias("turn_idx"),
-        F.col("props").alias("text"),
-        F.col("value"),
+    return events.selectExpr(
+        "event_id AS lsn",
+        "CASE WHEN event_type = 'signup' THEN 'I' "
+        "WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op",
+        "user_id AS conv_id",
+        "CAST(pmod(event_id, 16) AS BIGINT) AS turn_idx",
+        "props AS text",
+        "value",
     )
 
 
@@ -74,13 +111,9 @@ _CHANGELOG_SQL = """
 def q_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _as_changelog(_t(spark, sf_dir, "events"))
     winners = D.last_wins(log, key=("conv_id", "turn_idx"), order=("lsn",))
-    return winners.where(F.col("op") != "D").select(
-        "conv_id",
-        "turn_idx",
-        F.col("lsn").alias("last_lsn"),
-        F.col("text").alias("text"),
-        F.round("value", 2).alias("last_value"),
-    )
+    return winners.where("op != 'D'").selectExpr(
+        "conv_id", "turn_idx", "lsn AS last_lsn", "text",
+        "round(value, 2) AS last_value")
 
 
 def q_cdc_final_state_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,13 +126,9 @@ def q_cdc_final_state_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     log = _as_changelog(_t(spark, sf_dir, "events"))
     winners = D.last_wins_salted(log, key=("conv_id", "turn_idx"),
                                  order=("lsn",), n_salts=8)
-    return winners.where(F.col("op") != "D").select(
-        "conv_id",
-        "turn_idx",
-        F.col("lsn").alias("last_lsn"),
-        F.col("text").alias("text"),
-        F.round("value", 2).alias("last_value"),
-    )
+    return winners.where("op != 'D'").selectExpr(
+        "conv_id", "turn_idx", "lsn AS last_lsn", "text",
+        "round(value, 2) AS last_value")
 
 
 SQL_CDC_FINAL_STATE = f"""
@@ -124,11 +153,7 @@ def q_latest_per_group(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     return A.latest_per_group(
         ev, ["user_id"], "event_id", payload_cols=["event_id", "event_type"]
-    ).select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.col("event_type").alias("last_type"),
-    )
+    ).selectExpr("user_id", "event_id AS last_event_id", "event_type AS last_type")
 
 
 SQL_LATEST_PER_GROUP = """
@@ -262,15 +287,12 @@ def q_range_join(spark, sf_dir):
     intervals — event_id is the unique LSN, the same uniqueness the stab
     twin's per-row form already relies on."""
     ev = _t(spark, sf_dir, "events")
-    intervals = Q.group_intervals(ev, ["user_id"], "event_id").select(
-        F.col("user_id").alias("iv_user"), "from_lsn", "to_lsn"
-    )
+    intervals = Q.group_intervals(ev, ["user_id"], "event_id").selectExpr(
+        "user_id AS iv_user", "from_lsn", "to_lsn")
     counted = Q.interval_contain_count_sorted(
         ev.select("event_id"), intervals, lsn_col="event_id"
     )
-    return counted.where(F.col("n_containing") > 0).select(
-        "event_id", "n_containing"
-    )
+    return counted.where("n_containing > 0").select("event_id", "n_containing")
 
 
 SQL_RANGE_JOIN = """
@@ -300,17 +322,13 @@ def q_range_join_chunked(spark, sf_dir):
     (r6: 46.7s at 10×).  Output identical (oracle SQL unchanged,
     hash-verified); ``n_events`` restores join multiplicity exactly."""
     ev = _t(spark, sf_dir, "events")
-    intervals = Q.group_intervals(ev, ["user_id"], "event_id").select(
-        F.col("user_id").alias("iv_user"), "from_lsn", "to_lsn"
-    )
+    intervals = Q.group_intervals(ev, ["user_id"], "event_id").selectExpr(
+        "user_id AS iv_user", "from_lsn", "to_lsn")
     counted = Q.range_count_chunked(
         ev.select("event_id"), intervals, lsn_col="event_id", chunk=1024
     )
-    return counted.where(F.col("n_containing") > 0).select(
-        "event_id",
-        (F.col("n_events") * F.col("n_containing")).cast("long")
-        .alias("n_containing"),
-    )
+    return counted.where("n_containing > 0").selectExpr(
+        "event_id", "CAST(n_events * n_containing AS BIGINT) AS n_containing")
 
 
 SQL_RANGE_JOIN_CHUNKED = SQL_RANGE_JOIN
@@ -326,15 +344,12 @@ def q_range_join_stab(spark, sf_dir):
     the data shape, not the plan), while the sweep is O((events +
     intervals) log) with an O(n_parts) stitch."""
     ev = _t(spark, sf_dir, "events")
-    intervals = Q.group_intervals(ev, ["user_id"], "event_id").select(
-        F.col("user_id").alias("iv_user"), "from_lsn", "to_lsn"
-    )
+    intervals = Q.group_intervals(ev, ["user_id"], "event_id").selectExpr(
+        "user_id AS iv_user", "from_lsn", "to_lsn")
     counted = Q.interval_stab_count(
         ev.select("event_id"), intervals, lsn_col="event_id"
     )
-    return counted.where(F.col("n_containing") > 0).select(
-        "event_id", "n_containing"
-    )
+    return counted.where("n_containing > 0").select("event_id", "n_containing")
 
 
 SQL_RANGE_JOIN_STAB = SQL_RANGE_JOIN
@@ -372,9 +387,8 @@ def q_asof_enrich(spark, sf_dir):
     from go_data_publisher_spark.operators.joins import asof_join
 
     ev = _t(spark, sf_dir, "events")
-    dim = ev.where(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("event_id").alias("signup_event_id")
-    )
+    dim = ev.where("event_type = 'signup'").selectExpr(
+        "user_id", "ts", "event_id AS signup_event_id")
     facts = ev.select("user_id", "ts", "event_id")
     out = asof_join(facts, dim, ["user_id"], "ts", ["signup_event_id"])
     return out.select("event_id", "user_id", "signup_event_id")
@@ -845,10 +859,9 @@ def q_docs_curated(spark, sf_dir):
     # elimination's single-projection reach
     with_nt = sampled.withColumn(
         "__nt", TX.whitespace_token_count(F.col("text")).cast("long"))
-    filtered = with_nt.where(F.col("__nt") >= 20)
-    return quota_per_group(filtered, ["lang"], quota=30, key_col="doc_id").select(
-        "doc_id", "lang", F.col("__nt").alias("n_tokens")
-    )
+    filtered = with_nt.where("__nt >= 20")
+    return quota_per_group(filtered, ["lang"], quota=30, key_col="doc_id").selectExpr(
+        "doc_id", "lang", "__nt AS n_tokens")
 
 
 SQL_DOCS_CURATED = """
@@ -936,10 +949,8 @@ def _query_vec(spark, sf_dir):
 def q_emb_cosine_scores(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir)
-    return emb.select(
-        "vec_id",
-        (F.round(S.cosine_to_query(F.col("embedding"), q), 3) + 0.0).alias("cosine_r3"),
-    )
+    return emb.selectExpr(
+        "vec_id", f"round({S.cosine_to_query('embedding', q)}, 3) + 0.0D AS cosine_r3")
 
 
 SQL_EMB_COSINE_SCORES = """
@@ -955,7 +966,7 @@ def q_emb_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir)
     top = S.brute_force_topk(emb, q, k=10)
-    return top.select("vec_id", (F.round("cosine", 3) + 0.0).alias("cosine_r3"))
+    return top.selectExpr("vec_id", "round(cosine, 3) + 0.0D AS cosine_r3")
 
 
 SQL_EMB_TOPK = """
@@ -997,8 +1008,7 @@ def q_minhash_pairs_docs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").repartition(width)
     pairs = TD.minhash_lsh_pairs(docs, n_hashes=16, n_bands=8,
                                  verify_threshold=0.4)
-    return pairs.select(
-        "id_a", "id_b", (F.round("jaccard", 3) + 0.0).alias("jaccard_r3"))
+    return pairs.selectExpr("id_a", "id_b", "round(jaccard, 3) + 0.0D AS jaccard_r3")
 
 
 # brute-force twin of the minhash entry: same normalization (lower, collapse

@@ -31,6 +31,11 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
+def normalize_sql(text: str) -> str:
+    """``normalize_text`` as SQL text over the SQL expression ``text``."""
+    return f"trim(regexp_replace(lower({text}), '\\\\s+', ' '))"
+
+
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: document length, average token
     length and punctuation ratio, each scored against a plausible range."""

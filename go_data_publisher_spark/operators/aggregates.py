@@ -11,13 +11,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import ident
+
 
 def latest_per_group(df: DataFrame, group_cols, order_col: str, payload_cols=None) -> DataFrame:
     """A2: top-1 per group by order_col (latest computors per epoch —
     computors-consumer/elastic/client.go:87-91, `size:1 sort desc`)."""
     payload_cols = payload_cols or [c for c in df.columns if c not in group_cols]
-    win = F.max_by(F.struct(*payload_cols), F.col(order_col)).alias("__win")
-    return df.groupBy(*group_cols).agg(win).select(*group_cols, "__win.*")
+    payload = ", ".join(ident(c) for c in payload_cols)
+    win = F.expr(f"max_by(struct({payload}), {ident(order_col)}) AS __win")
+    return (df.groupBy(*group_cols).agg(win)
+            .selectExpr(*[ident(c) for c in group_cols], "__win.*"))
 
 
 def last_per_epoch(df: DataFrame, epoch_col: str, lsn_col: str) -> DataFrame:

@@ -89,9 +89,9 @@ def last_wins_salted(
         salted.repartition(*key, "__salt")
         .groupBy(*key, "__salt")
         .agg(F.expr(winner_sql(columns, order)))
-        .select(*key, "__win")
+        .selectExpr("__win.*")
     )
-    return last_wins(partial.select("__win.*"), key=key, order=order)
+    return last_wins(partial, key=key, order=order)
 
 
 def last_wins_window(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> DataFrame:

@@ -9,7 +9,9 @@ by the two-phase salted reduction `dedup.last_wins_salted`.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sqltext import ident, type_sql
 
 
 def asof_join(
@@ -34,11 +36,11 @@ def asof_join(
     some dim attributes are null).  One shuffle on the key, scales with key
     cardinality; facts with no preceding dim row get nulls (left semantics).
     """
-    from pyspark.sql import Window
-
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     dim_cols = [dim_cols] if isinstance(dim_cols, str) else list(dim_cols)
-    fact_cols = facts.columns
+    rest = [c for c in facts.columns if c not in key_cols and c != ts_col]
+    keys = [ident(c) for c in key_cols]
+    ts = ident(ts_col)
 
     # SQL join semantics: a NULL key never matches — but partitionBy groups
     # nulls together, so null-keyed dim rows must not enter the window (a
@@ -46,39 +48,34 @@ def asof_join(
     # Likewise a NULL dim timestamp can never satisfy dim.ts <= fact.ts, yet
     # ASC ordering puts nulls FIRST, where last(ignorenulls) would carry the
     # row into every early fact — drop those too.
-    for kc in key_cols:
-        dim = dim.where(F.col(kc).isNotNull())
-    dim = dim.where(F.col(ts_col).isNotNull())
+    dim = dim.where(" AND ".join(f"{c} IS NOT NULL" for c in (*keys, ts)))
+    dim_type = T.StructType([T.StructField(c, dim.schema[c].dataType, True)
+                             for c in dim_cols])
+    fact_types = {f.name: f.dataType for f in facts.schema.fields}
+    dim_tag, fact_tag = (1, 0) if strict else (0, 1)
 
-    d = dim.select(
-        *key_cols,
-        F.col(ts_col),
-        F.struct(*[F.col(c) for c in dim_cols]).alias("__dim"),
-        F.lit(0 if not strict else 1).alias("__tag"),
-        *[F.lit(None).cast(facts.schema[c].dataType).alias(f"__f_{c}")
-          for c in fact_cols if c not in key_cols and c != ts_col],
+    d = dim.selectExpr(
+        *keys, ts,
+        "struct(" + ", ".join(ident(c) for c in dim_cols) + ") AS __dim",
+        f"{dim_tag} AS __tag",
+        *[f"CAST(NULL AS {type_sql(fact_types[c])}) AS {ident('__f_' + c)}"
+          for c in rest],
     )
-    f = facts.select(
-        *key_cols,
-        F.col(ts_col),
-        F.lit(None).cast(d.schema["__dim"].dataType).alias("__dim"),
-        F.lit(1 if not strict else 0).alias("__tag"),
-        *[F.col(c).alias(f"__f_{c}")
-          for c in fact_cols if c not in key_cols and c != ts_col],
+    f = facts.selectExpr(
+        *keys, ts,
+        f"CAST(NULL AS {type_sql(dim_type)}) AS __dim",
+        f"{fact_tag} AS __tag",
+        *[f"{ident(c)} AS {ident('__f_' + c)}" for c in rest],
     )
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(F.col(ts_col).asc(), F.col("__tag").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fact_tag = 1 if not strict else 0
-    filled = (
+    return (
         d.unionByName(f)
-        .withColumn("__dim_asof", F.last("__dim", ignorenulls=True).over(w))
-        .where(F.col("__tag") == fact_tag)
+        .selectExpr("*", f"last(__dim, true) OVER (PARTITION BY {', '.join(keys)} "
+                         f"ORDER BY {ts} ASC, __tag ASC ROWS BETWEEN UNBOUNDED "
+                         f"PRECEDING AND CURRENT ROW) AS __dim_asof")
+        .where(f"__tag = {fact_tag}")
+        .selectExpr(
+            *keys, ts,
+            *[f"{ident('__f_' + c)} AS {ident(c)}" for c in rest],
+            *[f"__dim_asof.{ident(c)} AS {ident(c)}" for c in dim_cols],
+        )
     )
-    out_cols = [F.col(c) for c in key_cols] + [F.col(ts_col)]
-    out_cols += [F.col(f"__f_{c}").alias(c)
-                 for c in fact_cols if c not in key_cols and c != ts_col]
-    out_cols += [F.col("__dim_asof")[c].alias(c) for c in dim_cols]
-    return filled.select(*out_cols)

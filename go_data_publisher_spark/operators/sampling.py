@@ -25,8 +25,10 @@ the DuckDB oracles in __spark_entry__.py execute it verbatim.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sqltext import ident, string_literal
 
 
 # what a NULL sampling key hashes as (deterministic_sample only —
@@ -35,12 +37,12 @@ from pyspark.sql import functions as F
 NULL_KEY_SENTINEL = "__NULL_KEY__"
 
 
-def _hash_hex(col, salt: str = ""):
-    """Lowercase hex md5 of the stringified id (+ optional salt) — identical
-    bytes in Spark and DuckDB, so lexicographic comparison is portable."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.concat(c.cast("string"), F.lit(salt)) if salt else c.cast("string")
-    return F.md5(s)
+def _hash_hex(col: str, salt: str = "") -> str:
+    """Lowercase hex md5 of the stringified SQL expression ``col`` (+
+    optional salt) — identical bytes in Spark and DuckDB, so lexicographic
+    comparison is portable."""
+    s = f"CAST({col} AS STRING)"
+    return f"md5(concat({s}, {string_literal(salt)}))" if salt else f"md5({s})"
 
 
 def deterministic_sample(df: DataFrame, fraction: float, key_col: str,
@@ -68,9 +70,9 @@ def deterministic_sample(df: DataFrame, fraction: float, key_col: str,
         # breaks the 8-char lexicographic comparison — keep-everything is free
         return df
     threshold = format(threshold_int, "08x")
-    key = F.coalesce(F.col(key_col).cast("string"), F.lit(NULL_KEY_SENTINEL))
-    h = _hash_hex(key, salt)
-    return df.where(F.substring(h, 1, 8) < F.lit(threshold))
+    key = (f"coalesce(CAST({ident(key_col)} AS STRING), "
+           f"{string_literal(NULL_KEY_SENTINEL)})")
+    return df.where(f"substring({_hash_hex(key, salt)}, 1, 8) < '{threshold}'")
 
 
 def _quota_split(df: DataFrame, group_cols: list, quota: int, key_col: str,
@@ -102,28 +104,30 @@ def _quota_split(df: DataFrame, group_cols: list, quota: int, key_col: str,
     did), and NULL group values form their own capped group — the count join
     is null-safe, so neither is silently dropped.
     """
-    h = F.coalesce(_hash_hex(key_col, salt), F.lit(""))
-    rows = (df.withColumn("__qh", h)
-              .withColumn("__qpfx", F.substring("__qh", 1, prefix_len)))
-    counts = rows.groupBy(*group_cols, "__qpfx").agg(F.count(F.lit(1)).alias("__c"))
-    wcum = (Window.partitionBy(*group_cols).orderBy("__qpfx")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    counts = counts.withColumn(
-        "__below", F.coalesce(F.sum("__c").over(wcum), F.lit(0)).cast("long")
-    ).select(
-        *[F.col(c).alias(f"__g_{c}") for c in group_cols],
-        F.col("__qpfx").alias("__g_qpfx"), "__c", "__below",
+    groups = [ident(c) for c in group_cols]
+    rows = (df.selectExpr("*", f"coalesce({_hash_hex(ident(key_col), salt)}, '') AS __qh")
+              .selectExpr("*", f"substring(__qh, 1, {int(prefix_len)}) AS __qpfx"))
+    counts = (
+        rows.groupBy(*group_cols, "__qpfx").agg(F.expr("count(1) AS __c"))
+        .selectExpr(
+            "*", f"CAST(coalesce(sum(__c) OVER (PARTITION BY {', '.join(groups)} "
+                 f"ORDER BY __qpfx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),"
+                 f" 0) AS BIGINT) AS __below")
+        .selectExpr(
+            *[f"{g} AS {ident('__g_' + c)}" for g, c in zip(groups, group_cols)],
+            "__qpfx AS __g_qpfx", "__c", "__below")
     )
-    cond = F.col("__qpfx") == F.col("__g_qpfx")  # never null (coalesced hash)
-    for c in group_cols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-    joined = rows.join(counts, on=cond, how="inner") \
+    # never null (coalesced hash)
+    cond = " AND ".join(["__qpfx = __g_qpfx"]
+                        + [f"{g} <=> {ident('__g_' + c)}"
+                           for g, c in zip(groups, group_cols)])
+    joined = rows.join(counts, F.expr(cond), "inner") \
         .drop("__g_qpfx", *[f"__g_{c}" for c in group_cols])
-    wb = Window.partitionBy(*group_cols, "__qpfx").orderBy("__qh")
     return (
-        joined.where(F.col("__below") < quota)
-        .withColumn("__rn", F.row_number().over(wb))
-        .where(F.col("__rn") + F.col("__below") <= quota)
+        joined.where(f"__below < {int(quota)}")
+        .selectExpr("*", f"row_number() OVER (PARTITION BY {', '.join(groups)}, "
+                         f"__qpfx ORDER BY __qh) AS __rn")
+        .where(f"__rn + __below <= {int(quota)}")
     )
 
 
@@ -146,4 +150,4 @@ def quota_per_group(df: DataFrame, group_cols, quota: int, key_col: str,
     group_cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     out_cols = df.columns
     kept = _quota_split(df, group_cols, quota, key_col, salt, prefix_len)
-    return kept.select(*out_cols)
+    return kept.selectExpr(*[ident(c) for c in out_cols])

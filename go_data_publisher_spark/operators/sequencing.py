@@ -11,6 +11,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sqltext import ident, type_sql
+
+
+def _well_formed(lo_col: str, hi_col: str) -> str:
+    """Intervals with both bounds and lo <= hi: a malformed interval
+    contains nothing."""
+    lo, hi = ident(lo_col), ident(hi_col)
+    return f"{lo} IS NOT NULL AND {hi} IS NOT NULL AND {lo} <= {hi}"
+
 
 def next_range(df: DataFrame, lsn_col: str, cursor: int, head: int | None = None) -> DataFrame:
     """Q1+Q2: the unprocessed slice (cursor, head] of the log.
@@ -76,10 +85,8 @@ def interval_contain_count_sorted(events: DataFrame, intervals: DataFrame,
     from pyspark.sql.functions import pandas_udf
 
     rows = (
-        intervals.where(
-            F.col(lo_col).isNotNull() & F.col(hi_col).isNotNull()
-            & (F.col(lo_col) <= F.col(hi_col)))
-        .select(F.col(lo_col).cast("long"), F.col(hi_col).cast("long"))
+        intervals.where(_well_formed(lo_col, hi_col))
+        .selectExpr(f"CAST({ident(lo_col)} AS BIGINT)", f"CAST({ident(hi_col)} AS BIGINT)")
         .collect()
     )
     los = np.sort(np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows)))
@@ -146,56 +153,45 @@ def range_count_chunked(events: DataFrame, intervals: DataFrame,
         # mis-chunked event would OVERCOUNT (r7 review finding)
         shift = chunk.bit_length() - 1
 
-        def _chunk_of(col):
-            return F.shiftright(col.cast("long"), shift).cast("long")
+        def _chunk_of(col: str) -> str:
+            return f"CAST(shiftright(CAST({col} AS BIGINT), {shift}) AS BIGINT)"
     else:
         # non-power-of-two chunks use the double-precision floor: exact for
         # |position| < 2^53 (every reference LSN space)
-        def _chunk_of(col):
-            return F.floor(col / F.lit(chunk)).cast("long")
+        def _chunk_of(col: str) -> str:
+            return f"CAST(floor({col} / {chunk}) AS BIGINT)"
 
+    lsn = ident(lsn_col)
     ev_vals = (
-        events.where(F.col(lsn_col).isNotNull())
-        .groupBy(F.col(lsn_col).cast("long").alias(lsn_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .withColumn("__c", _chunk_of(F.col(lsn_col)))
+        events.where(f"{lsn} IS NOT NULL")
+        .groupBy(F.expr(f"CAST({lsn} AS BIGINT) AS {lsn}"))
+        .agg(F.expr("count(1) AS n_events"))
+        .selectExpr("*", f"{_chunk_of(lsn)} AS __c")
     )
-    iv = intervals.where(
-        F.col(lo_col).isNotNull() & F.col(hi_col).isNotNull()
-        & (F.col(lo_col) <= F.col(hi_col)))
-    ivc = iv.select(
-        F.col(lo_col).cast("long").alias("__lo"),
-        F.col(hi_col).cast("long").alias("__hi"),
-    ).withColumn(
-        "__c", F.explode(F.sequence(_chunk_of(F.col("__lo")),
-                                    _chunk_of(F.col("__hi")))),
+    ivc = (
+        intervals.where(_well_formed(lo_col, hi_col))
+        .selectExpr(f"CAST({ident(lo_col)} AS BIGINT) AS __lo",
+                    f"CAST({ident(hi_col)} AS BIGINT) AS __hi")
+        .selectExpr("*", f"explode(sequence({_chunk_of('__lo')}, "
+                         f"{_chunk_of('__hi')})) AS __c")
     )
-    full = (F.col("__lo") <= F.col("__c") * chunk) & \
-           (F.col("__hi") >= (F.col("__c") + 1) * chunk - 1)
+    full = f"__lo <= __c * {chunk} AND __hi >= (__c + 1) * {chunk} - 1"
     full_counts = (ivc.where(full).groupBy("__c")
-                   .agg(F.count(F.lit(1)).alias("__n_full")))
-    partial = ivc.where(~full).select(
-        F.col("__c").alias("__pc"), "__lo", "__hi")
+                   .agg(F.expr("count(1) AS __n_full")))
+    partial = ivc.where(f"NOT ({full})").selectExpr("__c AS __pc", "__lo", "__hi")
     boundary_counts = (
-        ev_vals.join(
-            partial,
-            (F.col("__c") == F.col("__pc"))
-            & (F.col(lsn_col) >= F.col("__lo"))
-            & (F.col(lsn_col) <= F.col("__hi")),
-        )
+        ev_vals.join(partial,
+                     F.expr(f"__c = __pc AND {lsn} >= __lo AND {lsn} <= __hi"))
         .groupBy(lsn_col)
-        .agg(F.count(F.lit(1)).alias("__n_boundary"))
+        .agg(F.expr("count(1) AS __n_boundary"))
     )
     return (
         ev_vals.join(full_counts, on="__c", how="left")
         .join(boundary_counts, on=lsn_col, how="left")
-        .select(
-            lsn_col,
-            "n_events",
-            (F.coalesce(F.col("__n_full"), F.lit(0))
-             + F.coalesce(F.col("__n_boundary"), F.lit(0)))
-            .cast("long").alias("n_containing"),
-        )
+        .selectExpr(
+            lsn, "n_events",
+            "CAST(coalesce(__n_full, 0) + coalesce(__n_boundary, 0) AS BIGINT)"
+            " AS n_containing")
     )
 
 
@@ -232,78 +228,49 @@ def interval_stab_count(events: DataFrame, intervals: DataFrame,
     semantics).  Output is identical to the aggregate over either join
     twin; only the cost model differs.
     """
-    iv = intervals.where(
-        F.col(lo_col).isNotNull() & F.col(hi_col).isNotNull()
-        & (F.col(lo_col) <= F.col(hi_col))
+    lo, hi = ident(lo_col), ident(hi_col)
+    ev_type = T.StructType([T.StructField(c, events.schema[c].dataType, True)
+                            for c in events.columns])
+    bnd = intervals.where(_well_formed(lo_col, hi_col)).selectExpr(
+        f"explode(array(struct(CAST({lo} AS BIGINT) AS __pos, 1 AS __delta), "
+        f"struct(CAST({hi} AS BIGINT) + 1 AS __pos, -1 AS __delta))) AS __b"
+    ).selectExpr(
+        "__b.__pos AS __pos", "__b.__delta AS __delta", "0 AS __tag",
+        f"CAST(NULL AS {type_sql(ev_type)}) AS __ev",
     )
-    bnd = iv.select(
-        F.explode(F.array(
-            F.struct(F.col(lo_col).cast("long").alias("__pos"),
-                     F.lit(1).alias("__delta")),
-            F.struct((F.col(hi_col).cast("long") + 1).alias("__pos"),
-                     F.lit(-1).alias("__delta")),
-        )).alias("__b")
-    ).select(
-        F.col("__b.__pos").alias("__pos"),
-        F.col("__b.__delta").alias("__delta"),
-        F.lit(0).alias("__tag"),
-        F.lit(None).cast(
-            T.StructType([T.StructField(c, events.schema[c].dataType, True)
-                          for c in events.columns])
-        ).alias("__ev"),
-    )
-    ev = events.select(
-        F.col(lsn_col).cast("long").alias("__pos"),
-        F.lit(0).alias("__delta"),
-        F.lit(1).alias("__tag"),
-        F.struct(*[F.col(c) for c in events.columns]).alias("__ev"),
+    ev = events.selectExpr(
+        f"CAST({ident(lsn_col)} AS BIGINT) AS __pos", "0 AS __delta", "1 AS __tag",
+        "struct(" + ", ".join(ident(c) for c in events.columns) + ") AS __ev",
     )
     rows = bnd.unionByName(ev)
-    bounds = rows.agg(F.min("__pos").alias("__mn"), F.max("__pos").alias("__mx"))
-    width = F.greatest(
-        F.lit(1).cast("long"),
-        F.ceil((F.col("__mx") - F.col("__mn") + 1) / F.lit(n_parts)).cast("long"),
-    )
-    parted = (
-        rows.crossJoin(F.broadcast(bounds))
-        .withColumn("__part", F.floor((F.col("__pos") - F.col("__mn")) / width)
-                    .cast("long"))
-        .drop("__mn", "__mx")
-    )
-    w_in = (
-        Window.partitionBy("__part")
-        .orderBy(F.col("__pos").asc(), F.col("__tag").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = parted.withColumn("__local", F.sum("__delta").over(w_in))
+    bounds = rows.agg(F.expr("min(__pos) AS __mn"), F.expr("max(__pos) AS __mx"))
+    width = (f"greatest(CAST(1 AS BIGINT), "
+             f"CAST(ceil((__mx - __mn + 1) / {int(n_parts)}) AS BIGINT))")
+    parted = rows.crossJoin(F.broadcast(bounds)).selectExpr(
+        "__pos", "__delta", "__tag", "__ev",
+        f"CAST(floor((__pos - __mn) / {width}) AS BIGINT) AS __part")
+    local = parted.selectExpr(
+        "*", "sum(__delta) OVER (PARTITION BY __part ORDER BY __pos ASC, __tag ASC "
+             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __local")
     # per-slice totals: ≤ n_parts rows — the single-partition window here is
     # O(n_parts), not O(rows) (same stitch as verify_monotonic).  Aggregated
     # from `local` (not `parted`) so the offsets subtree shares the
     # running-sum branch's exchange (ReusedExchange) instead of re-scanning
     # events + intervals a second time.
-    w_parts = (
-        Window.orderBy("__part")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        local.groupBy("__part").agg(F.sum("__delta").alias("__psum"))
-        .withColumn("__offset", F.coalesce(F.sum("__psum").over(w_parts), F.lit(0)))
-        .select("__part", "__offset")
-    )
+    offsets = local.groupBy("__part").agg(F.expr("sum(__delta) AS __psum")).selectExpr(
+        "__part", "coalesce(sum(__psum) OVER (ORDER BY __part "
+                  "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __offset")
     # left + coalesce: an event with a NULL position (null lsn) sits in the
     # null slice, matches no interval by SQL semantics, and must surface
     # with n_containing = 0 — a null join key never matches, so an inner
     # join would silently drop the row instead
-    out = (
+    return (
         local.join(F.broadcast(offsets), "__part", "left")
-        .where(F.col("__tag") == 1)
-        .select(
-            *[F.col("__ev")[c].alias(c) for c in events.columns],
-            (F.col("__local") + F.coalesce(F.col("__offset"), F.lit(0)))
-            .cast("long").alias("n_containing"),
-        )
+        .where("__tag = 1")
+        .selectExpr(
+            *[f"__ev.{ident(c)} AS {ident(c)}" for c in events.columns],
+            "CAST(__local + coalesce(__offset, 0) AS BIGINT) AS n_containing")
     )
-    return out
 
 
 def verify_monotonic(intervals: DataFrame, seq_col: str, attr_cols=("epoch", "from_lsn"),
@@ -379,26 +346,23 @@ def detect_gaps(df: DataFrame, key_cols, lsn_col: str, min_gap: int = 1) -> Data
     Reference: calculateSkippedTicks (status-service/rpc/status_service.go:
     218-231).  Partitioned window → scales with the number of keys.
     """
-    w = Window.partitionBy(*key_cols).orderBy(F.col(lsn_col))
-    prev = F.lag(lsn_col).over(w)
+    keys = [ident(c) for c in key_cols]
+    lsn = ident(lsn_col)
     return (
-        df.select(*key_cols, F.col(lsn_col))
-        .withColumn("__prev", prev)
-        .where(F.col("__prev").isNotNull() & (F.col(lsn_col) - F.col("__prev") > min_gap))
-        .select(
-            *key_cols,
-            (F.col("__prev") + 1).alias("gap_from"),
-            (F.col(lsn_col) - 1).alias("gap_to"),
-        )
+        df.selectExpr(*keys, lsn, f"lag({lsn}) OVER (PARTITION BY {', '.join(keys)} "
+                                  f"ORDER BY {lsn}) AS __prev")
+        .where(f"__prev IS NOT NULL AND {lsn} - __prev > {int(min_gap)}")
+        .selectExpr(*keys, "__prev + 1 AS gap_from", f"{lsn} - 1 AS gap_to")
     )
 
 
 def group_intervals(df: DataFrame, group_cols, lsn_col: str) -> DataFrame:
     """Q9-ish: fold rows into per-group [min,max] interval summaries."""
+    lsn = ident(lsn_col)
     return df.groupBy(*group_cols).agg(
-        F.min(lsn_col).alias("from_lsn"),
-        F.max(lsn_col).alias("to_lsn"),
-        F.count(F.lit(1)).alias("n_rows"),
+        F.expr(f"min({lsn}) AS from_lsn"),
+        F.expr(f"max({lsn}) AS to_lsn"),
+        F.expr("count(1) AS n_rows"),
     )
 
 

@@ -22,31 +22,37 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from ..sqltext import double_sql, ident
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+def dot_sql(a: str, b: str) -> str:
+    """Dot product of two array SQL expressions."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    # a zero-norm vector (missing/failed embedding) would make this 0/0 = NaN,
-    # and Spark orders NaN ABOVE every real number — it would occupy a top-k
-    # slot for every query and pass `>= threshold` near-dup filters.  Yield
-    # NULL instead: nulls sort last under desc and fail threshold comparisons.
-    denom = norm_expr(a) * norm_expr(b)
-    return F.when(denom != F.lit(0.0), dot_expr(a, b) / denom)
+def norm_sql(a: str) -> str:
+    """Euclidean norm of an array SQL expression."""
+    return f"sqrt(aggregate({a}, 0.0D, (acc, x) -> acc + x * x))"
 
 
-def cosine_to_query(vec: Column, query: Sequence[float]) -> Column:
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return cosine_expr(vec, q)
+def cosine_sql(a: str, b: str) -> str:
+    """Cosine similarity of two array SQL expressions.
+
+    A zero-norm vector (missing/failed embedding) would make this 0/0 = NaN,
+    and Spark orders NaN ABOVE every real number — it would occupy a top-k
+    slot for every query and pass `>= threshold` near-dup filters.  Yield
+    NULL instead: nulls sort last under desc and fail threshold comparisons.
+    """
+    denom = f"{norm_sql(a)} * {norm_sql(b)}"
+    return f"CASE WHEN {denom} != 0.0D THEN {dot_sql(a, b)} / ({denom}) END"
+
+
+def cosine_to_query(vec_col: str, query: Sequence[float]) -> str:
+    """Cosine of the array column ``vec_col`` against a fixed query vector,
+    as SQL text: the query is one array literal, so the expression crosses
+    py4j once whatever the dimension."""
+    q = "array(" + ", ".join(double_sql(x) for x in query) + ")"
+    return cosine_sql(ident(vec_col), q)
 
 
 def brute_force_topk(df: DataFrame, query: Sequence[float], k: int = 10,
@@ -54,10 +60,7 @@ def brute_force_topk(df: DataFrame, query: Sequence[float], k: int = 10,
     """Exact cosine top-k: full scan + TakeOrderedAndProject (no shuffle of
     payloads — each task keeps its local top-k, driver merges k*tasks rows)."""
     return (
-        df.select(
-            F.col(id_col),
-            cosine_to_query(F.col(vec_col), query).alias("cosine"),
-        )
+        df.selectExpr(ident(id_col), f"{cosine_to_query(vec_col, query)} AS cosine")
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import normalize_text, simhash64
+from ..functions.text import normalize_sql, simhash64
+from ..sqltext import double_sql, ident
 
 
 # ---------------------------------------------------------------------------
@@ -32,87 +33,84 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     Returns one row per content group: canonical_id = min id, n_dupes.
     The shuffle carries only (hash, id) — text never moves.
     """
-    txt = normalize_text(F.col(text_col)) if normalize else F.col(text_col)
-    h = F.sha2(txt, 256).alias("content_hash")
+    txt = normalize_sql(ident(text_col)) if normalize else ident(text_col)
     return (
-        df.select(h, F.col(id_col))
+        df.selectExpr(f"sha2({txt}, 256) AS content_hash", ident(id_col))
         .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-        )
+        .agg(F.expr(f"min({ident(id_col)}) AS canonical_id"),
+             F.expr("count(1) AS n_docs"))
     )
 
 
 # ---------------------------------------------------------------------------
 # shingles / jaccard
 # ---------------------------------------------------------------------------
+#
+# Both sides of the LSH work on a document's normalized words, projected
+# once per document as an array column before the per-shingle lambdas run:
+# a lambda body is evaluated per element and Catalyst does not hoist the
+# words expression out of it, so an inlined split(normalize(text)) ran the
+# regex once per shingle.  NULL text is treated as empty text (one
+# degenerate '' shingle) so the candidate and verify stages agree on it:
+# un-coalesced, the signature path hashed NULL word arrays differently from
+# '' ones while exact Jaccard saw both as {''} — two NULL docs paired but a
+# NULL/'' pair was silently missed by LSH (and no SQL twin could match both).
 
-def _shingles(text_col: str, k: int = 3):
-    """Word k-shingles as an array column (deduped per doc).
+def _words_sql(text_col: str) -> str:
+    """The document's normalized words (NULL text as '')."""
+    text = "coalesce(" + ident(text_col) + ", '')"
+    return f"split({normalize_sql(text)}, ' ')"
 
-    NULL text is treated as empty text (one degenerate '' shingle) so the
-    candidate and verify stages agree on it: un-coalesced, the minhash
-    signature path hashed NULL word arrays differently from '' ones while
-    exact Jaccard saw both as {''} — two NULL docs paired but a NULL/''
-    pair was silently missed by LSH (and no SQL twin could match both)."""
-    words = F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)))
-    )
+
+def _shingles_sql(k: int) -> str:
+    """Word k-shingles of the ``__w`` words column as an array of strings,
+    deduped per doc (exact Jaccard is set arithmetic)."""
+    return (f"array_distinct(transform(sequence(0, greatest(size(__w) - {k}, 0)), "
+            f"i -> concat_ws(' ', slice(__w, i + 1, {k}))))")
 
 
 # ---------------------------------------------------------------------------
 # minhash + LSH
 # ---------------------------------------------------------------------------
 
-def _shingle_hashes(text_col: str, k: int = 3):
-    """64-bit hashes of word k-shingles (multiset — see the note below) —
-    WITHOUT ever materializing shingle strings.
+def _shingle_hashes_sql(k: int) -> str:
+    """64-bit hashes of the word k-shingles of the ``__wh`` word-hash column
+    (multiset — see the note below) — WITHOUT ever materializing shingle
+    strings.
 
-    Each word is hashed once (xxhash64 over its bytes); a shingle hash is
-    xxhash64 over the k fixed-width word hashes.  Versus building
+    Each word is hashed once (xxhash64 over its bytes, ``__wh``); a shingle
+    hash is xxhash64 over the k fixed-width word hashes.  Versus building
     `concat_ws` shingle strings and re-hashing them per family, this scans
     each text byte exactly once and all downstream math is long-arithmetic
     (measured ~2× on the signature stage; the per-family re-hash saving in
     minhash_signatures stacks on top).
 
-    NULL text coalesces to '' so this hash-side shingle set identifies the
-    same documents as the string-side `_shingles` verify (see its
-    docstring).
+    NOT array_distinct'd (r7): the only consumer is minhash_signatures,
+    whose per-family min is identical over a multiset and its set — the
+    distinct pass was a pure per-doc hash-set allocation on the hot path.
+    (The string-side verify keeps ITS array_distinct: exact Jaccard is set
+    arithmetic and duplicates would change it.)  try_element_at is 1-based
+    and yields null past the end (docs shorter than k words) — plain
+    element_at THROWS under Spark 4's default ANSI mode; xxhash64 skips the
+    nulls.
     """
-    words = F.split(normalize_text(F.coalesce(F.col(text_col), F.lit(""))), " ")
-    wh = F.transform(words, lambda w: F.xxhash64(w))
-    n = F.size(wh)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    # NOT array_distinct'd (r7): the only consumer is minhash_signatures,
-    # whose per-family min is identical over a multiset and its set — the
-    # distinct pass was a pure per-doc hash-set allocation on the hot path.
-    # (The string-side `_shingles` verify keeps ITS array_distinct: exact
-    # Jaccard is set arithmetic and duplicates would change it.)
-    return F.transform(
-        idx,
-        # try_element_at is 1-based and yields null past the end (docs
-        # shorter than k words) — plain element_at THROWS under Spark 4's
-        # default ANSI mode; xxhash64 skips the nulls
-        lambda i: F.xxhash64(
-            *[F.try_element_at(wh, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )
+    words = ", ".join(f"try_element_at(__wh, i + {j + 1})" for j in range(k))
+    return (f"transform(sequence(0, greatest(size(__wh) - {k}, 0)), "
+            f"i -> xxhash64({words}))")
 
 
 def minhash_signatures(df: DataFrame, id_col="doc_id", text_col="text",
                        k: int = 3, n_hashes: int = 16) -> DataFrame:
     """k-shingle MinHash signatures.
 
-    Hash family i = xxhash64(shingle_hash, seed=i) over the 8-byte shingle
-    hash (not the shingle string — each text byte is scanned once total, and
-    the per-family work is a fixed-width hash of one long);
-    signature[i] = min over the doc's shingles.  Shape: explode shingle
-    hashes once, then ``n_hashes`` min aggregations in one hash-aggregate —
-    map-side partial mins, so hot documents never concentrate.
+    Hash family i is the two-column chain ``xxhash64(sh, i)`` under Spark's
+    seed 42: the 8-byte shingle hash ``sh``, then the int ``i`` (not the
+    shingle string — each text byte is scanned once total, and the
+    per-family work is a fixed-width hash of one long and one int);
+    signature[i] = min over the doc's shingles.  Shape: project each doc's
+    word hashes once, explode its shingle hashes, then ``n_hashes`` min
+    aggregations in one hash-aggregate — map-side partial mins, so hot
+    documents never concentrate.
 
     r7 note (measured, rejected): a map-only form — one transform hashing
     each shingle into its 16 family values folded by aggregate/zip_with —
@@ -122,17 +120,21 @@ def minhash_signatures(df: DataFrame, id_col="doc_id", text_col="text",
     shingle replace a codegen'd aggregate.  (A sibling-lambda variant
     ``array(array_min(transform(sh, h -> xxhash64(h, i))) for i)`` is
     outright WRONG on Spark 4.1 — the sibling lambdas resolve to one shared
-    expression and every family returns the same value.)  The explode +
-    groupBy aggregate stays.
+    expression and every family returns the same value.)  An Arrow
+    ``pandas_udf`` computing all 16 minima per document with a numpy mirror
+    of the chain was bit-identical to this plan but slower:
+    ``minhash_pairs_docs`` went from a 2.14 s to a 2.52 s median over 10
+    interleaved runs (4-core host, ~300 documents).  The pairs plan builds
+    this subtree 6 times, so the UDF adds 12 ``ArrowEvalPython`` nodes and
+    removes no work.  The explode + groupBy aggregate stays.
     """
-    exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(_shingle_hashes(text_col, k)).alias("sh")
-    )
-    aggs = [F.min(F.xxhash64("sh", F.lit(i))).alias(f"__h{i}") for i in range(n_hashes)]
+    mins = ", ".join(f"min(xxhash64(sh, {i}))" for i in range(n_hashes))
     return (
-        exploded.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"__h{i}") for i in range(n_hashes)]).alias("minhash"))
+        df.selectExpr(f"{ident(id_col)} AS id",
+                      f"transform({_words_sql(text_col)}, w -> xxhash64(w)) AS __wh")
+        .selectExpr("id", f"explode({_shingle_hashes_sql(k)}) AS sh")
+        .groupBy("id")
+        .agg(F.expr(f"array({mins}) AS minhash"))
     )
 
 
@@ -143,7 +145,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col="doc_id", text_col="text", k: int = 
 
     signature → b bands of r=n/b values → docs sharing a band hash become
     candidates (shuffle on band-bucket keys only) → optional exact-Jaccard
-    verification of the candidates.
+    verification of the candidates.  Every step is SQL text, so building
+    the plan costs about a hundred py4j round trips whatever ``n_hashes``
+    and ``n_bands`` are.
     """
     if n_bands <= 0 or n_bands > n_hashes:
         raise ValueError(f"n_bands must be in [1, n_hashes]; got {n_bands=} {n_hashes=}")
@@ -153,39 +157,25 @@ def minhash_lsh_pairs(df: DataFrame, id_col="doc_id", text_col="text", k: int = 
         raise ValueError(f"n_hashes must divide evenly into bands; got {n_hashes=} {n_bands=}")
     rows_per_band = n_hashes // n_bands
     sigs = minhash_signatures(df, id_col, text_col, k, n_hashes)
-    bands = sigs.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    # band hash over the r fixed-width signature longs
-                    # directly — no string rendering
-                    F.xxhash64(
-                        *[
-                            F.col("minhash")[b * rows_per_band + r]
-                            for r in range(rows_per_band)
-                        ]
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_hash"),
-    )
+    # band hash over the r fixed-width signature longs directly — no string
+    # rendering
+    band_hashes = ", ".join(
+        "xxhash64(" + ", ".join(f"minhash[{b * rows_per_band + r}]"
+                                for r in range(rows_per_band)) + ")"
+        for b in range(n_bands))
+    bands = sigs.selectExpr(
+        "id", f"posexplode(array({band_hashes})) AS (band, band_hash)")
     # NOTE (measured, sf0.1): the self-join recomputes the signature subtree
     # once per branch, but cutting that with localCheckpoint(eager=False) on
     # the bands frame made the whole query 2-3× SLOWER — the checkpoint
     # boundary blocks AQE's runtime join planning and whole-stage pipelining,
     # which outweighs the duplicated (fully pipelined, map-only) signature
     # scan.  Leave the recompute to Catalyst.
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bands.alias("a").join(
+            bands.alias("b"),
+            F.expr("a.band = b.band AND a.band_hash = b.band_hash AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
     if verify_threshold is None:
@@ -193,28 +183,23 @@ def minhash_lsh_pairs(df: DataFrame, id_col="doc_id", text_col="text", k: int = 
     # verify candidates with exact jaccard — shingle arrays are materialized
     # ONLY for docs that appear in a candidate pair (semi-join prune first)
     cand_ids = (
-        cand.select(F.col("id_a").alias("cid"))
-        .unionByName(cand.select(F.col("id_b").alias("cid")))
+        cand.selectExpr("id_a AS cid")
+        .unionByName(cand.selectExpr("id_b AS cid"))
         .distinct()
     )
-    pruned = df.join(cand_ids, df[id_col] == F.col("cid"), "left_semi")
-    sh = pruned.select(F.col(id_col).alias("id"), _shingles(text_col, k).alias("sh"))
-    out = (
-        cand.join(sh.withColumnRenamed("sh", "sh_a"), cand.id_a == sh.id)
-        .drop("id")
-        .join(
-            sh.select(F.col("id").alias("id2"), F.col("sh").alias("sh_b")),
-            cand.id_b == F.col("id2"),
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= verify_threshold)
-        .select("id_a", "id_b", "jaccard")
+    sh = (
+        df.join(cand_ids, F.expr(f"{ident(id_col)} = cid"), "left_semi")
+        .selectExpr(f"{ident(id_col)} AS id", f"{_words_sql(text_col)} AS __w")
+        .selectExpr("id", f"{_shingles_sql(k)} AS sh")
     )
-    return out
+    return (
+        cand.join(sh.selectExpr("id AS __ia", "sh AS sh_a"), F.expr("id_a = __ia"))
+        .join(sh.selectExpr("id AS __ib", "sh AS sh_b"), F.expr("id_b = __ib"))
+        .selectExpr("id_a", "id_b",
+                    "size(array_intersect(sh_a, sh_b)) / size(array_union(sh_a, sh_b))"
+                    " AS jaccard")
+        .where(f"jaccard >= {double_sql(verify_threshold)}")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +370,7 @@ def embedding_near_duplicates(df: DataFrame, id_col="vec_id", vec_col="embedding
     exact dedup already removes upstream; the cap bounds worst-case work at
     O(bands · cap · n) instead of O(n²)).
     """
-    from .similarity import cosine_expr, rhp_band_codes
+    from .similarity import cosine_sql, rhp_band_codes
 
     v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     bands = v.select(
@@ -416,6 +401,6 @@ def embedding_near_duplicates(df: DataFrame, id_col="vec_id", vec_col="embedding
     return (
         cand.join(va, on="id_a").join(vb, on="id_b")
         .select("id_a", "id_b",
-                cosine_expr(F.col("__va"), F.col("__vb")).alias("cosine"))
+                F.expr(f"{cosine_sql('__va', '__vb')} AS cosine"))
         .where(F.col("cosine") >= threshold)
     )

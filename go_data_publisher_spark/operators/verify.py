@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sqltext import ident
+
 
 def set_difference(a: DataFrame, b: DataFrame, on) -> DataFrame:
     """V1: symmetric set difference over key columns.
@@ -20,16 +22,14 @@ def set_difference(a: DataFrame, b: DataFrame, on) -> DataFrame:
     the identical output; this form scans and distincts each side once.)
     """
     on = list(on)
-    da = a.select(*on).distinct().withColumn("__l", F.lit(1))
-    db = b.select(*on).distinct().withColumn("__r", F.lit(1))
+    cols = [ident(c) for c in on]
+    da = a.selectExpr(*cols).distinct().selectExpr("*", "1 AS __l")
+    db = b.selectExpr(*cols).distinct().selectExpr("*", "1 AS __r")
     return (
         da.join(db, on=on, how="full_outer")
-        .where(F.col("__l").isNull() | F.col("__r").isNull())
-        .select(
-            *on,
-            F.when(F.col("__r").isNull(), F.lit("only_left"))
-            .otherwise(F.lit("only_right")).alias("side"),
-        )
+        .where("__l IS NULL OR __r IS NULL")
+        .selectExpr(*cols, "CASE WHEN __r IS NULL THEN 'only_left' "
+                           "ELSE 'only_right' END AS side")
     )
 
 

@@ -18,6 +18,37 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+# Engine confs that hold on any master: every session that runs the engine
+# sets them, the local one from ``get_spark`` and the CLI's under
+# spark-submit (``run_pipeline.py``, which leaves the master to spark-submit).
+ENGINE_CONF = {
+    # commit via direct task-attempt rename (v2): one rename per file
+    # instead of a driver-side rename storm at job commit — the many
+    # small per-microbatch writes are commit-latency-bound otherwise.
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
+    # Streaming offsets/commits/sources logs through the FileSystem API:
+    # the default FileContext manager checks both ends of every log
+    # rename with getFileLinkStatus, which without libhadoop runs
+    # `readlink` as a child process (104 per 4-batch replay, all on the
+    # stream thread).  On a local filesystem both managers check that
+    # the destination is absent and then rename, so the logs'
+    # no-overwrite guard is the same; the table commit already requires
+    # a local POSIX root (its flock lock).
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+    # List table files on the driver: above this many paths a read lists
+    # them with a Spark job, one task per path (default 32).  Table
+    # reads name their files from the manifest, under a local POSIX root
+    # (the flock commit lock needs one), where the driver lists faster
+    # than a job starts.  Building snapshot() (4 cores, with the
+    # manifest's schema, so no inference job either): 16 files
+    # 0.27 s -> 0.12-0.16 s, 112 files 1.1-2.0 s -> 0.20 s, 1,792 files
+    # (256 buckets x 7 deltas) 8.2-10.9 s -> 0.62-0.85 s.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
+}
+
+
 def get_spark(
     app_name: str = "spark-cdc-transcripts",
     cores: int | str | None = None,
@@ -45,6 +76,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(nparts))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -57,31 +89,6 @@ def get_spark(
         # CDC batches are small relative to the target table: give the
         # planner room to broadcast the batch side of the merge join.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        # commit via direct task-attempt rename (v2): one rename per file
-        # instead of a driver-side rename storm at job commit — the many
-        # small per-microbatch writes are commit-latency-bound otherwise.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # Streaming offsets/commits/sources logs through the FileSystem API:
-        # the default FileContext manager checks both ends of every log
-        # rename with getFileLinkStatus, which without libhadoop runs
-        # `readlink` as a child process (104 per 4-batch replay, all on the
-        # stream thread).  On a local filesystem both managers check that
-        # the destination is absent and then rename, so the logs'
-        # no-overwrite guard is the same; the table commit already requires
-        # a local POSIX root (its flock lock).
-        .config("spark.sql.streaming.checkpointFileManagerClass",
-                "org.apache.spark.sql.execution.streaming.checkpointing."
-                "FileSystemBasedCheckpointFileManager")
-        # List table files on the driver: above this many paths a read lists
-        # them with a Spark job, one task per path (default 32).  Table
-        # reads name their files from the manifest, under a local POSIX root
-        # (the flock commit lock needs one), where the driver lists faster
-        # than a job starts.  Building snapshot() (4 cores, with the
-        # manifest's schema, so no inference job either): 16 files
-        # 0.27 s -> 0.12-0.16 s, 112 files 1.1-2.0 s -> 0.20 s, 1,792 files
-        # (256 buckets x 7 deltas) 8.2-10.9 s -> 0.62-0.85 s.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                "1000000")
     )
     # Shuffle scratch space: the sandbox's single virtio disk collapses under
     # 32 concurrent shuffle writers (measured: 3s → 38s stalls); RAM-backed

@@ -1,11 +1,11 @@
-"""SQL text for the engine's per-batch plans.
+"""SQL text for the engine's per-batch plans and the query operators.
 
-The merge and read paths describe each DataFrame step as SQL strings handed
-to ``selectExpr`` / ``where`` / ``F.expr``.  A Column tree built in Python
-costs one py4j round trip per node (``F.col``, ``.cast``, ``.alias``,
-``F.lit`` ...), about 25 per cast column; a SQL string crosses the boundary
-once and Catalyst parses it into the same expressions, so the analyzed and
-optimized plans do not change.
+The merge and read paths and the query operators describe each DataFrame
+step as SQL strings handed to ``selectExpr`` / ``where`` / ``F.expr``.  A
+Column tree built in Python costs one py4j round trip per node
+(``F.col``, ``.cast``, ``.alias``, ``F.lit`` ...), about 25 per cast
+column; a SQL string crosses the boundary once and Catalyst parses it into
+the same expressions, so the analyzed and optimized plans do not change.
 
 Every column name goes through ``ident`` so reserved words (``order``,
 ``select``) and names with dots stay plain column references.
@@ -25,6 +25,14 @@ def string_literal(s: str) -> str:
     """Single-quoted SQL string literal (backslash escapes are on by
     default in Spark SQL, so both quote and backslash are escaped)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def double_sql(x: float) -> str:
+    """A DOUBLE literal (a bare ``0.4`` parses as a DECIMAL)."""
+    x = float(x)
+    if x != x or x in (float("inf"), float("-inf")):
+        return f"CAST('{x}' AS DOUBLE)"
+    return f"{x!r}D"
 
 
 def type_sql(dt: T.DataType) -> str:

@@ -15,8 +15,8 @@ Commands:
   maintain  --table DIR [--compact-threshold N] [--vacuum-keep K]
             compaction + snapshot expiry (out-of-band maintenance)
 
-On a cluster, swap `get_spark` for the session spark-submit provides
-(SparkSession.builder.getOrCreate() picks up --master/--conf).
+The session takes --master and --conf from spark-submit, plus the engine
+confs of `session.ENGINE_CONF` (which win over a --conf of the same key).
 """
 
 from __future__ import annotations
@@ -121,7 +121,10 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName(f"cdc-{args.cmd}").getOrCreate()
+    from go_data_publisher_spark.session import ENGINE_CONF
+
+    spark = (SparkSession.builder.appName(f"cdc-{args.cmd}")
+             .config(map=ENGINE_CONF).getOrCreate())
 
     from go_data_publisher_spark.lake.table import TranscriptTable
     from go_data_publisher_spark.sources.changelog import (

@@ -1,8 +1,12 @@
 from __future__ import annotations
 
+import contextlib
 import shutil
 import tempfile
+import uuid
 
+import py4j.clientserver
+import py4j.java_gateway
 import pytest
 
 from go_data_publisher_spark.session import get_spark
@@ -37,3 +41,47 @@ def pandas_final_state(log_pdf):
     )
     pdf = pdf[pdf["op"] != "D"].drop(columns=["__op_rank"])
     return pdf.reset_index(drop=True)
+
+
+# py4j releases a Java object by sending a "memory delete" command when its
+# Python proxy is garbage collected; when that happens depends on the
+# collector, not on the plan, so those commands are not counted.
+_GC_COMMAND = "m\nd\n"
+
+
+@contextlib.contextmanager
+def count_round_trips():
+    """The py4j round trips made inside the block, GC traffic excepted."""
+    counter = {"n": 0}
+    patched = []
+    for cls in (py4j.clientserver.ClientServerConnection,
+                py4j.java_gateway.GatewayConnection):
+        real = cls.send_command
+
+        def counted(self, command, *a, _real=real, **kw):
+            if not command.startswith(_GC_COMMAND):
+                counter["n"] += 1
+            return _real(self, command, *a, **kw)
+
+        cls.send_command = counted
+        patched.append((cls, real))
+    try:
+        yield counter
+    finally:
+        for cls, real in patched:
+            cls.send_command = real
+
+
+@contextlib.contextmanager
+def jobs_launched(sc):
+    """The ids of the Spark jobs started inside the block, via a job group
+    of the test's own."""
+    group = f"read-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "table read planning")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))

@@ -9,43 +9,13 @@ write job, and identifier quoting for SQL-reserved column names.
 """
 from __future__ import annotations
 
-import contextlib
-
-import py4j.clientserver
-import py4j.java_gateway
 import pytest
+from conftest import count_round_trips
 from pyspark.sql import types as T
 
 from go_data_publisher_spark.lake.table import TranscriptTable
 from go_data_publisher_spark.sources.changelog import generate_changelog
 from go_data_publisher_spark.streaming.apply import ChangeApplier
-
-# py4j releases a Java object by sending a "memory delete" command when its
-# Python proxy is garbage collected; when that happens depends on the
-# collector, not on the plan, so those commands are not counted.
-_GC_COMMAND = "m\nd\n"
-
-
-@contextlib.contextmanager
-def count_round_trips():
-    counter = {"n": 0}
-    patched = []
-    for cls in (py4j.clientserver.ClientServerConnection,
-                py4j.java_gateway.GatewayConnection):
-        real = cls.send_command
-
-        def counted(self, command, *a, _real=real, **kw):
-            if not command.startswith(_GC_COMMAND):
-                counter["n"] += 1
-            return _real(self, command, *a, **kw)
-
-        cls.send_command = counted
-        patched.append((cls, real))
-    try:
-        yield counter
-    finally:
-        for cls, real in patched:
-            cls.send_command = real
 
 
 def _batch(spark, seed=3):

@@ -9,9 +9,7 @@ non-key type, so both the job count and the scan-time cast are exercised.
 """
 from __future__ import annotations
 
-import contextlib
-import uuid
-
+from conftest import jobs_launched
 from pyspark.sql import types as T
 
 from go_data_publisher_spark.lake.table import TranscriptTable
@@ -24,21 +22,6 @@ SCHEMA = T.StructType([
 ])
 N_KEYS = 160
 INT_MAX = 2**31 - 1
-
-
-@contextlib.contextmanager
-def jobs_launched(sc):
-    """The ids of the Spark jobs started inside the block, via a job group
-    of the test's own."""
-    group = f"read-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "table read planning")
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _build(spark, root):

@@ -1,7 +1,15 @@
 """Session configuration that the engine's guarantees rest on."""
 
+import sys
+from pathlib import Path
+
 import pytest
 from py4j.protocol import Py4JJavaError
+
+from go_data_publisher_spark.session import ENGINE_CONF
+
+ROOT = Path(__file__).resolve().parents[1]
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def test_checkpoint_log_never_overwrites(spark, tmpdir_path):
@@ -35,5 +43,25 @@ def test_file_listing_stays_on_the_driver(spark):
     """Table reads name up to thousands of files; above this many paths
     Spark would list them with a Spark job, one task per path
     (tests/test_read_jobs.py checks that reads launch none)."""
-    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    assert spark.conf.get(conf) == "1000000"
+    assert spark.conf.get(LISTING_THRESHOLD) == "1000000"
+
+
+def test_cli_session_gets_the_engine_confs(spark, tmpdir_path, monkeypatch, capsys):
+    """``run_pipeline.py`` sets ``ENGINE_CONF`` on its session, so under
+    spark-submit its reads list files on the driver too.  The CLI runs here
+    in-process: its getOrCreate() returns this session and applies those
+    confs to it."""
+    assert ENGINE_CONF[LISTING_THRESHOLD] == "1000000"
+    monkeypatch.syspath_prepend(str(ROOT))
+    import run_pipeline
+
+    spark.conf.unset(LISTING_THRESHOLD)
+    try:
+        assert spark.conf.get(LISTING_THRESHOLD) == "32"
+        monkeypatch.setattr(sys, "argv", ["run_pipeline.py", "maintain",
+                                          "--table", tmpdir_path, "--no-compact"])
+        run_pipeline.main()
+        assert spark.conf.get(LISTING_THRESHOLD) == "1000000"
+    finally:
+        spark.conf.set(LISTING_THRESHOLD, "1000000")
+    assert '"version": 0' in capsys.readouterr().out
