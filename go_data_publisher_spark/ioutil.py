@@ -13,18 +13,6 @@ import os
 import tempfile
 
 
-def has_parquet_data(path: str) -> bool:
-    """True iff the directory tree under ``path`` holds any ``*.parquet``
-    data file.  Directories that exist but contain only underscore-prefixed
-    marker files (e.g. the quarantine dir's per-epoch ``_epoch-*.done``)
-    would make ``spark.read.parquet`` raise UNABLE_TO_INFER_SCHEMA — one
-    probe shared by every reader of such dirs."""
-    return os.path.isdir(path) and any(
-        name.endswith(".parquet")
-        for _d, _s, files in os.walk(path) for name in files
-    )
-
-
 def atomic_write_text(path: str, text: str) -> None:
     """Publish ``text`` at ``path`` atomically: tmp file in the same
     directory, fsync, rename.  A concurrent reader sees the old content or

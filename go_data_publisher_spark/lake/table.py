@@ -283,6 +283,13 @@ def _split_snapshot_files(files: list) -> tuple[list, list]:
 # metadata bloats
 MAX_EPOCHS_RECENT = 100_000
 
+# the manifest's running row totals: each epoch's commit adds its counts, so
+# they are exactly-once with the epoch itself (/metrics and /report read
+# them); _publish and vacuum's squash carry every non-file key, so
+# compaction, schema evolution and squash keep them as they are
+ROW_TOTALS = ("rows_upserted_total", "rows_deleted_total",
+              "rows_quarantined_total")
+
 
 def fold_epoch_state(hwm: int, recent: set, epoch_id: int,
                      writer_id: str = "default") -> tuple[int, set]:
@@ -394,6 +401,7 @@ class TranscriptTable:
                         "epoch_hwm": -1,
                         "epochs_recent": [],
                         "cursor_lsn": -1,
+                        **{name: 0 for name in ROW_TOTALS},
                         "n_buckets": n_buckets,
                         "key": self.key,
                         "order_col": order_col,
@@ -936,6 +944,7 @@ class TranscriptTable:
         deduped: bool = False,
         writer_id: str = "default",
         write_parallelism: int | None = None,
+        count_quarantined=None,
     ) -> dict:
         """Idempotent, LSN-guarded MERGE of one change batch.
 
@@ -982,6 +991,11 @@ class TranscriptTable:
         lowers it toward serial when full-width writes keep failing (the
         reference's adaptive worker fallback,
         status-service/sync/tick_processor.go:163).
+
+        The commit adds the epoch's upserted and deleted rows to the
+        manifest's ``ROW_TOTALS``, and ``count_quarantined()`` (a
+        zero-argument callable, called after the write job) to the
+        quarantined total.
         """
         m = self.manifest()
         hwm0, recent0 = self._writer_state(m, writer_id)
@@ -1121,8 +1135,12 @@ class TranscriptTable:
         tos = [r["lsn_to"] for r in per_bucket if r["lsn_to"] is not None]
         batch_max_lsn = max(tos) if tos else None
 
+        counts = (sum(r["rows_upserted"] for r in per_bucket),
+                  sum(r["rows_deleted"] for r in per_bucket),
+                  count_quarantined() if count_quarantined else 0)
         self._commit(m, writer_id=writer_id, files_added=new_files,
-                     epoch_id=epoch_id, batch_max_lsn=batch_max_lsn)
+                     epoch_id=epoch_id, batch_max_lsn=batch_max_lsn,
+                     counts=counts)
         return {
             "status": "committed",
             "epoch_id": epoch_id,
@@ -1177,7 +1195,7 @@ class TranscriptTable:
 
     def _commit(self, m: dict, epoch_id, batch_max_lsn,
                 writer_id: str = "default",
-                files_added=(), files_removed=()) -> None:
+                files_added=(), files_removed=(), counts=(0, 0, 0)) -> None:
         cursor = max(int(m["cursor_lsn"]), int(batch_max_lsn)) if batch_max_lsn is not None \
             else int(m["cursor_lsn"])
         # bounded epoch state: fold the new epoch into the writer's
@@ -1185,7 +1203,12 @@ class TranscriptTable:
         hwm0, recent0 = self._writer_state(m, writer_id)
         hwm, recent = fold_epoch_state(hwm0, recent0, epoch_id, writer_id)
         now = time.time()
-        extra = {"cursor_lsn": cursor}
+        # the row totals are per table, not per writer: an expired writer's
+        # rows stay counted (a manifest written before the totals existed
+        # starts them at its next commit)
+        extra = {"cursor_lsn": cursor,
+                 **{name: int(m.get(name, 0)) + int(n)
+                    for name, n in zip(ROW_TOTALS, counts)}}
         # expire stale named writers (entries without a timestamp are legacy:
         # stamp them lazily rather than dropping a live replay guard)
         writers = {

@@ -10,21 +10,27 @@ consume without spark-submit access.
 
 Two cost tiers, deliberately separate:
 
-- ``/status`` is the manifest fast path — version, cursor, epoch state,
-  live-file count — served from manifest reads only, NO Spark job; its cost
-  is linear in the live-file count.  Safe to poll at health-check
-  frequency.
+- ``/status`` and ``/metrics`` are the manifest tier — version, cursor,
+  epoch state, live-file count and the row totals each epoch's commit
+  folds into the manifest — served from manifest reads and a listing of
+  the lineage dir, NO Spark job; their cost is linear in the live-file
+  count.  Safe to poll at health-check and scrape frequency.
 - ``/report`` runs the full progress document (snapshot row count, interval
-  union, gap scan, lineage totals) — a handful of Spark jobs; poll it like
-  a dashboard, not like a liveness probe.
+  union, gap scan, skipped keys) — a handful of Spark jobs; poll it like a
+  dashboard, not like a liveness probe.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
 from pyspark.sql import functions as F
+
+# the one flat prefix of every exported series (the reference's namespace,
+# status-service/metrics/metrics.go:23-100)
+NAMESPACE = "gdps"
 
 
 def build_status(tbl) -> dict:
@@ -41,36 +47,22 @@ def build_status(tbl) -> dict:
     }
 
 
-def lineage_raw_totals(spark, lineage_dir: str) -> dict:
-    """ONE Spark aggregation over the lineage feed, shared by /report and
-    /metrics (each used to run its own, with drift-prone twin logic):
-    per-epoch sums of the per-bucket counters, with rows_quarantined taken
-    once per epoch (it is an epoch-level count replicated into every
-    per-bucket row — quarantined rows never reach a bucket), then summed
-    across epochs.  Sums are None over an empty feed — the distinction
-    /report's ``rows_upserted_total`` preserves; /metrics coalesces to 0."""
-    from .schemas import LINEAGE_SCHEMA
-
-    lin = spark.read.schema(LINEAGE_SCHEMA).json(lineage_dir)
-    row = lin.groupBy("epoch_id").agg(
-        F.sum("rows_upserted").alias("u"),
-        F.sum("rows_deleted").alias("d"),
-        F.max("rows_quarantined").alias("q"),
-    ).agg(F.sum("u"), F.sum("d"), F.sum("q"), F.count("*")).first()
-    return {"epochs": row[3] or 0, "upserted": row[0],
-            "deleted": row[1], "quarantined": row[2]}
+def lineage_epochs(lineage_dir: str) -> int:
+    """Epochs in the lineage feed: ChangeApplier writes one
+    ``epoch-*.json`` file per committed epoch, after the commit — so a
+    count behind the committed epochs is a lineage gap (0 when the dir does
+    not exist yet)."""
+    return len(glob.glob(os.path.join(lineage_dir, "epoch-*.json")))
 
 
-def build_report(spark, tbl, lineage_dir: str | None = None,
-                 quarantine_dir: str | None = None,
-                 lineage_totals: dict | None = None) -> dict:
+def build_report(spark, tbl, lineage_dir: str | None = None) -> dict:
     """The full progress/intervals/gaps document (S10/Q7/Q8/A3 composed).
 
-    ``lineage_totals``: a precomputed ``lineage_raw_totals`` result (the
-    ReportServer passes its TTL-cached one so /report and /metrics share a
-    single lineage aggregation per window); when absent and ``lineage_dir``
-    holds data, the totals are computed here."""
+    With ``lineage_dir``: ``lineage_epochs`` counts the lineage feed's epoch
+    files and ``rows_upserted_total`` is the manifest's running total — 0 on
+    a fresh table (it used to be None, a sum over an empty feed)."""
     from .operators.sequencing import detect_gaps, group_intervals
+    from .streaming.apply import read_quarantine
 
     m = tbl.manifest()
     snap = tbl.snapshot()
@@ -91,61 +83,36 @@ def build_report(spark, tbl, lineage_dir: str | None = None,
         "history": tbl.history()[-5:],
     }
     if lineage_dir:
-        # read with the DECLARED schema (same as ChangeApplier.lineage,
-        # streaming/apply.py): a configured-but-still-empty lineage dir —
-        # fresh pipeline, report before the first commit — must be an empty
-        # frame, not an UNABLE_TO_INFER_SCHEMA 500.  The dir itself may not
-        # exist yet either (ChangeApplier only creates it on the first
-        # applied batch), and a schema'd read of a missing path raises
-        # PATH_NOT_FOUND — so the fresh-pipeline report zeroes the fields.
-        if os.path.isdir(lineage_dir):
-            totals = lineage_totals or lineage_raw_totals(spark, lineage_dir)
-            report["lineage_epochs"] = totals["epochs"]
-            report["rows_upserted_total"] = totals["upserted"]
-        else:
-            report["lineage_epochs"] = 0
-            report["rows_upserted_total"] = None
+        report["lineage_epochs"] = lineage_epochs(lineage_dir)
+        report["rows_upserted_total"] = m.get("rows_upserted_total", 0)
     # V4 persisted skipped-key set (served sorted, like the reference's
-    # status-service/db/store.go:109 read-back).  A clean run's quarantine
-    # dir holds ONLY the per-epoch marker files, which would make the
-    # parquet reader raise UNABLE_TO_INFER_SCHEMA — shared probe with
-    # ChangeApplier.skipped_keys.  Columns follow the table's declared
-    # key/order contract, not hardcoded names.
-    from .ioutil import has_parquet_data
-
-    qdir = quarantine_dir or f"{tbl.root}/_quarantine"
+    # status-service/db/store.go:109 read-back); the dir exists once the
+    # applier has run, and a read of a missing path would raise
+    # PATH_NOT_FOUND
+    qdir = f"{tbl.root}/_quarantine"
     if os.path.isdir(qdir):
-        key = list(tbl.key)
-        order = tbl.order_col
-        if has_parquet_data(qdir):
-            q = spark.read.parquet(qdir)
-            report["rows_skipped_total"] = q.count()
-            report["skipped_sample"] = [
-                {c: r[c] for c in (*key, order)}
-                for r in q.orderBy(*key, order).limit(5).collect()
-            ]
-        else:
-            report["rows_skipped_total"] = 0
-            report["skipped_sample"] = []
+        cols = (*tbl.key, tbl.order_col)
+        q = read_quarantine(tbl, qdir)
+        report["rows_skipped_total"] = q.count()
+        report["skipped_sample"] = [
+            {c: r[c] for c in cols}
+            for r in q.orderBy(*cols).limit(5).collect()
+        ]
     return report
 
 
-def build_metrics_text(tbl, namespace: str = "gdps",
-                       lineage_totals: dict | None = None) -> str:
+def build_metrics_text(tbl, lineage_dir: str | None = None) -> str:
     """Prometheus text exposition (format 0.0.4) of the engine's progress
     gauges — the reference's scrape surface
     (status-service/metrics/metrics.go:23-100: processed tick/epoch, source
     tick/epoch, error gauges, one flat namespace prefix).
 
-    The manifest gauges come from the same manifest reads as ``/status``
-    (no Spark job, linear in live files) — safe at scrape frequency.
-    ``lineage_totals`` (rows upserted/deleted/quarantined, epochs) is
-    optional and supplied by the caller from its TTL cache, because
-    computing it runs Spark jobs; when absent those series are simply not
-    exported, which Prometheus treats as a disappearing series, not an
-    error."""
+    Every gauge comes from the same manifest reads as ``/status`` — the row
+    totals too, which each epoch's commit advances — plus, with
+    ``lineage_dir``, a listing of the lineage feed: no Spark job, linear in
+    live files, safe at scrape frequency."""
     m = tbl.manifest()
-    gauges: list[tuple[str, str, float | int | None]] = [
+    gauges: list[tuple[str, str, float | int]] = [
         ("cursor_lsn",
          "Highest LSN durably applied to the table "
          "(reference: processed_transactions_tick)", m["cursor_lsn"]),
@@ -158,14 +125,19 @@ def build_metrics_text(tbl, namespace: str = "gdps",
         ("delta_files_max_per_bucket",
          "Deepest per-bucket delta chain awaiting compaction",
          max(tbl.delta_file_counts().values(), default=0)),
+        ("rows_upserted_total", "Rows upserted across all committed epochs",
+         m.get("rows_upserted_total", 0)),
+        ("rows_deleted_total", "Rows deleted across all committed epochs",
+         m.get("rows_deleted_total", 0)),
+        ("rows_quarantined_total", "Rows quarantined by the validity guard",
+         m.get("rows_quarantined_total", 0)),
     ]
-    for name, (help_, value) in (lineage_totals or {}).items():
-        gauges.append((name, help_, value))
+    if lineage_dir:
+        gauges.append(("lineage_epochs", "Epochs with a lineage file",
+                       lineage_epochs(lineage_dir)))
     out = []
     for name, help_, value in gauges:
-        if value is None:
-            continue
-        full = f"{namespace}_{name}"
+        full = f"{NAMESPACE}_{name}"
         out.append(f"# HELP {full} {help_}")
         out.append(f"# TYPE {full} gauge")
         out.append(f"{full} {value}")
@@ -176,12 +148,13 @@ class ReportServer:
     """Minimal HTTP JSON endpoint over one table.
 
     Routes: ``/healthz`` (constant), ``/status`` (manifest fast path),
-    ``/metrics`` (Prometheus text format: manifest gauges + TTL-cached
-    lineage totals), ``/history`` (retained snapshot log), ``/report``
-    (full document, runs Spark jobs), ``/row?key=<v>[&second=<v>]``
-    (bucket-pruned point lookup, S2/S3).  Threaded: the cheap routes answer
-    while a slow /report is
-    in flight; one Spark session is shared (job submission is thread-safe).
+    ``/metrics`` (Prometheus text format, manifest tier: no Spark job),
+    ``/history`` (retained snapshot log), ``/report`` (full document, runs
+    Spark jobs, TTL-cached), ``/row?key=<v>[&second=<v>]`` (bucket-pruned
+    point lookup, S2/S3).  ``lineage_dir`` names the audit feed whose epoch
+    files /report and /metrics count.  Threaded: the cheap routes answer
+    while a slow /report is in flight; one Spark session is shared (job
+    submission is thread-safe).
     The driver is still not a web worker pool — put a cache/proxy in front
     for real fan-out, exactly as the reference fronts its status service.
 
@@ -252,20 +225,12 @@ class ReportServer:
         # driver.  report_builds counts ACTUAL builds (observable in tests).
         self.report_ttl_seconds = float(report_ttl_seconds)
         self.report_builds = 0
-        self.lineage_builds = 0
         self._report_cache: tuple[float, dict] | None = None
-        self._lineage_cache: tuple[float, dict] | None = None
         self._report_lock = threading.Lock()
-        # the lineage totals get their OWN lock: a /metrics scrape must not
-        # queue behind a slow multi-job /report build just because both
-        # consult the lineage cache (a blocked scrape = gaps in every
-        # exported series); lock order is report → lineage only, never the
-        # reverse, so the pair cannot deadlock
-        self._lineage_lock = threading.Lock()
-        # Threading: /healthz and /status (no Spark job) must answer while a
-        # slow /report (several Spark jobs) is in flight, or a liveness
-        # probe flaps unhealthy exactly when the service is doing normal
-        # work.  Spark job submission is thread-safe; concurrent /report
+        # Threading: /healthz, /status and /metrics (no Spark job) must
+        # answer while a slow /report (several Spark jobs) is in flight, or a
+        # liveness probe flaps unhealthy exactly when the service is doing
+        # normal work.  Spark job submission is thread-safe; concurrent /report
         # calls just queue in the scheduler.
         self._httpd = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         self._httpd.daemon_threads = True
@@ -277,7 +242,7 @@ class ReportServer:
         window.  The lock is held ACROSS the build so concurrent polls
         arriving during a slow build queue behind it and reuse its result
         instead of each launching their own Spark jobs; the no-Spark routes
-        (/status, /healthz) never touch this lock."""
+        (/status, /metrics, /healthz) never touch this lock."""
         import time
 
         with self._report_lock:
@@ -285,39 +250,11 @@ class ReportServer:
             if (self._report_cache is not None
                     and now - self._report_cache[0] < self.report_ttl_seconds):
                 return self._report_cache[1]
-            # force a FRESH lineage aggregation for a fresh report: the
-            # document's manifest/row fields are computed NOW, so pairing
-            # them with a lineage total cached up to a TTL ago would serve
-            # an internally inconsistent document (lineage_epochs behind
-            # epoch_hwm in the SAME response).  The refreshed totals land in
-            # the shared cache, so /metrics scrapes ride this build too.
             body = build_report(self.spark, self.tbl,
-                                lineage_dir=self.lineage_dir,
-                                lineage_totals=self._lineage_totals(force=True))
+                                lineage_dir=self.lineage_dir)
             self.report_builds += 1
             self._report_cache = (time.monotonic(), body)
             return body
-
-    def _lineage_totals(self, force: bool = False) -> dict | None:
-        """TTL-cached ``lineage_raw_totals`` shared by /report and /metrics.
-        Scrapes are served from the cache (at most one aggregation per
-        window on the /metrics path); a REPORT build always recomputes
-        (``force=True``) for document coherence, refreshing the shared
-        cache as it does — so a window with both a scrape and a report
-        build runs up to two aggregations, bounded by the report TTL."""
-        import time
-
-        if not (self.lineage_dir and os.path.isdir(self.lineage_dir)):
-            return None
-        with self._lineage_lock:
-            now = time.monotonic()
-            if (not force and self._lineage_cache is not None
-                    and now - self._lineage_cache[0] < self.report_ttl_seconds):
-                return self._lineage_cache[1]
-            totals = lineage_raw_totals(self.spark, self.lineage_dir)
-            self.lineage_builds += 1
-            self._lineage_cache = (time.monotonic(), totals)
-            return totals
 
     _LOOKUP_LIMIT = 1000
 
@@ -367,29 +304,8 @@ class ReportServer:
         }
 
     def _metrics_text(self) -> str:
-        """/metrics body: manifest gauges are recomputed every scrape
-        (manifest reads only, no Spark job, linear in live files); the
-        lineage totals ride the shared TTL cache — a scrape never waits on
-        a /report build, only (worst case) on one in-flight lineage
-        aggregation."""
-        totals = self._lineage_totals()
-        gauges = None
-        if totals is not None:
-            gauges = {
-                "rows_upserted_total":
-                    ("Rows upserted across all committed epochs",
-                     totals["upserted"] or 0),
-                "rows_deleted_total":
-                    ("Rows deleted across all committed epochs",
-                     totals["deleted"] or 0),
-                "rows_quarantined_total":
-                    ("Rows quarantined by the validity guard",
-                     totals["quarantined"] or 0),
-                "lineage_epochs":
-                    ("Distinct epochs with lineage records",
-                     totals["epochs"] or 0),
-            }
-        return build_metrics_text(self.tbl, lineage_totals=gauges)
+        """/metrics body, rebuilt every scrape from the manifest."""
+        return build_metrics_text(self.tbl, self.lineage_dir)
 
     def start(self) -> None:
         import threading

@@ -23,8 +23,11 @@ invalid-row count rides the write job as an Observation — zero extra scans.
 The plan itself is described in SQL text (see ``sqltext``), so building it
 costs the driver about a hundred py4j round trips, not one per Column node.
 
-Exactly-once: the table's manifest commit records epoch_id; a replayed batch
-(same epoch_id) is a no-op.  Transient sink failures are retried with
+Exactly-once: the table's manifest commit records epoch_id and adds the
+epoch's upserted, deleted and quarantined rows to the manifest's running
+totals; a replayed batch (same epoch_id) is a no-op.  The lineage file is
+written after the commit, so a crash between the two leaves a lineage gap,
+never a miscounted total.  Transient sink failures are retried with
 bounded exponential backoff + jitter (the reference retries ES bulk writes
 on 429/502/503/504 up to 15 times, transactions-consumer/main.go:118-120,
 186-201); each retry writes a fresh commit dir, so a half-written attempt
@@ -33,6 +36,7 @@ leaves only orphan files that vacuum() collects — never a double commit.
 
 from __future__ import annotations
 
+import functools
 import random
 import time
 from dataclasses import dataclass, field
@@ -248,6 +252,18 @@ class ChangeApplier:
         observed = batch.observe(obs, F.expr(n_invalid))
         valid, quarantined = split_valid(observed, key_cols=key)
 
+        @functools.cache
+        def count_quarantined() -> int:
+            # ready once the main merge's write job has run: merge() calls
+            # it before its commit, so the count commits with the epoch
+            try:
+                stats_row = obs.get
+            except Exception:
+                # degenerate (e.g. empty) batch: the observed metrics row
+                # may be unavailable — fall back to a direct aggregate
+                stats_row = batch.agg(F.expr(n_invalid)).first()
+            return int(stats_row["nq"] or 0)
+
         if self.on_invalid == "error":
             # strict mode pays one extra (pushdown-pruned) job to abort
             # BEFORE anything is applied
@@ -287,20 +303,16 @@ class ChangeApplier:
                 eph = changes.where(self.route_sql)
                 perm = changes.where(f"NOT coalesce(({self.route_sql}), false)")
                 self._merge_sink(self.ephemeral_table, eph, epoch_id)
-                stats = self._merge_sink(self.table, perm, epoch_id)
+                stats = self._merge_sink(self.table, perm, epoch_id,
+                                         count_quarantined=count_quarantined)
             finally:
                 changes.unpersist()
         else:
-            stats = self._merge_sink(self.table, valid, epoch_id, deduped=False)
+            stats = self._merge_sink(self.table, valid, epoch_id, deduped=False,
+                                     count_quarantined=count_quarantined)
         per_bucket = stats.pop("per_bucket", [])
 
-        try:
-            stats_row = obs.get
-        except Exception:
-            # degenerate (e.g. empty) batch: the observed metrics row may
-            # be unavailable — fall back to a direct aggregate
-            stats_row = batch.agg(F.expr(n_invalid)).first()
-        n_quarantined = int(stats_row["nq"] or 0)
+        n_quarantined = count_quarantined()
         if self.quarantine_dir:
             if n_quarantined:
                 self.retry.run(
@@ -323,7 +335,8 @@ class ChangeApplier:
         return stats
 
     def _merge_sink(self, tbl: TranscriptTable, changes: DataFrame,
-                    epoch_id: int, deduped: bool = True) -> dict:
+                    epoch_id: int, deduped: bool = True,
+                    count_quarantined=None) -> dict:
         """Retry-wrapped merge with a DEGRADE ladder: when the full-width
         write keeps failing retriably even after the backoff budget, retry
         at progressively lower write parallelism (half, quarter, ..., serial)
@@ -336,7 +349,8 @@ class ChangeApplier:
         attempts are vacuum-collected orphans — never a partial commit."""
         def attempt(wp=None):
             return tbl.merge(changes, epoch_id=epoch_id, deduped=deduped,
-                             writer_id=self.writer_id, write_parallelism=wp)
+                             writer_id=self.writer_id, write_parallelism=wp,
+                             count_quarantined=count_quarantined)
 
         try:
             return self.retry.run(attempt)
@@ -436,34 +450,34 @@ class ChangeApplier:
     def skipped_keys(self) -> DataFrame:
         """The persisted skipped-key set (V4 continue mode), sorted by key —
         the reference's sorted read-back of its skip store
-        (status-service/db/store.go:79-111).  Columns follow the TABLE's
-        declared key/order contract, like the write side."""
+        (status-service/db/store.go:79-111)."""
         if not self.quarantine_dir:
             raise ValueError("no quarantine_dir configured")
-        from pyspark.sql import types as T
-
-        from ..ioutil import has_parquet_data
-
         key = list(self.table.key)
         order = self.table.order_col
-        if not has_parquet_data(self.quarantine_dir):
-            # a clean run still creates the dir (per-epoch marker files,
-            # which the parquet reader treats as hidden) — an empty skipped
-            # set, not a schema-inference error
-            by_name = {f.name: f for f in self.table.schema.fields}
-            fields = [by_name[c] for c in (*key, order)] + [
-                T.StructField("op", T.StringType(), True),
-                T.StructField("__epoch_id", T.IntegerType(), True),
-            ]
-            return self.table.spark.createDataFrame([], T.StructType(fields))
-        q = self.table.spark.read.parquet(self.quarantine_dir)
         return (
-            q.select(*key, order, "op", "__epoch_id")
+            read_quarantine(self.table, self.quarantine_dir)
             # distinct: the at-least-once heal path may re-append an epoch's
             # rows if the marker write itself was lost
             .distinct()
             .orderBy(*key, order)
         )
+
+
+def read_quarantine(table: TranscriptTable, path: str) -> DataFrame:
+    """The quarantine dir at ``path`` read with a declared schema: the
+    table's key and order columns (nullable — quarantined rows are the ones
+    with a null key), ``op`` and ``__epoch_id`` as the writer writes them.
+    Declaring it skips the schema-inference job, and a dir holding only the
+    per-epoch ``_epoch-*.done`` markers (a clean run) reads as 0 rows."""
+    by_name = {f.name: f for f in table.schema.fields}
+    fields = [T.StructField(c, by_name[c].dataType, True)
+              for c in (*table.key, table.order_col)]
+    schema = T.StructType(fields + [
+        T.StructField("op", T.StringType(), True),
+        T.StructField("__epoch_id", T.IntegerType(), True),
+    ])
+    return table.spark.read.schema(schema).parquet(path)
 
 
 def replay_batch_range(

@@ -9,7 +9,7 @@ Commands:
   batch     --source DIR --table DIR [--chunks K]       chunked batch replay
   verify    --source DIR --table DIR              full-replay equality check
   report    --table DIR [--lineage DIR]           progress/intervals/gaps JSON
-  serve     --table DIR [--port N]                HTTP JSON status endpoint
+  serve     --table DIR [--port N]                HTTP status endpoint
   tail      --source-table DIR --target-table DIR --cursor FILE
             CDC-out: apply a table's change feed to a second table
   maintain  --table DIR [--compact-threshold N] [--vacuum-keep K]
@@ -71,8 +71,8 @@ def main():
     r.add_argument("--lineage", default=None)
 
     sv = sub.add_parser("serve",
-                        help="HTTP JSON status endpoint over a table "
-                             "(/healthz /status /history /report)")
+                        help="HTTP status endpoint over a table (/healthz "
+                             "/status /metrics /history /report /row)")
     sv.add_argument("--table", required=True)
     sv.add_argument("--port", type=int, default=8080)
     sv.add_argument("--lineage", default=None)
@@ -261,8 +261,8 @@ def main():
         print(json.dumps(report, default=str))
 
     elif args.cmd == "serve":
-        # S10 HTTP form: the same documents over a stdlib JSON endpoint
-        # (/healthz /status /history /report)
+        # S10 HTTP form: the same documents over a stdlib HTTP endpoint
+        # (/healthz /status /metrics /history /report /row)
         from go_data_publisher_spark.serving import ReportServer
 
         tbl = TranscriptTable(spark, args.table)

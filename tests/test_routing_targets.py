@@ -17,7 +17,7 @@ def test_dual_target_routing(spark, tmpdir_path):
     main = TranscriptTable(spark, f"{tmpdir_path}/main", n_buckets=4)
     eph = TranscriptTable(spark, f"{tmpdir_path}/eph", n_buckets=4)
     app = ChangeApplier(main, route_sql="role = 'tool'", ephemeral_table=eph)
-    app.apply_batch(log, epoch_id=0)
+    first = app.apply_batch(log, epoch_id=0)
 
     m, e = main.snapshot(), eph.snapshot()
     assert m.where("role = 'tool'").count() == 0
@@ -25,6 +25,14 @@ def test_dual_target_routing(spark, tmpdir_path):
     assert e.count() > 0
     # no key overlap between the two targets
     assert m.join(e, ["conv_id", "turn_idx"], "inner").count() == 0
+    # each target's manifest totals count the rows it wrote; only the main
+    # table counts the batch's quarantined rows
+    mm, em = main.manifest(), eph.manifest()
+    assert mm["rows_upserted_total"] == m.count()
+    assert em["rows_upserted_total"] == e.count()
+    assert first["rows_quarantined"] > 0
+    assert mm["rows_quarantined_total"] == first["rows_quarantined"]
+    assert em["rows_quarantined_total"] == 0
 
     # replay guard covers both targets
     stats = app.apply_batch(log, epoch_id=0)

@@ -9,7 +9,14 @@ import urllib.request
 import pytest
 
 from go_data_publisher_spark.lake.table import TranscriptTable
-from go_data_publisher_spark.serving import ReportServer, build_report, build_status
+from pyspark.sql import functions as F
+
+from go_data_publisher_spark.serving import (
+    ReportServer,
+    build_metrics_text,
+    build_report,
+    build_status,
+)
 from go_data_publisher_spark.streaming.apply import ChangeApplier
 
 SCHEMA = (
@@ -120,56 +127,37 @@ def test_healthz_answers_while_report_runs(spark, small_table):
         srv.shutdown()
 
 
-def test_report_on_fresh_pipeline_with_empty_lineage_dir(spark, tmpdir_path):
-    """r4 verdict #3: a lineage dir that is configured but still EMPTY (fresh
-    pipeline, report before the first commit) must yield a 200 with zeroed
-    lineage fields — the schemaless json read used to raise
-    UNABLE_TO_INFER_SCHEMA and turn /report into a 500."""
+def test_report_on_fresh_pipeline(spark, tmpdir_path):
+    """A fresh pipeline: the lineage dir given to `serve --lineage DIR` is
+    configured but still empty, or does not exist yet (ChangeApplier only
+    creates it on its first applied batch).  Either way /report must be a
+    200 with zeroed lineage fields, not UNABLE_TO_INFER_SCHEMA or
+    PATH_NOT_FOUND; ``rows_upserted_total`` is the manifest's total, 0
+    before the first commit (it was None as a sum over an empty feed)."""
     import os
 
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
-    app = ChangeApplier(tbl)  # no lineage writer — the dir stays empty
-    app.apply_batch(spark.createDataFrame(
-        [(1, "I", "c1", 0, "user", "a", None, None, 1)], SCHEMA), epoch_id=0)
-    lineage = f"{tmpdir_path}/lineage_empty"
-    os.makedirs(lineage)
-
-    report = build_report(spark, tbl, lineage_dir=lineage)
-    assert report["lineage_epochs"] == 0
-    assert report["rows_upserted_total"] is None  # sum over zero rows
-
-    srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
-    srv.start()
-    try:
-        st, served = _get(srv.port, "/report")
-        assert st == 200 and served["rows"] == 1
-    finally:
-        srv.shutdown()
-
-
-def test_report_with_not_yet_created_lineage_dir(spark, tmpdir_path):
-    """The actual fresh-pipeline state: ChangeApplier only CREATES the
-    lineage dir on the first applied batch, so `serve --lineage DIR` started
-    before the stream's first commit points at a path that does not exist.
-    A schema'd read of a missing path raises PATH_NOT_FOUND — the report
-    must zero the lineage fields instead of 500ing."""
-    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
-    app = ChangeApplier(tbl)
-    app.apply_batch(spark.createDataFrame(
-        [(1, "I", "c1", 0, "user", "a", None, None, 1)], SCHEMA), epoch_id=0)
+    empty = f"{tmpdir_path}/lineage_empty"
+    os.makedirs(empty)
     missing = f"{tmpdir_path}/lineage_never_created"
+    for lineage in (empty, missing):
+        report = build_report(spark, tbl, lineage_dir=lineage)
+        assert report["lineage_epochs"] == 0
+        assert report["rows_upserted_total"] == 0
 
-    report = build_report(spark, tbl, lineage_dir=missing)
-    assert report["lineage_epochs"] == 0
-    assert report["rows_upserted_total"] is None
-
-    srv = ReportServer(spark, tbl, port=0, lineage_dir=missing)
-    srv.start()
-    try:
-        st, served = _get(srv.port, "/report")
-        assert st == 200 and served["lineage_epochs"] == 0
-    finally:
-        srv.shutdown()
+    app = ChangeApplier(tbl)  # no lineage writer — the dirs stay as they are
+    app.apply_batch(spark.createDataFrame(
+        [(1, "I", "c1", 0, "user", "a", None, None, 1)], SCHEMA), epoch_id=0)
+    for lineage in (empty, missing):
+        srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
+        srv.start()
+        try:
+            st, served = _get(srv.port, "/report")
+        finally:
+            srv.shutdown()
+        assert st == 200 and served["rows"] == 1
+        assert served["lineage_epochs"] == 0
+        assert served["rows_upserted_total"] == 1
 
 
 def test_report_ttl_cache_builds_once_per_window(spark, small_table):
@@ -223,11 +211,38 @@ def _parse_prom(text):
     return values
 
 
+def _lineage_records(lineage):
+    import glob
+
+    return [json.loads(line)
+            for f in glob.glob(f"{lineage}/*.json")
+            for line in open(f) if line.strip()]
+
+
+def _assert_totals_match_lineage(vals, m, recs):
+    """The row totals served from the manifest equal what the lineage
+    records themselves sum to.  Quarantine counts are epoch-level,
+    replicated into every per-bucket row: one value per epoch, summed across
+    epochs (not across bucket rows)."""
+    assert recs, "fixture wrote lineage"
+    assert vals["gdps_rows_upserted_total"] == m["rows_upserted_total"] == sum(
+        r["rows_upserted"] for r in recs)
+    assert vals["gdps_rows_deleted_total"] == m["rows_deleted_total"] == sum(
+        r["rows_deleted"] for r in recs)
+    assert vals["gdps_rows_quarantined_total"] == m["rows_quarantined_total"] \
+        == sum({r["epoch_id"]: r["rows_quarantined"] for r in recs}.values())
+    assert vals["gdps_lineage_epochs"] == len({r["epoch_id"] for r in recs})
+
+
 def test_metrics_route_prometheus_format_and_values(spark, small_table):
     """r5 verdict #7: /metrics serves the reference's scrape surface
     (status-service/metrics/metrics.go:23-100) in Prometheus text format;
-    gauge values must equal the manifest and the lineage table's own sums."""
-    import glob
+    gauge values must equal the manifest, and the manifest's row totals the
+    lineage records' own sums — also after a chunked replay, a redelivered
+    epoch, a fully quarantined batch, an empty epoch, and a compact() and a
+    vacuum() between commits (both rewrite manifests the totals ride)."""
+    from go_data_publisher_spark.sources.changelog import generate_changelog
+    from go_data_publisher_spark.streaming.apply import replay_batch_range
 
     tbl, lineage = small_table
     # second epoch with TWO invalid rows (null key / bad op) landing beside
@@ -259,29 +274,51 @@ def test_metrics_route_prometheus_format_and_values(spark, small_table):
     assert vals["gdps_live_files"] == m.get("n_live_files", len(m["files"]))
     assert vals["gdps_delta_files_max_per_bucket"] == max(
         tbl.delta_file_counts().values())
+    _assert_totals_match_lineage(vals, m, _lineage_records(lineage))
 
-    # lineage totals must equal what the lineage records themselves sum to
-    recs = [json.loads(line)
-            for f in glob.glob(f"{lineage}/*.json")
-            for line in open(f) if line.strip()]
-    assert recs, "fixture wrote lineage"
-    assert vals["gdps_rows_upserted_total"] == sum(
-        r["rows_upserted"] for r in recs)
-    assert vals["gdps_rows_deleted_total"] == sum(
-        r["rows_deleted"] for r in recs)
-    # quarantine counts are epoch-level, replicated per bucket row: one
-    # value per epoch, summed across epochs (not across bucket rows)
-    assert vals["gdps_rows_quarantined_total"] == sum(
-        {r["epoch_id"]: r["rows_quarantined"] for r in recs}.values())
-    assert vals["gdps_lineage_epochs"] == len({r["epoch_id"] for r in recs})
+    # epochs 2-4: a chunked replay of a log with updates, deletes,
+    # redelivered copies and invalid rows, above the fixture's LSNs
+    log = generate_changelog(spark, 600, n_convs=20, seed=5,
+                             invalid_rate=0.05).withColumn("lsn", F.expr("lsn + 100"))
+    chunks = [(101, 300), (301, 500), (501, 800)]
+    stats = replay_batch_range(app, log, chunks, epoch_offset=2)
+    assert [s["status"] for s in stats] == ["committed"] * 3
+    assert all(s["rows_quarantined"] for s in stats)
+    assert sum(r["rows_deleted"] for r in _lineage_records(lineage)) > 0
+    tbl.compact()
+    # redelivered epoch 3: a skipped replay that must not count twice
+    lo, hi = chunks[1]
+    again = app.apply_batch(log.where(f"lsn BETWEEN {lo} AND {hi}"), epoch_id=3)
+    assert again["status"] == "skipped_replay"
+    # epoch 5: every row quarantined
+    app.apply_batch(spark.createDataFrame(
+        [(901, "I", None, 7, "user", "bad1", None, None, 1),
+         (902, "X", "c9", 7, "user", "bad2", None, None, 1)], SCHEMA),
+        epoch_id=5)
+    tbl.vacuum(keep_versions=1, orphan_grace_seconds=0)
+    # epoch 6: empty; epoch 7: commits on top of the squashed manifest
+    app.apply_batch(spark.createDataFrame([], SCHEMA), epoch_id=6)
+    app.apply_batch(spark.createDataFrame(
+        [(903, "D", "c0", 5, "user", None, None, None, 1),
+         (904, "I", "c5", 1, "user", "late", None, None, 1)], SCHEMA),
+        epoch_id=7)
+
+    m = tbl.manifest()
+    assert m["epoch_hwm"] == 7
+    vals = _parse_prom(build_metrics_text(tbl, lineage))
+    recs = _lineage_records(lineage)
+    assert vals["gdps_lineage_epochs"] == m["epoch_hwm"] + 1
+    assert {r["epoch_id"]: r["rows_quarantined"] for r in recs}[5] == 2
+    _assert_totals_match_lineage(vals, m, recs)
 
 
 def test_metrics_without_lineage_dir_omits_series_and_stays_cheap(
         spark, small_table):
-    """Without a lineage dir the lineage series disappear (Prometheus
-    semantics for an absent series) and no Spark job runs; manifest gauges
-    still refresh every scrape — a commit between scrapes must show up even
-    while the lineage TTL window is open."""
+    """Without a lineage dir the lineage series disappears (Prometheus
+    semantics for an absent series) while the row totals, which live in the
+    manifest, are still exported; manifest gauges refresh every scrape — a
+    commit between scrapes must show up even while the /report TTL window
+    is open."""
     tbl, lineage = small_table
     srv = ReportServer(spark, tbl, port=0, lineage_dir=None,
                        report_ttl_seconds=3600.0)
@@ -289,8 +326,8 @@ def test_metrics_without_lineage_dir_omits_series_and_stays_cheap(
     try:
         _, _, text = _get_text(srv.port, "/metrics")
         vals = _parse_prom(text)
-        assert "gdps_rows_upserted_total" not in vals
-        assert srv.lineage_builds == 0
+        assert "gdps_lineage_epochs" not in vals
+        assert vals["gdps_rows_upserted_total"] == 12
 
         app = ChangeApplier(tbl)
         app.apply_batch(spark.createDataFrame(
@@ -304,20 +341,93 @@ def test_metrics_without_lineage_dir_omits_series_and_stays_cheap(
         srv.shutdown()
 
 
-def test_metrics_lineage_ttl_builds_once_per_window(spark, small_table):
-    """The lineage aggregation (Spark jobs) is TTL-cached exactly like
-    /report: repeated scrapes inside the window run it once."""
+def test_metrics_scrape_launches_no_spark_job(spark, small_table):
+    """With a lineage dir configured, a /metrics scrape reads the manifest
+    and lists the lineage dir: no Spark job runs.  (It used to aggregate the
+    lineage feed with Spark, behind a TTL cache.)"""
+    from conftest import jobs_launched
+
     tbl, lineage = small_table
-    srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage,
-                       report_ttl_seconds=3600.0)
+    srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
     srv.start()
     try:
-        _, _, a = _get_text(srv.port, "/metrics")
-        _, _, b = _get_text(srv.port, "/metrics")
-        assert srv.lineage_builds == 1
-        assert a == b
+        # the route's body, built on this thread so the job group sees it
+        with jobs_launched(spark.sparkContext) as jobs:
+            text = srv._metrics_text()
+        _, _, served = _get_text(srv.port, "/metrics")
     finally:
         srv.shutdown()
+    assert jobs == []
+    assert served == text
+    vals = _parse_prom(text)
+    assert vals["gdps_lineage_epochs"] == 1
+    assert vals["gdps_rows_upserted_total"] == 12  # 3 convs x 4 turns
+
+
+def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,
+                                                    monkeypatch):
+    """A crash after epoch N's commit and before its lineage file: the
+    redelivered epoch is a skipped replay that writes no lineage, so totals
+    summed from the lineage feed would miss epoch N for good.  The manifest
+    totals commit with the epoch and count it exactly once, and
+    gdps_lineage_epochs shows the gap — one behind the committed epochs.
+    A crash before the quarantine append, healed on replay, leaves the
+    quarantined total as its commit left it."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tbl, lineage = small_table
+    qdir = f"{tbl.root}/_quarantine"
+    app = ChangeApplier(tbl, lineage_dir=lineage, quarantine_dir=qdir)
+    batch = spark.createDataFrame(
+        [(51, "I", "c0", 6, "user", "a", None, None, 1),
+         (52, "I", "c1", 6, "user", "b", None, None, 1),
+         (53, "I", None, 6, "user", "bad-key", None, None, 1)], SCHEMA)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash after the commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(ChangeApplier, "_write_lineage", crash)
+        with pytest.raises(RuntimeError, match="crash after the commit"):
+            app.apply_batch(batch, epoch_id=1)
+    assert app.apply_batch(batch, epoch_id=1)["status"] == "skipped_replay"
+
+    srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
+    srv.start()
+    try:
+        _, _, text = _get_text(srv.port, "/metrics")
+    finally:
+        srv.shutdown()
+    vals = _parse_prom(text)
+    m = tbl.manifest()
+    assert m["epoch_hwm"] == 1
+    assert vals["gdps_rows_upserted_total"] == 12 + 2
+    assert vals["gdps_rows_quarantined_total"] == 1
+    assert vals["gdps_lineage_epochs"] == (m["epoch_hwm"] + 1) - 1
+
+    # epoch 2: the quarantine append crashes after the commit
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_quarantine(self, path, *a, **k):
+        if path == qdir:
+            raise RuntimeError("crash before the quarantine append")
+        return real_parquet(self, path, *a, **k)
+
+    poisoned = spark.createDataFrame(
+        [(61, "I", "c2", 6, "user", "c", None, None, 1),
+         (62, "I", None, 6, "user", "bad1", None, None, 1),
+         (63, "X", "c2", 7, "user", "bad2", None, None, 1)], SCHEMA)
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash_quarantine)
+        with pytest.raises(RuntimeError, match="quarantine append"):
+            app.apply_batch(poisoned, epoch_id=2)
+    committed = tbl.manifest()["rows_quarantined_total"]
+    assert committed == 1 + 2
+    healed = app.apply_batch(poisoned, epoch_id=2)
+    assert healed["status"] == "skipped_replay"
+    assert healed["healed_quarantine_rows"] == 2
+    assert tbl.manifest()["rows_quarantined_total"] == committed
+    assert app.skipped_keys().count() == 3
 
 
 def test_fully_quarantined_batch_reaches_metrics(spark, small_table):
@@ -359,11 +469,10 @@ def test_fully_quarantined_batch_reaches_metrics(spark, small_table):
     vals = _parse_prom(text)
     assert vals["gdps_rows_quarantined_total"] == 2
     assert vals["gdps_lineage_epochs"] == 2
-    # /report shares the lineage cache but forces a FRESH aggregation for
-    # its own build (document coherence), so: one build for the scrape,
-    # one forced by the report
     assert report["lineage_epochs"] == 2
-    assert srv.lineage_builds == 2
+    # the skipped-key set, read with the declared quarantine schema
+    assert report["rows_skipped_total"] == 2
+    assert [r["lsn"] for r in report["skipped_sample"]] == [41, 42]
 
 
 def test_row_route_serves_bucket_pruned_point_lookup(spark, small_table):
