@@ -127,37 +127,66 @@ def test_healthz_answers_while_report_runs(spark, small_table):
         srv.shutdown()
 
 
-def test_report_on_fresh_pipeline(spark, tmpdir_path):
-    """A fresh pipeline: the lineage dir given to `serve --lineage DIR` is
-    configured but still empty, or does not exist yet (ChangeApplier only
-    creates it on its first applied batch).  Either way /report must be a
-    200 with zeroed lineage fields, not UNABLE_TO_INFER_SCHEMA or
-    PATH_NOT_FOUND; ``rows_upserted_total`` is the manifest's total, 0
-    before the first commit (it was None as a sum over an empty feed)."""
+def test_report_on_fresh_pipeline_with_empty_lineage_dir(spark, tmpdir_path):
+    """A lineage dir that is configured but still EMPTY (fresh pipeline,
+    report before the first lineage write) must yield a 200 with zeroed
+    lineage fields, not UNABLE_TO_INFER_SCHEMA and a 500.
+    ``rows_upserted_total`` is the manifest's total: 0 before the first
+    commit (it was None as a sum over an empty feed), then the committed
+    rows."""
     import os
 
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
-    empty = f"{tmpdir_path}/lineage_empty"
-    os.makedirs(empty)
-    missing = f"{tmpdir_path}/lineage_never_created"
-    for lineage in (empty, missing):
-        report = build_report(spark, tbl, lineage_dir=lineage)
-        assert report["lineage_epochs"] == 0
-        assert report["rows_upserted_total"] == 0
+    lineage = f"{tmpdir_path}/lineage_empty"
+    os.makedirs(lineage)
+    report = build_report(spark, tbl, lineage_dir=lineage)
+    assert report["lineage_epochs"] == 0
+    assert report["rows_upserted_total"] == 0
 
-    app = ChangeApplier(tbl)  # no lineage writer — the dirs stay as they are
+    app = ChangeApplier(tbl)  # no lineage writer — the dir stays empty
     app.apply_batch(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "a", None, None, 1)], SCHEMA), epoch_id=0)
-    for lineage in (empty, missing):
-        srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
-        srv.start()
-        try:
-            st, served = _get(srv.port, "/report")
-        finally:
-            srv.shutdown()
+    report = build_report(spark, tbl, lineage_dir=lineage)
+    assert report["lineage_epochs"] == 0
+    assert report["rows_upserted_total"] == 1
+
+    srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
+    srv.start()
+    try:
+        st, served = _get(srv.port, "/report")
         assert st == 200 and served["rows"] == 1
-        assert served["lineage_epochs"] == 0
         assert served["rows_upserted_total"] == 1
+    finally:
+        srv.shutdown()
+
+
+def test_report_with_not_yet_created_lineage_dir(spark, tmpdir_path):
+    """The actual fresh-pipeline state: ChangeApplier only CREATES the
+    lineage dir on the first applied batch, so `serve --lineage DIR` started
+    before the stream's first commit points at a path that does not exist.
+    The report must zero the lineage fields instead of 500ing with
+    PATH_NOT_FOUND."""
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
+    missing = f"{tmpdir_path}/lineage_never_created"
+    report = build_report(spark, tbl, lineage_dir=missing)
+    assert report["lineage_epochs"] == 0
+    assert report["rows_upserted_total"] == 0
+
+    app = ChangeApplier(tbl)
+    app.apply_batch(spark.createDataFrame(
+        [(1, "I", "c1", 0, "user", "a", None, None, 1)], SCHEMA), epoch_id=0)
+    report = build_report(spark, tbl, lineage_dir=missing)
+    assert report["lineage_epochs"] == 0
+    assert report["rows_upserted_total"] == 1
+
+    srv = ReportServer(spark, tbl, port=0, lineage_dir=missing)
+    srv.start()
+    try:
+        st, served = _get(srv.port, "/report")
+        assert st == 200 and served["lineage_epochs"] == 0
+        assert served["rows"] == 1 and served["rows_upserted_total"] == 1
+    finally:
+        srv.shutdown()
 
 
 def test_report_ttl_cache_builds_once_per_window(spark, small_table):
