@@ -700,16 +700,6 @@ class TranscriptTable:
 
     # ---------------- reads ----------------
 
-    def _read_files(self, m: dict, schema_id: int, paths: list[str]) -> DataFrame:
-        """Files of one schema id, read with its declared schema plus the
-        (op, __seq) every writer adds: no inference job, and with
-        ``get_spark``'s listing threshold no listing job either."""
-        read_schema = T.StructType(
-            self._declared_schema(m, schema_id).fields
-            + [T.StructField("op", T.StringType()),
-               T.StructField("__seq", T.LongType())])
-        return self.spark.read.schema(read_schema).parquet(*paths)
-
     def version_as_of(self, ts: float) -> int:
         """Timestamp time travel: the newest committed version whose commit
         time is <= ``ts`` (unix seconds) — Iceberg's snapshot-as-of-time
@@ -723,13 +713,36 @@ class TranscriptTable:
             raise ValueError(f"no snapshot committed at or before {ts}")
         return best
 
+    def _read_groups(self, m: dict, files: list, target: T.StructType,
+                     *extra: str) -> DataFrame:
+        """``files`` of manifest ``m`` as one frame cast to ``target``, plus
+        the ``extra`` SQL columns.  Each schema id's files are read with the
+        schema ``m`` declares for it plus the (op, __seq) every writer adds:
+        no inference job, and with ``get_spark``'s listing threshold no
+        listing job either.  Files group by schema id only, so the union
+        stays O(live schemas) wide no matter how many commits are live (a
+        per-commit read group would grow the driver plan without bound
+        between compactions)."""
+        groups: dict[int, list[str]] = {}
+        for f in files:
+            groups.setdefault(int(f["schema_id"]), []).append(f["path"])
+        out = None
+        for sid, paths in groups.items():
+            read_schema = T.StructType(
+                self._declared_schema(m, sid).fields
+                + [T.StructField("op", T.StringType()),
+                   T.StructField("__seq", T.LongType())])
+            df = self.spark.read.schema(read_schema).parquet(*paths)
+            df = df.selectExpr(*project_to(target, df.columns), *extra)
+            out = df if out is None else out.unionByName(df)
+        return out
+
     def snapshot(self, buckets: list[int] | None = None,
                  version: int | None = None,
-                 as_of: float | None = None,
                  keep_tombstones: bool = False) -> DataFrame:
         """Committed state (optionally pruned to a bucket subset), at the
-        current version, any past version, or the version live at unix
-        time ``as_of`` (time travel by version or by timestamp).
+        current version or any past version (time travel; resolve a unix
+        time with ``version_as_of``).
         ``keep_tombstones=True`` returns the fold *winners* including delete
         tombstones with an ``op`` column — what compaction rewrites, so late
         out-of-order changes below a tombstone's order value still lose
@@ -749,12 +762,8 @@ class TranscriptTable:
         current schema — the scan-time cast Iceberg does for old data files.
         The manifest names the files and their schema, so building the
         DataFrame runs no listing or schema-inference job (see
-        ``_read_files``).
+        ``_read_groups``).
         """
-        if as_of is not None:
-            if version is not None:
-                raise ValueError("pass version or as_of, not both")
-            version = self.version_as_of(as_of)
         m = self.manifest(version)
         target = self._declared_schema(m)
         out_cols = [ident(f.name) for f in target.fields]
@@ -778,32 +787,16 @@ class TranscriptTable:
         # set (see _split_snapshot_files; plan pinned in test_plan_shapes).
         fold_files, clean_files = _split_snapshot_files(files)
 
-        def read_group(subset: list, with_seq: bool) -> DataFrame:
-            # Every data file carries (op, __seq) as data columns, so files
-            # group by SCHEMA ID only — the union stays O(live schemas) wide
-            # no matter how many commits are live (a per-commit read group
-            # would grow the driver plan without bound between compactions).
-            groups: dict[int, list[str]] = {}
-            for f in subset:
-                groups.setdefault(int(f["schema_id"]), []).append(f["path"])
-            extra = ["`op`", "`__seq`"] if with_seq else ["`op`"]
-            parts = []
-            for sid, paths in groups.items():
-                df = self._read_files(m, sid, paths)
-                parts.append(df.selectExpr(*project_to(target, df.columns), *extra))
-            grouped = parts[0]
-            for p in parts[1:]:
-                grouped = grouped.unionByName(p)
-            return grouped
-
         folded = None
         if fold_files:
             from ..operators.dedup import last_wins
 
-            folded = last_wins(read_group(fold_files, with_seq=True),
-                               key=self.key, order=(self.order_col, "__seq"))
+            folded = last_wins(
+                self._read_groups(m, fold_files, target, "`op`", "`__seq`"),
+                key=self.key, order=(self.order_col, "__seq"))
             folded = folded.drop("__seq")
-        clean = read_group(clean_files, with_seq=False) if clean_files else None
+        clean = (self._read_groups(m, clean_files, target, "`op`")
+                 if clean_files else None)
         if folded is not None and clean is not None:
             out = folded.unionByName(clean)
         else:
@@ -941,10 +934,9 @@ class TranscriptTable:
         self,
         changes: DataFrame,
         epoch_id: int,
-        deduped: bool = False,
         writer_id: str = "default",
         write_parallelism: int | None = None,
-        count_quarantined=None,
+        pre_commit=None,
     ) -> dict:
         """Idempotent, LSN-guarded MERGE of one change batch.
 
@@ -973,12 +965,13 @@ class TranscriptTable:
         (touched buckets, upsert/delete counts, order-col bounds) come from
         the written files' parquet footers, read driver-side.
 
-        This method owns the dedup shape.  ``deduped=False`` (the default)
-        folds the in-batch last-wins into the bucket exchange: one shuffle
-        per microbatch.  Only an overlap-guarded table dedups first (the
-        guard needs the winners before the write).  ``deduped=True`` skips
-        the dedup (the caller — the routed ChangeApplier — already reduced
-        the batch to one winner per key).
+        This method owns the dedup: the in-batch last-wins always rides the
+        bucket exchange, so the write plan has one shuffle per microbatch.
+        A batch already reduced to one winner per key (the routed
+        ChangeApplier's halves) runs the same plan — winners of winners are
+        the same winners.  An overlap-guarded table also probes
+        ``last_wins(changes)`` against the stored intervals before the
+        write.
 
         Every step of the plan is SQL text (see ``sqltext``): building it
         costs the driver about a hundred py4j round trips, not one per
@@ -993,9 +986,10 @@ class TranscriptTable:
         status-service/sync/tick_processor.go:163).
 
         The commit adds the epoch's upserted and deleted rows to the
-        manifest's ``ROW_TOTALS``, and ``count_quarantined()`` (a
-        zero-argument callable, called after the write job) to the
-        quarantined total.
+        manifest's ``ROW_TOTALS``.  ``pre_commit(per_bucket)``, called after
+        the write job and before the commit, writes the caller's own outputs
+        of the epoch and returns its quarantined row count, which the commit
+        adds to the quarantined total.
         """
         m = self.manifest()
         hwm0, recent0 = self._writer_state(m, writer_id)
@@ -1009,24 +1003,20 @@ class TranscriptTable:
         # the key (silent loss for numeric-keyed tables).
         changes = changes.selectExpr(
             *project_to(target_schema, changes.columns), "`op`")
-        # r7: when this merge owns the dedup, FUSE the in-batch last-wins
-        # into the (balanced) bucket shuffle — one exchange per microbatch
-        # instead of two.  A first fusion attempt over the raw bucket hash
-        # lost the chunk-replay A/B 2-3× to bucket-hash collision skew (~1/e
-        # of the tasks empty, others holding 2-3 buckets); with the balanced
-        # pkey placement (one bucket per task, see balanced_write_pkey) the
-        # same fusion wins every interleaved rep of the headline 4×1M replay
-        # by 15-25% (plans/r07/fused_ab_run{1,2}.json; full-row snapshot
-        # equality verified on both runs).  The overlap guard needs
-        # the winners BEFORE the write job, so it keeps the standalone dedup.
-        fuse_dedup = not deduped and self.overlap_guard is None
-        if not deduped and not fuse_dedup:
+        # r7: the in-batch last-wins is FUSED into the (balanced) bucket
+        # shuffle — one exchange per microbatch instead of two.  A first
+        # fusion attempt over the raw bucket hash lost the chunk-replay A/B
+        # 2-3× to bucket-hash collision skew (~1/e of the tasks empty, others
+        # holding 2-3 buckets); with the balanced pkey placement (one bucket
+        # per task, see balanced_write_pkey) the same fusion wins every
+        # interleaved rep of the headline 4×1M replay by 15-25%
+        # (plans/r07/fused_ab_run{1,2}.json; full-row snapshot equality
+        # verified on both runs).
+        if self.overlap_guard is not None:
             from ..operators.dedup import last_wins
 
-            changes = last_wins(changes, key=self.key, order=(self.order_col,))
-
-        if self.overlap_guard is not None:
-            self._check_overlap(changes)
+            self._check_overlap(
+                last_wins(changes, key=self.key, order=(self.order_col,)))
 
         seq = m["version"] + 1
         # fail fast on null merge keys, inside the write job (zero extra
@@ -1043,25 +1033,22 @@ class TranscriptTable:
                          if write_parallelism else self.write_tasks())
 
         def shape(placed: DataFrame) -> DataFrame:
-            if fuse_dedup:
-                # FUSED in-batch last-wins (guide §2.4): placement is a pure
-                # function of key[0], so the write repartition already
-                # clusters every key group into one task; grouping by the
-                # partition key itself (plus __bucket — functionally
-                # dependent, a no-op for the groups) lets Catalyst prove the
-                # distribution is satisfied and plan NO second exchange.
-                # Winners are identical to last_wins: max_by over the same
-                # (order_col, op-rank) within the same key groups.
-                from ..operators.dedup import winner_sql
+            # FUSED in-batch last-wins (guide §2.4): placement is a pure
+            # function of key[0], so the write repartition already clusters
+            # every key group into one task; grouping by the partition key
+            # itself (plus __bucket — functionally dependent, a no-op for the
+            # groups) lets Catalyst prove the distribution is satisfied and
+            # plan NO second exchange.  Winners are identical to last_wins:
+            # max_by over the same (order_col, op-rank) within the same key
+            # groups.
+            from ..operators.dedup import winner_sql
 
-                payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
-                out = (
-                    placed.groupBy("__pkey", "__bucket", *self.key)
-                    .agg(F.expr(winner_sql(payload, (self.order_col,))))
-                    .select("__win.*")
-                )
-            else:
-                out = placed.drop("__pkey")
+            payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
+            out = (
+                placed.groupBy("__pkey", "__bucket", *self.key)
+                .agg(F.expr(winner_sql(payload, (self.order_col,))))
+                .select("__win.*")
+            )
             # delete marker as a NULLABLE data column (1 for tombstones, NULL
             # otherwise): the parquet footer's per-column null counts then
             # yield the exact upsert/delete split with zero extra reads, so
@@ -1137,7 +1124,7 @@ class TranscriptTable:
 
         counts = (sum(r["rows_upserted"] for r in per_bucket),
                   sum(r["rows_deleted"] for r in per_bucket),
-                  count_quarantined() if count_quarantined else 0)
+                  pre_commit(per_bucket) if pre_commit else 0)
         self._commit(m, writer_id=writer_id, files_added=new_files,
                      epoch_id=epoch_id, batch_max_lsn=batch_max_lsn,
                      counts=counts)
@@ -1146,7 +1133,7 @@ class TranscriptTable:
             "epoch_id": epoch_id,
             "touched_buckets": touched,
             "files_written": len(new_files),
-            "per_bucket": per_bucket,
+            "rows_quarantined": counts[2],
         }
 
     def _check_overlap(self, winners: DataFrame) -> None:
@@ -1420,18 +1407,8 @@ class TranscriptTable:
         )
         if not in_window:
             return self.spark.createDataFrame([], out_schema)
-        groups: dict[int, list[str]] = {}
-        for f in in_window:
-            groups.setdefault(int(f["schema_id"]), []).append(f["path"])
-        parts = []
-        for sid, paths in groups.items():
-            df = self._read_files(m, sid, paths)
-            parts.append(df.selectExpr(*project_to(target, df.columns), "`op`",
-                                       "`__seq` AS commit_version"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._read_groups(m, in_window, target, "`op`",
+                                 "`__seq` AS commit_version")
 
     def delta_file_counts(self) -> dict[int, int]:
         """Per-bucket live delta-file counts — the compaction trigger signal."""

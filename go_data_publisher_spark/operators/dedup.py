@@ -48,11 +48,11 @@ def last_wins(df: DataFrame, key=("conv_id", "turn_idx"), order=("lsn",)) -> Dat
     (Contrast with a row_number() window, which shuffles every duplicate to
     one partition — see `last_wins_window` below, kept for comparison.)
 
-    The merge's default path does NOT run this two-phase shape: with no
-    pre-deduped input, ``TranscriptTable.merge`` fuses the same max_by into
-    its bucket exchange (one exchange, aggregate after it).  This function
-    runs for the routed applier path, the overlap-guarded merge and the
-    snapshot fold.
+    The merge's write never runs this two-phase shape:
+    ``TranscriptTable.merge`` fuses the same max_by into its bucket exchange
+    (one exchange, aggregate after it).  This function runs for the routed
+    applier's winners before the route split, the overlap guard's probe and
+    the snapshot fold.
     """
     return (
         df.groupBy(*key)

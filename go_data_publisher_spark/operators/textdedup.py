@@ -64,7 +64,7 @@ def _words_sql(text_col: str) -> str:
 
 def _shingles_sql(k: int) -> str:
     """Word k-shingles of the ``__w`` words column as an array of strings,
-    deduped per doc (exact Jaccard is set arithmetic)."""
+    distinct per doc (exact Jaccard is set arithmetic)."""
     return (f"array_distinct(transform(sequence(0, greatest(size(__w) - {k}, 0)), "
             f"i -> concat_ws(' ', slice(__w, i + 1, {k}))))")
 

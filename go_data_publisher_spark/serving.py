@@ -48,10 +48,10 @@ def build_status(tbl) -> dict:
 
 
 def lineage_epochs(lineage_dir: str) -> int:
-    """Epochs in the lineage feed: ChangeApplier writes one
-    ``epoch-*.json`` file per committed epoch, after the commit — so a
-    count behind the committed epochs is a lineage gap (0 when the dir does
-    not exist yet)."""
+    """(writer, epoch) pairs in the lineage feed: ChangeApplier writes one
+    ``epoch-*.json`` file per pair, just before the epoch's commit — so the
+    count runs ahead of the committed epochs only while an epoch is in
+    flight or awaiting redelivery (0 when the dir does not exist yet)."""
     return len(glob.glob(os.path.join(lineage_dir, "epoch-*.json")))
 
 

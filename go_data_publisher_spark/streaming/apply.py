@@ -11,41 +11,46 @@ Stages (all declarative):
  1. validity guard  → quarantine invalid rows or abort the batch (F4/V4)
  2. schema-evolution diff → widen target before apply (archiverv1/v2 analogue)
  3. last-wins dedup per (conv_id, turn_idx) by (lsn, op-rank)  (D4),
-    fused into the merge's bucket exchange unless routed
- 4. merge-on-read delta commit into the bucketed lake table    (D1/D5)
- 5. lineage manifest row per touched partition + batch metrics (A5/S8)
+    fused into the merge's bucket exchange
+ 4. merge-on-read delta write into the bucketed lake table    (D1/D5)
+ 5. the epoch's quarantine rows and lineage rows per touched partition
+    (A5/S8), then the manifest commit
 
 Per microbatch this runs one Spark job on the default path: the delta write
 (scan → one bucket exchange that also carries the last-wins dedup →
-parquet), plus a quarantine append when the batch holds invalid rows.
+parquet), plus a quarantine write when the batch holds invalid rows.
 Lineage counters come from the written files' parquet footers, and the
 invalid-row count rides the write job as an Observation — zero extra scans.
 The plan itself is described in SQL text (see ``sqltext``), so building it
 costs the driver about a hundred py4j round trips, not one per Column node.
 
-Exactly-once: the table's manifest commit records epoch_id and adds the
-epoch's upserted, deleted and quarantined rows to the manifest's running
-totals; a replayed batch (same epoch_id) is a no-op.  The lineage file is
-written after the commit, so a crash between the two leaves a lineage gap,
-never a miscounted total.  Transient sink failures are retried with
-bounded exponential backoff + jitter (the reference retries ES bulk writes
-on 429/502/503/504 up to 15 times, transactions-consumer/main.go:118-120,
-186-201); each retry writes a fresh commit dir, so a half-written attempt
-leaves only orphan files that vacuum() collects — never a double commit.
+Exactly-once: the manifest commit is the epoch's last write, as the
+reference commits its offsets only after the sink write.  The delta files,
+the quarantine rows and the lineage file are all written before it; the
+quarantine and lineage outputs are named by (writer id, epoch), so a
+redelivered epoch overwrites what a crashed attempt left.  The commit
+records epoch_id and adds the epoch's upserted, deleted and quarantined
+rows to the manifest's running totals; a replayed committed epoch is a
+no-op.  After the commit the only writes are inline compaction's own
+commits.  Transient sink failures are retried with bounded exponential
+backoff + jitter (the reference retries ES bulk writes on 429/502/503/504
+up to 15 times, transactions-consumer/main.go:118-120, 186-201); each retry
+writes a fresh commit dir, so a half-written attempt leaves only orphan
+files that vacuum() collects — never a double commit.
 """
 
 from __future__ import annotations
 
-import functools
+import os
 import random
 import time
 from dataclasses import dataclass, field
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import schemas
 from ..lake.table import TranscriptTable
 from ..operators.dedup import last_wins
 from ..operators.routing import split_valid, validity_sql
@@ -159,7 +164,7 @@ class RetryPolicy:
 
 
 class ChangeApplier:
-    """Applies deduped change batches into a TranscriptTable."""
+    """Applies change batches, last-wins per key, into a TranscriptTable."""
 
     def __init__(
         self,
@@ -185,14 +190,16 @@ class ChangeApplier:
         skip-list mode, status-service/db/store.go:79-111) or "error" (abort
         the batch before anything is applied, the reference's strict mode).
 
-        ``retry``: RetryPolicy wrapped around every sink write (merge +
-        quarantine).  Defaults to 5 attempts of exponential backoff with
+        ``retry``: RetryPolicy wrapped around every sink write (each merge
+        attempt also writes the quarantine and lineage outputs).  Defaults to 5 attempts of exponential backoff with
         jitter; pass RetryPolicy(max_attempts=1) to disable.
 
         ``writer_id``: scopes the epoch replay guard (Delta txnAppId
         pattern) — give each logical pipeline / checkpoint lineage its own
         id so a fresh checkpoint's epochs restarting at 0 are never mistaken
-        for replays of another writer's epochs.
+        for replays of another writer's epochs.  It also names the epoch's
+        quarantine and lineage outputs, so writers sharing those dirs keep
+        each other's files.
 
         ``compact_delta_files``: merge-on-read maintenance policy — after a
         commit, any bucket whose live delta-file count reaches this
@@ -219,13 +226,9 @@ class ChangeApplier:
 
     def apply_batch(self, batch: DataFrame, epoch_id: int) -> dict:
         if self.table.is_epoch_committed(epoch_id, writer_id=self.writer_id):
-            # replayed microbatch after crash-before-checkpoint: the merge is
-            # a no-op, but a crash BETWEEN the manifest commit and the
-            # quarantine append would otherwise lose the skipped-key rows
-            # forever — the redelivered batch heals that window (idempotent
-            # via a per-epoch marker file)
-            healed = self._heal_quarantine(batch, epoch_id)
-            return {"status": "skipped_replay", "epoch_id": epoch_id, **healed}
+            # replayed microbatch after crash-before-checkpoint: every
+            # output of the epoch was written before its commit
+            return {"status": "skipped_replay", "epoch_id": epoch_id}
 
         from pyspark.sql import Observation
 
@@ -252,17 +255,29 @@ class ChangeApplier:
         observed = batch.observe(obs, F.expr(n_invalid))
         valid, quarantined = split_valid(observed, key_cols=key)
 
-        @functools.cache
-        def count_quarantined() -> int:
-            # ready once the main merge's write job has run: merge() calls
-            # it before its commit, so the count commits with the epoch
+        def pre_commit(per_bucket: list) -> int:
+            # merge() calls this after the main merge's write job and before
+            # its commit: the epoch's quarantine rows and lineage file land
+            # before the manifest records the epoch, and the count commits
+            # with it
             try:
                 stats_row = obs.get
             except Exception:
                 # degenerate (e.g. empty) batch: the observed metrics row
                 # may be unavailable — fall back to a direct aggregate
                 stats_row = batch.agg(F.expr(n_invalid)).first()
-            return int(stats_row["nq"] or 0)
+            n_q = int(stats_row["nq"] or 0)
+            if self.quarantine_dir:
+                # the dir exists once an epoch commits, so a clean run's
+                # skipped-key set reads as 0 rows
+                os.makedirs(self.quarantine_dir, exist_ok=True)
+                if n_q:
+                    (quarantined.selectExpr(
+                        "*", f"CAST({int(epoch_id)} AS BIGINT) AS __epoch_id")
+                     .write.mode("overwrite")
+                     .parquet(f"{self.quarantine_dir}/{self._epoch_name(epoch_id)}"))
+            self._write_lineage(epoch_id, per_bucket, n_q)
+            return n_q
 
         if self.on_invalid == "error":
             # strict mode pays one extra (pushdown-pruned) job to abort
@@ -285,11 +300,11 @@ class ChangeApplier:
         if self.ephemeral_table is not None:
             self.retry.run(lambda: self.ephemeral_table.evolve_schema(batch_schema))
 
-        # merge() owns the dedup shape and the cast to the target schema: the
-        # default path hands it the raw valid rows and it fuses the in-batch
-        # last-wins into its bucket exchange.  The routing path needs the
-        # winners (cast to the target schema the route predicate is written
-        # against) materialized before the split.
+        # merge() owns the dedup and the cast to the target schema: it fuses
+        # the in-batch last-wins into its bucket exchange.  The routing path
+        # needs the winners (cast to the target schema the route predicate
+        # is written against) materialized before the split; merging them
+        # runs the same fused plan, and winners of winners are the winners.
         if self.route_sql is not None:
             # F3 dual-target routing: split winners by predicate; each
             # target computes its own touched buckets + cursor.  The winners
@@ -303,40 +318,25 @@ class ChangeApplier:
                 eph = changes.where(self.route_sql)
                 perm = changes.where(f"NOT coalesce(({self.route_sql}), false)")
                 self._merge_sink(self.ephemeral_table, eph, epoch_id)
-                stats = self._merge_sink(self.table, perm, epoch_id,
-                                         count_quarantined=count_quarantined)
+                stats = self._merge_sink(self.table, perm, epoch_id, pre_commit)
             finally:
                 changes.unpersist()
         else:
-            stats = self._merge_sink(self.table, valid, epoch_id, deduped=False,
-                                     count_quarantined=count_quarantined)
-        per_bucket = stats.pop("per_bucket", [])
+            stats = self._merge_sink(self.table, valid, epoch_id, pre_commit)
+        stats.setdefault("rows_quarantined", 0)
 
-        n_quarantined = count_quarantined()
-        if self.quarantine_dir:
-            if n_quarantined:
-                self.retry.run(
-                    lambda: quarantined.selectExpr("*", f"{int(epoch_id)} AS __epoch_id")
-                    .write.mode("append").parquet(self.quarantine_dir)
-                )
-            self._mark_quarantined(epoch_id)
-
-        if stats["status"] == "committed":
-            self._write_lineage(epoch_id, per_bucket, n_quarantined)
-            if self.compact_delta_files is not None:
-                hot = sorted(
-                    b for b, n in self.table.delta_file_counts().items()
-                    if n >= self.compact_delta_files
-                )
-                if hot:
-                    self.retry.run(lambda: self.table.compact(buckets=hot))
-                    stats["compacted_buckets"] = hot
-        stats["rows_quarantined"] = n_quarantined
+        if stats["status"] == "committed" and self.compact_delta_files is not None:
+            hot = sorted(
+                b for b, n in self.table.delta_file_counts().items()
+                if n >= self.compact_delta_files
+            )
+            if hot:
+                self.retry.run(lambda: self.table.compact(buckets=hot))
+                stats["compacted_buckets"] = hot
         return stats
 
     def _merge_sink(self, tbl: TranscriptTable, changes: DataFrame,
-                    epoch_id: int, deduped: bool = True,
-                    count_quarantined=None) -> dict:
+                    epoch_id: int, pre_commit=None) -> dict:
         """Retry-wrapped merge with a DEGRADE ladder: when the full-width
         write keeps failing retriably even after the backoff budget, retry
         at progressively lower write parallelism (half, quarter, ..., serial)
@@ -348,9 +348,9 @@ class ChangeApplier:
         at every width.  Each attempt is a fresh commit dir, so abandoned
         attempts are vacuum-collected orphans — never a partial commit."""
         def attempt(wp=None):
-            return tbl.merge(changes, epoch_id=epoch_id, deduped=deduped,
+            return tbl.merge(changes, epoch_id=epoch_id,
                              writer_id=self.writer_id, write_parallelism=wp,
-                             count_quarantined=count_quarantined)
+                             pre_commit=pre_commit)
 
         try:
             return self.retry.run(attempt)
@@ -374,45 +374,20 @@ class ChangeApplier:
                 width = max(1, width // 2)
             raise last
 
-    def _quarantine_marker(self, epoch_id: int) -> str:
-        return f"{self.quarantine_dir}/_epoch-{int(epoch_id):012d}.done"
-
-    def _mark_quarantined(self, epoch_id: int) -> None:
-        import os
-
-        os.makedirs(self.quarantine_dir, exist_ok=True)
-        with open(self._quarantine_marker(epoch_id), "w") as f:
-            f.write("done")
-
-    def _heal_quarantine(self, batch: DataFrame, epoch_id: int) -> dict:
-        """Replay path: if this committed epoch's quarantine marker is
-        missing (crash between manifest commit and quarantine append),
-        recompute the invalid rows from the redelivered batch and persist
-        them now.  Costs one filter job, only on that rare crash window."""
-        import os
-
-        if not self.quarantine_dir or os.path.exists(self._quarantine_marker(epoch_id)):
-            return {}
-        bad = batch.where(
-            f"NOT coalesce({validity_sql(key_cols=tuple(self.table.key))}, false)")
-        n = bad.count()
-        if n:
-            self.retry.run(
-                lambda: bad.selectExpr("*", f"{int(epoch_id)} AS __epoch_id")
-                .write.mode("append").parquet(self.quarantine_dir)
-            )
-        self._mark_quarantined(epoch_id)
-        return {"healed_quarantine_rows": n}
+    def _epoch_name(self, epoch_id: int) -> str:
+        """The file name stem of one (writer, epoch)'s quarantine and lineage
+        outputs: a redelivered epoch rewrites its own, and writers sharing a
+        dir never touch each other's."""
+        return f"epoch-{int(epoch_id):012d}-{quote(self.writer_id, safe='')}"
 
     def _write_lineage(self, epoch_id, per_bucket_rows, n_q):
-        """Per-partition lineage manifest rows (FIXTURES.md §3), appended
-        driver-side as JSON lines — ≤ n_buckets tiny rows per microbatch, so
-        a Spark write job would be pure overhead.  Queryable via
-        ``lineage()`` (spark.read.json with the declared schema)."""
+        """Per-partition lineage manifest rows (FIXTURES.md §3) in the
+        epoch's own JSON-lines file, written driver-side — ≤ n_buckets tiny
+        rows per microbatch, so a Spark write job would be pure overhead.
+        Read it with ``schemas.LINEAGE_SCHEMA``."""
         if not self.lineage_dir:
             return
         import json
-        import os
 
         os.makedirs(self.lineage_dir, exist_ok=True)
         now = time.strftime("%Y-%m-%dT%H:%M:%S")
@@ -426,7 +401,7 @@ class ChangeApplier:
             per_bucket_rows = [{"__bucket": -1, "lsn_from": None,
                                 "lsn_to": None, "rows_upserted": 0,
                                 "rows_deleted": 0}]
-        with open(f"{self.lineage_dir}/epoch-{int(epoch_id):012d}.json", "w") as f:
+        with open(f"{self.lineage_dir}/{self._epoch_name(epoch_id)}.json", "w") as f:
             for r in per_bucket_rows:
                 f.write(
                     json.dumps(
@@ -444,40 +419,24 @@ class ChangeApplier:
                     + "\n"
                 )
 
-    def lineage(self) -> DataFrame:
-        return self.table.spark.read.schema(schemas.LINEAGE_SCHEMA).json(self.lineage_dir)
-
-    def skipped_keys(self) -> DataFrame:
-        """The persisted skipped-key set (V4 continue mode), sorted by key —
-        the reference's sorted read-back of its skip store
-        (status-service/db/store.go:79-111)."""
-        if not self.quarantine_dir:
-            raise ValueError("no quarantine_dir configured")
-        key = list(self.table.key)
-        order = self.table.order_col
-        return (
-            read_quarantine(self.table, self.quarantine_dir)
-            # distinct: the at-least-once heal path may re-append an epoch's
-            # rows if the marker write itself was lost
-            .distinct()
-            .orderBy(*key, order)
-        )
-
 
 def read_quarantine(table: TranscriptTable, path: str) -> DataFrame:
     """The quarantine dir at ``path`` read with a declared schema: the
     table's key and order columns (nullable — quarantined rows are the ones
-    with a null key), ``op`` and ``__epoch_id`` as the writer writes them.
-    Declaring it skips the schema-inference job, and a dir holding only the
-    per-epoch ``_epoch-*.done`` markers (a clean run) reads as 0 rows."""
+    with a null key), ``op`` and ``__epoch_id`` (a BIGINT, as
+    ``LINEAGE_SCHEMA.epoch_id``) as the writer writes them, one subdir per
+    (writer, epoch), read recursively.  Declaring it skips the
+    schema-inference job, and the empty dir of a clean run reads as 0
+    rows."""
     by_name = {f.name: f for f in table.schema.fields}
     fields = [T.StructField(c, by_name[c].dataType, True)
               for c in (*table.key, table.order_col)]
     schema = T.StructType(fields + [
         T.StructField("op", T.StringType(), True),
-        T.StructField("__epoch_id", T.IntegerType(), True),
+        T.StructField("__epoch_id", T.LongType(), True),
     ])
-    return table.spark.read.schema(schema).parquet(path)
+    return (table.spark.read.schema(schema)
+            .option("recursiveFileLookup", "true").parquet(path))
 
 
 def replay_batch_range(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from go_data_publisher_spark.lake.table import (
     TranscriptTable,
@@ -86,7 +87,7 @@ def test_balanced_pkeys_search_is_capped(monkeypatch):
 
 def test_fused_equals_two_phase(spark, tmpdir_path):
     """The fused single-exchange merge (the default for a raw batch) and the
-    two-phase shape (last_wins, then merge(deduped=True)) commit identical
+    two-phase shape (last_wins, then a merge of the winners) commit identical
     final states — winners are the same max_by over (order, op-rank)
     within the same key groups."""
     from go_data_publisher_spark.operators.dedup import last_wins
@@ -99,7 +100,7 @@ def test_fused_equals_two_phase(spark, tmpdir_path):
     fused = TranscriptTable(spark, f"{tmpdir_path}/fused", n_buckets=8)
     ChangeApplier(fused).apply_batch(log, epoch_id=0)
     two = TranscriptTable(spark, f"{tmpdir_path}/two", n_buckets=8)
-    two.merge(last_wins(valid), epoch_id=0, deduped=True)
+    two.merge(last_wins(valid), epoch_id=0)
     a, b = two.snapshot(), fused.snapshot()
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     assert a.count() == b.count() > 0
@@ -136,6 +137,84 @@ def test_fused_write_plan_single_exchange(spark, tmpdir_path, monkeypatch):
     n_exchanges = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
     assert n_exchanges == 1, f"fused write planned {n_exchanges} exchanges:\n{plan}"
     assert "max_by" in plan, "fused dedup aggregate missing from the write plan"
+
+
+def _write_plan_nodes(df):
+    """(node name, description) of every operator of ``df``'s physical plan,
+    as the write runs it; a cached input is a single leaf."""
+    out = []
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        out.append((node.nodeName(), node.simpleString(100)))
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_write_plan_is_fused_for_raw_routed_and_guarded_batches(
+        spark, tmpdir_path, monkeypatch):
+    """merge() has one write plan: for a raw batch, for the routed
+    applier's already-deduped halves and for an overlap-guarded table, the
+    frame handed to the parquet writer holds the same fused last-wins
+    aggregate, grouped by (__pkey, __bucket, *key), over exactly one
+    Exchange — the placement on __pkey.  The plan is taken while the write
+    runs, so the routed winners show as the cached input they are."""
+    import re
+
+    import pyspark.sql.readwriter as rw
+
+    from go_data_publisher_spark.sources.changelog import generate_changelog
+    from go_data_publisher_spark.streaming.apply import ChangeApplier
+
+    plans = []
+    real_parquet = rw.DataFrameWriter.parquet
+
+    def spy(self, path, **kw):
+        plans.append(_write_plan_nodes(self._df))
+        return real_parquet(self, path, **kw)
+
+    def assert_fused(nodes, key):
+        exchanges = [d for n, d in nodes if n == "Exchange"]
+        assert len(exchanges) == 1, exchanges
+        assert "hashpartitioning(__pkey#" in exchanges[0], exchanges[0]
+        groupings = [re.sub(r"#\d+L?", "", m.group(1))
+                     for _, d in nodes
+                     if (m := re.search(r"key=\[(.*?)\], functions=\[max_by\(", d))]
+        assert groupings == [", ".join(["__pkey", "__bucket", *key])], nodes
+
+    monkeypatch.setattr(rw.DataFrameWriter, "parquet", spy)
+    log = generate_changelog(spark, 3_000, n_convs=40, seed=5)
+
+    raw = TranscriptTable(spark, f"{tmpdir_path}/raw", n_buckets=8)
+    ChangeApplier(raw).apply_batch(log, epoch_id=0)
+    assert len(plans) == 1
+    assert_fused(plans[0], raw.key)
+
+    main = TranscriptTable(spark, f"{tmpdir_path}/main", n_buckets=8)
+    eph = TranscriptTable(spark, f"{tmpdir_path}/eph", n_buckets=8)
+    ChangeApplier(main, route_sql="role = 'tool'",
+                  ephemeral_table=eph).apply_batch(log, epoch_id=0)
+    assert len(plans) == 3
+    for nodes in plans[1:]:
+        assert any(n == "InMemoryTableScan" for n, _ in nodes), nodes
+        assert_fused(nodes, main.key)
+
+    guarded = TranscriptTable(
+        spark, f"{tmpdir_path}/guarded", n_buckets=4,
+        schema=T.StructType([T.StructField("epoch", T.StringType(), False),
+                             T.StructField("from_lsn", T.IntegerType(), False),
+                             T.StructField("to_lsn", T.LongType(), False)]),
+        key=("epoch", "from_lsn"), order_col="to_lsn",
+        overlap_guard=("from_lsn", "to_lsn"))
+    guarded.merge(spark.createDataFrame(
+        [("1", 0, 100, "I"), ("1", 0, 120, "U"), ("2", 0, 50, "I")],
+        "epoch string, from_lsn int, to_lsn long, op string"), epoch_id=0)
+    assert len(plans) == 4
+    assert_fused(plans[3], guarded.key)
 
 
 def test_merge_layout_one_file_per_bucket(spark, tmpdir_path):

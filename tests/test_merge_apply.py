@@ -6,9 +6,14 @@ idempotent re-application, delete semantics, epoch replay guard."""
 import pandas as pd
 from pyspark.sql import functions as F
 
+from go_data_publisher_spark import schemas
 from go_data_publisher_spark.lake.table import TranscriptTable
 from go_data_publisher_spark.sources.changelog import generate_changelog
-from go_data_publisher_spark.streaming.apply import ChangeApplier, replay_batch_range
+from go_data_publisher_spark.streaming.apply import (
+    ChangeApplier,
+    read_quarantine,
+    replay_batch_range,
+)
 
 from conftest import pandas_final_state
 
@@ -123,9 +128,9 @@ def test_lsn_guard_ignores_stale_cross_batch_update(spark, tmpdir_path):
 
 def test_quarantine_and_lineage(spark, tmpdir_path):
     log, tbl, app, bounds, stats = _replay(spark, tmpdir_path)
-    q = spark.read.parquet(f"{tmpdir_path}/quarantine")
+    q = read_quarantine(tbl, f"{tmpdir_path}/quarantine")
     assert q.count() == sum(s["rows_quarantined"] for s in stats)
-    lin = app.lineage()
+    lin = spark.read.schema(schemas.LINEAGE_SCHEMA).json(f"{tmpdir_path}/lineage")
     assert lin.where("rows_upserted < 0").count() == 0
     # lineage epochs cover every committed batch
     epochs = {r["epoch_id"] for r in lin.select("epoch_id").distinct().collect()}
@@ -259,16 +264,15 @@ def test_strict_mismatch_policy_aborts_batch(spark, tmpdir_path):
     from conftest import jobs_launched
 
     with jobs_launched(spark.sparkContext) as jobs:
-        skipped_df = app2.skipped_keys()
+        skipped_df = read_quarantine(tbl, f"{tmpdir_path}/q")
     assert jobs == []
     skipped = skipped_df.collect()
     assert len(skipped) == 1 and skipped[0]["lsn"] == 2 and skipped[0]["__epoch_id"] == 0
 
 
 def test_skipped_keys_empty_on_clean_run(spark, tmpdir_path):
-    # a clean run creates the quarantine dir with only _epoch-*.done markers
-    # (hidden to the parquet reader): skipped_keys() must return an empty
-    # frame, not raise a schema-inference error
+    # a clean run leaves the quarantine dir empty: the skipped-key set read
+    # from it must be an empty frame, not a schema-inference error
     from go_data_publisher_spark.lake.table import TranscriptTable
     from go_data_publisher_spark.sources.changelog import generate_changelog
     from go_data_publisher_spark.streaming.apply import ChangeApplier
@@ -280,7 +284,7 @@ def test_skipped_keys_empty_on_clean_run(spark, tmpdir_path):
         .where("conv_id is not null and turn_idx is not null "
                "and op in ('I', 'U', 'D')")
     app.apply_batch(log, epoch_id=0)
-    assert app.skipped_keys().count() == 0
+    assert read_quarantine(app.table, f"{root}/_quarantine").count() == 0
 
 
 def test_degrade_to_serial_on_persistent_failure(spark, tmpdir_path):
@@ -443,3 +447,79 @@ def test_merge_serial_write_parallelism_is_correct(spark, tmpdir_path):
     for f in tbl.manifest()["files"]:
         per_bucket_files[f["bucket"]] = per_bucket_files.get(f["bucket"], 0) + 1
     assert all(n <= 2 for n in per_bucket_files.values())
+
+
+def test_crash_at_each_apply_boundary_then_redeliver(spark, tmpdir_path, monkeypatch):
+    """A crash after the delta write, after the quarantine write, after the
+    lineage write and after the commit, each followed by redelivery of the
+    epoch: the table equals the last-wins oracle, and the quarantined rows
+    on disk, the manifest's ``rows_quarantined_total`` and /report's
+    ``rows_skipped_total`` all equal the invalid input rows — one batch
+    carries its null-key row twice.  Lineage files equal committed epochs."""
+    import glob
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from go_data_publisher_spark.operators.routing import validity_sql
+    from go_data_publisher_spark.serving import build_report, lineage_epochs
+
+    class Crash(RuntimeError):
+        pass
+
+    log = generate_changelog(spark, 1200, n_convs=30, seed=31,
+                             invalid_rate=0.03).persist()
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=4)
+    qdir, lineage = f"{tbl.root}/_quarantine", f"{tmpdir_path}/lineage"
+    app = ChangeApplier(tbl, quarantine_dir=qdir, lineage_dir=lineage,
+                        compact_delta_files=3)
+    invalid = f"NOT coalesce({validity_sql()}, false)"
+    bounds = [(1, 320), (321, 640), (641, 960), (961, 10_000)]
+    batches = [log.where(f"lsn BETWEEN {lo} AND {hi}") for lo, hi in bounds]
+    # the null-key row of one batch is delivered twice within it
+    batches[1] = batches[1].unionByName(
+        batches[1].where("conv_id IS NULL").limit(1))
+
+    def crash_after(real, when=lambda *a, **k: True):
+        def wrapped(*a, **k):
+            out = real(*a, **k)
+            if when(*a, **k):
+                raise Crash(real.__name__)
+            return out
+        return wrapped
+
+    points = [
+        (TranscriptTable, "_write_buckets", {}),
+        (DataFrameWriter, "parquet",
+         {"when": lambda _w, path, *a, **k: path.startswith(qdir)}),
+        (ChangeApplier, "_write_lineage", {}),
+        (TranscriptTable, "_commit", {}),
+    ]
+    n_invalid = 0
+    for epoch, (batch, (cls, name, kw)) in enumerate(zip(batches, points)):
+        n_bad = batch.where(invalid).count()
+        assert n_bad > 0
+        n_invalid += n_bad
+        with monkeypatch.context() as mp:
+            mp.setattr(cls, name, crash_after(getattr(cls, name), **kw))
+            with pytest.raises(Crash, match=name):
+                app.apply_batch(batch, epoch_id=epoch)
+        out = app.apply_batch(batch, epoch_id=epoch)  # redelivery
+        want = "skipped_replay" if name == "_commit" else "committed"
+        assert out["status"] == want, (name, out)
+        m = tbl.manifest()
+        assert m["epoch_hwm"] == epoch
+        n_q = read_quarantine(tbl, qdir).count()
+        assert n_q == m["rows_quarantined_total"] == n_invalid, name
+        assert build_report(spark, tbl)["rows_skipped_total"] == n_q, name
+        assert len(glob.glob(f"{lineage}/*.json")) == lineage_epochs(lineage) \
+            == epoch + 1, name
+
+    # a further redelivery of a committed epoch changes nothing
+    assert app.apply_batch(batches[1], epoch_id=1)["status"] == "skipped_replay"
+    assert read_quarantine(tbl, qdir).count() == n_invalid
+    assert tbl.manifest()["rows_quarantined_total"] == n_invalid
+    full = batches[0]
+    for b in batches[1:]:
+        full = full.unionByName(b)
+    _assert_final_state_equals_oracle(full, tbl)

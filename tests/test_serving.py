@@ -17,7 +17,7 @@ from go_data_publisher_spark.serving import (
     build_report,
     build_status,
 )
-from go_data_publisher_spark.streaming.apply import ChangeApplier
+from go_data_publisher_spark.streaming.apply import ChangeApplier, read_quarantine
 
 SCHEMA = (
     "lsn long, op string, conv_id string, turn_idx int, role string, "
@@ -395,13 +395,12 @@ def test_metrics_scrape_launches_no_spark_job(spark, small_table):
 
 def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,
                                                     monkeypatch):
-    """A crash after epoch N's commit and before its lineage file: the
-    redelivered epoch is a skipped replay that writes no lineage, so totals
-    summed from the lineage feed would miss epoch N for good.  The manifest
-    totals commit with the epoch and count it exactly once, and
-    gdps_lineage_epochs shows the gap — one behind the committed epochs.
-    A crash before the quarantine append, healed on replay, leaves the
-    quarantined total as its commit left it."""
+    """A crash after epoch N's lineage file and before its commit: the
+    redelivered epoch commits and rewrites that file, so the manifest
+    totals count the epoch exactly once and gdps_lineage_epochs equals the
+    committed epochs — no lineage gap.  A crash before the quarantine write
+    commits nothing; the redelivered epoch writes the rows and adds them to
+    the quarantined total once."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     tbl, lineage = small_table
@@ -413,13 +412,13 @@ def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,
          (53, "I", None, 6, "user", "bad-key", None, None, 1)], SCHEMA)
 
     def crash(*_a, **_k):
-        raise RuntimeError("crash after the commit")
+        raise RuntimeError("crash before the commit")
 
     with monkeypatch.context() as mp:
-        mp.setattr(ChangeApplier, "_write_lineage", crash)
-        with pytest.raises(RuntimeError, match="crash after the commit"):
+        mp.setattr(TranscriptTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="crash before the commit"):
             app.apply_batch(batch, epoch_id=1)
-    assert app.apply_batch(batch, epoch_id=1)["status"] == "skipped_replay"
+    assert app.apply_batch(batch, epoch_id=1)["status"] == "committed"
 
     srv = ReportServer(spark, tbl, port=0, lineage_dir=lineage)
     srv.start()
@@ -432,13 +431,13 @@ def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,
     assert m["epoch_hwm"] == 1
     assert vals["gdps_rows_upserted_total"] == 12 + 2
     assert vals["gdps_rows_quarantined_total"] == 1
-    assert vals["gdps_lineage_epochs"] == (m["epoch_hwm"] + 1) - 1
+    assert vals["gdps_lineage_epochs"] == m["epoch_hwm"] + 1
 
-    # epoch 2: the quarantine append crashes after the commit
+    # epoch 2: the quarantine write crashes before the commit
     real_parquet = DataFrameWriter.parquet
 
     def crash_quarantine(self, path, *a, **k):
-        if path == qdir:
+        if path.startswith(qdir):
             raise RuntimeError("crash before the quarantine append")
         return real_parquet(self, path, *a, **k)
 
@@ -451,12 +450,11 @@ def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,
         with pytest.raises(RuntimeError, match="quarantine append"):
             app.apply_batch(poisoned, epoch_id=2)
     committed = tbl.manifest()["rows_quarantined_total"]
-    assert committed == 1 + 2
+    assert committed == 1
     healed = app.apply_batch(poisoned, epoch_id=2)
-    assert healed["status"] == "skipped_replay"
-    assert healed["healed_quarantine_rows"] == 2
-    assert tbl.manifest()["rows_quarantined_total"] == committed
-    assert app.skipped_keys().count() == 3
+    assert healed["status"] == "committed"
+    assert tbl.manifest()["rows_quarantined_total"] == committed + 2
+    assert read_quarantine(tbl, qdir).count() == 3
 
 
 def test_fully_quarantined_batch_reaches_metrics(spark, small_table):

@@ -1,13 +1,16 @@
-"""Review-fix behaviors: writer-scoped epoch guards, ephemeral schema
-evolution, quarantine healing on replay, null-key fail-fast, vacuum grace."""
+"""Review-fix behaviors: writer-scoped epoch guards and outputs, ephemeral
+schema evolution, quarantine rows rewritten on replay, null-key fail-fast,
+vacuum grace."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from go_data_publisher_spark import schemas
 from go_data_publisher_spark.lake.table import TranscriptTable
-from go_data_publisher_spark.streaming.apply import ChangeApplier
+from go_data_publisher_spark.serving import lineage_epochs
+from go_data_publisher_spark.streaming.apply import ChangeApplier, read_quarantine
 
 SCHEMA = (
     "lsn long, op string, conv_id string, turn_idx int, role string, "
@@ -57,30 +60,58 @@ def test_ephemeral_table_schema_evolves_with_main(spark, tmpdir_path):
     assert len(got) == 1 and got[0]["tool"] == "calc"
 
 
-def test_quarantine_healed_on_replay(spark, tmpdir_path):
-    """Crash between the manifest commit and the quarantine append: the
-    redelivered batch must persist the invalid rows (marker-gated)."""
+def test_quarantine_healed_on_replay(spark, tmpdir_path, monkeypatch):
+    """Crash between the quarantine write and the manifest commit: the
+    redelivered batch rewrites the epoch's invalid rows in place of the
+    crashed attempt's, so they are counted once."""
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
     qdir = f"{tmpdir_path}/quarantine"
     app = ChangeApplier(tbl, quarantine_dir=qdir)
     batch = spark.createDataFrame(
         [_row(1, "I", "c1", "good"), _row(2, "I", None, "bad-null-key")], SCHEMA
     )
-    app.apply_batch(batch, epoch_id=0)
-    assert app.skipped_keys().count() == 1
 
-    # simulate the crash window: wipe the quarantine output + marker, keep
-    # the committed manifest
-    import shutil
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the commit")
 
-    shutil.rmtree(qdir)
+    with monkeypatch.context() as mp:
+        mp.setattr(TranscriptTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="before the commit"):
+            app.apply_batch(batch, epoch_id=0)
+    assert read_quarantine(tbl, qdir).count() == 1
+    assert not tbl.is_epoch_committed(0)
+
     out = app.apply_batch(batch, epoch_id=0)  # redelivery
-    assert out["status"] == "skipped_replay"
-    assert out["healed_quarantine_rows"] == 1
-    assert app.skipped_keys().count() == 1
-    # second replay: marker present → nothing recomputed
+    assert out["status"] == "committed"
+    assert read_quarantine(tbl, qdir).count() == 1
+    # second replay: the epoch is committed, nothing is written
     again = app.apply_batch(batch, epoch_id=0)
-    assert "healed_quarantine_rows" not in again
+    assert again["status"] == "skipped_replay"
+    assert read_quarantine(tbl, qdir).count() == 1
+
+
+def test_writers_sharing_output_dirs_keep_their_own_files(spark, tmpdir_path):
+    """Two writer ids committing the same epoch ids into one lineage dir and
+    one quarantine dir: each (writer, epoch) has its own lineage file and
+    quarantine rows, so neither writer overwrites the other's."""
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
+    lineage, qdir = f"{tmpdir_path}/lineage", f"{tmpdir_path}/quarantine"
+    apps = [ChangeApplier(tbl, lineage_dir=lineage, quarantine_dir=qdir,
+                          writer_id=w) for w in ("pipeline-a", "b/2=x")]
+    for epoch in (0, 1):
+        for i, app in enumerate(apps):
+            lsn = 10 * epoch + 2 * i
+            batch = spark.createDataFrame(
+                [_row(lsn + 1, "I", f"c{i}", "good"),
+                 _row(lsn + 2, "I", None, "bad-null-key")], SCHEMA)
+            assert app.apply_batch(batch, epoch_id=epoch)["status"] == "committed"
+
+    skipped = sorted(r["lsn"] for r in read_quarantine(tbl, qdir).collect())
+    assert skipped == [2, 4, 12, 14]
+    assert tbl.manifest()["rows_quarantined_total"] == 4
+    lin = spark.read.schema(schemas.LINEAGE_SCHEMA).json(lineage)
+    assert sorted(r["lsn_from"] for r in lin.collect()) == [1, 3, 11, 13]
+    assert lineage_epochs(lineage) == 4
 
 
 def test_merge_null_key_fails_fast(spark, tmpdir_path):
