@@ -1133,7 +1133,7 @@ class TranscriptTable:
             "epoch_id": epoch_id,
             "touched_buckets": touched,
             "files_written": len(new_files),
-            "rows_quarantined": counts[2],
+            "per_bucket": per_bucket,
         }
 
     def _check_overlap(self, winners: DataFrame) -> None:

@@ -49,9 +49,12 @@ def build_status(tbl) -> dict:
 
 def lineage_epochs(lineage_dir: str) -> int:
     """(writer, epoch) pairs in the lineage feed: ChangeApplier writes one
-    ``epoch-*.json`` file per pair, just before the epoch's commit — so the
-    count runs ahead of the committed epochs only while an epoch is in
-    flight or awaiting redelivery (0 when the dir does not exist yet)."""
+    ``epoch-*.json`` file per pair, just before the epoch's commit (0 when
+    the dir does not exist yet).  A file whose epoch never committed — its
+    attempt failed at the commit and the epoch was not redelivered under the
+    same writer id — stays until that epoch is redelivered, so the count can
+    run ahead of the committed epochs; the manifest's totals are the
+    committed figures."""
     return len(glob.glob(os.path.join(lineage_dir, "epoch-*.json")))
 
 

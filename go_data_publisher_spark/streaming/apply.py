@@ -255,11 +255,14 @@ class ChangeApplier:
         observed = batch.observe(obs, F.expr(n_invalid))
         valid, quarantined = split_valid(observed, key_cols=key)
 
+        n_quarantined = 0
+
         def pre_commit(per_bucket: list) -> int:
             # merge() calls this after the main merge's write job and before
             # its commit: the epoch's quarantine rows and lineage file land
             # before the manifest records the epoch, and the count commits
             # with it
+            nonlocal n_quarantined
             try:
                 stats_row = obs.get
             except Exception:
@@ -277,6 +280,7 @@ class ChangeApplier:
                      .write.mode("overwrite")
                      .parquet(f"{self.quarantine_dir}/{self._epoch_name(epoch_id)}"))
             self._write_lineage(epoch_id, per_bucket, n_q)
+            n_quarantined = n_q
             return n_q
 
         if self.on_invalid == "error":
@@ -323,7 +327,8 @@ class ChangeApplier:
                 changes.unpersist()
         else:
             stats = self._merge_sink(self.table, valid, epoch_id, pre_commit)
-        stats.setdefault("rows_quarantined", 0)
+        stats.pop("per_bucket", None)
+        stats["rows_quarantined"] = n_quarantined
 
         if stats["status"] == "committed" and self.compact_delta_files is not None:
             hot = sorted(
@@ -427,7 +432,13 @@ def read_quarantine(table: TranscriptTable, path: str) -> DataFrame:
     ``LINEAGE_SCHEMA.epoch_id``) as the writer writes them, one subdir per
     (writer, epoch), read recursively.  Declaring it skips the
     schema-inference job, and the empty dir of a clean run reads as 0
-    rows."""
+    rows.
+
+    The rows of a (writer, epoch) attempt that failed at its commit stay
+    until that epoch is redelivered under the same writer id, which
+    overwrites them; until then this read counts rows of an uncommitted
+    epoch.  The manifest's ``rows_quarantined_total`` is the committed
+    figure."""
     by_name = {f.name: f for f in table.schema.fields}
     fields = [T.StructField(c, by_name[c].dataType, True)
               for c in (*table.key, table.order_col)]
