@@ -1,8 +1,10 @@
 """Shared metadata-plane IO primitives: atomic publish + commit lock.
 
 One implementation for the write-fsync-rename idiom and the flock critical
-section, used by the lake manifest log and the tailer's cursor file — a
-durability fix (e.g. directory fsync policy) lands in exactly one place.
+section: the lake manifest log uses both, and the CDC-out consumers hold
+the lock around each tick (their position commits with their output, so
+they write no file of their own) — a durability fix (e.g. directory fsync
+policy) lands in exactly one place.
 """
 
 from __future__ import annotations

@@ -852,31 +852,32 @@ class TranscriptTable:
         return out
 
     @staticmethod
-    def _writer_state(m: dict, writer_id: str) -> tuple[int, set]:
-        """(hwm, recent) for one writer.  The legacy top-level fields ARE the
-        'default' writer's state; named writers live under ``writers`` — the
-        Delta/Iceberg txnAppId pattern, so a fresh checkpoint (new writer id)
-        or a second pipeline never has its epochs mistaken for replays of
-        another writer's."""
-        if writer_id == "default":
-            return int(m["epoch_hwm"]), set(m["epochs_recent"])
-        w = m.get("writers", {}).get(writer_id)
+    def _writer_state(m: dict, writer_id: str) -> tuple[int, set, int | None]:
+        """(hwm, recent, source_version) for one writer.  The legacy
+        top-level fields ARE the 'default' writer's state; named writers live
+        under ``writers`` — the Delta/Iceberg txnAppId pattern, so a fresh
+        checkpoint (new writer id) or a second pipeline never has its epochs
+        mistaken for replays of another writer's.  ``source_version`` is the
+        change-feed version the writer last consumed (None when it never
+        recorded one)."""
+        w = m if writer_id == "default" else m.get("writers", {}).get(writer_id)
         if w is None:
-            return -1, set()
-        return int(w["epoch_hwm"]), set(w["epochs_recent"])
+            return -1, set(), None
+        return int(w["epoch_hwm"]), set(w["epochs_recent"]), w.get("source_version")
 
     # the epoch/cursor fast-path reads load the raw CURRENT manifest only —
     # no file-list fold; these run once per microbatch and must stay O(1)
     # in live-file count
 
     def is_epoch_committed(self, epoch_id: int, writer_id: str = "default") -> bool:
-        hwm, recent = self._writer_state(self._raw_current(), writer_id)
+        hwm, recent, _ = self._writer_state(self._raw_current(), writer_id)
         e = int(epoch_id)
         return e <= hwm or e in recent
 
     def epoch_state(self, writer_id: str = "default") -> dict:
-        hwm, recent = self._writer_state(self._raw_current(), writer_id)
-        return {"epoch_hwm": hwm, "epochs_recent": sorted(recent)}
+        hwm, recent, version = self._writer_state(self._raw_current(), writer_id)
+        return {"epoch_hwm": hwm, "epochs_recent": sorted(recent),
+                "source_version": version}
 
     def cursor_lsn(self) -> int:
         return int(self._raw_current()["cursor_lsn"])
@@ -937,6 +938,7 @@ class TranscriptTable:
         writer_id: str = "default",
         write_parallelism: int | None = None,
         pre_commit=None,
+        source_version: int | None = None,
     ) -> dict:
         """Idempotent, LSN-guarded MERGE of one change batch.
 
@@ -990,9 +992,14 @@ class TranscriptTable:
         the write job and before the commit, writes the caller's own outputs
         of the epoch and returns its quarantined row count, which the commit
         adds to the quarantined total.
+
+        ``source_version`` is data, not a setting: the version of a source
+        change feed that this batch brings the writer up to.  The commit
+        records it in the writer's entry, with the epoch (Delta's
+        ``SetTransaction(appId, version)``), and ``epoch_state`` returns it.
         """
         m = self.manifest()
-        hwm0, recent0 = self._writer_state(m, writer_id)
+        hwm0, recent0, _ = self._writer_state(m, writer_id)
         if int(epoch_id) <= hwm0 or int(epoch_id) in recent0:
             return {"status": "skipped_replay", "epoch_id": epoch_id}
         target_schema = self.schema
@@ -1127,7 +1134,7 @@ class TranscriptTable:
                   pre_commit(per_bucket) if pre_commit else 0)
         self._commit(m, writer_id=writer_id, files_added=new_files,
                      epoch_id=epoch_id, batch_max_lsn=batch_max_lsn,
-                     counts=counts)
+                     counts=counts, source_version=source_version)
         return {
             "status": "committed",
             "epoch_id": epoch_id,
@@ -1177,18 +1184,28 @@ class TranscriptTable:
     # setTransactionRetentionDuration: long-lived tables would otherwise
     # retain every rotated checkpoint/pipeline id forever.  An expired
     # writer that resumes restarts from epoch -1, so the retention must
-    # exceed the longest plausible checkpoint pause.
+    # exceed the longest plausible checkpoint pause.  A change-feed consumer
+    # also loses its recorded source version and restarts from its start
+    # position (the tailer's cursor file): at worst it reapplies windows, a
+    # no-op under the LSN fold, or gets the typed retention error that calls
+    # for a reseed.
     writer_retention_seconds: float = 30 * 24 * 3600.0
 
     def _commit(self, m: dict, epoch_id, batch_max_lsn,
                 writer_id: str = "default",
-                files_added=(), files_removed=(), counts=(0, 0, 0)) -> None:
+                files_added=(), files_removed=(), counts=(0, 0, 0),
+                source_version=None) -> None:
         cursor = max(int(m["cursor_lsn"]), int(batch_max_lsn)) if batch_max_lsn is not None \
             else int(m["cursor_lsn"])
         # bounded epoch state: fold the new epoch into the writer's
-        # hwm + recent set
-        hwm0, recent0 = self._writer_state(m, writer_id)
+        # hwm + recent set; a commit that consumed no change feed keeps the
+        # writer's recorded source version
+        hwm0, recent0, version0 = self._writer_state(m, writer_id)
         hwm, recent = fold_epoch_state(hwm0, recent0, epoch_id, writer_id)
+        version = version0 if source_version is None else int(source_version)
+        state = {"epoch_hwm": hwm, "epochs_recent": sorted(recent)}
+        if version is not None:
+            state["source_version"] = version
         now = time.time()
         # the row totals are per table, not per writer: an expired writer's
         # rows stay counted (a manifest written before the totals existed
@@ -1204,11 +1221,9 @@ class TranscriptTable:
             if now - float(w.get("last_commit_at", now)) <= self.writer_retention_seconds
         }
         if writer_id == "default":
-            extra["epoch_hwm"] = hwm
-            extra["epochs_recent"] = sorted(recent)
+            extra.update(state)
         else:
-            writers[writer_id] = {"epoch_hwm": hwm, "epochs_recent": sorted(recent),
-                                  "last_commit_at": now}
+            writers[writer_id] = {**state, "last_commit_at": now}
         if writers or "writers" in m:
             extra["writers"] = writers
         self._publish(m, files_added=files_added, files_removed=files_removed,

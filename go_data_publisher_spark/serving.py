@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from .lake.table import ROW_TOTALS
+
 # the one flat prefix of every exported series (the reference's namespace,
 # status-service/metrics/metrics.go:23-100)
 NAMESPACE = "gdps"
@@ -47,15 +49,16 @@ def build_status(tbl) -> dict:
     }
 
 
-def lineage_epochs(lineage_dir: str) -> int:
-    """(writer, epoch) pairs in the lineage feed: ChangeApplier writes one
-    ``epoch-*.json`` file per pair, just before the epoch's commit (0 when
-    the dir does not exist yet).  A file whose epoch never committed — its
-    attempt failed at the commit and the epoch was not redelivered under the
-    same writer id — stays until that epoch is redelivered, so the count can
-    run ahead of the committed epochs; the manifest's totals are the
-    committed figures."""
-    return len(glob.glob(os.path.join(lineage_dir, "epoch-*.json")))
+def lineage_epochs(tbl, lineage_dir: str) -> int:
+    """Committed (writer, epoch) pairs in the lineage feed: ChangeApplier
+    writes one ``epoch-*.json`` file per pair, just before the epoch's
+    commit (0 when the dir does not exist yet).  A file whose attempt failed
+    at the commit is not counted (``committed_epoch_names``)."""
+    from .streaming.apply import committed_epoch_names
+
+    return len(committed_epoch_names(tbl, [
+        os.path.basename(p)[:-len(".json")]
+        for p in glob.glob(os.path.join(lineage_dir, "epoch-*.json"))]))
 
 
 def build_report(spark, tbl, lineage_dir: str | None = None) -> dict:
@@ -86,7 +89,7 @@ def build_report(spark, tbl, lineage_dir: str | None = None) -> dict:
         "history": tbl.history()[-5:],
     }
     if lineage_dir:
-        report["lineage_epochs"] = lineage_epochs(lineage_dir)
+        report["lineage_epochs"] = lineage_epochs(tbl, lineage_dir)
         report["rows_upserted_total"] = m.get("rows_upserted_total", 0)
     # V4 persisted skipped-key set (served sorted, like the reference's
     # status-service/db/store.go:109 read-back); the dir exists once the
@@ -108,9 +111,10 @@ def build_metrics_text(tbl, lineage_dir: str | None = None) -> str:
     """Prometheus text exposition (format 0.0.4) of the engine's progress
     gauges — the reference's scrape surface
     (status-service/metrics/metrics.go:23-100: processed tick/epoch, source
-    tick/epoch, error gauges, one flat namespace prefix).
+    tick/epoch, error gauges, one flat namespace prefix).  The three
+    ``ROW_TOTALS`` are typed ``counter``.
 
-    Every gauge comes from the same manifest reads as ``/status`` — the row
+    Every series comes from the same manifest reads as ``/status`` — the row
     totals too, which each epoch's commit advances — plus, with
     ``lineage_dir``, a listing of the lineage feed: no Spark job, linear in
     live files, safe at scrape frequency."""
@@ -136,13 +140,14 @@ def build_metrics_text(tbl, lineage_dir: str | None = None) -> str:
          m.get("rows_quarantined_total", 0)),
     ]
     if lineage_dir:
-        gauges.append(("lineage_epochs", "Epochs with a lineage file",
-                       lineage_epochs(lineage_dir)))
+        gauges.append(("lineage_epochs", "Committed epochs with a lineage file",
+                       lineage_epochs(tbl, lineage_dir)))
     out = []
     for name, help_, value in gauges:
         full = f"{NAMESPACE}_{name}"
         out.append(f"# HELP {full} {help_}")
-        out.append(f"# TYPE {full} gauge")
+        # the row totals only grow, one committed epoch at a time
+        out.append(f"# TYPE {full} {'counter' if name in ROW_TOTALS else 'gauge'}")
         out.append(f"{full} {value}")
     return "\n".join(out) + "\n"
 

@@ -45,7 +45,7 @@ import os
 import random
 import time
 from dataclasses import dataclass, field
-from urllib.parse import quote
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -425,20 +425,36 @@ class ChangeApplier:
                 )
 
 
+def committed_epoch_names(table: TranscriptTable, names) -> list[str]:
+    """The names among ``names`` — ``ChangeApplier._epoch_name`` stems,
+    ``epoch-<N>-<URL-quoted writer id>`` — whose (writer, epoch) the
+    table's manifest marks committed.  An attempt that failed at its commit
+    leaves its outputs under the same name until the epoch is redelivered;
+    they belong to no committed epoch, so readers skip them.  One manifest
+    read per writer id, no Spark job."""
+    states: dict[str, tuple[int, list]] = {}
+    out = []
+    for name in names:
+        _, epoch, writer = name.split("-", 2)
+        if writer not in states:
+            st = table.epoch_state(unquote(writer))
+            states[writer] = (st["epoch_hwm"], st["epochs_recent"])
+        hwm, recent = states[writer]
+        if int(epoch) <= hwm or int(epoch) in recent:
+            out.append(name)
+    return out
+
+
 def read_quarantine(table: TranscriptTable, path: str) -> DataFrame:
     """The quarantine dir at ``path`` read with a declared schema: the
     table's key and order columns (nullable — quarantined rows are the ones
     with a null key), ``op`` and ``__epoch_id`` (a BIGINT, as
-    ``LINEAGE_SCHEMA.epoch_id``) as the writer writes them, one subdir per
-    (writer, epoch), read recursively.  Declaring it skips the
+    ``LINEAGE_SCHEMA.epoch_id``) as the writer writes them, from the subdirs
+    of the (writer, epoch) pairs the manifest marks committed (see
+    ``committed_epoch_names``), so the count equals the manifest's
+    ``rows_quarantined_total``.  Declaring the schema skips the
     schema-inference job, and the empty dir of a clean run reads as 0
-    rows.
-
-    The rows of a (writer, epoch) attempt that failed at its commit stay
-    until that epoch is redelivered under the same writer id, which
-    overwrites them; until then this read counts rows of an uncommitted
-    epoch.  The manifest's ``rows_quarantined_total`` is the committed
-    figure."""
+    rows."""
     by_name = {f.name: f for f in table.schema.fields}
     fields = [T.StructField(c, by_name[c].dataType, True)
               for c in (*table.key, table.order_col)]
@@ -446,8 +462,10 @@ def read_quarantine(table: TranscriptTable, path: str) -> DataFrame:
         T.StructField("op", T.StringType(), True),
         T.StructField("__epoch_id", T.LongType(), True),
     ])
-    return (table.spark.read.schema(schema)
-            .option("recursiveFileLookup", "true").parquet(path))
+    names = committed_epoch_names(
+        table, sorted(n for n in os.listdir(path) if n.startswith("epoch-")))
+    return table.spark.read.schema(schema).parquet(
+        *(f"{path}/{n}" for n in names))
 
 
 def replay_batch_range(

@@ -11,7 +11,9 @@ Commands:
   report    --table DIR [--lineage DIR]           progress/intervals/gaps JSON
   serve     --table DIR [--port N]                HTTP status endpoint
   tail      --source-table DIR --target-table DIR --cursor FILE
-            CDC-out: apply a table's change feed to a second table
+            CDC-out: apply a table's change feed to a second table; FILE's
+            from_version is the start version for a writer the target has
+            never seen (read only, the position commits with the target)
   maintain  --table DIR [--compact-threshold N] [--vacuum-keep K]
             compaction + snapshot expiry (out-of-band maintenance)
 
@@ -83,8 +85,8 @@ def main():
     t = sub.add_parser("tail",
                        help="CDC-out: tail a table's change feed into a "
                             "second table (or, with --to-wire, publish it "
-                            "as Kafka-shaped wire records) with a persisted "
-                            "cursor")
+                            "as Kafka-shaped wire records); the position "
+                            "commits with the output")
     t.add_argument("--source-table", required=True)
     t.add_argument("--target-table", default=None)
     t.add_argument("--to-wire", default=None, metavar="DIR",
@@ -93,13 +95,15 @@ def main():
                         "into a target table — the S5 producer loop; consume "
                         "with `stream --wire-format`")
     t.add_argument("--cursor", required=True,
-                   help="path of the tailer's persisted cursor JSON")
+                   help="JSON file whose from_version is the start version "
+                        "for a writer the target has never seen (or a "
+                        "--to-wire dir with no window yet); read only")
     t.add_argument("--buckets", type=int, default=32)
     t.add_argument("--writer-id", default="cdc-out")
     t.add_argument("--reseed", action="store_true",
                    help="recover a tailer that fell behind source retention:"
                         " make the target equal the current source snapshot"
-                        " and restart the cursor there before tailing")
+                        " and record its version before tailing")
 
     m = sub.add_parser("maintain",
                        help="compaction + snapshot expiry (the reference's "

@@ -1,7 +1,10 @@
 """CDC-out consumer loop: ChangefeedTailer composes the engine's own change
-feed the way a downstream reference consumer tails Kafka — persisted
-cursor, offsets-after-sink, replay-safe across crashes, loud retention
-error when compaction outruns it."""
+feed the way a downstream reference consumer tails Kafka — the consumed
+source version commits with the target's data, replay-safe across crashes,
+loud retention error when compaction outruns it."""
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +14,6 @@ from go_data_publisher_spark.streaming.apply import ChangeApplier
 from go_data_publisher_spark.streaming.tailer import (
     ChangefeedRetentionError,
     ChangefeedTailer,
-    CursorMismatchError,
 )
 
 SCHEMA = (
@@ -31,6 +33,25 @@ def _snap(tbl):
 
 def _mk(spark, tmpdir_path, name, n_buckets=2):
     return TranscriptTable(spark, f"{tmpdir_path}/{name}", n_buckets=n_buckets)
+
+
+def _crash_at_commit(monkeypatch, tbl, when):
+    """Make ``tbl``'s next manifest commit raise, ``before`` or ``after``
+    it is written."""
+    real = tbl._commit
+
+    def commit(*a, **k):
+        monkeypatch.setattr(tbl, "_commit", real)
+        if when == "before":
+            raise RuntimeError("injected crash before the target commit")
+        real(*a, **k)
+        raise RuntimeError("injected crash after the target commit")
+
+    monkeypatch.setattr(tbl, "_commit", commit)
+
+
+def _recorded(tailer):
+    return tailer.target.epoch_state(tailer.writer_id)
 
 
 def test_tailer_reaches_source_state(spark, tmpdir_path):
@@ -56,41 +77,41 @@ def test_tailer_reaches_source_state(spark, tmpdir_path):
     assert _snap(tgt) == _snap(src)
 
 
-def test_tailer_crash_between_merge_and_cursor_advance(spark, tmpdir_path):
-    """Kill after the target merge but before the cursor write; the retry
-    must re-apply the SAME recorded window (epoch guard no-ops it), even
-    though NEW source commits landed during the outage — the grown window
-    is consumed by the next tick under a fresh epoch, never skipped."""
-    src = _mk(spark, tmpdir_path, "src")
-    app = ChangeApplier(src)
-    _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+def test_tailer_crash_before_and_after_the_target_commit(spark, tmpdir_path,
+                                                        monkeypatch):
+    """A crash before the target commit leaves the tailer's epoch
+    uncommitted: the retry applies the window whole under that epoch, even
+    though NEW source commits grew it during the outage.  A crash after the
+    commit finds that window consumed, and the retry takes only the growth
+    under the next epoch.  Either way nothing is skipped or applied twice."""
+    for when in ("before", "after"):
+        root = f"{tmpdir_path}/{when}"
+        src = _mk(spark, root, "src")
+        app = ChangeApplier(src)
+        _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+        tgt = _mk(spark, root, "tgt")
+        tailer = ChangefeedTailer(src, tgt, f"{root}/cursor.json")
 
-    tgt = _mk(spark, tmpdir_path, "tgt")
+        _crash_at_commit(monkeypatch, tgt, when)
+        with pytest.raises(RuntimeError, match=f"crash {when}"):
+            tailer.tick()
+        committed = when == "after"
+        assert tgt.is_epoch_committed(0, "cdc-out") == committed
+        assert (_snap(tgt) == _snap(src)) == committed
 
-    class CrashingTailer(ChangefeedTailer):
-        def _store(self, cur):
-            if cur.get("pending") is None and not getattr(self, "_ok", False):
-                raise RuntimeError("injected crash before cursor advance")
-            super()._store(cur)
+        # outage window: more source commits land
+        _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1),
+                            (3, "I", "c2", 1, "user", "b", None, None, 1)], 1)
 
-    crasher = CrashingTailer(src, tgt, f"{tmpdir_path}/cursor.json")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        crasher.tick()
-    # the merge itself committed; the cursor did not advance
-    assert _snap(tgt) == _snap(src)
-
-    # outage window: more source commits land
-    _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1),
-                        (3, "I", "c2", 1, "user", "b", None, None, 1)], 1)
-
-    tailer = ChangefeedTailer(src, tgt, f"{tmpdir_path}/cursor.json")
-    out = tailer.run_until_caught_up()
-    # first tick replays the recorded pending window → skipped by the epoch
-    # guard; second tick consumes the growth under the next epoch
-    assert out["caught_up"]
-    assert [t["status"] for t in out["ticks"]] == ["skipped_replay", "committed"]
-    assert _snap(tgt) == _snap(src)
-    assert len(_snap(tgt)) == 2
+        out = tailer.run_until_caught_up()
+        assert out["caught_up"]
+        assert [t["status"] for t in out["ticks"]] == ["committed"], when
+        assert _snap(tgt) == _snap(src)
+        assert len(_snap(tgt)) == 2
+        st = _recorded(tailer)
+        assert st["source_version"] == src.manifest()["version"]
+        assert (st["epoch_hwm"], st["epochs_recent"]) == (int(committed), [])
+        assert tailer.tick()["status"] == "idle"
 
 
 def test_tailer_mid_tail_compaction_raises_retention_error(spark, tmpdir_path):
@@ -114,8 +135,8 @@ def test_tailer_mid_tail_compaction_raises_retention_error(spark, tmpdir_path):
 
 def test_tailer_caught_up_consumer_survives_compaction(spark, tmpdir_path):
     """A compaction that folds only windows the tailer ALREADY consumed is
-    harmless: the next window is metadata-only/empty and the cursor simply
-    advances past it (folded_hwm semantics, no epoch consumed)."""
+    harmless: the next window is metadata-only (folded_hwm semantics).  It
+    commits nothing, so each tick probes it again."""
     src = _mk(spark, tmpdir_path, "src")
     app = ChangeApplier(src)
     _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
@@ -128,7 +149,7 @@ def test_tailer_caught_up_consumer_survives_compaction(spark, tmpdir_path):
     src.compact()  # folds nothing the tailer still needs
     stats = tailer.tick()
     assert stats["status"] == "empty_window"
-    assert tailer.tick()["status"] == "idle"
+    assert tailer.tick()["status"] == "empty_window"
 
     # and the feed keeps flowing after the compaction
     _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
@@ -156,35 +177,85 @@ def test_tailer_replays_to_oracle_over_generated_log(spark, tmpdir_path):
     assert len(_snap(tgt)) > 0
 
 
-def test_tailer_pending_window_vacuumed_raises_retention_error(spark, tmpdir_path):
-    """The OTHER retention shape: a crash leaves a pending window whose
-    to_version manifest is expired by vacuum during the outage — the tailer
-    must surface the same ChangefeedRetentionError (re-seed guidance), not
-    the raw not-retained ValueError."""
-    import json
-
+def test_tailer_retry_after_vacuum_converges(spark, tmpdir_path, monkeypatch):
+    """A tick crashes before its target commit; during the outage the source
+    commits again and vacuum expires every manifest but the newest — the
+    one the crashed window ended at and the one the tailer last consumed
+    included.  The retry bounds a fresh window at the current version, so
+    it converges instead of needing the expired manifests."""
     src = _mk(spark, tmpdir_path, "src")
     app = ChangeApplier(src)
     _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
 
     tgt = _mk(spark, tmpdir_path, "tgt")
-    cursor = f"{tmpdir_path}/cursor.json"
-    tailer = ChangefeedTailer(src, tgt, cursor)
+    tailer = ChangefeedTailer(src, tgt, f"{tmpdir_path}/cursor.json")
     tailer.run_until_caught_up()
-    caught_up_v = json.load(open(cursor))["from_version"]
+    caught_up_v = _recorded(tailer)["source_version"]
 
-    # outage: two more source commits; the crash had recorded a pending
-    # window ending at the FIRST of them
     _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
-    pending_v = src.manifest()["version"]
-    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
-    json.dump({"from_version": caught_up_v, "next_epoch": 1,
-               "pending": {"to_version": pending_v}}, open(cursor, "w"))
-
-    # vacuum expires the pending manifest itself (keep only the newest)
-    src.vacuum(keep_versions=1, orphan_grace_seconds=0)
-    with pytest.raises(ChangefeedRetentionError, match="re-seed"):
+    _crash_at_commit(monkeypatch, tgt, "before")
+    with pytest.raises(RuntimeError, match="crash before"):
         tailer.tick()
+    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
+    src.vacuum(keep_versions=1, orphan_grace_seconds=0)
+    assert [h["version"] for h in src.history()] == [src.manifest()["version"]]
+    assert caught_up_v < src.manifest()["version"]
+
+    out = tailer.run_until_caught_up()
+    assert out["caught_up"]
+    assert [t["status"] for t in out["ticks"]] == ["committed"]
+    assert _snap(tgt) == _snap(src)
+    assert len(_snap(tgt)) == 2
+
+
+@pytest.mark.parametrize("maintain", ["compact", "vacuum", "compact+vacuum"])
+def test_metadata_only_window_is_reprobed_until_data_lands(
+        spark, tmpdir_path, maintain):
+    """A caught-up tailer whose source then only compacts and/or vacuums
+    sees a window without change rows: no false retention error, the drain
+    reports caught up, no epoch is spent, and the next data commit is
+    consumed exactly once.  compact(), evolve_schema() and vacuum() on the
+    TARGET keep the recorded source version: _publish and vacuum's squash
+    carry the writers map."""
+    import pyspark.sql.types as T
+
+    src = _mk(spark, tmpdir_path, "src")
+    app = ChangeApplier(src)
+    _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+    _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
+    tgt = _mk(spark, tmpdir_path, "tgt")
+    tailer = ChangefeedTailer(src, tgt, f"{tmpdir_path}/cursor.json")
+    assert tailer.run_until_caught_up()["caught_up"]
+    before = _recorded(tailer)
+
+    if "compact" in maintain:
+        src.compact()
+    if "vacuum" in maintain:
+        src.vacuum(keep_versions=1, orphan_grace_seconds=0)
+    # vacuum alone commits no version: the tailer stays idle
+    want = "idle" if maintain == "vacuum" else "empty_window"
+    for _ in range(2):
+        assert tailer.tick()["status"] == want
+    out = tailer.run_until_caught_up()
+    assert out["caught_up"] and len(out["ticks"]) == (want != "idle")
+    assert _recorded(tailer) == before  # no empty epoch was committed
+
+    # maintenance on the target keeps the recorded version
+    tgt.compact()
+    tgt.evolve_schema(T.StructType(
+        list(tgt.schema.fields) + [T.StructField("note", T.StringType())]))
+    tgt.vacuum(keep_versions=1, orphan_grace_seconds=0)
+    assert _recorded(tailer) == before
+
+    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
+    out = tailer.run_until_caught_up()
+    assert [t["status"] for t in out["ticks"]] == ["committed"]
+    st = _recorded(tailer)
+    assert st["epoch_hwm"] == before["epoch_hwm"] + 1
+    assert st["source_version"] == src.manifest()["version"]
+    assert _snap(tgt) == _snap(src)
+    # one upsert for c1 (the first window's last-wins) and one for c2
+    assert tgt.manifest()["rows_upserted_total"] == 2
 
 
 def test_tailer_flows_source_schema_evolution(spark, tmpdir_path):
@@ -261,141 +332,130 @@ def test_reseed_recovers_from_retention_loss(spark, tmpdir_path):
     assert _snap(tgt) == _snap(src)
 
 
-def test_reseed_crash_before_cursor_store_replays_pinned_version(spark, tmpdir_path):
-    """A crash between the reseed merge and the cursor store must replay
-    against the PINNED snapshot version — commits landing during the
-    recovery outage are consumed by the next tick, never jumped over."""
+def test_reseed_crash_before_and_after_the_target_commit(spark, tmpdir_path,
+                                                        monkeypatch):
+    """The reseed merge records the snapshot version in its own commit.  A
+    crash before it changes nothing: the tailer is still behind retention
+    and the retried reseed commits under the same epoch.  A crash after it
+    leaves the tailer at the snapshot version: a commit landing during the
+    recovery outage is consumed by the next tick, never jumped over."""
+    for when in ("before", "after"):
+        root = f"{tmpdir_path}/{when}"
+        src = _mk(spark, root, "src")
+        app = ChangeApplier(src)
+        _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+        tgt = _mk(spark, root, "tgt")
+        tailer = ChangefeedTailer(src, tgt, f"{root}/cursor.json")
+        tailer.run_until_caught_up()
+        first = _recorded(tailer)["source_version"]
+        _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
+        src.compact()
+        snap_v = src.manifest()["version"]
+
+        _crash_at_commit(monkeypatch, tgt, when)
+        with pytest.raises(RuntimeError, match=f"crash {when}"):
+            tailer.reseed()
+        st = _recorded(tailer)
+        assert (st["epoch_hwm"], st["source_version"]) == (
+            (1, snap_v) if when == "after" else (0, first))
+
+        # a NEW source commit lands during the recovery outage
+        _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
+        if when == "before":
+            with pytest.raises(ChangefeedRetentionError):
+                tailer.tick()
+            assert tailer.reseed()["status"] == "committed"
+            assert tailer.tick()["status"] == "idle"
+        else:
+            out = tailer.run_until_caught_up()
+            assert out["caught_up"]
+            assert [t["status"] for t in out["ticks"]] == ["committed"]
+        assert _snap(tgt) == _snap(src)
+        assert len(_snap(tgt)) == 2
+        st = _recorded(tailer)
+        # contiguous epochs: the crashed attempt left no hole
+        assert (st["epoch_hwm"], st["epochs_recent"]) == (
+            (1, []) if when == "before" else (2, []))
+
+
+def test_reseed_after_tick_crash_does_not_reuse_consumed_epoch(spark, tmpdir_path,
+                                                              monkeypatch):
+    """A tick crash at the target commit, then retention loss, then a
+    reseed: the reseed merges under the writer's next uncommitted epoch and
+    commits for real — never a replay skip of an epoch the crashed tick
+    committed, which would drop everything the snapshot carries."""
+    for when in ("before", "after"):
+        root = f"{tmpdir_path}/{when}"
+        src = _mk(spark, root, "src")
+        app = ChangeApplier(src)
+        _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+        tgt = _mk(spark, root, "tgt")
+        tailer = ChangefeedTailer(src, tgt, f"{root}/cursor.json")
+        tailer.run_until_caught_up()
+
+        # window A commits on the source; the tick merging it crashes
+        _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
+        _crash_at_commit(monkeypatch, tgt, when)
+        with pytest.raises(RuntimeError, match=f"crash {when}"):
+            tailer.tick()
+
+        # window B lands, then retention outruns the tailer
+        _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
+        src.compact()
+        src.vacuum(keep_versions=1, orphan_grace_seconds=0)
+        with pytest.raises(ChangefeedRetentionError):
+            tailer.tick()
+        stats = tailer.reseed()
+        assert stats["status"] == "committed", \
+            "reseed merged under a consumed epoch and was silently skipped"
+        assert _snap(tgt) == _snap(src)
+        assert len(_snap(tgt)) == 2  # window A update + window B insert
+        assert tailer.tick()["status"] == "idle"
+
+
+def test_cursor_file_is_only_a_start_position(spark, tmpdir_path):
+    """A cursor file in the shape perfbench writes starts a writer the
+    target has never seen at its from_version.  From the first commit on,
+    the target's recorded version rules: deleting the file or resetting it
+    to 0 drops no window and reapplies none, and no tick or reseed writes
+    the file."""
     src = _mk(spark, tmpdir_path, "src")
     app = ChangeApplier(src)
     _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
-
-    tgt = _mk(spark, tmpdir_path, "tgt")
-    tailer = ChangefeedTailer(src, tgt, f"{tmpdir_path}/cursor.json")
-    tailer.run_until_caught_up()
-    _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
-    src.compact()
-
-    class CrashingTailer(ChangefeedTailer):
-        def _store(self, cur):
-            if "pending_reseed" not in cur and cur.get("pending") is None \
-                    and not getattr(self, "_ok", False):
-                raise RuntimeError("injected crash before reseed cursor store")
-            super()._store(cur)
-
-    crasher = CrashingTailer(src, tgt, f"{tmpdir_path}/cursor.json")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        crasher.reseed()
-    # the reseed merge itself committed
-    assert _snap(tgt) == _snap(src)
-
-    # a NEW source commit lands during the recovery outage
-    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
-
-    fresh = ChangefeedTailer(src, tgt, f"{tmpdir_path}/cursor.json")
-    stats = fresh.reseed()   # replays the pinned version (skipped merge)
-    assert stats["status"] == "skipped_replay"
-    # the outage commit is NOT jumped: the next tick consumes it
-    out = fresh.run_until_caught_up()
-    assert out["caught_up"] and len(out["ticks"]) == 1
-    assert _snap(tgt) == _snap(src)
-    assert len(_snap(tgt)) == 2
-
-
-def test_reseed_after_tick_crash_does_not_reuse_consumed_epoch(spark, tmpdir_path):
-    """Review finding (severe): a tick crash between its merge commit and
-    its cursor store leaves next_epoch pointing at an epoch the target
-    already committed.  A later reseed must NOT merge under it (that would
-    be skipped by the replay guard while the cursor still jumps — silent
-    loss of everything the snapshot carries); it asks the target's guard
-    state for a genuinely uncommitted epoch and commits for real."""
-    import json
-
-    src = _mk(spark, tmpdir_path, "src")
-    app = ChangeApplier(src)
-    _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
+    start_v = src.manifest()["version"]
+    _apply(spark, app, [(2, "I", "c2", 0, "user", "b", None, None, 1)], 1)
 
     tgt = _mk(spark, tmpdir_path, "tgt")
     cursor = f"{tmpdir_path}/cursor.json"
-    ChangefeedTailer(src, tgt, cursor).run_until_caught_up()
-
-    # window A commits on the source; the tailer's tick merges it into the
-    # target but crashes before the cursor store
-    _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
-
-    class CrashingTailer(ChangefeedTailer):
-        def _store(self, cur):
-            if "pending_reseed" not in cur and cur.get("pending") is None:
-                raise RuntimeError("injected crash before cursor advance")
-            super()._store(cur)
-
-    with pytest.raises(RuntimeError, match="injected crash"):
-        CrashingTailer(src, tgt, cursor).tick()
-    stale = json.load(open(cursor))
-    assert tgt.is_epoch_committed(stale["next_epoch"], writer_id="cdc-out")
-
-    # window B lands, then retention outruns the stale pending window
-    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
-    src.compact()
-    src.vacuum(keep_versions=1, orphan_grace_seconds=0)
-
+    shape = {"from_version": start_v, "next_epoch": 0, "pending": None}
+    with open(cursor, "w") as f:
+        json.dump(shape, f)
     tailer = ChangefeedTailer(src, tgt, cursor)
-    with pytest.raises(ChangefeedRetentionError):
-        tailer.tick()
-    stats = tailer.reseed()
-    assert stats["status"] == "committed", \
-        "reseed merged under a consumed epoch and was silently skipped"
-    assert _snap(tgt) == _snap(src)
-    assert len(_snap(tgt)) == 2  # window A update + window B insert
-    assert tailer.tick()["status"] == "idle"
+    out = tailer.run_until_caught_up()
+    assert [(t["status"], t["from_version"]) for t in out["ticks"]] == [
+        ("committed", start_v)]
+    assert _snap(tgt) == [("c2", 0, 2, "b")]  # only the window after start_v
+    assert json.load(open(cursor)) == shape
 
-
-def test_reset_cursor_file_raises_mismatch_not_silent_drop(spark, tmpdir_path):
-    """ADVICE r4 (medium): a cursor file that was reset/restored points
-    next_epoch at an epoch the target already committed.  On a FRESH window
-    (no pending record) that is a cursor/target mismatch — the tick must
-    raise BEFORE writing a pending record, on every attempt, never advance
-    from_version over the backlog (which would drop the window silently)."""
-    import json
-    import os
-
-    src = _mk(spark, tmpdir_path, "src")
-    app = ChangeApplier(src)
-    _apply(spark, app, [(1, "I", "c1", 0, "user", "a", None, None, 1)], 0)
-
-    tgt = _mk(spark, tmpdir_path, "tgt")
-    cursor = f"{tmpdir_path}/cursor.json"
-    ChangefeedTailer(src, tgt, cursor).run_until_caught_up()
-
-    # the cursor file is lost/reset; a backlog window exists
+    recorded = _recorded(tailer)
     os.unlink(cursor)
-    _apply(spark, app, [(2, "U", "c1", 0, "user", "a2", None, None, 1)], 1)
+    assert tailer.tick()["status"] == "idle"
+    with open(cursor, "w") as f:
+        json.dump({**shape, "from_version": 0}, f)
+    assert tailer.tick()["status"] == "idle"
+    assert _recorded(tailer) == recorded and _snap(tgt) == [("c2", 0, 2, "b")]
 
-    tailer = ChangefeedTailer(src, tgt, cursor)
-    with pytest.raises(CursorMismatchError, match="reseed"):
-        tailer.tick()
-    # no pending record was written: the retry raises again instead of
-    # accepting its own skip as a crash-recovery replay
-    assert not os.path.exists(cursor)
-    with pytest.raises(CursorMismatchError):
-        tailer.tick()
-
-    # the prescribed recovery works: reseed, then the feed flows again
+    # the next source commit is consumed once, from the recorded version
+    _apply(spark, app, [(3, "U", "c2", 0, "user", "b2", None, None, 1)], 2)
+    out = tailer.run_until_caught_up()
+    assert [(t["status"], t["from_version"]) for t in out["ticks"]] == [
+        ("committed", recorded["source_version"])]
+    assert tailer.reseed()["status"] == "committed"
+    assert json.load(open(cursor)) == {**shape, "from_version": 0}
+    os.unlink(cursor)
+    assert tailer.tick()["status"] == "idle"
     tailer.reseed()
-    assert _snap(tgt) == _snap(src)
-    _apply(spark, app, [(3, "I", "c2", 1, "user", "b", None, None, 1)], 2)
-    assert tailer.tick()["status"] == "committed"
-    assert _snap(tgt) == _snap(src)
-
-    # a legitimate crash retry is still accepted: restored-from-backup
-    # cursors are distinguishable from crashed ticks by the pending record
-    cur = json.load(open(cursor))
-    _apply(spark, app, [(4, "U", "c2", 1, "user", "b2", None, None, 1)], 3)
-    assert tailer.tick()["status"] == "committed"
-    # rewind the cursor to pre-tick state WITH the pending record the tick
-    # would have left behind on a crash
-    cur["pending"] = {"to_version": src.manifest()["version"]}
-    json.dump(cur, open(cursor, "w"))
-    assert tailer.tick()["status"] == "skipped_replay"
+    assert not os.path.exists(cursor)
     assert _snap(tgt) == _snap(src)
 
 
@@ -456,13 +516,10 @@ def test_reseed_refuses_recreated_source_with_unstampable_deletes(spark, tmpdir_
 
 
 def test_overlapping_drains_serialize_on_the_cursor_lock(spark, tmpdir_path):
-    """Two drain jobs sharing one cursor file (a cron tick outliving its
-    interval) must serialize, not interleave: pre-lock, the loser's stale
-    in-memory cursor — written back after the winner advanced — rolled the
-    file back and wedged every later tick in CursorMismatchError even
-    though source and target were consistent.  With the exclusive cursor
-    lock the second drain blocks until the first finishes, then sees an
-    idle window."""
+    """Two drain jobs of one (target, writer) (a cron tick outliving its
+    interval) must serialize on the tailer's lock, not interleave: the
+    second drain blocks until the first finishes, then sees an idle window
+    — no error, nothing applied twice."""
     import threading
 
     src = _mk(spark, tmpdir_path, "src")
@@ -475,10 +532,10 @@ def test_overlapping_drains_serialize_on_the_cursor_lock(spark, tmpdir_path):
     entered, release = threading.Event(), threading.Event()
 
     class SlowTailer(ChangefeedTailer):
-        def _consume_merge(self, cur, from_v, to_v, had_pending):
+        def _consume(self, from_v, to_v):
             entered.set()
             assert release.wait(timeout=30)
-            return super()._consume_merge(cur, from_v, to_v, had_pending)
+            return super()._consume(from_v, to_v)
 
     results_a, results_b, errors = [], [], []
 
@@ -496,25 +553,25 @@ def test_overlapping_drains_serialize_on_the_cursor_lock(spark, tmpdir_path):
         target=run, args=(ChangefeedTailer(src, tgt, cursor), results_b))
     tb.start()
     tb.join(timeout=1.0)
-    assert tb.is_alive()  # B is blocked on the cursor lock, not racing
+    assert tb.is_alive()  # B is blocked on the lock, not racing
     release.set()
     ta.join(timeout=60)
     tb.join(timeout=60)
     assert not ta.is_alive() and not tb.is_alive()
 
-    assert errors == []  # pre-lock this raced into CursorMismatchError
+    assert errors == []
     assert results_a[0]["status"] == "committed"
-    assert results_b[0]["status"] == "idle"  # B saw A's advance, did nothing
+    assert results_b[0]["status"] == "idle"  # B saw A's commit, did nothing
     assert _snap(tgt) == _snap(src)
-    # and the file was never rolled back: the next tick is a clean idle
+    assert _recorded(ChangefeedTailer(src, tgt, cursor))["epoch_hwm"] == 0
     assert ChangefeedTailer(src, tgt, cursor).tick()["status"] == "idle"
 
 
 def test_reseed_gives_up_loudly_when_vacuum_outruns_every_pin(spark, tmpdir_path):
     """The reseed retry loop is bounded: if every pinned snapshot version is
     vacuumed before it can be read, the recovery must surface a typed error
-    instead of spinning forever while holding the cursor lock (which would
-    block every cron tick on this cursor with no visible failure)."""
+    instead of spinning forever while holding the tailer's lock (which would
+    block every cron tick of this writer with no visible failure)."""
     from go_data_publisher_spark.lake.table import RetentionLostError
 
     class VacuumedOutSource:

@@ -245,35 +245,32 @@ def test_wire_publisher_closes_engine_to_engine_loop(spark, tmpdir_path):
 
     assert snap(tgt) == snap(src) == [("c1", 0, 3, "a2"), ("c3", 1, 5, "c")]
 
-    # crash idempotence on the PUBLISH side: a pending window whose dir
-    # already landed (atomic rename) is NOT re-emitted — rewriting would
+    # crash idempotence on the PUBLISH side: the newest renamed window dir
+    # IS the publisher's position, so a retry after a completed publish
+    # finds the window consumed and never re-emits it — rewriting would
     # rotate part-file names and double-deliver to path-keyed consumers
     import glob
     import json as _json
     import os
-    cur = _json.load(open(f"{tmpdir_path}/pub_cursor.json"))
     app_src.apply_batch(spark.createDataFrame(
         [(6, "U", "c3", 1, "user", "c2", None, None, 1)], schema), epoch_id=3)
     first = pub.tick()
     assert first["status"] == "published"
     parts_before = sorted(glob.glob(f"{first['path']}/part-*"))
-    # rewind the cursor to the pre-tick state WITH the pending record a
-    # crash-before-cursor-store would have left
-    cur["pending"] = {"to_version": src.manifest()["version"]}
-    _json.dump(cur, open(f"{tmpdir_path}/pub_cursor.json", "w"))
-    retry = pub.tick()
-    assert retry["status"] == "already_published"
-    assert sorted(glob.glob(f"{first['path']}/part-*")) == parts_before
     assert pub.tick()["status"] == "idle"
+    assert sorted(glob.glob(f"{first['path']}/part-*")) == parts_before
     # one window dir per consumed window — no duplicate publishes
     windows = sorted(d for d in os.listdir(wire_dir) if d.startswith("window-"))
     assert len(windows) == 3
 
-    # cursor/history guard: a lost/reset cursor file must raise instead of
-    # silently republishing the whole feed history as new window dirs
-    from go_data_publisher_spark.streaming.tailer import CursorMismatchError
-    os.unlink(f"{tmpdir_path}/pub_cursor.json")
-    with pytest.raises(CursorMismatchError, match="behind the newest"):
-        pub.tick()
+    # the cursor file is only a start position: no tick writes it, and one
+    # reset to 0 or deleted republishes no history as new window dirs
+    cursor = f"{tmpdir_path}/pub_cursor.json"
+    assert not os.path.exists(cursor)
+    _json.dump({"from_version": 0, "next_epoch": 0, "pending": None},
+               open(cursor, "w"))
+    assert pub.tick()["status"] == "idle"
+    os.unlink(cursor)
+    assert pub.tick()["status"] == "idle"
     assert sorted(d for d in os.listdir(wire_dir)
                   if d.startswith("window-")) == windows

@@ -512,7 +512,7 @@ def test_crash_at_each_apply_boundary_then_redeliver(spark, tmpdir_path, monkeyp
         n_q = read_quarantine(tbl, qdir).count()
         assert n_q == m["rows_quarantined_total"] == n_invalid, name
         assert build_report(spark, tbl)["rows_skipped_total"] == n_q, name
-        assert len(glob.glob(f"{lineage}/*.json")) == lineage_epochs(lineage) \
+        assert len(glob.glob(f"{lineage}/*.json")) == lineage_epochs(tbl, lineage) \
             == epoch + 1, name
 
     # a further redelivery of a committed epoch changes nothing

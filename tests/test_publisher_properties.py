@@ -1,6 +1,6 @@
 """Property-based check of the WirePublisher loop, the produce-side twin of
 test_tailer_properties.py: any interleaving of {source commit, publish tick,
-crash-before-cursor-store, crash-before-publish} must leave the wire feed
+crash just before or just after a window's rename} must leave the wire feed
 
 - CONTIGUOUS: the published window dirs chain (0, v1], (v1, v2], ... up to
   the cursor, no gaps and no overlaps (a gap silently loses changes to
@@ -11,13 +11,15 @@ crash-before-cursor-store, crash-before-publish} must leave the wire feed
   LE-uint32 key + JSON envelope) and merging them into a fresh table
   reconstructs the source snapshot exactly.
 
-The publisher shares the tailer's _drain_window protocol; this generates
-the crash interleavings for the half the tailer property test cannot reach
-(path idempotence instead of epoch idempotence)."""
+The publisher shares the tailer's window loop; this generates the crash
+interleavings for the half the tailer property test cannot reach (path
+idempotence instead of epoch idempotence: the newest renamed window dir is
+the publisher's position)."""
 
 from __future__ import annotations
 
 import os
+from unittest import mock
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -40,34 +42,26 @@ ACTIONS = st.lists(
     st.one_of(
         st.tuples(st.just("commit"), st.lists(_row, min_size=1, max_size=4)),
         st.tuples(st.just("tick"), st.none()),
-        st.tuples(st.just("crash_store"), st.none()),
-        st.tuples(st.just("crash_publish"), st.none()),
+        st.tuples(st.just("crash"), st.sampled_from(["before", "after"])),
     ),
     min_size=3, max_size=7,
 )
 
 
-class FlakyPublisher(WirePublisher):
-    """Crash injection at the protocol's two dangerous points: after the
-    atomic rename but before the cursor advance (crash_store — the retry
-    must find the completed dir and NOT re-emit), and before any output
-    lands (crash_publish — the retry must re-publish the SAME pinned
-    window, not a grown one)."""
+def crashing_rename(when):
+    """os.rename that raises just ``before`` or just ``after`` the window
+    rename — the publisher's one commit point: before it, the retry must
+    publish the (possibly grown) window whole; after it, the retry must
+    find the window consumed and NOT re-emit it."""
+    real = os.rename
 
-    crash_store = False
-    crash_publish = False
+    def rename(src, dst):
+        if when == "before":
+            raise RuntimeError("injected crash before the window rename")
+        real(src, dst)
+        raise RuntimeError("injected crash after the window rename")
 
-    def _store(self, cur):
-        if self.crash_store and cur.get("pending") is None:
-            self.crash_store = False
-            raise RuntimeError("injected crash before cursor advance")
-        super()._store(cur)
-
-    def _consume_publish(self, cur, from_v, to_v, had_pending):
-        if self.crash_publish:
-            self.crash_publish = False
-            raise RuntimeError("injected crash before publish")
-        return super()._consume_publish(cur, from_v, to_v, had_pending)
+    return mock.patch("os.rename", rename)
 
 
 @settings(max_examples=6, deadline=None,
@@ -79,7 +73,7 @@ def test_published_feed_is_contiguous_write_once_and_replayable(
     src = TranscriptTable(spark, f"{root}/src", n_buckets=2)
     app = ChangeApplier(src)
     wire_dir = f"{root}/wire"
-    pub = FlakyPublisher(src, wire_dir, f"{root}/cursor.json")
+    pub = WirePublisher(src, wire_dir, f"{root}/cursor.json")
 
     model: dict[tuple, tuple] = {}
     lsn = 0
@@ -119,12 +113,11 @@ def test_published_feed_is_contiguous_write_once_and_replayable(
         elif kind == "tick":
             pub.tick()
         else:
-            setattr(pub, kind, True)
-            try:
-                pub.tick()
-            except RuntimeError as exc:
-                assert "injected crash" in str(exc)
-            setattr(pub, kind, False)
+            with crashing_rename(payload):
+                try:
+                    pub.tick()
+                except RuntimeError as exc:
+                    assert "injected crash" in str(exc)
         observe_windows()
 
     # quiescence: drain everything still unpublished
@@ -140,10 +133,8 @@ def test_published_feed_is_contiguous_write_once_and_replayable(
         assert nxt_from == prev_to, f"feed gap/overlap at {prev_to}"
     if bounds:
         assert bounds[0][0] == 0
-        import json
-
-        cur = json.load(open(f"{root}/cursor.json"))
-        assert bounds[-1][1] == int(cur["from_version"])
+        assert bounds[-1][1] == int(src.manifest()["version"])
+    assert not os.path.exists(f"{root}/cursor.json")  # never written
 
     # replayability: decode every published record and merge the lot into a
     # fresh table — the wire feed alone reconstructs the source state

@@ -222,16 +222,21 @@ def _get_text(port, path):
         return r.status, r.headers.get("Content-Type"), r.read().decode()
 
 
+COUNTERS = {"gdps_rows_upserted_total", "gdps_rows_deleted_total",
+            "gdps_rows_quarantined_total"}
+
+
 def _parse_prom(text):
     """Prometheus text format 0.0.4 → {name: value}; asserts the HELP/TYPE
-    preamble discipline for every exported series."""
+    preamble discipline for every exported series: the three row totals are
+    counters, every other series a gauge."""
     values, seen_help, seen_type = {}, set(), set()
     for line in text.strip().splitlines():
         if line.startswith("# HELP "):
             seen_help.add(line.split()[2])
         elif line.startswith("# TYPE "):
             name, mtype = line.split()[2], line.split()[3]
-            assert mtype == "gauge"
+            assert mtype == ("counter" if name in COUNTERS else "gauge"), name
             seen_type.add(name)
         else:
             name, val = line.split()
@@ -391,6 +396,54 @@ def test_metrics_scrape_launches_no_spark_job(spark, small_table):
     vals = _parse_prom(text)
     assert vals["gdps_lineage_epochs"] == 1
     assert vals["gdps_rows_upserted_total"] == 12  # 3 convs x 4 turns
+
+
+def test_uncommitted_attempt_outputs_are_not_counted(spark, small_table,
+                                                     monkeypatch):
+    """An attempt that fails at its commit and is never redelivered leaves
+    its quarantine rows and lineage file on disk.  They belong to no
+    committed (writer, epoch), so /report's skipped rows equal the
+    manifest's quarantined total and gdps_lineage_epochs counts the
+    committed pairs only; the scrape still runs no Spark job."""
+    import os
+
+    from conftest import jobs_launched
+
+    tbl, lineage = small_table
+    qdir = f"{tbl.root}/_quarantine"
+    app = ChangeApplier(tbl, lineage_dir=lineage, quarantine_dir=qdir,
+                        writer_id="side/1")
+    app.apply_batch(spark.createDataFrame(
+        [(71, "I", "c0", 8, "user", "a", None, None, 1),
+         (72, "I", None, 8, "user", "bad-key", None, None, 1)], SCHEMA),
+        epoch_id=0)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(TranscriptTable, "_commit", crash)
+        with pytest.raises(RuntimeError, match="crash before the commit"):
+            app.apply_batch(spark.createDataFrame(
+                [(81, "I", "c1", 8, "user", "b", None, None, 1),
+                 (82, "I", None, 8, "user", "bad1", None, None, 1),
+                 (83, "X", "c2", 8, "user", "bad2", None, None, 1)], SCHEMA),
+                epoch_id=1)
+    # the failed attempt's outputs are on disk: 3 lineage files, 2 quarantine
+    # dirs (the fixture's epoch had no invalid row)
+    assert len(os.listdir(lineage)) == 3 and len(os.listdir(qdir)) == 2
+
+    report = build_report(spark, tbl, lineage)
+    m = tbl.manifest()
+    assert m["rows_quarantined_total"] == 1
+    assert report["rows_skipped_total"] == m["rows_quarantined_total"]
+    assert report["lineage_epochs"] == 2  # (default, 0) and (side/1, 0)
+    with jobs_launched(spark.sparkContext) as jobs:
+        text = build_metrics_text(tbl, lineage)
+    assert jobs == []
+    vals = _parse_prom(text)
+    assert vals["gdps_lineage_epochs"] == 2
+    assert vals["gdps_rows_quarantined_total"] == 1
 
 
 def test_lineage_crash_window_keeps_manifest_totals(spark, small_table,

@@ -1,12 +1,12 @@
 """Property-based check of the CDC-out tailer loop (r4 verdict #5): any
-interleaving of {source commit, compact, vacuum, tick, crash-before-cursor-
-store, reseed} must leave the target equal to the source snapshot at
-quiescence — with every retention loss surfacing TYPED
-(ChangefeedRetentionError), never as a silently incomplete copy.  The
-r4 reseed bug (a crashed tick's consumed epoch silently skipping the
-reseed merge) was found by manual review; this generates that class of
-interleaving mechanically, the way test_manifest_properties.py generates
-the metadata plane's."""
+interleaving of {source commit, compact, vacuum, tick, reseed}, each tick or
+reseed possibly crashing just before or just after the target's commit,
+must leave the target equal to the source snapshot at quiescence — with
+every retention loss surfacing TYPED (ChangefeedRetentionError), never as a
+silently incomplete copy.  The r4 reseed bug (a crashed tick's consumed
+epoch silently skipping the reseed merge) was found by manual review; this
+generates that class of interleaving mechanically, the way
+test_manifest_properties.py generates the metadata plane's."""
 
 from __future__ import annotations
 
@@ -34,28 +34,29 @@ ACTIONS = st.lists(
     st.one_of(
         st.tuples(st.just("commit"), st.lists(_row, min_size=1, max_size=4)),
         st.tuples(st.just("tick"), st.none()),
-        st.tuples(st.just("crash_tick"), st.none()),
+        st.tuples(st.just("crash_tick"), st.sampled_from(["before", "after"])),
         st.tuples(st.just("compact"), st.none()),
         st.tuples(st.just("vacuum"), st.integers(1, 3)),
-        st.tuples(st.just("reseed"), st.none()),
+        st.tuples(st.just("reseed"), st.sampled_from([None, "before", "after"])),
     ),
     min_size=3, max_size=7,
 )
 
 
-class FlakyTailer(ChangefeedTailer):
-    """Crash injection at the tick protocol's most dangerous point: after
-    the target merge, before the cursor advance (the final non-pending
-    store)."""
+class FlakyTable(TranscriptTable):
+    """Crash injection at the tailer's one commit point: the target's next
+    manifest commit raises just ``before`` or just ``after`` it is
+    written."""
 
-    crash_next = False
+    crash = None
 
-    def _store(self, cur):
-        if (self.crash_next and cur.get("pending") is None
-                and "pending_reseed" not in cur):
-            self.crash_next = False
-            raise RuntimeError("injected crash before cursor advance")
-        super()._store(cur)
+    def _commit(self, *a, **k):
+        when, self.crash = self.crash, None
+        if when == "before":
+            raise RuntimeError("injected crash before the target commit")
+        super()._commit(*a, **k)
+        if when == "after":
+            raise RuntimeError("injected crash after the target commit")
 
 
 @settings(max_examples=8, deadline=None,
@@ -66,8 +67,8 @@ def test_tailer_converges_to_source_under_any_interleaving(
     root = str(tmp_path_factory.mktemp("tprop"))
     src = TranscriptTable(spark, f"{root}/src", n_buckets=2)
     app = ChangeApplier(src)
-    tgt = TranscriptTable(spark, f"{root}/tgt", n_buckets=2)
-    tailer = FlakyTailer(src, tgt, f"{root}/cursor.json")
+    tgt = FlakyTable(spark, f"{root}/tgt", n_buckets=2)
+    tailer = ChangefeedTailer(src, tgt, f"{root}/cursor.json")
 
     # the trivially-correct replica: ops applied in lsn order (lsn strictly
     # increases across EVERY generated row, so last-wins == sequential)
@@ -100,19 +101,17 @@ def test_tailer_converges_to_source_under_any_interleaving(
             epoch += 1
         elif kind == "tick":
             recover(tailer.tick)
-        elif kind == "crash_tick":
-            tailer.crash_next = True
-            try:
-                recover(tailer.tick)
-            except RuntimeError as exc:
-                assert "injected crash" in str(exc)
-            tailer.crash_next = False
         elif kind == "compact":
             src.compact()
         elif kind == "vacuum":
             src.vacuum(keep_versions=payload, orphan_grace_seconds=0)
-        else:  # reseed — legal at any time (target := source snapshot)
-            recover(tailer.reseed)
+        else:  # a tick, or a reseed — legal at any time (target := snapshot)
+            tgt.crash = payload
+            try:
+                recover(tailer.tick if kind == "crash_tick" else tailer.reseed)
+            except RuntimeError as exc:
+                assert payload and "injected crash" in str(exc)
+            tgt.crash = None
 
     # quiescence: drain, reseeding on any typed retention loss
     for _ in range(4):

@@ -44,6 +44,27 @@ def test_epoch_guard_scoped_per_writer(spark, tmpdir_path):
     assert tbl.epoch_state()["epoch_hwm"] == -1  # default writer untouched
 
 
+def test_recorded_source_version_is_per_writer_and_kept(spark, tmpdir_path):
+    """merge(source_version=) records the consumed version in the
+    committing writer's entry only; a later commit of that writer without
+    one keeps it, for a named writer and the default writer alike."""
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
+
+    def merge(lsn, epoch, writer, version=None):
+        df = spark.createDataFrame([_row(lsn, "I", f"c{lsn}", "x")], SCHEMA)
+        return tbl.merge(df.drop("schema_version"), epoch_id=epoch,
+                         writer_id=writer, source_version=version)
+
+    assert tbl.epoch_state("w")["source_version"] is None
+    for writer in ("w", "default"):
+        assert merge(1, 0, writer, version=5)["status"] == "committed"
+        assert merge(2, 1, writer)["status"] == "committed"
+        assert tbl.epoch_state(writer)["source_version"] == 5
+    assert tbl.epoch_state("other")["source_version"] is None
+    tbl.compact()
+    assert tbl.epoch_state("w")["source_version"] == 5
+
+
 def test_ephemeral_table_schema_evolves_with_main(spark, tmpdir_path):
     """Dual-target routing: a batch adding the v2 'tool' column must land it
     in the EPHEMERAL table too (previously silently dropped)."""
@@ -62,8 +83,11 @@ def test_ephemeral_table_schema_evolves_with_main(spark, tmpdir_path):
 
 def test_quarantine_healed_on_replay(spark, tmpdir_path, monkeypatch):
     """Crash between the quarantine write and the manifest commit: the
-    redelivered batch rewrites the epoch's invalid rows in place of the
-    crashed attempt's, so they are counted once."""
+    crashed attempt's rows are on disk but belong to no committed epoch, so
+    the read skips them; the redelivered batch rewrites them in place, so
+    they are counted once."""
+    import os
+
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=2)
     qdir = f"{tmpdir_path}/quarantine"
     app = ChangeApplier(tbl, quarantine_dir=qdir)
@@ -78,7 +102,8 @@ def test_quarantine_healed_on_replay(spark, tmpdir_path, monkeypatch):
         mp.setattr(TranscriptTable, "_commit", crash)
         with pytest.raises(RuntimeError, match="before the commit"):
             app.apply_batch(batch, epoch_id=0)
-    assert read_quarantine(tbl, qdir).count() == 1
+    assert os.listdir(qdir) == [app._epoch_name(0)]
+    assert read_quarantine(tbl, qdir).count() == 0
     assert not tbl.is_epoch_committed(0)
 
     out = app.apply_batch(batch, epoch_id=0)  # redelivery
@@ -111,7 +136,7 @@ def test_writers_sharing_output_dirs_keep_their_own_files(spark, tmpdir_path):
     assert tbl.manifest()["rows_quarantined_total"] == 4
     lin = spark.read.schema(schemas.LINEAGE_SCHEMA).json(lineage)
     assert sorted(r["lsn_from"] for r in lin.collect()) == [1, 3, 11, 13]
-    assert lineage_epochs(lineage) == 4
+    assert lineage_epochs(tbl, lineage) == 4
 
 
 def test_merge_null_key_fails_fast(spark, tmpdir_path):
