@@ -1383,9 +1383,7 @@ def q_cdc_time_travel(spark, sf_dir):
     The version is looked up by epoch watermark, not hardcoded, so metadata
     commits (an evolve, a compaction) interleaving with the chunk commits
     can't silently shift which state is read.  Mirrors reference consumers
-    re-reading an archived epoch (SURVEY §2 S1/S4); `version_as_of`
-    timestamp resolution is pinned in pytest (wall-clock timestamps are not
-    oracle-able)."""
+    re-reading an archived epoch (SURVEY §2 S1/S4)."""
     tbl = _replayed_table(spark, sf_dir)
     ver = max((h["version"] for h in tbl.history()
                if h["epoch_hwm"] == _TT_PREFIX - 1), default=None)

@@ -83,46 +83,6 @@ def bucket_expr(conv_col: str, n_buckets: int):
     return F.expr(bucket_sql(conv_col, n_buckets))
 
 
-# --- balanced write partitioning -------------------------------------------
-#
-# ``repartition(n, "__bucket")`` hashes the ~n distinct bucket ids into n
-# partitions, so birthday collisions leave ~1/e of the write tasks EMPTY and
-# hand others 2-3 buckets (guide §2.5 "synthetic partitioning keys with too
-# few distinct values") — a built-in 2-3× straggler on every commit's write
-# stage, and the root cause that sank the r7 merge-fusion experiment (see the
-# NOTE in merge()).  Since the layout only requires that all rows of one
-# bucket land in ONE task (any deterministic function of __bucket does), we
-# repartition on a PREIMAGE key instead: j(b) chosen so that Spark's shuffle
-# hash sends bucket b exactly to partition b % n — perfect round-robin, one
-# bucket per task when n == n_buckets.  Pure placement device: file contents,
-# one-file-per-bucket layout and lineage are byte-identical.
-
-_MMH3_SEED = 42  # Spark's HashPartitioning seed
-_PKEY_CACHE: dict[int, list[int]] = {}
-
-
-def _mmh3_hash_int(x: int, seed: int = _MMH3_SEED) -> int:
-    """Murmur3_x86_32 of one 4-byte int block — byte-for-byte the hash
-    HashPartitioning applies to an IntegerType repartition column (same as
-    ``F.hash`` on an int).  Pinned against F.hash in
-    tests/test_balanced_write.py; a mismatch would only cost balance, never
-    correctness (placement is still a pure function of __bucket)."""
-    m = 0xFFFFFFFF
-    k = (x & m) * 0xCC9E2D51 & m
-    k = ((k << 15) | (k >> 17)) & m
-    k = k * 0x1B873593 & m
-    h = (seed ^ k) & m
-    h = ((h << 13) | (h >> 19)) & m
-    h = (h * 5 + 0xE6546B64) & m
-    h ^= 4  # total byte length
-    h ^= h >> 16
-    h = h * 0x85EBCA6B & m
-    h ^= h >> 13
-    h = h * 0xC2B2AE35 & m
-    h ^= h >> 16
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
 _M64 = (1 << 64) - 1
 _P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F,
                            0x165667B19E3779F9, 0x85EBCA77C2B2AE63,
@@ -175,32 +135,6 @@ def _xxh64(data: bytes, seed: int = 42) -> int:
     h = (h ^ (h >> 33)) * _P2 & _M64
     h = (h ^ (h >> 29)) * _P3 & _M64
     return h ^ (h >> 32)
-
-
-def _balanced_pkeys(n_parts: int) -> list[int]:
-    """First int j per residue p with hash(j) ≡ p (mod n_parts); memoized.
-    Coupon-collector search, ~n·ln n probes (≈1.5k for 256 parts, once),
-    capped at 64·n probes: a residue still without a preimage then maps to
-    itself, so placement stays a pure function of __bucket and only the
-    balance of that residue is lost."""
-    got = _PKEY_CACHE.get(n_parts)
-    if got is None:
-        found: dict[int, int] = {}
-        for j in range(64 * n_parts):
-            found.setdefault(_mmh3_hash_int(j) % n_parts, j)
-            if len(found) == n_parts:
-                break
-        got = [found.get(p, p) for p in range(n_parts)]
-        _PKEY_CACHE[n_parts] = got
-    return got
-
-
-def balanced_write_pkey(bucket_col: str, n_parts: int) -> str:
-    """SQL text of j(bucket_col), whose shuffle hash places bucket b in
-    partition b % n_parts — exact round-robin over the write tasks."""
-    arr = ", ".join(str(j) for j in _balanced_pkeys(n_parts))
-    return (f"element_at(array({arr}), "
-            f"CAST(pmod({ident(bucket_col)}, {int(n_parts)}) AS INT) + 1)")
 
 
 def _footer_stats(path: str, order_col: str, del_col: str | None = None):
@@ -700,19 +634,6 @@ class TranscriptTable:
 
     # ---------------- reads ----------------
 
-    def version_as_of(self, ts: float) -> int:
-        """Timestamp time travel: the newest committed version whose commit
-        time is <= ``ts`` (unix seconds) — Iceberg's snapshot-as-of-time
-        resolution over the retained manifest log."""
-        best = None
-        for h in self.history():
-            c = h.get("committed_at")
-            if c is not None and float(c) <= float(ts):
-                best = h["version"] if best is None else max(best, h["version"])
-        if best is None:
-            raise ValueError(f"no snapshot committed at or before {ts}")
-        return best
-
     def _read_groups(self, m: dict, files: list, target: T.StructType,
                      *extra: str) -> DataFrame:
         """``files`` of manifest ``m`` as one frame cast to ``target``, plus
@@ -741,8 +662,8 @@ class TranscriptTable:
                  version: int | None = None,
                  keep_tombstones: bool = False) -> DataFrame:
         """Committed state (optionally pruned to a bucket subset), at the
-        current version or any past version (time travel; resolve a unix
-        time with ``version_as_of``).
+        current version or any past version (time travel; ``history()``
+        lists each retained version with its commit time).
         ``keep_tombstones=True`` returns the fold *winners* including delete
         tombstones with an ``op`` column — what compaction rewrites, so late
         out-of-order changes below a tombstone's order value still lose
@@ -879,45 +800,35 @@ class TranscriptTable:
         return {"epoch_hwm": hwm, "epochs_recent": sorted(recent),
                 "source_version": version}
 
-    def cursor_lsn(self) -> int:
-        return int(self._raw_current()["cursor_lsn"])
-
     # ---------------- bucketed writes (merge and compact) ----------------
 
     def write_tasks(self) -> int:
         """Writer tasks per table write: one per core, at most one per
         bucket, so each write stage finishes in ONE task wave.
 
-        Repartitioning on a pure function of __bucket keeps every bucket's
-        rows inside one task whatever the task count, so the layout (one
-        file per touched bucket) does not depend on it; tasks beyond the
-        cores only add waves.  At 16 buckets on local[4] the earlier
-        2 × cores (8 tasks, 2 waves) spent 323–415 ms of wall and ~40 ms of
-        executor deserialize per task in each write stage; one wave of 4
-        cut the traced replay's tasks per commit from 9.43 to 5.43.  On a
-        cluster with ≥ n_buckets cores the cap is n_buckets."""
+        ``repartitionById(n, "__bucket")`` sends bucket b to task b % n, so
+        every bucket's rows stay inside one task whatever the task count and
+        the layout (one file per touched bucket) does not depend on it;
+        tasks beyond the cores only add waves.  At 16 buckets on local[4]
+        the earlier 2 × cores (8 tasks, 2 waves) spent 323–415 ms of wall
+        and ~40 ms of executor deserialize per task in each write stage; one
+        wave of 4 cut the traced replay's tasks per commit from 9.43 to
+        5.43.  On a cluster with ≥ n_buckets cores the cap is n_buckets."""
         par = self.spark.sparkContext.defaultParallelism
         return min(self.n_buckets, max(1, par))
 
-    def _write_buckets(self, df: DataFrame, n_tasks: int, shape=None,
-                       **options) -> list[tuple[str, int]]:
+    def _write_buckets(self, df: DataFrame, **options) -> list[tuple[str, int]]:
         """Write ``df`` (which carries ``__bucket``) into a fresh commit dir
-        partitioned by bucket, in ``n_tasks`` writer tasks; returns the
-        ``(path, bucket)`` of every file written, sorted.
+        partitioned by bucket; returns the ``(path, bucket)`` of every file
+        written, sorted.
 
-        Balanced placement (r7): the write repartitions on the hash-preimage
-        key ``__pkey``, not __bucket itself (see balanced_write_pkey), so
-        bucket b lands in task b % n_tasks and each task writes one file per
-        bucket it holds — ONE file per touched bucket (empty tasks write
-        nothing).  ``shape`` maps the placed frame, still carrying
-        ``__pkey``, to the frame written; by default ``__pkey`` is dropped.
-        ``options`` go to the parquet writer."""
+        The caller places ``df`` with ``repartitionById(n_tasks,
+        "__bucket")``: bucket b lands in task b % n_tasks, and each task
+        writes one file per bucket it holds — ONE file per touched bucket
+        (empty tasks write nothing).  ``options`` go to the parquet
+        writer."""
         out_dir = f"{self.root}/data/commit={uuid.uuid4().hex[:12]}"
-        placed = (df.selectExpr("*", f"{balanced_write_pkey('__bucket', n_tasks)} "
-                                     "AS __pkey")
-                    .repartition(n_tasks, "__pkey"))
-        out = shape(placed) if shape else placed.drop("__pkey")
-        (out.write.mode("overwrite").options(**options)
+        (df.write.mode("overwrite").options(**options)
             .partitionBy("__bucket").parquet(out_dir))
         entries = []
         for bdir in sorted(os.listdir(out_dir)):
@@ -1010,12 +921,12 @@ class TranscriptTable:
         # the key (silent loss for numeric-keyed tables).
         changes = changes.selectExpr(
             *project_to(target_schema, changes.columns), "`op`")
-        # r7: the in-batch last-wins is FUSED into the (balanced) bucket
+        # r7: the in-batch last-wins is FUSED into the bucket placement
         # shuffle — one exchange per microbatch instead of two.  A first
-        # fusion attempt over the raw bucket hash lost the chunk-replay A/B
-        # 2-3× to bucket-hash collision skew (~1/e of the tasks empty, others
-        # holding 2-3 buckets); with the balanced pkey placement (one bucket
-        # per task, see balanced_write_pkey) the same fusion wins every
+        # fusion attempt over the hash of __bucket lost the chunk-replay A/B
+        # 2-3× to hash collision skew (~1/e of the tasks empty, others
+        # holding 2-3 buckets); with an exact round-robin placement (bucket
+        # b in task b % n, now ``repartitionById``) the same fusion won every
         # interleaved rep of the headline 4×1M replay by 15-25%
         # (plans/r07/fused_ab_run{1,2}.json; full-row snapshot equality
         # verified on both runs).
@@ -1039,33 +950,30 @@ class TranscriptTable:
         n_write_tasks = (min(self.n_buckets, write_parallelism)
                          if write_parallelism else self.write_tasks())
 
-        def shape(placed: DataFrame) -> DataFrame:
-            # FUSED in-batch last-wins (guide §2.4): placement is a pure
-            # function of key[0], so the write repartition already clusters
-            # every key group into one task; grouping by the partition key
-            # itself (plus __bucket — functionally dependent, a no-op for the
-            # groups) lets Catalyst prove the distribution is satisfied and
-            # plan NO second exchange.  Winners are identical to last_wins:
-            # max_by over the same (order_col, op-rank) within the same key
-            # groups.
-            from ..operators.dedup import winner_sql
+        # FUSED in-batch last-wins (guide §2.4): the placement sends bucket
+        # b to task b % n_write_tasks, so every key group already sits in
+        # one task; grouping by the placement column itself (plus the key)
+        # lets Catalyst prove the distribution is satisfied and plan NO
+        # second exchange.  Winners are identical to last_wins: max_by over
+        # the same (order_col, op-rank) within the same key groups.
+        from ..operators.dedup import winner_sql
 
-            payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
-            out = (
-                placed.groupBy("__pkey", "__bucket", *self.key)
-                .agg(F.expr(winner_sql(payload, (self.order_col,))))
-                .select("__win.*")
-            )
-            # delete marker as a NULLABLE data column (1 for tombstones, NULL
-            # otherwise): the parquet footer's per-column null counts then
-            # yield the exact upsert/delete split with zero extra reads, so
-            # the commit writes ONE file per touched bucket instead of the
-            # round-4 partitionBy-(bucket, is-delete) pair (which doubled the
-            # per-commit file count and the footer-read fan-out — the 3.81×
-            # 16→256-bucket commit growth in BENCH_r04)
-            return out.selectExpr(
-                "*", "CAST(CASE WHEN `op` = 'D' THEN 1 END AS INT) AS __del",
-                f"CAST({int(seq)} AS BIGINT) AS __seq")
+        # The delete marker is a NULLABLE data column (1 for tombstones, NULL
+        # otherwise): the parquet footer's per-column null counts then yield
+        # the exact upsert/delete split with zero extra reads, so the commit
+        # writes ONE file per touched bucket instead of the round-4
+        # partitionBy-(bucket, is-delete) pair (which doubled the per-commit
+        # file count and the footer-read fan-out — the 3.81× 16→256-bucket
+        # commit growth in BENCH_r04)
+        payload = [f.name for f in target_schema.fields] + ["op", "__bucket"]
+        winners = (
+            changes.repartitionById(n_write_tasks, "__bucket")
+            .groupBy("__bucket", *self.key)
+            .agg(F.expr(winner_sql(payload, (self.order_col,))))
+            .selectExpr("__win.*",
+                        "CAST(CASE WHEN __win.`op` = 'D' THEN 1 END AS INT) AS __del",
+                        f"CAST({int(seq)} AS BIGINT) AS __seq")
+        )
 
         # The delta write is the ONLY Spark job of the merge: per-bucket
         # lineage counters come from the parquet footers below.  ``op`` and
@@ -1077,8 +985,7 @@ class TranscriptTable:
         # stage at 32 threads).  Deltas are batch-sized and folded/compacted
         # away, so scan-side row-group size doesn't matter; compact() writes
         # base files with the default.
-        entries = self._write_buckets(changes, n_write_tasks, shape,
-                                      **{"parquet.block.size": 16 << 20})
+        entries = self._write_buckets(winners, **{"parquet.block.size": 16 << 20})
 
         # Derive lineage counters from parquet footer metadata (row counts,
         # order-col min/max statistics, and the delete split from __del null
@@ -1332,7 +1239,8 @@ class TranscriptTable:
             # base rows carry (op, __seq) as data columns too, so all live
             # files share one read schema per schema id (see snapshot())
             f"CAST({int(seq)} AS BIGINT) AS __seq")
-        entries = self._write_buckets(df, self.write_tasks())
+        entries = self._write_buckets(
+            df.repartitionById(self.write_tasks(), "__bucket"))
         sid = int(m["current_schema_id"])
         # per-bucket fold high watermark: the newest change version this base
         # absorbs — changes() uses it to raise ONLY when a requested window

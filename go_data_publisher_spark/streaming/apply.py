@@ -76,64 +76,42 @@ def _default_is_retriable(exc: BaseException) -> bool:
     TranscriptTable._commit) surface immediately instead of burning the
     backoff budget first.
     """
-    from pyspark.errors import AnalysisException
+    from py4j.protocol import Py4JError
+    from pyspark.errors import (
+        AnalysisException,
+        ArithmeticException,
+        ArrayIndexOutOfBoundsException,
+        DateTimeException,
+        IllegalArgumentException,
+        NumberFormatException,
+    )
+    from pyspark.errors.exceptions.captured import CapturedException
 
     from ..lake.table import ConcurrentCommitError
 
     if isinstance(exc, AnalysisException):
         return False  # plan/schema-shaped: retrying re-runs the same analysis
-    if isinstance(exc, (ConcurrentCommitError, OSError)):
-        return True
+    if isinstance(exc, (ConcurrentCommitError, OSError, Py4JError)):
+        return True  # Py4JError: JVM-side job failure, presumed IO-shaped
+    if not isinstance(exc, CapturedException):
+        return False
+    # Known-PERMANENT JVM semantic shapes must not burn the backoff budget +
+    # the degrade ladder: bad arguments, cast/parse failures, arithmetic
+    # overflow, and merge-cardinality violations re-fail identically at
+    # every width.
+    if isinstance(exc, (ArithmeticException, ArrayIndexOutOfBoundsException,
+                        DateTimeException, IllegalArgumentException,
+                        NumberFormatException)):
+        return False
     try:
-        from py4j.protocol import Py4JError
-
-        if isinstance(exc, Py4JError):
-            return True  # JVM-side job failure: presumed IO-shaped
-    except ImportError:
-        pass
-    try:
-        from pyspark.errors.exceptions.captured import CapturedException
-
-        if isinstance(exc, CapturedException):
-            # Known-PERMANENT JVM semantic shapes must not burn the backoff
-            # budget + the degrade ladder: bad arguments, cast/parse
-            # failures, arithmetic overflow, and merge-cardinality
-            # violations re-fail identically at every width.
-            try:
-                from pyspark.errors import (
-                    ArithmeticException,
-                    ArrayIndexOutOfBoundsException,
-                    DateTimeException,
-                    IllegalArgumentException,
-                    NumberFormatException,
-                )
-
-                if isinstance(exc, (ArithmeticException,
-                                    ArrayIndexOutOfBoundsException,
-                                    DateTimeException,
-                                    IllegalArgumentException,
-                                    NumberFormatException)):
-                    return False
-            except ImportError:
-                pass
-            try:
-                # Spark 4 name, falling back to the 3.x name so the
-                # permanent-class detection doesn't silently no-op there
-                getter = getattr(exc, "getCondition", None) \
-                    or getattr(exc, "getErrorClass", None)
-                err_class = (getter() if getter else "") or ""
-            except Exception:
-                err_class = ""
-            _PERMANENT_CLASSES = ("MERGE_CARDINALITY_VIOLATION",
-                                  "CAST_OVERFLOW", "CAST_INVALID_INPUT",
-                                  "ARITHMETIC_OVERFLOW", "DIVIDE_BY_ZERO",
-                                  "NUMERIC_VALUE_OUT_OF_RANGE")
-            if any(err_class.startswith(p) for p in _PERMANENT_CLASSES):
-                return False
-            return True  # non-analysis JVM exception surfaced via Spark
-    except ImportError:
-        pass
-    return False
+        err_class = exc.getCondition() or ""
+    except Exception:
+        err_class = ""
+    _PERMANENT_CLASSES = ("MERGE_CARDINALITY_VIOLATION",
+                          "CAST_OVERFLOW", "CAST_INVALID_INPUT",
+                          "ARITHMETIC_OVERFLOW", "DIVIDE_BY_ZERO",
+                          "NUMERIC_VALUE_OUT_OF_RANGE")
+    return not err_class.startswith(_PERMANENT_CLASSES)
 
 
 @dataclass

@@ -1,88 +1,42 @@
-"""Balanced write placement (r7): the hash-preimage partition key.
+"""Bucket placement of the merge and compaction writes.
 
-The merge/compact write stages repartition by a preimage j(__bucket) so that
-Spark's shuffle hash sends bucket b exactly to partition b % n — one bucket
-per writer task instead of the birthday-collision spread of hashing ~n
-distinct ids into n partitions.  These tests pin the two load-bearing facts:
+The merge/compact write stages place rows with ``repartitionById(n,
+"__bucket")``, which sends bucket b to partition b % n — one bucket per
+writer task when n equals the bucket count, never the birthday-collision
+spread of hashing ~n distinct ids into n partitions.  The merge fuses its
+in-batch last-wins into that one exchange.  These tests pin:
 
-1. the pure-Python Murmur3 mirrors ``F.hash`` on ints (if Spark ever changed
-   its shuffle hash this fails loudly; the engine would still be CORRECT,
-   only balance would regress — placement stays a pure function of __bucket);
-2. the resulting placement is exact round-robin, verified both arithmetically
-   and live via spark_partition_id().
+1. the placement itself, live via spark_partition_id();
+2. the fused merge's winners against the two-phase shape;
+3. the write plan: one Exchange, a partition-id placement on __bucket,
+   feeding one max_by aggregate grouped by (__bucket, *key);
+4. the layout: one file per touched bucket, also when buckets outnumber
+   the writer tasks.
 """
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from go_data_publisher_spark.lake.table import (
-    TranscriptTable,
-    _balanced_pkeys,
-    _mmh3_hash_int,
-    balanced_write_pkey,
-)
-
-
-def test_mmh3_matches_spark_hash(spark):
-    vals = list(range(-8, 64)) + [1_000, 65_535, 2**31 - 1, -(2**31)]
-    rows = (
-        spark.createDataFrame([(v,) for v in vals], "x int")
-        .select("x", F.hash("x").alias("h"))
-        .collect()
-    )
-    for r in rows:
-        assert _mmh3_hash_int(r.x) == r.h, f"murmur3 mismatch at {r.x}"
-
-
-@pytest.mark.parametrize("n", [1, 8, 16, 32, 256])
-def test_preimages_are_exact_round_robin(n):
-    pkeys = _balanced_pkeys(n)
-    assert len(pkeys) == n
-    for p, j in enumerate(pkeys):
-        assert _mmh3_hash_int(j) % n == p
+from go_data_publisher_spark.lake.table import TranscriptTable
 
 
 def test_one_bucket_per_partition_live(spark):
-    n = 32
-    df = (
-        spark.range(10_000)
-        .select(F.pmod(F.col("id"), F.lit(n)).cast("int").alias("__bucket"))
-        .withColumn("__pkey", F.expr(balanced_write_pkey("__bucket", n)))
-        .repartition(n, "__pkey")
-        .select("__bucket", F.spark_partition_id().alias("pid"))
-    )
-    placement = df.distinct().collect()
-    # every bucket in exactly one partition, and no partition holds two
-    by_bucket = {}
-    for r in placement:
-        by_bucket.setdefault(r["__bucket"], set()).add(r["pid"])
-    assert len(by_bucket) == n
-    pids = set()
-    for b, ps in by_bucket.items():
-        assert len(ps) == 1, f"bucket {b} split across partitions {ps}"
-        pids |= ps
-    assert len(pids) == n, "two buckets collided onto one write task"
-
-
-def test_balanced_pkeys_search_is_capped(monkeypatch):
-    """A hash that never reaches some residues ends the preimage search
-    after 64·n probes; those residues map to themselves, so placement stays
-    a pure function of __bucket (only balance is lost)."""
-    import go_data_publisher_spark.lake.table as table_mod
-
-    probes = []
-
-    def stub_hash(j, seed=42):
-        probes.append(j)
-        return 2 * j  # even residues only
-
-    monkeypatch.setattr(table_mod, "_mmh3_hash_int", stub_hash)
-    monkeypatch.setattr(table_mod, "_PKEY_CACHE", {})
-    got = table_mod._balanced_pkeys(8)
-    assert len(probes) == 64 * 8
-    assert got == [0, 1, 1, 3, 2, 5, 3, 7]
+    """Every bucket lands in partition bucket % n: at n == 32 buckets one
+    bucket per partition, at n == 12 each partition holds its residues."""
+    for n_buckets, n in ((32, 32), (32, 12)):
+        placement = (
+            spark.range(10_000)
+            .select(F.pmod(F.col("id"), F.lit(n_buckets)).cast("int")
+                    .alias("__bucket"))
+            .repartitionById(n, "__bucket")
+            .select("__bucket", F.spark_partition_id().alias("pid"))
+            .distinct().collect()
+        )
+        by_bucket = {}
+        for r in placement:
+            by_bucket.setdefault(r["__bucket"], set()).add(r["pid"])
+        assert by_bucket == {b: {b % n} for b in range(n_buckets)}, by_bucket
 
 
 def test_fused_equals_two_phase(spark, tmpdir_path):
@@ -160,8 +114,8 @@ def test_write_plan_is_fused_for_raw_routed_and_guarded_batches(
     """merge() has one write plan: for a raw batch, for the routed
     applier's already-deduped halves and for an overlap-guarded table, the
     frame handed to the parquet writer holds the same fused last-wins
-    aggregate, grouped by (__pkey, __bucket, *key), over exactly one
-    Exchange — the placement on __pkey.  The plan is taken while the write
+    aggregate, grouped by (__bucket, *key), over exactly one Exchange —
+    the partition-id placement on __bucket.  The plan is taken while the write
     runs, so the routed winners show as the cached input they are."""
     import re
 
@@ -180,11 +134,12 @@ def test_write_plan_is_fused_for_raw_routed_and_guarded_batches(
     def assert_fused(nodes, key):
         exchanges = [d for n, d in nodes if n == "Exchange"]
         assert len(exchanges) == 1, exchanges
-        assert "hashpartitioning(__pkey#" in exchanges[0], exchanges[0]
+        assert "direct_shuffle_partition_id(__bucket#" in exchanges[0], \
+            exchanges[0]
         groupings = [re.sub(r"#\d+L?", "", m.group(1))
                      for _, d in nodes
                      if (m := re.search(r"key=\[(.*?)\], functions=\[max_by\(", d))]
-        assert groupings == [", ".join(["__pkey", "__bucket", *key])], nodes
+        assert groupings == [", ".join(["__bucket", *key])], nodes
 
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", spy)
     log = generate_changelog(spark, 3_000, n_convs=40, seed=5)
@@ -219,7 +174,7 @@ def test_write_plan_is_fused_for_raw_routed_and_guarded_batches(
 
 def test_merge_layout_one_file_per_bucket(spark, tmpdir_path):
     """End to end: a merge commit still writes exactly one delta file per
-    touched bucket with the balanced placement on."""
+    touched bucket."""
     tbl = TranscriptTable(spark, tmpdir_path, n_buckets=8)
     events = spark.createDataFrame(
         [(f"c{i}", i % 3, i, "I", f"t{i}") for i in range(200)],
@@ -254,7 +209,9 @@ def test_merge_and_compact_layout_several_buckets_per_task(
     def write_partitioning(df):
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        return re.findall(r"hashpartitioning\((\w+)#\d+, (\d+)\)", plan)
+        return re.findall(
+            r"shufflepartitionidpassthrough\(direct_shuffle_partition_id"
+            r"\((\w+)#\d+\), (\d+)\)", plan)
 
     monkeypatch.setattr(rw.DataFrameWriter, "parquet", spy)
     tbl = TranscriptTable(spark, tmpdir_path, n_buckets=32)
@@ -264,7 +221,7 @@ def test_merge_and_compact_layout_several_buckets_per_task(
         "conv_id string, turn_idx int, lsn long, op string, text string",
     )
     out = tbl.merge(events, epoch_id=0)
-    assert write_partitioning(captured[-1]) == [("__pkey", "8")]
+    assert write_partitioning(captured[-1]) == [("__bucket", "8")]
 
     files = tbl.manifest()["files"]
     per_bucket = {}
@@ -276,7 +233,7 @@ def test_merge_and_compact_layout_several_buckets_per_task(
 
     before_rows = sorted(tbl.snapshot().collect())
     tbl.compact()
-    assert write_partitioning(captured[-1]) == [("__pkey", "8")]
+    assert write_partitioning(captured[-1]) == [("__bucket", "8")]
     files = tbl.manifest()["files"]
     assert {f["kind"] for f in files} == {"base"}
     assert sorted(f["bucket"] for f in files) == sorted(per_bucket)

@@ -1,6 +1,6 @@
 """The driver-side XXH64 mirror that ``TranscriptTable.bucket_of`` uses,
 pinned against Spark's ``xxhash64`` (the hash ``bucket_sql`` buckets rows
-with), the way tests/test_balanced_write.py pins the Murmur3 mirror."""
+with)."""
 
 import random
 

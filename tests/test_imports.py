@@ -10,12 +10,16 @@ be bound at that module's top level.
 The same resolver walks the imports of the entry points (the query contract,
 the CLI, the bench scripts and the benchmark harness): every package module
 must be reached from one of them, and so must every top-level function and
-class of a package module, bar a short commented allow-list.
+class of a package module, bar a short commented allow-list.  A method of a
+top-level package class is reached when a non-test file reads its name as an
+attribute, or when it overrides a method of a non-package base.
 """
 
 from __future__ import annotations
 
 import ast
+import builtins
+import importlib
 from pathlib import Path
 
 PKG = "go_data_publisher_spark"
@@ -156,10 +160,9 @@ def _non_test_sources():
         yield path.read_text(), _module_name(path), path.name == "__init__.py"
 
 
-def _unreached_functions() -> list[str]:
-    """Top-level functions and classes of package modules that no non-test
-    file imports by name or reads as an attribute, and that their own module
-    reads nowhere outside their own body."""
+def _non_test_reads() -> tuple[set[str], set[str]]:
+    """The qualified names non-test sources import, and the attribute names
+    they read."""
     imported: set[str] = set()
     attributes: set[str] = set()
     for source, module, is_package in _non_test_sources():
@@ -168,6 +171,14 @@ def _unreached_functions() -> list[str]:
         attributes.update(n.attr for n in ast.walk(ast.parse(source))
                           if isinstance(n, ast.Attribute)
                           and isinstance(n.ctx, ast.Load))
+    return imported, attributes
+
+
+def _unreached_functions() -> list[str]:
+    """Top-level functions and classes of package modules that no non-test
+    file imports by name or reads as an attribute, and that their own module
+    reads nowhere outside their own body."""
+    imported, attributes = _non_test_reads()
     unreached = []
     for path in sorted((ROOT / PKG).rglob("*.py")):
         module = _module_name(path)
@@ -183,6 +194,51 @@ def _unreached_functions() -> list[str]:
             if (qualified not in imported and s.name not in attributes
                     and s.name not in own_module):
                 unreached.append(qualified)
+    return unreached
+
+
+def _inherited_names(body: list[ast.stmt]) -> dict[str, set[str]]:
+    """For each top-level class in ``body``, the attribute names its
+    non-package bases define (``object``'s always among them), looking
+    through the module's own classes.  A base is resolved through the
+    module's absolute ``from ... import`` statements, else as a builtin."""
+    imported = {a.asname or a.name: (s.module, a.name) for s in body
+                if isinstance(s, ast.ImportFrom) and not s.level
+                for a in s.names}
+    classes = {s.name: s for s in body if isinstance(s, ast.ClassDef)}
+
+    def names(cls: ast.ClassDef) -> set[str]:
+        out = set(dir(object))
+        for base in map(ast.unparse, cls.bases):
+            if base in classes:
+                out |= names(classes[base])
+            elif base in imported:
+                module, name = imported[base]
+                out |= set(dir(getattr(importlib.import_module(module), name)))
+            else:
+                out |= set(dir(getattr(builtins, base)))
+        return out
+
+    return {name: names(cls) for name, cls in classes.items()}
+
+
+def _unreached_methods() -> list[str]:
+    """Methods of top-level package classes whose name no non-test file
+    reads as an attribute and that override no non-package base (a
+    ``StreamingQueryListener`` callback is called by PySpark)."""
+    _, attributes = _non_test_reads()
+    unreached = []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        body = ast.parse(path.read_text()).body
+        inherited = _inherited_names(body)
+        for cls in body:
+            if not isinstance(cls, ast.ClassDef):
+                continue
+            unreached.extend(
+                f"{_module_name(path)}.{cls.name}.{f.name}" for f in cls.body
+                if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and f.name not in attributes
+                and f.name not in inherited[cls.name])
     return unreached
 
 
@@ -207,7 +263,7 @@ def test_every_module_is_reached_from_an_entry_point():
 
 
 def test_every_package_function_is_reached():
-    unreached = _unreached_functions()
+    unreached = _unreached_functions() + _unreached_methods()
     new = [f for f in unreached if f not in KEEP_UNREACHED]
     assert not new, ("no query, CLI verb, pipeline or bench script "
                      "reaches:\n" + "\n".join(new))

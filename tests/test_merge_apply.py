@@ -434,19 +434,35 @@ def test_retriability_excludes_permanent_jvm_shapes(spark):
 
 
 def test_merge_serial_write_parallelism_is_correct(spark, tmpdir_path):
-    """write_parallelism=1 (the ladder's floor) produces the same committed
-    state and keeps one file pair per bucket."""
-    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=4)
+    """The degrade ladder's narrow widths — 1 (its floor) and 3, which does
+    not divide 16 buckets, so each of the 3 tasks holds 5 or 6 buckets —
+    commit the same state as the full-width merge, with one file per
+    touched bucket."""
     df = spark.createDataFrame(
-        [(i, "I", f"c{i}", 0, "user", f"t{i}", None, None, 1) for i in range(20)],
-        SCHEMA9)
-    out = tbl.merge(df, epoch_id=0, write_parallelism=1)
-    assert out["status"] == "committed"
-    assert tbl.snapshot().count() == 20
-    per_bucket_files = {}
-    for f in tbl.manifest()["files"]:
-        per_bucket_files[f["bucket"]] = per_bucket_files.get(f["bucket"], 0) + 1
-    assert all(n <= 2 for n in per_bucket_files.values())
+        [(i, "I", f"c{i % 100}", i // 100, "user", f"t{i}", None, None, 1)
+         for i in range(200)], SCHEMA9)
+
+    def layout(tbl):
+        per_bucket = {}
+        for f in tbl.manifest()["files"]:
+            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+        return per_bucket
+
+    full = TranscriptTable(spark, f"{tmpdir_path}/full", n_buckets=16)
+    out = full.merge(df, epoch_id=0)
+    assert full.write_tasks() == 8 and out["status"] == "committed"
+    want = sorted(full.snapshot().collect())
+    assert len(want) == 200
+    touched = sorted(layout(full))
+    assert len(touched) == 16
+    for width in (1, 3):
+        tbl = TranscriptTable(spark, f"{tmpdir_path}/w{width}", n_buckets=16)
+        out = tbl.merge(df, epoch_id=0, write_parallelism=width)
+        assert out["status"] == "committed"
+        assert sorted(tbl.snapshot().collect()) == want, width
+        per_bucket = layout(tbl)
+        assert sorted(per_bucket) == touched, width
+        assert all(n == 1 for n in per_bucket.values()), (width, per_bucket)
 
 
 def test_crash_at_each_apply_boundary_then_redeliver(spark, tmpdir_path, monkeypatch):
