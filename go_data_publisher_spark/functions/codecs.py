@@ -2,30 +2,14 @@
 
 Reference analogue: Kafka JSON marshal/unmarshal (S5/S6,
 transactions-producer/external/kafka/client.go:28-65).  All built-ins.
+``to_wire_kafka`` is the producer; the consumer is
+``streaming.pipeline.decode_kafka_records``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..schemas import CHANGE_EVENT_SCHEMA
-
-
-def to_wire(df: DataFrame, key_col: str = "conv_id") -> DataFrame:
-    """Rows → (key, value) JSON records, the Kafka producer projection.
-    The key is the routing attribute (reference: LE-uint32 tick bytes;
-    ours: conv_id bytes) — partition-by-key on the ordering attribute."""
-    return df.select(
-        F.col(key_col).cast("binary").alias("key"),
-        F.to_json(F.struct(*df.columns)).alias("value"),
-    )
-
-
-def from_wire(df: DataFrame, schema=None) -> DataFrame:
-    """(key, value) JSON records → typed rows, the consumer projection."""
-    schema = schema or CHANGE_EVENT_SCHEMA
-    return df.select(F.from_json(F.col("value").cast("string"), schema).alias("r")).select("r.*")
 
 
 def le_uint32_key(col: Column) -> Column:

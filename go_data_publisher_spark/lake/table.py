@@ -137,58 +137,32 @@ def _xxh64(data: bytes, seed: int = 42) -> int:
     return h ^ (h >> 32)
 
 
-def _footer_stats(path: str, order_col: str, del_col: str | None = None):
-    """(num_rows, min(order_col), max(order_col), n_deletes) from the parquet
-    footer — no data pages read.  Order-col stats fall back to (None, None)
-    when column statistics are absent.
+def _footer_stats(path: str, order_col: str, del_col: str):
+    """(num_rows, min(order_col), max(order_col), n_deletes) of a delta file
+    the merge wrote, from its parquet footer — no data pages read.
 
-    ``del_col`` names the delete-marker column the merge writes (1 for
-    tombstones, NULL otherwise): per-row-group null counts then give the
-    exact upsert/delete split from the same footer read — this is what lets
-    a commit write ONE file per touched bucket instead of a
-    partitionBy-(bucket, is-delete) pair while keeping exact per-op lineage
-    counters.  n_deletes is 0 when ``del_col`` is absent from the file's
-    schema entirely, and None only when the column EXISTS but a row group
-    lacks a null count — the one case where the caller's fallback column
-    scan is both needed and guaranteed not to raise.
-
-    Scope caveat: absent-column-means-zero only holds for MERGE-written
-    delta files, which always carry the marker column.  compact()-written
-    base files drop ``del_col`` yet RETAIN op='D' tombstone rows — a caller
-    wanting the delete split of a base file must count op='D' instead of
-    trusting this 0 (today's callers — the merge commit and bench.py's
-    driver-phase re-measure — read fresh delta commits, where it holds)."""
+    ``del_col`` is the delete-marker column (1 for tombstones, NULL
+    otherwise), so n_deletes is the rows minus the per-row-group null
+    counts, which Spark's parquet writer records for every column chunk.
+    That split is what lets a commit write ONE file per touched bucket and
+    still count upserts and deletes exactly.  A row group without a null
+    count raises ValueError.  The order-col bounds are (None, None) when a
+    row group has no min/max: the order column may be null in a valid row,
+    and an all-null chunk has none."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
     names = md.schema.names
-    n_del = None
-    if del_col is not None and del_col not in names:
-        n_del = 0
-    if del_col is not None and del_col in names:
-        didx = names.index(del_col)
-        non_null = 0
-        ok = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(didx).statistics
-            if st is None or st.null_count is None:
-                ok = False
-                break
-            non_null += md.row_group(rg).num_rows - st.null_count
-        if ok:
-            n_del = non_null
-    try:
-        idx = names.index(order_col)
-    except ValueError:
+    groups = [md.row_group(i) for i in range(md.num_row_groups)]
+    marks = [g.column(names.index(del_col)).statistics for g in groups]
+    if any(st is None or not st.has_null_count for st in marks):
+        raise ValueError(f"{path}: a row group has no null count for {del_col}")
+    n_del = md.num_rows - sum(st.null_count for st in marks)
+    order = [g.column(names.index(order_col)).statistics for g in groups]
+    if not all(st is not None and st.has_min_max for st in order):
         return md.num_rows, None, None, n_del
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return md.num_rows, None, None, n_del
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return md.num_rows, lo, hi, n_del
+    return (md.num_rows, min((st.min for st in order), default=None),
+            max((st.max for st in order), default=None), n_del)
 
 
 def _split_snapshot_files(files: list) -> tuple[list, list]:
@@ -201,10 +175,10 @@ def _split_snapshot_files(files: list) -> tuple[list, list]:
     live base file (never produced by the current writer, but a manifest a
     foreign tool edited could hold one) cannot rely on that invariant and
     is routed through the fold too."""
-    dirty = {f["bucket"] for f in files if f.get("kind", "base") == "delta"}
+    dirty = {f["bucket"] for f in files if f["kind"] == "delta"}
     base_counts: dict[int, int] = {}
     for f in files:
-        if f.get("kind", "base") != "delta":
+        if f["kind"] != "delta":
             base_counts[f["bucket"]] = base_counts.get(f["bucket"], 0) + 1
     dirty |= {b for b, c in base_counts.items() if c > 1}
     fold = [f for f in files if f["bucket"] in dirty]
@@ -335,6 +309,8 @@ class TranscriptTable:
                         "epoch_hwm": -1,
                         "epochs_recent": [],
                         "cursor_lsn": -1,
+                        # named writers' epoch state (see _writer_state)
+                        "writers": {},
                         **{name: 0 for name in ROW_TOTALS},
                         "n_buckets": n_buckets,
                         "key": self.key,
@@ -350,10 +326,10 @@ class TranscriptTable:
         # invocation) must not silently re-bucket new writes under a
         # different modulus, re-key the fold, or disarm the D5 overlap guard.
         m = self.manifest()
-        self.n_buckets = int(m.get("n_buckets", n_buckets))
-        self.key = list(m.get("key", self.key))
-        self.order_col = str(m.get("order_col", order_col))
-        og = m.get("overlap_guard")
+        self.n_buckets = int(m["n_buckets"])
+        self.key = list(m["key"])
+        self.order_col = str(m["order_col"])
+        og = m["overlap_guard"]
         if og:
             self.overlap_guard = (og[0], og[1])
 
@@ -456,10 +432,10 @@ class TranscriptTable:
             if files is None:
                 files = list(m["files"])
             for d in reversed(chain):
-                removed = set(d.get("files_removed", ()))
+                removed = set(d["files_removed"])
                 if removed:
                     files = [f for f in files if f["path"] not in removed]
-                files = files + list(d.get("files_added", ()))
+                files = files + d["files_added"]
             self._files_cache[version] = files
             while len(self._files_cache) > 8:
                 self._files_cache.pop(min(self._files_cache))
@@ -502,8 +478,7 @@ class TranscriptTable:
         update["version"] = v
         update["committed_at"] = time.time()
         update["n_live_files"] = (
-            int(m.get("n_live_files", len(m["files"])))
-            - len(set(files_removed)) + len(list(files_added))
+            int(m["n_live_files"]) - len(set(files_removed)) + len(list(files_added))
         )
         if extra:
             update.update(extra)
@@ -528,10 +503,10 @@ class TranscriptTable:
             m = self._load_raw(v)
             out.append(
                 {"version": m["version"], "cursor_lsn": m["cursor_lsn"],
-                 "n_files": int(m.get("n_live_files", len(m.get("files", ())))),
+                 "n_files": int(m["n_live_files"]),
                  "epoch_hwm": m["epoch_hwm"],
                  "epochs_recent": m["epochs_recent"],
-                 "committed_at": m.get("committed_at"),
+                 "committed_at": m["committed_at"],
                  "kind": "checkpoint" if "files" in m else "delta"}
             )
         return out
@@ -774,14 +749,15 @@ class TranscriptTable:
 
     @staticmethod
     def _writer_state(m: dict, writer_id: str) -> tuple[int, set, int | None]:
-        """(hwm, recent, source_version) for one writer.  The legacy
-        top-level fields ARE the 'default' writer's state; named writers live
-        under ``writers`` — the Delta/Iceberg txnAppId pattern, so a fresh
-        checkpoint (new writer id) or a second pipeline never has its epochs
-        mistaken for replays of another writer's.  ``source_version`` is the
+        """(hwm, recent, source_version) for one writer.  The 'default'
+        writer's state is the manifest's top-level ``epoch_hwm`` and
+        ``epochs_recent``; named writers live under ``writers`` — the
+        Delta/Iceberg txnAppId pattern, so a fresh checkpoint (new writer
+        id) or a second pipeline never has its epochs mistaken for replays
+        of another writer's.  ``source_version`` is the
         change-feed version the writer last consumed (None when it never
         recorded one)."""
-        w = m if writer_id == "default" else m.get("writers", {}).get(writer_id)
+        w = m if writer_id == "default" else m["writers"].get(writer_id)
         if w is None:
             return -1, set(), None
         return int(w["epoch_hwm"]), set(w["epochs_recent"]), w.get("source_version")
@@ -876,7 +852,9 @@ class TranscriptTable:
 
         One Spark job: the delta write.  Per-bucket lineage counters
         (touched buckets, upsert/delete counts, order-col bounds) come from
-        the written files' parquet footers, read driver-side.
+        the written files' parquet footers, read on the driver in one loop,
+        one footer per file.  The merge reads the manifest once: the epoch
+        guard, the target schema and the commit's parent all come from it.
 
         This method owns the dedup: the in-batch last-wins always rides the
         bucket exchange, so the write plan has one shuffle per microbatch.
@@ -913,7 +891,7 @@ class TranscriptTable:
         hwm0, recent0, _ = self._writer_state(m, writer_id)
         if int(epoch_id) <= hwm0 or int(epoch_id) in recent0:
             return {"status": "skipped_replay", "epoch_id": epoch_id}
-        target_schema = self.schema
+        target_schema = self._declared_schema(m)
 
         # Defensive cast to the target schema BEFORE bucketing: xxhash64 of an
         # int differs from xxhash64 of a long, so bucketing pre-cast rows
@@ -987,40 +965,19 @@ class TranscriptTable:
         # base files with the default.
         entries = self._write_buckets(winners, **{"parquet.block.size": 16 << 20})
 
-        # Derive lineage counters from parquet footer metadata (row counts,
-        # order-col min/max statistics, and the delete split from __del null
-        # counts): driver-side metadata reads of ≤ n_buckets small footers —
-        # the same stats-from-manifest trick Iceberg uses, replacing a whole
-        # post-write aggregation job per commit.
+        # Lineage counters come from the written files' parquet footers: row
+        # counts, order-col min/max and the delete split from the __del null
+        # counts, read on the driver in one loop — Iceberg's stats-from-
+        # manifest trick in place of a post-write aggregation job.  A bucket
+        # is usually one file, but spark.sql.files.maxRecordsPerFile can
+        # split it, so the stats are summed per bucket.
         sid = int(m["current_schema_id"])
         new_files = [{"path": path, "bucket": b,
                       "schema_id": sid, "kind": "delta", "seq": seq}
                      for path, b in entries]
-        # The footer reads are independent metadata fetches — thread-pooled:
-        # at a production bucket count (≥256) on remote storage a serial
-        # loop is the commit-latency tail (the reference's cursor write is
-        # O(1), status-service/db/store.go:144).  Results are folded in the
-        # original sorted order, so per_bucket stays deterministic.
-        if len(entries) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
-                stats = list(ex.map(
-                    lambda e: _footer_stats(e[0], self.order_col, "__del"),
-                    entries))
-        else:
-            stats = [_footer_stats(p, self.order_col, "__del")
-                     for p, _ in entries]
         per_bucket_map: dict[int, dict] = {}
-        for (path, b), (n_rows, omin, omax, n_del) in zip(entries, stats):
-            if n_del is None:
-                # a writer that omitted null counts (non-default parquet
-                # properties): fall back to scanning just the 1-byte marker
-                # column of this one batch-sized delta file
-                import pyarrow.parquet as pq
-
-                tbl = pq.read_table(path, columns=["__del"])
-                n_del = n_rows - tbl.column("__del").null_count
+        for path, b in entries:
+            n_rows, omin, omax, n_del = _footer_stats(path, self.order_col, "__del")
             st = per_bucket_map.setdefault(b, {
                 "__bucket": b, "rows_upserted": 0, "rows_deleted": 0,
                 "lsn_from": None, "lsn_to": None,
@@ -1115,24 +1072,18 @@ class TranscriptTable:
             state["source_version"] = version
         now = time.time()
         # the row totals are per table, not per writer: an expired writer's
-        # rows stay counted (a manifest written before the totals existed
-        # starts them at its next commit)
+        # rows stay counted
         extra = {"cursor_lsn": cursor,
-                 **{name: int(m.get(name, 0)) + int(n)
+                 **{name: int(m[name]) + int(n)
                     for name, n in zip(ROW_TOTALS, counts)}}
-        # expire stale named writers (entries without a timestamp are legacy:
-        # stamp them lazily rather than dropping a live replay guard)
-        writers = {
-            wid: (w if "last_commit_at" in w else {**w, "last_commit_at": now})
-            for wid, w in m.get("writers", {}).items()
-            if now - float(w.get("last_commit_at", now)) <= self.writer_retention_seconds
-        }
+        # expire stale named writers
+        writers = {wid: w for wid, w in m["writers"].items()
+                   if now - float(w["last_commit_at"]) <= self.writer_retention_seconds}
         if writer_id == "default":
             extra.update(state)
         else:
             writers[writer_id] = {**state, "last_commit_at": now}
-        if writers or "writers" in m:
-            extra["writers"] = writers
+        extra["writers"] = writers
         self._publish(m, files_added=files_added, files_removed=files_removed,
                       extra=extra)
 
@@ -1251,7 +1202,7 @@ class TranscriptTable:
             if f["bucket"] in target_buckets:
                 folded_hwm[f["bucket"]] = max(
                     folded_hwm[f["bucket"]],
-                    int(f.get("folded_hwm", f.get("seq", 0))),
+                    int(f.get("folded_hwm", f["seq"])),
                 )
         new_files = [{"path": path, "bucket": b, "schema_id": sid, "kind": "base",
                       "seq": seq, "folded_hwm": folded_hwm.get(b, 0)}
@@ -1274,21 +1225,20 @@ class TranscriptTable:
         if from_version > to_v:
             raise ValueError(f"from_version {from_version} > to_version {to_v}")
         in_window = [f for f in m["files"]
-                     if from_version < int(f.get("seq", 0)) <= to_v]
+                     if from_version < int(f["seq"]) <= to_v]
         # a base (compaction) file inside the window is data loss ONLY if it
         # folded deltas the window still needs (folded_hwm > from_version);
         # a fully-caught-up consumer whose from_version is the last
         # pre-compaction version sees no loss and reads an empty/clean feed
         lost = [f for f in in_window
-                if f.get("kind", "base") != "delta"
-                and int(f.get("folded_hwm", int(f.get("seq", 1)) - 1)) > from_version]
+                if f["kind"] != "delta" and int(f["folded_hwm"]) > from_version]
         if lost:
             raise RetentionLostError(
                 f"change window ({from_version}, {to_v}] lost versions up to "
-                f"{lost[0].get('folded_hwm')} to compaction (base seq "
+                f"{lost[0]['folded_hwm']} to compaction (base seq "
                 f"{lost[0]['seq']}); changes are retained only until compaction"
             )
-        return m, [f for f in in_window if f.get("kind", "base") == "delta"]
+        return m, [f for f in in_window if f["kind"] == "delta"]
 
     def has_changes(self, from_version: int, to_version: int | None = None) -> bool:
         """Manifest-only emptiness probe for a change window — True iff
@@ -1337,6 +1287,6 @@ class TranscriptTable:
         """Per-bucket live delta-file counts — the compaction trigger signal."""
         out: dict[int, int] = {}
         for f in self.manifest()["files"]:
-            if f.get("kind", "base") == "delta":
+            if f["kind"] == "delta":
                 out[f["bucket"]] = out.get(f["bucket"], 0) + 1
         return out

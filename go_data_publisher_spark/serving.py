@@ -44,7 +44,7 @@ def build_status(tbl) -> dict:
         "cursor_lsn": m["cursor_lsn"],
         "epoch_hwm": m["epoch_hwm"],
         "epochs_recent": m["epochs_recent"],
-        "live_files": m.get("n_live_files", len(m["files"])),
+        "live_files": m["n_live_files"],
         "delta_files_per_bucket": tbl.delta_file_counts(),
     }
 
@@ -90,7 +90,7 @@ def build_report(spark, tbl, lineage_dir: str | None = None) -> dict:
     }
     if lineage_dir:
         report["lineage_epochs"] = lineage_epochs(tbl, lineage_dir)
-        report["rows_upserted_total"] = m.get("rows_upserted_total", 0)
+        report["rows_upserted_total"] = m["rows_upserted_total"]
     # V4 persisted skipped-key set (served sorted, like the reference's
     # status-service/db/store.go:109 read-back); the dir exists once the
     # applier has run, and a read of a missing path would raise
@@ -128,16 +128,16 @@ def build_metrics_text(tbl, lineage_dir: str | None = None) -> str:
          "(reference: processed_transactions_epoch)", m["epoch_hwm"]),
         ("table_version", "Current committed table version", m["version"]),
         ("live_files", "Live data files in the current snapshot",
-         m.get("n_live_files", len(m["files"]))),
+         m["n_live_files"]),
         ("delta_files_max_per_bucket",
          "Deepest per-bucket delta chain awaiting compaction",
          max(tbl.delta_file_counts().values(), default=0)),
         ("rows_upserted_total", "Rows upserted across all committed epochs",
-         m.get("rows_upserted_total", 0)),
+         m["rows_upserted_total"]),
         ("rows_deleted_total", "Rows deleted across all committed epochs",
-         m.get("rows_deleted_total", 0)),
+         m["rows_deleted_total"]),
         ("rows_quarantined_total", "Rows quarantined by the validity guard",
-         m.get("rows_quarantined_total", 0)),
+         m["rows_quarantined_total"]),
     ]
     if lineage_dir:
         gauges.append(("lineage_epochs", "Committed epochs with a lineage file",

@@ -70,8 +70,7 @@ def kafka_reader(spark: SparkSession, bootstrap_servers: str, topic: str,
         raise
 
 
-def decode_kafka_records(raw: DataFrame, schema=None,
-                         key_is_le_uint32: bool = True) -> DataFrame:
+def decode_kafka_records(raw: DataFrame, schema=None) -> DataFrame:
     """Kafka-source records → typed change events.
 
     The consumer-side decode (transactions-consumer/consume/
@@ -87,12 +86,10 @@ def decode_kafka_records(raw: DataFrame, schema=None,
     from ..functions.codecs import le_uint32_value
 
     schema = schema or schemas.CHANGE_EVENT_SCHEMA
-    cols = [F.from_json(F.col("value").cast("string"), schema).alias("__r")]
-    head = []
-    if key_is_le_uint32:
-        cols.insert(0, le_uint32_value(F.col("key")).alias("__key_tick"))
-        head = ["__key_tick"]
-    return raw.select(*cols).select(*head, "__r.*")
+    return raw.select(
+        le_uint32_value(F.col("key")).alias("__key_tick"),
+        F.from_json(F.col("value").cast("string"), schema).alias("__r"),
+    ).select("__key_tick", "__r.*")
 
 
 def run_stream(
@@ -103,21 +100,19 @@ def run_stream(
     max_files_per_trigger: int = 1,
     schema=None,
     available_now: bool = True,
-    fail_after_batches: int | None = None,
     metrics_path: str | None = None,
     wire_format: bool = False,
 ):
     """Run the CDC stream until the source is drained (availableNow).
 
-    ``fail_after_batches`` injects a crash after N applied batches — used by
-    the kill/resume tests to prove checkpoint recovery + replay idempotence.
     ``metrics_path`` attaches a MicrobatchMetricsListener writing one JSON
     row per progress event (A5).
-    ``wire_format=True`` reads Kafka-shaped records — (key binary, value
-    string JSON) — and decodes them with the wire codec (the reference's
-    consumer-side json.Unmarshal, transaction_consumer.go:112-116).  On a
-    real cluster, replace the file source with `.format("kafka")`; everything
-    from the decode down is identical.
+    ``wire_format=True`` reads Kafka-shaped records — (key binary LE-uint32,
+    value string JSON), what ``WirePublisher`` writes — and decodes them
+    with ``decode_kafka_records`` (the reference's consumer-side
+    json.Unmarshal, transaction_consumer.go:112-116).  On a real cluster,
+    replace the file source with `.format("kafka")`; everything from the
+    decode down is identical.
     """
     schema = schema or schemas.CHANGE_EVENT_SCHEMA
     if wire_format:
@@ -131,19 +126,15 @@ def run_stream(
             .option("recursiveFileLookup", "true")
             .parquet(source_dir)
         )
-        from ..functions.codecs import from_wire
-
-        src = from_wire(raw, schema)
+        src = decode_kafka_records(raw, schema).drop("__key_tick")
     else:
         src = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(source_dir)
         )
-    return run_stream_from(
-        src, applier, checkpoint_dir, available_now=available_now,
-        fail_after_batches=fail_after_batches, metrics_path=metrics_path,
-    )
+    return run_stream_from(src, applier, checkpoint_dir,
+                           available_now=available_now, metrics_path=metrics_path)
 
 
 def run_stream_from(
@@ -151,7 +142,6 @@ def run_stream_from(
     applier: ChangeApplier,
     checkpoint_dir: str,
     available_now: bool = True,
-    fail_after_batches: int | None = None,
     metrics_path: str | None = None,
 ):
     """Drive any typed change-event STREAMING frame through the foreachBatch
@@ -167,24 +157,26 @@ def run_stream_from(
     (at minimum the key/order columns the applier's table merges on).
     Everything downstream — exactly-once epoch guard, schema evolution,
     dedup, quarantine, lineage, metrics — is source-agnostic."""
-    from pyspark.sql import functions as F
-
     spark = source.sparkSession
-    # zero-cost batch counters piggybacked on the stream pass (A5).  The
-    # order column comes from the applier's table (not a hardcoded 'lsn') so
-    # sources whose order column has another name still pass analysis; a
-    # source that doesn't carry it at all gets row counts only.
-    order_col = applier.table.order_col
-    obs_aggs = [F.count(F.lit(1)).alias("rows")]
-    if order_col in source.columns:
-        obs_aggs += [F.min(order_col).alias("lsn_min"),
-                     F.max(order_col).alias("lsn_max")]
-    src = source.observe("cdc_batch", *obs_aggs)
-
-    listener = None
+    src, listener = source, None
     progress_lines_at_start = 0
     if metrics_path:
+        from pyspark.sql import functions as F
+
         from .metrics import MicrobatchMetricsListener
+
+        # batch counters piggybacked on the stream pass (A5), for the
+        # listener to write; attached only when one listens, since each
+        # costs per-row work in every microbatch.  The order column comes
+        # from the applier's table (not a hardcoded 'lsn') so sources whose
+        # order column has another name still pass analysis; a source that
+        # doesn't carry it at all gets row counts only.
+        order_col = applier.table.order_col
+        obs_aggs = [F.count(F.lit(1)).alias("rows")]
+        if order_col in source.columns:
+            obs_aggs += [F.min(order_col).alias("lsn_min"),
+                         F.max(order_col).alias("lsn_max")]
+        src = source.observe("cdc_batch", *obs_aggs)
 
         # the metrics file is append-only across runs: offset the drain-wait
         # by the rows previous runs already wrote, or a resumed run removes
@@ -200,8 +192,6 @@ def run_stream_from(
     state = {"applied": 0, "stats": []}
 
     def handle(batch_df, epoch_id: int):
-        if fail_after_batches is not None and state["applied"] >= fail_after_batches:
-            raise RuntimeError("injected crash for resume test")
         stats = applier.apply_batch(batch_df, epoch_id=epoch_id)
         state["applied"] += 1
         state["stats"].append(stats)
@@ -212,21 +202,9 @@ def run_stream_from(
     q = writer.start()
     try:
         q.awaitTermination()
-    except Exception as exc:
+    except Exception:
         q.stop()
-        # Swallow ONLY the injected crash marker (kill/resume tests); any
-        # other failure — including one that fires before the injected crash
-        # would — must surface, or resume tests assert on partial state.
-        def _chain(e):
-            seen = []
-            while e is not None and e not in seen:
-                seen.append(e)
-                e = e.__cause__ or e.__context__
-            return " | ".join(repr(x) + str(x) for x in seen)
-
-        if fail_after_batches is None or \
-                "injected crash for resume test" not in _chain(exc):
-            raise
+        raise
     finally:
         if listener is not None:
             # listener delivery is async (AsyncEventQueue): wait until the

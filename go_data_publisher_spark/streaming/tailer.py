@@ -259,15 +259,15 @@ class ChangefeedTailer(_FeedConsumer):
 
         key = list(self.target.key)
         order_col = self.target.order_col
-        cursor_lsn = int(m.get("cursor_lsn", -1))
+        cursor_lsn = int(m["cursor_lsn"])
         ups = snap.selectExpr("*", "'I' AS `op`")
         gone = (self.target.snapshot()
                 .join(snap.select(*key), on=key, how="left_anti"))
         if cursor_lsn < 0 and gone.limit(1).count() > 0:
-            # The tombstone order stamp comes from the source cursor; a
-            # missing key OR the freshly-initialized -1 would make every
-            # tombstone LOSE to every stored row and silently drop all
-            # missed deletes — the exact loss mode this op exists to fix.
+            # The tombstone order stamp comes from the source cursor; the
+            # freshly-initialized -1 would make every tombstone LOSE to
+            # every stored row and silently drop all missed deletes — the
+            # exact loss mode this op exists to fix.
             # A source that has ever committed a row has cursor_lsn >= 0,
             # so reaching here with rows to delete means the source table
             # was wiped and re-created; mirroring an empty re-init over a
@@ -276,7 +276,7 @@ class ChangefeedTailer(_FeedConsumer):
             # never-committed source reseeds harmlessly.)
             raise ValueError(
                 f"source manifest v{ver} has cursor_lsn "
-                f"{m.get('cursor_lsn')!r} (never committed) but the target "
+                f"{cursor_lsn} (never committed) but the target "
                 "holds rows absent from the snapshot — cannot stamp their "
                 "delete tombstones with a winning order value; if the "
                 "source was intentionally re-created, rebuild the target "

@@ -46,7 +46,8 @@ def main():
     s.add_argument("--lineage", default=None)
     s.add_argument("--metrics", default=None)
     s.add_argument("--wire-format", action="store_true",
-                   help="source is Kafka-shaped (key binary, value json)")
+                   help="source is Kafka-shaped (key binary LE-uint32, "
+                        "value json), as `tail --to-wire` writes")
     s.add_argument("--route-sql", default=None,
                    help="predicate routing winners to --ephemeral-table")
     s.add_argument("--ephemeral-table", default=None)
@@ -249,9 +250,7 @@ def main():
             )
         m2 = tbl.manifest()
         out["version"] = m2["version"]
-        # older manifests (pre n_live_files counter) may still be CURRENT when
-        # no new commit was published by this run — fall back like history()
-        out["live_files"] = m2.get("n_live_files", len(m2["files"]))
+        out["live_files"] = m2["n_live_files"]
         out["delta_files_per_bucket"] = tbl.delta_file_counts()
         print(json.dumps(out))
 

@@ -10,6 +10,7 @@ import py4j.java_gateway
 import pytest
 
 from go_data_publisher_spark.session import get_spark
+from go_data_publisher_spark.streaming.apply import ChangeApplier
 
 
 @pytest.fixture(scope="session")
@@ -85,3 +86,20 @@ def jobs_launched(sc):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class CrashingApplier(ChangeApplier):
+    """A ChangeApplier that raises before the sink write of the batch after
+    its first ``crash_after``; ``applied`` counts the batches it applied.
+    ``crash_after=None`` never crashes."""
+
+    def __init__(self, table, crash_after=None, **kwargs):
+        super().__init__(table, **kwargs)
+        self.crash_after, self.applied = crash_after, 0
+
+    def apply_batch(self, batch, epoch_id):
+        if self.applied == self.crash_after:
+            raise RuntimeError("injected crash before the sink write")
+        stats = super().apply_batch(batch, epoch_id)
+        self.applied += 1
+        return stats

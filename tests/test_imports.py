@@ -10,9 +10,12 @@ be bound at that module's top level.
 The same resolver walks the imports of the entry points (the query contract,
 the CLI, the bench scripts and the benchmark harness): every package module
 must be reached from one of them, and so must every top-level function and
-class of a package module, bar a short commented allow-list.  A method of a
-top-level package class is reached when a non-test file reads its name as an
-attribute, or when it overrides a method of a non-package base.
+class of a package module, bar a short commented allow-list.  A top-level
+function or class is reached when a non-test file imports it by name, or
+reads it as an attribute of a package module that file imports (as
+``D.last_wins`` after ``from ...operators import dedup as D``).  A method of
+a top-level package class is reached when a non-test file reads its name as
+an attribute, or when it overrides a method of a non-package base.
 """
 
 from __future__ import annotations
@@ -32,8 +35,6 @@ KEEP_UNREACHED = {
     # the expression form test_simhash_vectorized_matches_expression_form
     # checks the vectorized simhash64 against
     f"{PKG}.functions.text.simhash64_expr",
-    # the decoder test_publisher_properties checks the wire publisher with
-    f"{PKG}.streaming.pipeline.decode_kafka_records",
     # the Kafka source builder: no broker runs in the test environment, so
     # test_kafka_reader_builder pins its options instead
     f"{PKG}.streaming.pipeline.kafka_reader",
@@ -88,15 +89,49 @@ def _imports(source: str, module: str, is_package: bool = False):
                 if a.name == PKG or a.name.startswith(PKG + "."):
                     yield node.lineno, a.name, []
         elif isinstance(node, ast.ImportFrom):
-            if node.level:
-                parts = package.split(".")
-                base = parts[: len(parts) - node.level + 1]
-                target = ".".join(base + ([node.module] if node.module else []))
-            elif node.module == PKG or (node.module or "").startswith(PKG + "."):
-                target = node.module
-            else:
-                continue
-            yield node.lineno, target, [a.name for a in node.names]
+            target = _from_target(node, package)
+            if target is not None:
+                yield node.lineno, target, [a.name for a in node.names]
+
+
+def _from_target(node: ast.ImportFrom, package: str) -> str | None:
+    """The module a ``from ... import`` in ``package`` imports from, or None
+    when it names no package module and is not relative."""
+    if node.level:
+        parts = package.split(".")
+        base = parts[: len(parts) - node.level + 1]
+        return ".".join(base + ([node.module] if node.module else []))
+    if node.module == PKG or (node.module or "").startswith(PKG + "."):
+        return node.module
+    return None
+
+
+def _module_attribute_reads(source: str, module: str,
+                            is_package: bool = False) -> set[str]:
+    """Qualified names ``source`` (the text of ``module``) reads as an
+    attribute of a package module it imports: ``D.last_wins`` after
+    ``from go_data_publisher_spark.operators import dedup as D`` reads
+    ``go_data_publisher_spark.operators.dedup.last_wins``."""
+    package = module if is_package else module.rpartition(".")[0]
+    tree = ast.parse(source)
+    bound: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name == PKG or a.name.startswith(PKG + "."):
+                    bound[a.asname or PKG] = a.name if a.asname else PKG
+        elif (isinstance(node, ast.ImportFrom)
+              and (target := _from_target(node, package)) is not None):
+            bound.update((a.asname or a.name, f"{target}.{a.name}")
+                         for a in node.names
+                         if _module_file(f"{target}.{a.name}"))
+    reads = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            head, _, rest = ast.unparse(n.value).partition(".")
+            if head in bound:
+                reads.add(".".join(p for p in (bound[head], rest, n.attr) if p))
+    return reads
 
 
 def _unresolved(source: str, module: str, is_package: bool = False) -> list[str]:
@@ -161,24 +196,25 @@ def _non_test_sources():
 
 
 def _non_test_reads() -> tuple[set[str], set[str]]:
-    """The qualified names non-test sources import, and the attribute names
-    they read."""
-    imported: set[str] = set()
+    """The qualified names non-test sources import or read as an attribute
+    of an imported package module, and the attribute names they read."""
+    qualified: set[str] = set()
     attributes: set[str] = set()
     for source, module, is_package in _non_test_sources():
-        imported.update(f"{target}.{n}" for _, target, names
-                        in _imports(source, module, is_package) for n in names)
+        qualified.update(f"{target}.{n}" for _, target, names
+                         in _imports(source, module, is_package) for n in names)
+        qualified |= _module_attribute_reads(source, module, is_package)
         attributes.update(n.attr for n in ast.walk(ast.parse(source))
                           if isinstance(n, ast.Attribute)
                           and isinstance(n.ctx, ast.Load))
-    return imported, attributes
+    return qualified, attributes
 
 
 def _unreached_functions() -> list[str]:
     """Top-level functions and classes of package modules that no non-test
-    file imports by name or reads as an attribute, and that their own module
-    reads nowhere outside their own body."""
-    imported, attributes = _non_test_reads()
+    file imports by name or reads as an attribute of their module, and that
+    their own module reads nowhere outside their own body."""
+    reached, _ = _non_test_reads()
     unreached = []
     for path in sorted((ROOT / PKG).rglob("*.py")):
         module = _module_name(path)
@@ -191,8 +227,7 @@ def _unreached_functions() -> list[str]:
                 continue
             own_module = set().union(*reads[:i], *reads[i + 1:])
             qualified = f"{module}.{s.name}"
-            if (qualified not in imported and s.name not in attributes
-                    and s.name not in own_module):
+            if qualified not in reached and s.name not in own_module:
                 unreached.append(qualified)
     return unreached
 

@@ -54,20 +54,6 @@ def test_decode_composes_on_kafka_source_schema(spark):
     assert r["conv_id"] == "c7" and r["lsn"] == 7 and r["text"] == "hello"
 
 
-def test_decode_without_numeric_key(spark):
-    raw = spark.createDataFrame(
-        [(b"c1", b'{"lsn": 1, "op": "U", "conv_id": "c1", "turn_idx": 2, '
-                 b'"role": "user", "text": "x", "schema_version": 1}',
-          "t", 0, 0, None, 0)],
-        KAFKA_SOURCE_SCHEMA,
-    )
-    out = decode_kafka_records(raw, key_is_le_uint32=False)
-    # from_json yields nullable fields — compare names + types
-    assert [(f.name, f.dataType) for f in out.schema.fields] \
-        == [(f.name, f.dataType) for f in schemas.CHANGE_EVENT_SCHEMA.fields]
-    assert out.first()["turn_idx"] == 2
-
-
 def test_kafka_reader_builder(spark):
     """Exercise the real `.format(\"kafka\")` builder.  With the connector
     jar present this constructs the streaming frame and pins its analyzed
@@ -124,14 +110,13 @@ def test_full_kafka_schema_stream_end_to_end_with_resume(spark, tmpdir_path):
     decode down is exactly this code."""
     import pandas as pd
 
-    from conftest import pandas_final_state
+    from conftest import CrashingApplier, pandas_final_state
     from go_data_publisher_spark.functions.codecs import le_uint32_key
     from go_data_publisher_spark.lake.table import TranscriptTable
     from go_data_publisher_spark.sources.changelog import (
         generate_changelog,
         write_changelog_stream_dir,
     )
-    from go_data_publisher_spark.streaming.apply import ChangeApplier
     from go_data_publisher_spark.streaming.pipeline import run_stream_from
 
     log = generate_changelog(spark, 1500, n_convs=30, seed=37).persist()
@@ -164,11 +149,13 @@ def test_full_kafka_schema_stream_end_to_end_with_resume(spark, tmpdir_path):
         return decode_kafka_records(raw).drop("__key_tick")
 
     tbl = TranscriptTable(spark, f"{tmpdir_path}/ktbl", n_buckets=4)
-    app = ChangeApplier(tbl)
+    app = CrashingApplier(tbl, crash_after=2)
     ckpt = f"{tmpdir_path}/kckpt"
 
-    state1 = run_stream_from(source(), app, ckpt, fail_after_batches=2)
-    assert state1["applied"] == 2
+    with pytest.raises(Exception, match="injected crash"):
+        run_stream_from(source(), app, ckpt)
+    assert app.applied == 2
+    app.crash_after = None
     state2 = run_stream_from(source(), app, ckpt)
     assert state2["applied"] >= 1
 
@@ -190,6 +177,7 @@ def test_wire_publisher_closes_engine_to_engine_loop(spark, tmpdir_path):
     then CONSUMED by the engine's own Kafka-path decode + stream sink into a
     second table, across an injected crash + checkpoint resume.  Equality of
     the two tables proves engine → wire bytes → engine replay."""
+    from conftest import CrashingApplier
     from go_data_publisher_spark.lake.table import TranscriptTable
     from go_data_publisher_spark.streaming.apply import ChangeApplier
     from go_data_publisher_spark.streaming.pipeline import run_stream_from
@@ -231,11 +219,12 @@ def test_wire_publisher_closes_engine_to_engine_loop(spark, tmpdir_path):
         return decode_kafka_records(raw).drop("__key_tick")
 
     tgt = TranscriptTable(spark, f"{tmpdir_path}/wtgt", n_buckets=2)
-    app_tgt = ChangeApplier(tgt)
+    app_tgt = CrashingApplier(tgt, crash_after=1)
     ckpt = f"{tmpdir_path}/wckpt"
-    state1 = run_stream_from(consumer_source(), app_tgt, ckpt,
-                             fail_after_batches=1)
-    assert state1["applied"] == 1
+    with pytest.raises(Exception, match="injected crash"):
+        run_stream_from(consumer_source(), app_tgt, ckpt)
+    assert app_tgt.applied == 1
+    app_tgt.crash_after = None
     state2 = run_stream_from(consumer_source(), app_tgt, ckpt)
     assert state2["applied"] >= 1
 

@@ -4,10 +4,11 @@ transactions-producer/domain/processor_test.go:130-293, at table level),
 idempotent re-application, delete semantics, epoch replay guard."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from go_data_publisher_spark import schemas
-from go_data_publisher_spark.lake.table import TranscriptTable
+from go_data_publisher_spark.lake.table import TranscriptTable, bucket_expr
 from go_data_publisher_spark.sources.changelog import generate_changelog
 from go_data_publisher_spark.streaming.apply import (
     ChangeApplier,
@@ -463,6 +464,94 @@ def test_merge_serial_write_parallelism_is_correct(spark, tmpdir_path):
         per_bucket = layout(tbl)
         assert sorted(per_bucket) == touched, width
         assert all(n == 1 for n in per_bucket.values()), (width, per_bucket)
+
+
+@pytest.mark.parametrize("max_records_per_file", [None, 50])
+def test_commit_stats_match_an_aggregate_of_the_commit(spark, tmpdir_path,
+                                                       monkeypatch,
+                                                       max_records_per_file):
+    """At 16 buckets, where a merge writes many files, each bucket's
+    commit stats (read from the written files' footers) equal a Spark
+    aggregate of the commit's change rows, and the manifest's running totals
+    and cursor agree.  ``spark.sql.files.maxRecordsPerFile`` splits buckets
+    into several files, whose stats merge() sums.  The merge reads the
+    manifest exactly once."""
+    log = generate_changelog(spark, 2000, n_convs=80, seed=53,
+                             invalid_rate=0.0).persist()
+    assert log.where("op = 'D'").count() > 0
+    assert log.groupBy(*log.columns).count().where("count > 1").count() > 0
+    tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=16)
+
+    calls = []
+    real_manifest = TranscriptTable.manifest
+
+    def counted(self, version=None):
+        calls.append(version)
+        return real_manifest(self, version)
+
+    monkeypatch.setattr(TranscriptTable, "manifest", counted)
+    conf = "spark.sql.files.maxRecordsPerFile"
+    before = spark.conf.get(conf)
+    if max_records_per_file is not None:
+        spark.conf.set(conf, str(max_records_per_file))
+    try:
+        out = tbl.merge(log, epoch_id=0)
+    finally:
+        spark.conf.set(conf, before)
+    assert len(calls) == 1
+    monkeypatch.undo()
+
+    assert out["status"] == "committed"
+    touched = out["touched_buckets"]
+    assert len(touched) == 16
+    if max_records_per_file is None:
+        assert out["files_written"] == len(touched)
+    else:
+        assert out["files_written"] > len(touched)
+
+    m = tbl.manifest()
+    v = m["version"]
+    want = {
+        r["b"]: r.asDict()
+        for r in tbl.changes(v - 1, v)
+        .groupBy(bucket_expr("conv_id", 16).alias("b"))
+        .agg(F.count(F.when(F.col("op") != "D", 1)).alias("rows_upserted"),
+             F.count(F.when(F.col("op") == "D", 1)).alias("rows_deleted"),
+             F.min("lsn").alias("lsn_from"), F.max("lsn").alias("lsn_to"))
+        .collect()
+    }
+    assert sorted(want) == touched
+    for st in out["per_bucket"]:
+        w = want[st["__bucket"]]
+        assert {k: st[k] for k in ("rows_upserted", "rows_deleted",
+                                   "lsn_from", "lsn_to")} \
+            == {k: w[k] for k in ("rows_upserted", "rows_deleted",
+                                  "lsn_from", "lsn_to")}, st["__bucket"]
+    assert m["rows_upserted_total"] == sum(w["rows_upserted"] for w in want.values())
+    assert m["rows_deleted_total"] == sum(w["rows_deleted"] for w in want.values())
+    assert m["cursor_lsn"] == max(w["lsn_to"] for w in want.values())
+    log.unpersist()
+
+
+def test_footer_stats_read_null_counts_and_refuse_a_file_without_them(tmpdir_path):
+    """The delete split comes from the marker column's null counts; a file
+    whose footer lacks them is refused, and a row group without order-col
+    min/max (an all-null chunk) leaves the bounds unknown."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_data_publisher_spark.lake.table import _footer_stats
+
+    t = pa.table({"lsn": pa.array([3, 9, 5], pa.int64()),
+                  "__del": pa.array([None, 1, None], pa.int32())})
+    pq.write_table(t, f"{tmpdir_path}/a.parquet", row_group_size=2)
+    assert _footer_stats(f"{tmpdir_path}/a.parquet", "lsn", "__del") == (3, 3, 9, 1)
+    pq.write_table(t.set_column(0, "lsn", pa.array([None] * 3, pa.int64())),
+                   f"{tmpdir_path}/b.parquet")
+    assert _footer_stats(f"{tmpdir_path}/b.parquet", "lsn", "__del") == (3, None, None, 1)
+    pq.write_table(t, f"{tmpdir_path}/c.parquet", write_statistics=False)
+    with pytest.raises(ValueError, match="no null count for __del"):
+        _footer_stats(f"{tmpdir_path}/c.parquet", "lsn", "__del")
 
 
 def test_crash_at_each_apply_boundary_then_redeliver(spark, tmpdir_path, monkeypatch):

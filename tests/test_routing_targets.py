@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from go_data_publisher_spark.functions.codecs import to_wire
+from go_data_publisher_spark.functions.codecs import to_wire_kafka
 from go_data_publisher_spark.lake.table import TranscriptTable
 from go_data_publisher_spark.sources.changelog import (
     generate_changelog,
@@ -41,7 +41,7 @@ def test_dual_target_routing(spark, tmpdir_path):
 
 def test_wire_format_stream(spark, tmpdir_path):
     log = generate_changelog(spark, 1200, n_convs=25, seed=47)
-    wire = to_wire(log)
+    wire = to_wire_kafka(log, "lsn")
     src = f"{tmpdir_path}/wire_src"
     # chunk the wire records by writing ranges (reuse the plain writer on a
     # derived lsn column for chunking, then keep only key/value)

@@ -2,7 +2,10 @@
 from checkpoint → identical final state (the reference's crash-between-
 bulk-index-and-offset-commit replay scenario, SURVEY.md §3.2)."""
 
+import json
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from go_data_publisher_spark.lake.table import TranscriptTable
@@ -13,7 +16,7 @@ from go_data_publisher_spark.sources.changelog import (
 from go_data_publisher_spark.streaming.apply import ChangeApplier
 from go_data_publisher_spark.streaming.pipeline import run_stream
 
-from conftest import pandas_final_state
+from conftest import CrashingApplier, pandas_final_state
 
 
 def _setup(spark, tmpdir_path, n=3000):
@@ -48,20 +51,20 @@ def test_stream_drain_equals_oracle(spark, tmpdir_path):
 def test_crash_and_resume(spark, tmpdir_path):
     log, src = _setup(spark, tmpdir_path)
     tbl = TranscriptTable(spark, f"{tmpdir_path}/tbl", n_buckets=8)
-    app = ChangeApplier(tbl)
+    app = CrashingApplier(tbl, crash_after=2)
     ckpt = f"{tmpdir_path}/ckpt"
 
-    # crash after 2 applied microbatches
-    state1 = run_stream(spark, src, app, ckpt, max_files_per_trigger=1, fail_after_batches=2)
-    assert state1["applied"] == 2
+    # crash before the sink write of the third microbatch
+    with pytest.raises(Exception, match="injected crash"):
+        run_stream(spark, src, app, ckpt, max_files_per_trigger=1)
+    assert app.applied == 2
     assert tbl.snapshot().count() > 0
-    mid_rows = tbl.snapshot().count()
 
     # resume from checkpoint: replays the in-flight batch (epoch guard makes
     # any double-delivery a no-op) and drains the rest
+    app.crash_after = None
     state2 = run_stream(spark, src, app, ckpt, max_files_per_trigger=1)
     assert state2["applied"] >= 1
-    assert tbl.snapshot().count() != mid_rows or True  # state advanced
     _assert_equals_oracle(log, tbl)
 
 
@@ -134,9 +137,9 @@ def test_run_stream_from_composes_with_any_source(spark, tmpdir_path):
 
 
 def test_run_stream_from_derives_observe_column_from_table(spark, tmpdir_path):
-    """ADVICE r3: the stream's observed order column comes from the
-    applier's table, so a source whose order column is not named 'lsn'
-    passes analysis and merges correctly."""
+    """ADVICE r3: the stream's observed order column (attached with a
+    metrics listener) comes from the applier's table, so a source whose
+    order column is not named 'lsn' passes analysis and merges correctly."""
     from pyspark.sql import functions as F
 
     from go_data_publisher_spark.streaming.pipeline import run_stream_from
@@ -152,8 +155,14 @@ def test_run_stream_from_derives_observe_column_from_table(spark, tmpdir_path):
                           order_col="seq")
     app = ChangeApplier(tbl)
     stream = spark.readStream.schema(schema).parquet(src_dir)
-    state = run_stream_from(stream, app, f"{tmpdir_path}/seqckpt")
+    metrics = f"{tmpdir_path}/metrics.jsonl"
+    state = run_stream_from(stream, app, f"{tmpdir_path}/seqckpt",
+                            metrics_path=metrics)
     assert state["applied"] >= 1
     snap = tbl.snapshot()
     assert snap.count() == 12  # 4 convs x 3 turns
     assert snap.agg(F.max("seq")).first()[0] == 30
+    # the observed bounds are the source's seq column
+    observed = [r["observed"]["cdc_batch"] for r in map(json.loads, open(metrics))
+                if r["event"] == "progress" and r["observed"].get("cdc_batch")]
+    assert max(o["lsn_max"] for o in observed) == 30

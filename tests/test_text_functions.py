@@ -1,10 +1,13 @@
 """Vectorized text functions + codecs."""
 
+import struct
+
 from pyspark.sql import functions as F
 
 from go_data_publisher_spark.functions import text as TX
-from go_data_publisher_spark.functions.codecs import from_wire, to_wire
+from go_data_publisher_spark.functions.codecs import to_wire_kafka
 from go_data_publisher_spark.sources.changelog import generate_changelog
+from go_data_publisher_spark.streaming.pipeline import decode_kafka_records
 
 
 def _docs(spark):
@@ -58,9 +61,13 @@ def test_simhash_similar_texts_close(spark):
     assert ham(sigs[0], sigs[1]) <= 16
 
 
+def _from_wire(wire, schema=None):
+    return decode_kafka_records(wire, schema).drop("__key_tick")
+
+
 def test_wire_roundtrip(spark):
     log = generate_changelog(spark, 200, seed=19)
-    back = from_wire(to_wire(log))
+    back = _from_wire(to_wire_kafka(log, "lsn"))
     a = sorted(log.collect(), key=lambda r: (r["lsn"], str(r["conv_id"]), r["op"]))
     b = sorted(back.collect(), key=lambda r: (r["lsn"], str(r["conv_id"]), r["op"]))
     assert a == b
@@ -70,8 +77,6 @@ def test_le_uint32_key_golden_bytes(spark):
     """Bit-exact parity with the reference Kafka producer key
     (transactions-producer/external/kafka/client.go:73-79):
     binary.LittleEndian.PutUint32 — golden bytes from struct.pack('<I')."""
-    import struct
-
     from go_data_publisher_spark.functions.codecs import (
         le_uint32_key,
         le_uint32_value,
@@ -111,9 +116,9 @@ def test_wire_roundtrip_non_ascii_and_multiline(spark):
     """JSON escaping parity with the reference consumer's unmarshal tests
     (transactions-consumer/consume/marshalling_test.go:12-37): non-ASCII,
     emoji, multiline, quotes/backslashes, and control characters must
-    survive to_wire -> from_wire byte-exactly, and from_wire must accept
-    Go-marshaller-style \\uXXXX-escaped input (encoding/json HTML-escapes
-    <, >, & as \\u003c \\u003e \\u0026)."""
+    survive to_wire_kafka -> decode_kafka_records byte-exactly, and the
+    decode must accept Go-marshaller-style \\uXXXX-escaped input
+    (encoding/json HTML-escapes <, >, & as \\u003c \\u003e \\u0026)."""
     nasty = [
         "héllo wörld — ünïcode",
         "日本語のテキストと絵文字 🎉🚀",
@@ -127,7 +132,7 @@ def test_wire_roundtrip_non_ascii_and_multiline(spark):
     schema = ("lsn long, op string, conv_id string, turn_idx int, role string, "
               "text string, tool string, ts timestamp, schema_version int")
     df = spark.createDataFrame(rows, schema)
-    back = from_wire(to_wire(df), schema=df.schema)
+    back = _from_wire(to_wire_kafka(df, "lsn"), df.schema)
     got = {r["lsn"]: r["text"] for r in back.collect()}
     for i, t in enumerate(nasty):
         assert got[i] == t, f"row {i} mangled: {got[i]!r}"
@@ -136,8 +141,9 @@ def test_wire_roundtrip_non_ascii_and_multiline(spark):
     go_value = ('{"lsn": 42, "op": "I", "conv_id": "c42", "turn_idx": 0, '
                 '"role": "user", "text": "a \\u003ctag\\u003e \\u0026 '
                 '\\u65e5\\u672c\\u8a9e \\nnewline", "schema_version": 1}')
-    wire = spark.createDataFrame([(b"c42", go_value)], "key binary, value string")
-    decoded = from_wire(wire, schema=df.schema).first()
+    wire = spark.createDataFrame([(struct.pack("<I", 42), go_value)],
+                                 "key binary, value string")
+    decoded = _from_wire(wire, df.schema).first()
     assert decoded["text"] == "a <tag> & 日本語 \nnewline"
     assert decoded["lsn"] == 42
 
